@@ -16,8 +16,9 @@ from dataclasses import dataclass
 
 # --- GitHub-shaped events ---------------------------------------------------
 
-# GitHub's public timeline is dominated by pushes; the long tail keeps every
-# dashboard panel non-trivial and GollumEvent exercises the "other" category.
+# Assumed, not measured (no event-type counts exist in this repo): pushes
+# dominate, the long tail keeps every dashboard panel non-trivial and
+# GollumEvent exercises the "other" category.
 EVENT_TYPES = (
     ("PushEvent", 40), ("WatchEvent", 14), ("IssueCommentEvent", 10),
     ("PullRequestEvent", 8), ("CreateEvent", 7), ("IssuesEvent", 6),
@@ -25,13 +26,15 @@ EVENT_TYPES = (
     ("ReleaseEvent", 2), ("GollumEvent", 1), ("MemberEvent", 1), ("PublicEvent", 1),
 )
 N_ACTORS = 3000
-ACTOR_ZIPF_S = 1.1  # a few bots and power users produce most events
+ACTOR_ZIPF_S = 1.1  # assumed: a few bots and power users produce most events
 N_REPOS = 800
 MALFORMED_SHARE = 0.05  # lines the parser must drop (P3)
 MISSING_TS_SHARE = 0.10  # rows without created_at the quality gate drops (P9)
 LATE_SHARE = 0.03  # events stamped inside the previous batch's window
 ORG_SHARE = 0.3
-BATCH_WINDOW_S = 1800  # each batch advances event time by half an hour
+# each batch advances event time by half an hour, compressed from the 30 s a
+# reference batch spans so that a few batches fill several hourly buckets
+BATCH_WINDOW_S = 1800
 EVENT_T0 = dt.datetime(2026, 3, 2, 6, 0, 0)
 
 

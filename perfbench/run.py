@@ -6,9 +6,10 @@ Run from the repository root:
     python3 perfbench/run.py --workload all --seed 1   # every workload, named metrics
 
 One run sets the session up from a cold JVM through an untimed warm-up
-(``setup_s``), drives the workload's closed loop in whole passes until
-``--seconds`` have elapsed, checks the outputs against independent
-references and prints a report line followed by the result line:
+(``setup_s``, counted in CPU seconds), drives the workload's closed loop in
+whole passes for as long as another pass fits into ``--seconds`` (at least
+one), checks the outputs against independent references and prints a
+report line followed by the result line:
 
     {"correct": true, "attempted": N, "failed": 0, "metrics": {...}}
 
@@ -40,12 +41,13 @@ CORES = min(4, len(os.sched_getaffinity(0)))
 DRIVER_MEM = "2g"
 APP = "perfbench"
 
-# End-to-end metrics. The wall-clock latencies a user sees did not repeat
-# within a tenth here (IQR/median 0.2-0.5 over seeds on a shared host), so
-# the gated metrics are the CPU cost of the same spans, and the wall-clock
-# ones are reported per layer (see README.md).
-END_TO_END = {"setup_s": "s", "write_cpu_s": "s", "read_cpu_s": "s"}
-WALL = {"items_per_s": "1/s", "write_p50_s": "s", "read_p50_s": "s"}
+# End-to-end metrics: only the set-up is gated. Every timing of the warm loop,
+# wall-clock or CPU, over single operations or whole passes, failed to repeat
+# within a tenth on a shared host whose speed drifts by up to 40 % over
+# minutes, so they are reported per layer (see README.md).
+END_TO_END = {"setup_s": "s"}
+UNGATED = {"items_per_s": "1/s", "write_p50_s": "s", "read_p50_s": "s", "pass_s": "s",
+           "pass_cpu_s": "s", "write_cpu_s": "s", "read_cpu_s": "s"}
 # The user-facing names of the end-to-end metrics, per workload: the generic
 # metric each one is, or the Samples field it is computed from.
 NAMED = {
@@ -81,32 +83,70 @@ def _vm_hwm_mb(pid) -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
-def _cpu_clock(pid: int):
-    """CPU seconds used so far by the driver JVM, without its JIT compiler
-    threads, plus this Python process. JIT compilation is a cost of a young
-    JVM, not of the workload, and it varied most from run to run. Time a
-    hypervisor steals, or spends running other machines, is not CPU time."""
+def _stat(path: str) -> tuple[str, list[str]]:
+    """(command name, fields after it) of a /proc stat file. Fields 1, 11,
+    12, 13 and 14 are ppid, utime, stime, cutime and cstime."""
+    with open(path) as f:
+        name, _, rest = f.read().rpartition(")")
+    return name, rest.split()
+
+
+def _ticks(fields: list[str]) -> int:
+    """utime + stime + cutime + cstime: the process, its threads that have
+    exited and the children it has reaped."""
+    return sum(int(v) for v in fields[11:15])
+
+
+def _descendant_ticks(pid: int) -> int:
+    """CPU ticks of every live descendant of ``pid``. The JVM forks
+    pyspark.daemon, which forks the Python workers of pandas UDFs,
+    mapInPandas and applyInPandas; a worker that has exited is in the
+    cutime of the process that reaped it."""
+    procs = {}
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                fields = _stat(f"/proc/{d}/stat")[1]
+            except OSError:  # the process exited meanwhile
+                continue
+            procs[int(d)] = (int(fields[1]), _ticks(fields))
+    children: dict[int, list[int]] = {}
+    for p, (ppid, _) in procs.items():
+        children.setdefault(ppid, []).append(p)
+    total, todo = 0, list(children.get(pid, ()))
+    while todo:
+        p = todo.pop()
+        total += procs[p][1]
+        todo.extend(children.get(p, ()))
+    return total
+
+
+def _cpu_clock(pid: int, jit: bool = False):
+    """CPU seconds used so far by the driver JVM ``pid``, the Python workers
+    it forked and this Python process. Without ``jit``, the JVM's JIT
+    compiler threads are left out: compilation is a cost of a young JVM, not
+    of the workload, and it varied most from run to run. Time a hypervisor
+    steals, or spends running other machines, is not CPU time."""
     tick = os.sysconf("SC_CLK_TCK")
     tasks = f"/proc/{pid}/task"
 
-    def ticks(path: str) -> tuple[str, int]:
-        with open(path) as f:
-            name, _, rest = f.read().rpartition(")")
-        fields = rest.split()
-        return name, int(fields[11]) + int(fields[12])  # utime + stime
-
-    def cpu() -> float:
-        total = ticks(f"/proc/{pid}/stat")[1]  # includes exited threads
-        jit = 0
+    def compiler_ticks() -> int:
+        total = 0
         for tid in os.listdir(tasks):
             try:
-                name, t = ticks(f"{tasks}/{tid}/stat")
-            except FileNotFoundError:  # the thread exited meanwhile
+                name, fields = _stat(f"{tasks}/{tid}/stat")
+            except OSError:  # the thread exited meanwhile
                 continue
             if "CompilerThre" in name:
-                jit += t
+                total += int(fields[11]) + int(fields[12])
+        return total
+
+    def cpu() -> float:
+        jvm = _ticks(_stat(f"/proc/{pid}/stat")[1])
+        if not jit:
+            jvm -= compiler_ticks()
         t = os.times()
-        return (total - jit) / tick + t.user + t.system
+        return (jvm + _descendant_ticks(pid)) / tick + t.user + t.system
 
     return cpu
 
@@ -175,27 +215,45 @@ def _stop_jvm() -> None:
 
 
 def _measure(wl, spark, tr, seconds: float, s) -> None:
-    """Whole passes until ``seconds`` have elapsed (at least one)."""
-    t0 = time.perf_counter()
-    while not s.checks or time.perf_counter() - t0 < seconds:
-        wl.run_pass(spark, tr, s)
+    """Whole passes while one more, at the mean pass time so far, still
+    ends within ``seconds``; at least one."""
+    t0, n = time.perf_counter(), 0
+    while True:
+        s.timed_pass(wl, spark, tr)
+        n += 1
+        if (time.perf_counter() - t0) * (n + 1) / n > seconds:
+            return
 
 
 def _timings(s) -> dict:
+    """Latencies are medians over the operations; the CPU seconds of the
+    write and read halves are means over the pass, the shares of
+    ``pass_cpu_s`` they account for."""
     return {
         "items_per_s": s.items / s.item_s,
         "write_p50_s": statistics.median(s.write),
         "read_p50_s": statistics.median(s.read),
-        "write_cpu_s": statistics.median(s.write_cpu),
-        "read_cpu_s": statistics.median(s.read_cpu),
+        "pass_s": statistics.median(s.passes),
+        "pass_cpu_s": statistics.median(s.pass_cpu),
+        "write_cpu_s": statistics.mean(s.write_cpu),
+        "read_cpu_s": statistics.mean(s.read_cpu),
     }
 
 
-def _layer_metrics(tracer, s, untraced: dict, traced: dict, local1: dict, busy: float) -> dict:
+def _layer_metrics(workload: str, tracer, s, untraced: dict, traced: dict, local1: dict,
+                   busy: float) -> dict:
+    """The per-layer metrics of a traced run. A layer the workload never
+    calls reports 0; the incremental-dedup layers appear only on their own
+    workload, which is not in BENCHMARK.json."""
     from spans import SPAN_COUNTERS as full
-    from workloads import CURATION_STAGES, EventsIngestServe
+    from workloads import CURATION_STAGES, EventsIngestServe, IncrementalDedupFolds
 
-    out: dict[str, tuple] = {"session.get_spark.wall_s": (untraced["get_spark_s"], "s")}
+    folds = workload == IncrementalDedupFolds.name
+
+    out: dict[str, tuple] = {
+        "session.get_spark.wall_s": (untraced["get_spark_s"], "s"),
+        "setup_wall_s": (untraced["setup_wall_s"], "s"),
+    }
     totals = tracer.totals()
     spans = {
         "ingest.process_raw_events": full, "snapshots.append_snapshot": full,
@@ -203,10 +261,10 @@ def _layer_metrics(tracer, s, untraced: dict, traced: dict, local1: dict, busy: 
         "serving.dashboard_stats": ("wall_s",), "serving.to_json_rows": full,
         "serving.list_events": full,
         **{name: full for name in CURATION_STAGES},
-        "dedup.append_dedup_batch": full,
         "pipeline.commit_epoch": ("wall_s", "jobs", "tasks"),
         "pipeline.committed_view_epoch_partitioned": full,
-        "dedup.read_dedup_survivors": full,
+        **({"dedup.append_dedup_batch": full, "dedup.read_dedup_survivors": full}
+           if folds else {}),
     }
     for name, counters in spans.items():
         agg = totals.get(name, {})
@@ -220,17 +278,16 @@ def _layer_metrics(tracer, s, untraced: dict, traced: dict, local1: dict, busy: 
     panels = [f"serving.panel.{p}.wall_s" for p in EventsIngestServe.panels]
     for key, unit in [(k, "ratio") for k in ratios] + [(k, "s") for k in panels] + [
         ("snapshots.live_files", "count"), ("snapshots.bytes_per_event", "bytes"),
-        ("fold.index_bytes", "bytes"),
-    ]:
+    ] + ([("fold.index_bytes", "bytes")] if folds else []):
         vals = s.layer.get(key)
         out[key] = (statistics.median(vals) if vals else 0, unit)
     out["busy_share"] = (busy, "ratio")
     out["peak_rss_mb"] = (untraced["peak_rss_mb"], "MB")
-    for k, unit in WALL.items():
+    for k, unit in UNGATED.items():
         out[k] = (untraced[k], unit)
-    for k in ("write_cpu_s", "read_cpu_s"):
+    for k in ("pass_cpu_s", "write_cpu_s", "read_cpu_s"):
         out[f"overhead.{k}"] = (traced[k] - untraced[k], "s")
-    for k in ("write_p50_s", "read_p50_s"):
+    for k in ("write_p50_s", "read_p50_s", "pass_s"):
         out[f"local1.{k}"] = (local1[k], "s")
     return {k: {"value": v, "unit": u} for k, (v, u) in out.items()}
 
@@ -243,37 +300,48 @@ def run(workload: str, seed: int, seconds: float, traced: bool) -> int:
     workdir = tempfile.mkdtemp(prefix=f"{workload}-", dir=RUNS_DIR)
     try:
         _isolate(workdir)
+        t_in = time.perf_counter()
         wl = WORKLOADS[workload](seed, workdir)
+        phases = {"inputs": time.perf_counter() - t_in}  # wall seconds per phase
         s, spark, metrics, layer = Samples(), None, {}, None
         try:
-            # one cold setup per run: a second one in the warm JVM cost 9-13 s
-            # a run, more than the time budget for a full set of runs allows
+            # one cold setup per run, the bulk of a run's time, so it cannot
+            # be repeated; it is counted in CPU seconds of every process,
+            # JIT included, because host load stretched its wall time
+            py0 = sum(os.times()[:2])
             t0 = time.perf_counter()
             spark = _spark(workdir, CORES)
             get_spark_s = time.perf_counter() - t0
-            wl.warmup(spark, T.NullTracer())
-            setup_s = time.perf_counter() - t0
             jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
+            wl.warmup(spark, T.NullTracer())
+            setup_wall_s = phases["setup"] = time.perf_counter() - t0
+            setup_s = _cpu_clock(jvm_pid, jit=True)() - py0
             s.cpu = _cpu_clock(jvm_pid)
             steal0, total0 = _cpu_jiffies()
             _measure(wl, spark, T.NullTracer(), seconds, s)
             steal1, total1 = _cpu_jiffies()
+            phases["measure"] = time.perf_counter() - t0 - setup_wall_s
             metrics = {
-                "setup_s": setup_s, **_timings(s), "get_spark_s": get_spark_s,
+                "setup_s": setup_s, "setup_wall_s": setup_wall_s, **_timings(s),
+                "get_spark_s": get_spark_s,
                 "peak_rss_mb": _vm_hwm_mb(jvm_pid) + _vm_hwm_mb("self"),
                 "steal_share": (steal1 - steal0) / max(total1 - total0, 1),
             }
             if traced:
                 spans_path = os.path.join(RUNS_DIR, f"{workload}-seed{seed}-spans.jsonl")
+                t1 = time.perf_counter()
                 spark, layer = _traced_passes(wl, spark, workdir, s, metrics, spans_path)
+                phases["trace"] = time.perf_counter() - t1
         except Exception:  # a failed call ends the run and is counted
             traceback.print_exc()
             s.attempted += 1
             s.failed += 1
         finally:
+            t1 = time.perf_counter()
             if spark is not None:
                 spark.stop()
             _stop_jvm()
+            phases["stop"] = time.perf_counter() - t1
         correct = bool(s.checks) and all(s.checks) and s.failed == 0
         failed = s.failed if all(s.checks) else s.attempted
         report = {
@@ -281,9 +349,10 @@ def run(workload: str, seed: int, seconds: float, traced: bool) -> int:
             "settings": {"master": f"local[{CORES}]", "shuffle_partitions": CORES,
                          "driver_heap": f"-Xms{DRIVER_MEM} -Xmx{DRIVER_MEM}"},
             "passes": len(s.checks), "checks": s.checks,
-            "steal_share": metrics.get("steal_share"),
+            "steal_share": metrics.get("steal_share"), "phases_s": phases,
             "samples": {"write": s.write, "read": s.read, "page": s.page,
-                        "write_cpu": s.write_cpu, "read_cpu": s.read_cpu},
+                        "write_cpu": s.write_cpu, "read_cpu": s.read_cpu,
+                        "pass": s.passes, "pass_cpu": s.pass_cpu},
             "named": _named(workload, metrics, s, failed),
         }
         print(json.dumps(report))
@@ -307,7 +376,7 @@ def _traced_passes(wl, spark, workdir, s, untraced: dict, spans_path: str):
     tracer, ts = T.Tracer(spark), Samples(s.cpu)
     t0 = time.perf_counter()
     with _span_commit_epoch(tracer):
-        wl.run_pass(spark, tracer, ts)
+        ts.timed_pass(wl, spark, tracer)
     wall = time.perf_counter() - t0
     tracer.dump(spans_path)
     exec_run = sum(a.get("exec_run_s", 0) for a in tracer.totals().values())
@@ -315,10 +384,10 @@ def _traced_passes(wl, spark, workdir, s, untraced: dict, spans_path: str):
     one = _spark(workdir, 1)  # no warm-up: the JVM's code is already warm
     t1, l1 = T.Tracer(one), Samples(s.cpu)
     with _span_commit_epoch(t1):
-        wl.run_pass(one, t1, l1)
+        l1.timed_pass(wl, one, t1)
     s.checks.extend(ts.checks + l1.checks)
     s.attempted += ts.attempted + l1.attempted
-    layer = _layer_metrics(tracer, ts, untraced, _timings(ts), _timings(l1),
+    layer = _layer_metrics(wl.name, tracer, ts, untraced, _timings(ts), _timings(l1),
                            exec_run / (wall * CORES))
     return one, layer
 
@@ -356,6 +425,7 @@ def _named(workload: str, metrics: dict, s, failed: int) -> dict:
             t = tail(getattr(s, src))
             out[name] = t and {"value": t[0], "percentile": t[1], "n": t[2]}
     out["setup_s"] = metrics.get("setup_s")
+    out["setup_wall_s"] = metrics.get("setup_wall_s")
     out["peak_rss_mb"] = metrics.get("peak_rss_mb")
     out["failed_op_share"] = failed / max(s.attempted, 1)
     return out

@@ -4,9 +4,10 @@
     python3 perfbench/selftest.py --quick  # generator and span arithmetic only
 
 Checks: the same seed gives identical inputs and another seed different
-ones; span self-time arithmetic; and two traced passes report identical
-``jobs`` and ``tasks`` for every span, the deterministic counters the
-per-layer comparison relies on.
+ones; span self-time arithmetic; the CPU clock counts the Python workers
+the JVM forks; and two traced passes report identical ``jobs`` and
+``tasks`` for every span, the deterministic counters the per-layer
+comparison relies on.
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ import os
 import shutil
 import sys
 import tempfile
+import time
+from contextlib import contextmanager
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -66,6 +69,51 @@ def _counts(tracer):
     return {name: (t["jobs"], t["tasks"]) for name, t in tracer.totals().items()}
 
 
+@contextmanager
+def _session():
+    import run
+
+    os.makedirs(run.RUNS_DIR, exist_ok=True)
+    workdir = tempfile.mkdtemp(prefix="selftest-", dir=run.RUNS_DIR)
+    spark = None
+    try:
+        run._isolate(workdir)
+        spark = run._spark(workdir, run.CORES)
+        yield spark, workdir
+    finally:
+        if spark is not None:
+            spark.stop()
+        run._stop_jvm()
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _burn(batches, seconds=0.5):
+    """mapInPandas body: spend ``seconds`` of CPU in the Python worker."""
+    for pdf in batches:
+        t0 = time.process_time()
+        while time.process_time() - t0 < seconds:
+            pass
+        yield pdf
+
+
+def test_cpu_counts_python_workers():
+    """The CPU clock sees the work of the Python workers behind mapInPandas,
+    not only the JVM and this process."""
+    import run
+
+    with _session() as (spark, _):
+        df = spark.range(run.CORES, numPartitions=run.CORES)
+        df.mapInPandas(lambda it: _burn(it, 0.0), df.schema).collect()  # start the workers
+        pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
+        cpu = run._cpu_clock(pid)
+        c0, w0 = cpu(), run._descendant_ticks(pid)
+        df.mapInPandas(_burn, df.schema).collect()
+        burnt = 0.5 * run.CORES
+        workers = (run._descendant_ticks(pid) - w0) / os.sysconf("SC_CLK_TCK")
+        assert workers >= 0.9 * burnt, (workers, burnt)
+        assert cpu() - c0 >= workers, (cpu() - c0, workers)
+
+
 def test_traced_counters_repeat():
     """Two traced passes of each tiny workload: identical jobs and tasks."""
     import run
@@ -83,12 +131,7 @@ def test_traced_counters_repeat():
         epochs_per_pass = 2
         batch_size = 40
 
-    os.makedirs(run.RUNS_DIR, exist_ok=True)
-    workdir = tempfile.mkdtemp(prefix="selftest-", dir=run.RUNS_DIR)
-    spark = None
-    try:
-        run._isolate(workdir)
-        spark = run._spark(workdir, run.CORES)
+    with _session() as (spark, workdir):
         for cls in (TinyEvents, TinyCuration, TinyFolds):
             wl = cls(11, os.path.join(workdir, cls.name))
             wl.warmup(spark, spans.NullTracer())
@@ -103,17 +146,13 @@ def test_traced_counters_repeat():
             assert seen[0] == seen[1], (cls.name, seen)
             assert all(jobs > 0 for name, (jobs, _) in seen[0].items()
                        if name != "serving.dashboard_stats"), seen[0]
-    finally:
-        if spark is not None:
-            spark.stop()
-        run._stop_jvm()
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def main(argv) -> int:
     tests = [v for k, v in sorted(globals().items()) if k.startswith("test_")]
     if "--quick" in argv:
-        tests = [t for t in tests if t is not test_traced_counters_repeat]
+        tests = [t for t in tests
+                 if t not in (test_traced_counters_repeat, test_cpu_counts_python_workers)]
     failed = 0
     for t in tests:
         try:
