@@ -45,28 +45,9 @@ from pyspark.sql.datasource import (
 )
 
 from demo_bigdata_spark.sources.snapshots import (
-    _manifest_path,
+    _manifest_rows,
     current_snapshot,
 )
-
-
-def _manifest_files(path: str, snap: int) -> list[tuple[str, int, str | None]]:
-    """(data entry, seq, meta) rows of a manifest, read with pyarrow only —
-    the Data Source API runs outside any SparkSession. Entries are part
-    FILES on current tables (per-file statistics) or commit directories on
-    legacy manifests; meta carries the recorded bounds JSON."""
-    if snap <= 0:
-        return []
-    import pyarrow.parquet as pq
-
-    manifest = pq.read_table(_manifest_path(path, snap))
-    cols = ["file", "kind", "seq"] + (
-        ["meta"] if "meta" in manifest.schema.names else []
-    )
-    t = manifest.select(cols).to_pylist()
-    return sorted(
-        (r["file"], r["seq"], r.get("meta")) for r in t if r["kind"] == "data"
-    )
 
 
 def _part_files(entry: str) -> list[str]:
@@ -91,16 +72,25 @@ def _new_part_files(
     filter keeps live==batch exact."""
     from demo_bigdata_spark.sources.snapshots import _may_contain
 
-    old = {f for f, _, _ in _manifest_files(path, start_snap)}
-    new_entries = _manifest_files(path, end_snap)
-    if old and new_entries and not (old & {f for f, _, _ in new_entries}):
+    # manifests are read on the driver with pyarrow (the Data Source API
+    # runs outside any SparkSession); data entries are part FILES on
+    # current tables, commit directories on legacy manifests
+    old = {
+        r["file"] for r in _manifest_rows(path, start_snap) if r["kind"] == "data"
+    }
+    new_entries = [
+        (r["file"], r["meta"])
+        for r in _manifest_rows(path, end_snap)
+        if r["kind"] == "data"
+    ]
+    if old and new_entries and not (old & {f for f, _ in new_entries}):
         raise ValueError(
             f"snapshot_appends({start_snap}->{end_snap}): no data file "
             "survives from the base snapshot — the window spans a "
             "replace-compaction; re-baseline the consumer with read_table"
         )
     out: list[str] = []
-    for entry, _, meta in new_entries:
+    for entry, meta in new_entries:
         if entry in old:
             continue
         if prune and not _may_contain(meta, prune):
@@ -154,11 +144,10 @@ def _infer_ddl(path: str) -> str:
     snap = current_snapshot(path)
     if snap is None:
         raise ValueError(f"no versioned table at {path}")
-    entries = _manifest_files(path, snap)
-    if not entries:
+    data = [r["file"] for r in _manifest_rows(path, snap) if r["kind"] == "data"]
+    if not data:
         raise ValueError(f"versioned table at {path} has no data files")
-    newest = max(entries, key=lambda e: e[1])[0]
-    sch = pq.read_schema(_part_files(newest)[0])
+    sch = pq.read_schema(_part_files(data[-1])[0])  # rows are in seq order
     return ", ".join(
         f"`{name}` {_arrow_field_ddl(sch.field(name).type)}"
         for name in sch.names
@@ -312,25 +301,6 @@ class SnapshotAppendsDataSource(DataSource):
 def register(spark) -> None:
     """Idempotently register the source on a session."""
     spark.dataSource.register(SnapshotAppendsDataSource)
-
-
-def _manifest_all(
-    path: str, snap: int
-) -> list[tuple[str, str, str | None, int]]:
-    """(file, kind, meta, seq) rows of a manifest — every kind, pyarrow
-    only. seq carries the sequence-rule ordering pre-image resolution
-    needs (an equality delete suppresses only rows of data files with a
-    SMALLER seq)."""
-    if snap <= 0:
-        return []
-    import pyarrow.parquet as pq
-
-    manifest = pq.read_table(_manifest_path(path, snap))
-    cols = ["file", "kind", "seq"] + (
-        ["meta"] if "meta" in manifest.schema.names else []
-    )
-    t = manifest.select(cols).to_pylist()
-    return [(r["file"], r["kind"], r.get("meta"), r["seq"]) for r in t]
 
 
 def _take_row_groups(pq, local: str, idxs: list[int]):
@@ -552,7 +522,8 @@ class _SnapshotChangesStreamReader(_SnapshotAppendsStreamReader):
         import json as _json
 
         ctx = {"data": [], "eqdel": [], "posdel": []}
-        for f, kind, meta, seq in prev_all:
+        for r in prev_all:
+            f, kind, meta, seq = r["file"], r["kind"], r["meta"], r["seq"]
             if kind == "data":
                 for pf in _part_files(f):
                     # meta (bounds/blooms) is per-entry; on current
@@ -581,14 +552,14 @@ class _SnapshotChangesStreamReader(_SnapshotAppendsStreamReader):
         import json
 
         parts: list[_SnapshotChangePartition] = []
-        prev_all = _manifest_all(self.path, start["snap"])
+        prev_all = _manifest_rows(self.path, start["snap"])
         for s in range(start["snap"] + 1, end["snap"] + 1):
-            cur_entries = _manifest_all(self.path, s)
-            cur_files = {f for f, _, _, _ in cur_entries}
+            cur_entries = _manifest_rows(self.path, s)
+            cur_files = {r["file"] for r in cur_entries}
             removed = {
-                f
-                for f, k, _, _ in prev_all
-                if k != "epoch_marker" and f not in cur_files
+                r["file"]
+                for r in prev_all
+                if r["kind"] != "epoch_marker" and r["file"] not in cur_files
             }
             if removed:
                 # ANY removed view-bearing entry — data files (COW,
@@ -601,11 +572,12 @@ class _SnapshotChangesStreamReader(_SnapshotAppendsStreamReader):
                     "per-commit row lineage; re-baseline the consumer "
                     "with read_table/snapshot_changelog"
                 )
-            prev_files = {f for f, _, _, _ in prev_all}
+            prev_files = {r["file"] for r in prev_all}
             pre_ctx = (
                 self._preimage_ctx(prev_all) if self.pre_images else None
             )
-            for f, kind, meta, _seq in cur_entries:
+            for r in cur_entries:
+                f, kind, meta = r["file"], r["kind"], r["meta"]
                 if f in prev_files:
                     continue
                 if kind == "data":
@@ -804,14 +776,10 @@ def apply_changes_epoch(
     from demo_bigdata_spark.sources import snapshots as S
 
     cur = S.current_snapshot(path)
-    if cur is not None:
-        applied = (
-            S._read_manifest(spark, path, cur)
-            .filter(F.col("epoch_id") == int(epoch_id))
-            .head(1)
-        )
-        if applied:
-            return None
+    if cur is not None and any(
+        r["epoch_id"] == int(epoch_id) for r in S._manifest_rows(path, cur)
+    ):
+        return None
     data_cols = [
         c
         for c in changes_df.columns
@@ -848,9 +816,9 @@ def apply_changes_epoch(
     ]
 
     def build(cur_):
-        return S._manifest_entries(spark, path, cur_) + new
+        return S._manifest_entries(path, cur_) + new
 
-    return S._retrying_commit(spark, path, build)
+    return S._retrying_commit(spark, path, build, frame_schema=finals.schema)
 
 
 def mirror_changelog_stream(

@@ -13,6 +13,15 @@ same commit discipline Iceberg uses:
 - **Data files are immutable and append-only** (content-addressed under
   ``data/``); a snapshot is a MANIFEST (parquet list of file paths + kinds
   + per-file metadata) plus the ``_CURRENT`` pointer naming it.
+- **Metadata lives on the driver, data on Spark.** Manifests are written
+  and read with pyarrow, and every commit records the snapshot's read
+  schema (``_schema.json``) beside its ``_commit.json`` — the first
+  commit's frame schema, carried forward from the parent when an appended
+  frame matches it, inferred once with ``mergeSchema`` when the schema
+  changes. A commit therefore runs one Spark job, the data write, and
+  planning a read of a delete-free snapshot runs none (Iceberg plans
+  from its metadata files the same way). Snapshots committed without a
+  recorded schema (older tables) infer it at read time.
 - **Commit = claim the snapshot id, write everything, then atomically swap
   the pointer** (``os.replace`` — atomic on POSIX). A crash before the
   swap leaves only unreferenced files; readers never observe a partial
@@ -70,21 +79,35 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 _POINTER = "_CURRENT"
 _PROPS = "_PROPERTIES"
+# inside snapshots/<id>/: the manifest file and the recorded read schema
+# (the "_" prefix keeps the schema out of parquet directory reads)
+_MANIFEST = "manifest.parquet"
+_SCHEMA = "_schema.json"
 # a commit claim this old whose pointer never advanced is a crashed
 # writer; the next claimant steals it (Iceberg: lock expiry on the catalog)
 _STALE_CLAIM_SECONDS = 60.0
 _COMMIT_ATTEMPTS = 8
 # exponential-backoff envelope for the optimistic commit loop: a live
-# winner holds its claim for the DURATION of its manifest-write Spark job
-# (seconds), so the retry window must comfortably exceed a typical commit —
+# winner holds its claim only while it writes the manifest, but a loser's
+# retry rebuilds its entries (and may re-infer the schema) against the new
+# head, so the retry window must comfortably exceed a typical commit —
 # 0.05 * 2^i capped at 2 s sums to ~10 s across 8 attempts, vs the ~0.1 s a
 # fixed 20 ms sleep allowed (which surfaced CommitConflictError for routine
 # transient contention). Jitter decorrelates herds of retrying writers.
@@ -502,12 +525,43 @@ def _acquire_id(path: str, floor: int) -> tuple[int, str]:
     raise CommitConflictError(f"could not allocate a snapshot id at {path}")
 
 
+def _write_manifest(
+    path: str, snap: int, entries: list[tuple[str, str, int, str | None]]
+) -> str:
+    """Write ``entries`` as snapshot ``snap``'s manifest with pyarrow into
+    a CLEARED ``snapshots/<snap>/`` directory: a temp file, then
+    ``os.replace``. Returns the directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema(
+        [
+            ("file", pa.string()),
+            ("kind", pa.string()),
+            ("epoch_id", pa.int64()),
+            ("seq", pa.int32()),
+            ("meta", pa.string()),
+        ]
+    )
+    rows = [
+        {"file": f, "kind": k, "epoch_id": e, "seq": i, "meta": m}
+        for i, (f, k, e, m) in enumerate(entries)
+    ]
+    d = _manifest_path(path, snap)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    tmp = os.path.join(d, f".{_MANIFEST}.tmp-{uuid.uuid4().hex}")
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
+    os.replace(tmp, os.path.join(d, _MANIFEST))
+    return d
+
+
 def _commit(
-    spark: SparkSession,
     path: str,
     snap: int,
     entries: list[tuple[str, str, int, str | None]],
     branch: str = "main",
+    schema: StructType | None = None,
 ) -> int:
     """Claim the snapshot id, write the manifest, atomically swap the
     pointer, release the claim. Every manifest row carries:
@@ -524,12 +578,12 @@ def _commit(
       delete files. Scan planning reads it from the manifest instead of
       opening files.
 
-    The manifest write stays mode=overwrite (NOT error): a crash between
-    manifest write and pointer swap (or a rollback to an earlier snapshot)
-    leaves a stale, unreferenced manifest at the target id — the redo must
-    replace it or the table is permanently wedged on 'path already
-    exists'. Live-writer overwrites are excluded by the claim, not by the
-    write mode.
+    The manifest is driver-side metadata, written with pyarrow (no Spark
+    job). Its directory is cleared first: a crash between manifest write
+    and pointer swap (or a rollback to an earlier snapshot) leaves a
+    stale, unreferenced manifest at the target id — the redo must replace
+    it, not sit beside it. Live-writer overwrites are excluded by the
+    claim, not by the clearing.
 
     ``snap`` is the commit SLOT (parent head + 1) — the per-branch claim
     key. The MANIFEST id actually written may be larger when other
@@ -537,7 +591,8 @@ def _commit(
     table it is always ``snap`` itself. Returns the manifest id. A
     ``_commit.json`` beside the manifest (ignored by parquet readers —
     ``_``-prefixed) records branch + parent: the ancestry chain
-    ``fast_forward`` walks."""
+    ``fast_forward`` walks. ``schema``, when given, is recorded beside it
+    as the snapshot's read schema (see :func:`_snapshot_schema`)."""
     claim = _acquire_claim(path, snap, branch)
     try:
         nid, idclaim = _acquire_id(path, snap)
@@ -547,15 +602,15 @@ def _commit(
         except FileNotFoundError:
             pass
         raise
-    seqd = [(f, k, e, i, m) for i, (f, k, e, m) in enumerate(entries)]
-    spark.createDataFrame(
-        seqd, "file string, kind string, epoch_id long, seq int, meta string"
-    ).coalesce(1).write.mode("overwrite").parquet(_manifest_path(path, nid))
-    with open(os.path.join(_manifest_path(path, nid), "_commit.json"), "w") as f:
+    d = _write_manifest(path, nid, entries)
+    with open(os.path.join(d, "_commit.json"), "w") as f:
         json.dump(
             {"branch": branch, "parent": snap - 1, "committed_at": time.time()},
             f,
         )
+    if schema is not None:
+        with open(os.path.join(d, _SCHEMA), "w") as f:
+            f.write(schema.json())
     _advance_ref(path, branch, nid)
     for c in (idclaim, claim):
         try:
@@ -565,13 +620,21 @@ def _commit(
     return nid
 
 
-def _retrying_commit(spark, path: str, build, branch: str = "main") -> int:
+def _retrying_commit(
+    spark,
+    path: str,
+    build,
+    branch: str = "main",
+    frame_schema: StructType | None = None,
+) -> int:
     """Optimistic-concurrency loop (Iceberg's commit retry): re-read the
     branch head, rebuild the manifest entries against it, attempt the
     claimed commit; on conflict, loop. ``build(cur) -> entries`` must be
     cheap to re-run — data files are written ONCE before the loop (they
     are immutable and id-free, so they attach to whichever snapshot id the
-    winning attempt gets). Returns the committed manifest id."""
+    winning attempt gets). ``frame_schema`` is the schema of the frame the
+    commit's new data files were written from, None when it adds none.
+    Returns the committed manifest id."""
     import random
 
     last: Exception | None = None
@@ -580,7 +643,9 @@ def _retrying_commit(spark, path: str, build, branch: str = "main") -> int:
         if cur is None:
             raise ValueError(f"no versioned table or branch {branch!r} at {path}")
         try:
-            return _commit(spark, path, cur + 1, build(cur), branch=branch)
+            entries = build(cur)
+            schema = _snapshot_schema(spark, path, cur, entries, frame_schema)
+            return _commit(path, cur + 1, entries, branch=branch, schema=schema)
         except CommitConflictError as e:
             last = e
             delay = min(
@@ -764,23 +829,97 @@ def _read_manifest(spark: SparkSession, path: str, snap: int) -> DataFrame:
     return spark.read.parquet(_manifest_path(path, snap))
 
 
-def _manifest_rows(spark: SparkSession, path: str, snap: int) -> list[dict]:
-    m = _read_manifest(spark, path, snap)
-    has_meta = "meta" in m.columns  # pre-stats tables stay readable
-    rows = sorted((r.asDict() for r in m.collect()), key=lambda r: r["seq"])
-    if not has_meta:
-        for r in rows:
-            r["meta"] = None
-    return rows
+def _manifest_rows(path: str, snap: int) -> list[dict]:
+    """A snapshot's manifest entries in ``seq`` order, read on the driver
+    with pyarrow (no Spark job). The directory read ignores ``_``/``.``
+    files, so manifests Spark wrote (``part-*.parquet`` + ``_SUCCESS``)
+    read the same as current ones. Snapshot 0 is the empty table before
+    the first commit."""
+    if snap <= 0:
+        return []
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(_manifest_path(path, snap)).to_pylist()
+    for r in rows:
+        r.setdefault("meta", None)  # pre-stats tables stay readable
+    return sorted(rows, key=lambda r: r["seq"])
 
 
 def _manifest_entries(
-    spark: SparkSession, path: str, snap: int
+    path: str, snap: int
 ) -> list[tuple[str, str, int, str | None]]:
     return [
         (r["file"], r["kind"], int(r["epoch_id"]), r["meta"])
-        for r in _manifest_rows(spark, path, snap)
+        for r in _manifest_rows(path, snap)
     ]
+
+
+def _recorded_schema(path: str, snap: int) -> StructType | None:
+    """The read schema a commit recorded for ``snap``, or None for
+    snapshots committed without one (older tables, hand-built commits):
+    their reads fall back to ``mergeSchema`` inference."""
+    try:
+        with open(os.path.join(_manifest_path(path, snap), _SCHEMA)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def _read_files(
+    spark: SparkSession, files: list[str], schema: StructType | None
+) -> DataFrame:
+    """Scan data files under the recorded schema (no schema-inference
+    job; files missing a column read it as null, as ``mergeSchema``
+    would), or infer the union schema when none is recorded."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*files)
+    return spark.read.option("mergeSchema", "true").parquet(*files)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field and element nullable — the shape parquet
+    scans report, so a frame's schema compares equal to the schema its
+    written files read back with."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _snapshot_schema(
+    spark: SparkSession,
+    path: str,
+    parent: int,
+    entries: list[tuple[str, str, int, str | None]],
+    frame_schema: StructType | None,
+) -> StructType | None:
+    """The read schema to record for a commit on ``parent`` whose new data
+    files were written from a frame with ``frame_schema`` (None: the commit
+    adds no data file). Parquet files read back with their frame's
+    nullable schema, so the first commit (``parent`` 0) records that, and
+    the parent's recorded schema carries forward when the frame matches
+    it. Otherwise (schema change, parent without a record) one
+    ``mergeSchema`` inference over the new snapshot's data files runs
+    here, at commit time, instead of on every read."""
+    if parent <= 0 and frame_schema is not None:
+        return _nullable(frame_schema)
+    prev = _recorded_schema(path, parent)
+    if prev is not None and (
+        frame_schema is None or _nullable(frame_schema) == prev
+    ):
+        return prev
+    files = [f for f, kind, _, _ in entries if kind == "data"]
+    if not files:
+        return None
+    return _read_files(spark, files, None).schema
 
 
 def create_table(
@@ -815,12 +954,9 @@ def create_table(
     files = _write_files(df, path, "data")
     sc = _stats_cols(path)
     bc, bb = _bloom_spec(path)
-    _commit(
-        spark,
-        path,
-        1,
-        [(f, "data", -1, _footer_meta(f, sc, bc, bb)) for f in files],
-    )
+    entries = [(f, "data", -1, _footer_meta(f, sc, bc, bb)) for f in files]
+    schema = _snapshot_schema(spark, path, 0, entries, df.schema)
+    _commit(path, 1, entries, schema=schema)
     return 1
 
 
@@ -854,14 +990,16 @@ def append_snapshot(
             # applied-check reads the CURRENT manifest — dropping the epoch
             # history here would make it re-append the last batches
             applied = sorted(
-                {e for _, _, e, _ in _manifest_entries(spark, path, cur) if e >= 0}
+                {e for _, _, e, _ in _manifest_entries(path, cur) if e >= 0}
             )
             prev = [("", "epoch_marker", e, None) for e in applied]
         else:
-            prev = _manifest_entries(spark, path, cur)
+            prev = _manifest_entries(path, cur)
         return prev + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(
+        spark, path, build, branch=branch, frame_schema=df.schema
+    )
 
 
 def delete_where(
@@ -890,7 +1028,7 @@ def delete_where(
     new = [(f, "delete", -1, meta) for f in files]
 
     def build(cur_):
-        return _manifest_entries(spark, path, cur_) + new
+        return _manifest_entries(path, cur_) + new
 
     return _retrying_commit(spark, path, build, branch=branch)
 
@@ -919,13 +1057,12 @@ def delete_where_positions(
     cur = _ref_head(path, branch)
     if cur is None:
         raise ValueError(f"no versioned table or branch {branch!r} at {path}")
-    rows = _manifest_rows(spark, path, cur)
+    rows = _manifest_rows(path, cur)
     files = [r["file"] for r in rows if r["kind"] == "data"]
     if not files:
         raise ValueError(f"versioned table at {path} has no data files")
     scan = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*files)
+        _read_files(spark, files, _recorded_schema(path, cur))
         .withColumn("_dfile", F.col("_metadata.file_path"))
         .withColumn("_dpos", F.col("_metadata.row_index"))
     )
@@ -935,7 +1072,7 @@ def delete_where_positions(
     new = [(f, "posdelete", -1, meta) for f in dfiles]
 
     def build(cur_):
-        return _manifest_entries(spark, path, cur_) + new
+        return _manifest_entries(path, cur_) + new
 
     return _retrying_commit(spark, path, build, branch=branch)
 
@@ -978,7 +1115,7 @@ def delete_where_cow(
     cur = _ref_head(path, branch)
     if cur is None:
         raise ValueError(f"no versioned table or branch {branch!r} at {path}")
-    entries = _manifest_rows(spark, path, cur)
+    entries = _manifest_rows(path, cur)
     cand = {
         r["file"]
         for r in entries
@@ -1002,7 +1139,7 @@ def delete_where_cow(
     ]
 
     def build(cur_):
-        ents = _manifest_entries(spark, path, cur_)
+        ents = _manifest_entries(path, cur_)
         live = {f for f, k, _, _ in ents if k == "data"}
         if not cand <= live:
             raise RuntimeError(
@@ -1029,7 +1166,9 @@ def delete_where_cow(
         kept = [e for e in ents if not (e[1] == "data" and e[0] in cand)]
         return kept + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(
+        spark, path, build, branch=branch, frame_schema=survivors.schema
+    )
 
 
 def upsert_snapshot(
@@ -1065,9 +1204,11 @@ def upsert_snapshot(
     ]
 
     def build(cur):
-        return _manifest_entries(spark, path, cur) + new
+        return _manifest_entries(path, cur) + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(
+        spark, path, build, branch=branch, frame_schema=df.schema
+    )
 
 
 def read_table(
@@ -1084,7 +1225,10 @@ def read_table(
     anti-join on the manifest-recorded key column (falling back to
     ``key_col``/schema inference for pre-metadata tables). Reading a
     historical snapshot costs the same as reading the current one —
-    nothing is reconstructed.
+    nothing is reconstructed. Planning reads only driver-side metadata
+    (the manifest and the snapshot's recorded schema), so building the
+    frame of a delete-free snapshot launches no Spark job; a snapshot
+    without a recorded schema infers it with ``mergeSchema``.
 
     ``ref`` names a branch or tag to read instead (``read_table(...,
     ref="audit")`` — Iceberg's branch/tag reads); mutually exclusive with
@@ -1110,7 +1254,8 @@ def read_table(
         snap = current_snapshot(path) if snapshot is None else int(snapshot)
     if snap is None:
         raise ValueError(f"no versioned table at {path}")
-    rows = _manifest_rows(spark, path, snap)
+    rows = _manifest_rows(path, snap)
+    schema = _recorded_schema(path, snap)
     data = [
         (r["file"], r["seq"], r["meta"]) for r in rows if r["kind"] == "data"
     ]
@@ -1147,17 +1292,15 @@ def read_table(
             src = data[-1][0] if data else None
             if src is None:
                 raise ValueError(f"versioned table at {path} has no data files")
-            base = spark.read.option("mergeSchema", "true").parquet(src)
-            return base.filter(F.lit(False))
+            return _read_files(spark, [src], schema).filter(F.lit(False))
         data = kept
-    # mergeSchema: snapshots may span a schema evolution (an append with a
-    # widened schema is just new data files) — the union schema with nulls
-    # for pre-evolution rows; old snapshots keep their narrower schema
+    # snapshots may span a schema evolution (an append with a widened
+    # schema is just new data files): every scan reads the snapshot's
+    # recorded union schema, nulls for pre-evolution rows; old snapshots
+    # keep their narrower one
     if not dels:
         out = _apply_pos_deletes(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[f for f, _, _ in data]
-            )
+            _read_files(spark, [f for f, _, _ in data], schema)
         )
         return out.filter(_range_condition(prune)) if prune else out
     # the sequence rule (Iceberg's): a delete file suppresses rows only in
@@ -1172,9 +1315,7 @@ def read_table(
         applicable = tuple(df_ for df_, ds, _ in dels if ds > seq)
         groups.setdefault(applicable, []).append(f)
     for applicable, files in groups.items():
-        part = _apply_pos_deletes(
-            spark.read.option("mergeSchema", "true").parquet(*files)
-        )
+        part = _apply_pos_deletes(_read_files(spark, files, schema))
         # delete files may be keyed by DIFFERENT columns (delete_where on
         # doc_id, then on lang): group them by key column and anti-join
         # once per column — one mixed-schema scan would null out every
@@ -1225,16 +1366,12 @@ def read_appends_since(
         raise ValueError(f"no versioned table at {path}")
     # since_snapshot=0: "everything ever committed" (the streaming
     # source's initial-offset convention — no base manifest to diff)
-    old = (
-        {
-            r["file"]
-            for r in _manifest_rows(spark, path, since_snapshot)
-            if r["kind"] == "data"
-        }
-        if since_snapshot > 0
-        else set()
-    )
-    hi_rows = _manifest_rows(spark, path, hi)
+    old = {
+        r["file"]
+        for r in _manifest_rows(path, since_snapshot)
+        if r["kind"] == "data"
+    }
+    hi_rows = _manifest_rows(path, hi)
     hi_data = [(r["file"], r["meta"]) for r in hi_rows if r["kind"] == "data"]
     new = [(f, m) for f, m in hi_data if f not in old]
     if old and hi_data and not (old & {f for f, _ in hi_data}):
@@ -1440,8 +1577,6 @@ def expire_snapshots(
     files. The default (0 = vacuum everything unreferenced now) is only
     safe when no writer runs concurrently; production callers with
     concurrent writers should pass hours."""
-    import shutil
-
     cur = current_snapshot(path)
     if cur is None:
         return {"snapshots_removed": 0, "files_removed": 0}
@@ -1458,7 +1593,7 @@ def expire_snapshots(
     keep = set(snaps[-max(1, keep_last):]) | {cur} | heads
     referenced: set[str] = set()
     for snap in keep:
-        for r in _manifest_rows(spark, path, snap):
+        for r in _manifest_rows(path, snap):
             if r["file"]:  # epoch_marker rows carry no path
                 p = os.path.abspath(r["file"])
                 referenced.add(p)
@@ -1517,14 +1652,10 @@ def append_snapshot_epoch(
     cur = _ref_head(path, branch)
     if cur is None and branch != "main":
         raise ValueError(f"no versioned table or branch {branch!r} at {path}")
-    if cur is not None:
-        applied = (
-            _read_manifest(spark, path, cur)
-            .filter(F.col("epoch_id") == int(epoch_id))
-            .head(1)
-        )
-        if applied:
-            return None
+    if cur is not None and any(
+        r["epoch_id"] == int(epoch_id) for r in _manifest_rows(path, cur)
+    ):
+        return None
     os.makedirs(path, exist_ok=True)
     if cur is None and stats_cols and not os.path.exists(
         os.path.join(path, _PROPS)
@@ -1538,13 +1669,16 @@ def append_snapshot_epoch(
         for f in files
     ]
     if cur is None:
-        _commit(spark, path, 1, new)
+        schema = _snapshot_schema(spark, path, 0, new, batch_df.schema)
+        _commit(path, 1, new, schema=schema)
         return 1
 
     def build(cur_):
-        return _manifest_entries(spark, path, cur_) + new
+        return _manifest_entries(path, cur_) + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(
+        spark, path, build, branch=branch, frame_schema=batch_df.schema
+    )
 
 
 def write_stream_to_versioned(
@@ -1616,11 +1750,7 @@ def snapshot_history(spark: SparkSession, path: str) -> list[dict]:
     for d in sorted(os.listdir(_snap_dir(path))):
         if not d.isdigit():
             continue
-        m = _read_manifest(spark, path, int(d))
-        counts = {
-            r["kind"]: r["n"]
-            for r in m.groupBy("kind").agg(F.count("*").alias("n")).collect()
-        }
+        counts = Counter(r["kind"] for r in _manifest_rows(path, int(d)))
         out.append({"snapshot": int(d), **counts})
     return out
 

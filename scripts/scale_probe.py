@@ -936,7 +936,7 @@ def main() -> None:
     # later probes keep their baseline
     pre_cow = SN.current_snapshot(vt)
     n_data_before = sum(
-        1 for r in SN._manifest_rows(spark, vt, pre_cow) if r["kind"] == "data"
+        1 for r in SN._manifest_rows(vt, pre_cow) if r["kind"] == "data"
     )
     t0 = time.perf_counter()
     cow_snap = SN.delete_where_cow(
@@ -948,10 +948,10 @@ def main() -> None:
         prune={"d": (cuts[mid], cuts[mid + 1])},
     )
     dt_cow = round(time.perf_counter() - t0, 2)
-    cow_rows = SN._manifest_rows(spark, vt, cow_snap)
+    cow_rows = SN._manifest_rows(vt, cow_snap)
     n_data_after = sum(1 for r in cow_rows if r["kind"] == "data")
     carried = len(
-        {r["file"] for r in SN._manifest_rows(spark, vt, pre_cow)}
+        {r["file"] for r in SN._manifest_rows(vt, pre_cow)}
         & {r["file"] for r in cow_rows}
     )
     rel_results.append(

@@ -581,10 +581,30 @@ def test_versioned_table_time_travel_and_mor_deletes(spark, sf_dir, tmp_path):
     assert hist5[0].get("delete", 0) == 0
 
 
+def _jobs_in(spark, fn):
+    """Run ``fn`` under a fresh job group: (its result, jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_versioned_table_schema_evolution(spark, tmp_path):
     """An append with a widened schema is just new data files: the current
     snapshot reads the union schema (nulls for pre-evolution rows), while
-    the pre-evolution snapshot keeps its original narrow schema."""
+    the pre-evolution snapshot keeps its original narrow schema. Commits
+    record that schema, so a same-schema append launches one job (the data
+    write), building a read launches none, and every snapshot still reads
+    exactly what a ``mergeSchema`` scan of its data files reads."""
+    from collections import Counter
+
+    from demo_bigdata_spark.sources import snapshots as S
     from demo_bigdata_spark.sources.snapshots import (
         append_snapshot,
         create_table,
@@ -593,11 +613,14 @@ def test_versioned_table_schema_evolution(spark, tmp_path):
 
     path = str(tmp_path / "evo")
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
-    create_table(spark, path, v1)
+    _, jobs = _jobs_in(spark, lambda: create_table(spark, path, v1))
+    assert jobs == 1
     v2 = spark.createDataFrame(
         [(3, "c", 0.9)], "id long, name string, score double"
     )
-    append_snapshot(spark, path, v2)
+    # the widening append infers the union schema once, at commit time
+    _, jobs = _jobs_in(spark, lambda: append_snapshot(spark, path, v2))
+    assert jobs == 2
 
     cur = read_table(spark, path)
     assert set(cur.columns) == {"id", "name", "score"}
@@ -605,6 +628,22 @@ def test_versioned_table_schema_evolution(spark, tmp_path):
     assert got == {1: ("a", None), 2: ("b", None), 3: ("c", 0.9)}
     old = read_table(spark, path, snapshot=1)
     assert set(old.columns) == {"id", "name"}
+
+    v3 = spark.createDataFrame(
+        [(4, "d", None)], "id long, name string, score double"
+    )
+    # a same-schema append carries the recorded schema: the data write only
+    _, jobs = _jobs_in(spark, lambda: append_snapshot(spark, path, v3))
+    assert jobs == 1
+    for snap in (1, 2, 3):
+        got, jobs = _jobs_in(spark, lambda: read_table(spark, path, snap))
+        assert jobs == 0
+        files = [
+            r["file"] for r in S._manifest_rows(path, snap) if r["kind"] == "data"
+        ]
+        want = spark.read.option("mergeSchema", "true").parquet(*files)
+        assert got.schema == want.schema
+        assert Counter(got.collect()) == Counter(want.collect())
 
 
 def test_versioned_table_incremental_reads_and_cdc(spark, sf_dir, tmp_path):
@@ -788,7 +827,7 @@ def test_versioned_table_commit_claims_and_vacuum_safety(spark, tmp_path):
     claim = S._claim_path(path, nxt)
     _os.close(_os.open(claim, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY))
     with _pytest.raises(S.CommitConflictError):
-        S._commit(spark, path, nxt, [("", "epoch_marker", 0, None)])
+        S._commit(path, nxt, [("", "epoch_marker", 0, None)])
     # ... and an id at-or-below current conflicts outright
     _os.remove(claim)
     with _pytest.raises(S.CommitConflictError):
@@ -851,7 +890,7 @@ def test_versioned_table_manifest_stats_prune_files(spark, tmp_path):
     # manifest carries bounds for every data file — one entry per PART
     # FILE (round-8: per-file footer-harvested statistics), spanning the
     # three commit directories
-    rows = S._manifest_rows(spark, path, S.current_snapshot(path))
+    rows = S._manifest_rows(path, S.current_snapshot(path))
     datas = [r for r in rows if r["kind"] == "data"]
     assert len({r["file"].rsplit("/", 2)[-2] for r in datas}) == 3
     assert all(not _os.path.isdir(r["file"]) for r in datas)
@@ -879,7 +918,7 @@ def test_versioned_table_manifest_stats_prune_files(spark, tmp_path):
     )
     assert {r.k for r in pruned2.collect()} == set(range(100, 120)) - {101}
     # the delete file's key column came from the manifest
-    mrows = S._manifest_rows(spark, path, S.current_snapshot(path))
+    mrows = S._manifest_rows(path, S.current_snapshot(path))
     dmeta = [r["meta"] for r in mrows if r["kind"] == "delete"]
     assert dmeta and _json.loads(dmeta[0])["key_col"] == "k"
 
@@ -920,7 +959,7 @@ def test_stream_born_table_declares_stats_cols(spark, tmp_path):
     df = spark.createDataFrame([(1, 5), (2, 6)], "k long, v long")
     S.append_snapshot_epoch(spark, path, df, 0, stats_cols=["k"])
     S.append_snapshot_epoch(spark, path, df.withColumn("k", F.col("k") + 10), 1)
-    rows = S._manifest_rows(spark, path, S.current_snapshot(path))
+    rows = S._manifest_rows(path, S.current_snapshot(path))
     datas = [r for r in rows if r["kind"] == "data"]
     assert len({r["file"].rsplit("/", 2)[-2] for r in datas}) == 2
     assert all(
@@ -1041,7 +1080,7 @@ def test_versioned_table_per_file_stats_prune_inside_commit(spark, tmp_path):
 
     datas = [
         r
-        for r in S._manifest_rows(spark, path, 1)
+        for r in S._manifest_rows(path, 1)
         if r["kind"] == "data"
     ]
     assert len(datas) == 8  # one manifest entry per part file
@@ -1090,9 +1129,9 @@ def test_versioned_table_footer_stats_fail_open_observable(spark, tmp_path):
     snap = S.current_snapshot(path)
     entries = [
         (f, kind, e, meta if kind == "data" else m)
-        for f, kind, e, m in S._manifest_entries(spark, path, snap)
+        for f, kind, e, m in S._manifest_entries(path, snap)
     ]
-    S._commit(spark, path, snap + 1, entries)
+    S._commit(path, snap + 1, entries)
     pr = S.read_table(spark, path, prune={"k": (2, None)})
     assert {r.k for r in pr.collect()} == {2, 3}
     tf = [
@@ -1299,9 +1338,9 @@ def test_versioned_table_legacy_dir_manifests_still_read(spark, tmp_path):
 
     # hand-commit a LEGACY directory entry (what round-7 wrote)
     d = _os.path.dirname(
-        [r["file"] for r in S._manifest_rows(spark, path, 1)][0]
+        [r["file"] for r in S._manifest_rows(path, 1)][0]
     )
-    S._commit(spark, path, 2, [(d, "data", -1, None)])
+    S._commit(path, 2, [(d, "data", -1, None)])
     assert {r.k for r in S.read_table(spark, path)
             .collect()} == {1, 2}
 
@@ -1316,6 +1355,92 @@ def test_versioned_table_legacy_dir_manifests_still_read(spark, tmp_path):
     # vacuum keeps data referenced through either entry style
     res = S.expire_snapshots(spark, path, keep_last=1)
     assert {r.k for r in S.read_table(spark, path).collect()} == {1, 2, 3}
+
+
+_SPARK_MANIFEST_DDL = "file string, kind string, epoch_id long, seq int"
+
+
+def _spark_manifest(spark, path, snap, entries, with_meta=True):
+    """Write a manifest the way Spark-era commits did: a Spark parquet
+    directory (part-00000-<uuid>-c000.snappy.parquet + _SUCCESS)."""
+    from demo_bigdata_spark.sources import snapshots as S
+
+    rows = [
+        (f, k, e, i, m)[: 5 if with_meta else 4]
+        for i, (f, k, e, m) in enumerate(entries)
+    ]
+    ddl = _SPARK_MANIFEST_DDL + (", meta string" if with_meta else "")
+    spark.createDataFrame(rows, ddl).coalesce(1).write.mode("overwrite").parquet(
+        S._manifest_path(path, snap)
+    )
+
+
+def test_versioned_table_manifest_crash_redo_and_spark_manifests(spark, tmp_path):
+    """Manifests are written with pyarrow into a cleared snapshot
+    directory: a commit over a crashed writer's Spark-written manifest at
+    the same id leaves exactly its own entries (no stale part file read
+    twice). Spark-written manifests, with or without the ``meta`` column,
+    still read through every reader, and ``table_files`` keeps its column
+    names and Spark types."""
+    import os as _os
+
+    from demo_bigdata_spark.sources import snapshots as S
+
+    schema = "k long, v string"
+    path = str(tmp_path / "redo")
+    S.create_table(spark, path, spark.createDataFrame([(1, "a")], schema))
+    first = S._manifest_entries(path, 1)
+    # a crashed commit left a Spark-written manifest at id 2 that lists
+    # snapshot 1's data file twice
+    _spark_manifest(spark, path, 2, first + first)
+    stale = _os.listdir(S._manifest_path(path, 2))
+    assert "_SUCCESS" in stale and any(f.startswith("part-") for f in stale)
+    S.append_snapshot(spark, path, spark.createDataFrame([(2, "b")], schema))
+    rows = S._manifest_rows(path, 2)
+    assert [r["seq"] for r in rows] == [0, 1]
+    assert rows[0]["file"] == first[0][0] and rows[1]["file"] != first[0][0]
+    left = _os.listdir(S._manifest_path(path, 2))
+    assert not any(f.startswith("part-") or f == "_SUCCESS" for f in left)
+    assert sorted(r.k for r in S.read_table(spark, path).collect()) == [1, 2]
+
+    # Spark-era table: snapshot 1 without a meta column, snapshot 2 with
+    legacy = str(tmp_path / "spark_manifests")
+    d1 = S._write_files(spark.createDataFrame([(1, "a")], schema), legacy, "data")
+    d2 = S._write_files(spark.createDataFrame([(2, "b")], schema), legacy, "data")
+    e1 = [(f, "data", -1, None) for f in d1]
+    _spark_manifest(spark, legacy, 1, e1, with_meta=False)
+    _spark_manifest(
+        spark, legacy, 2, e1 + [(f, "data", 3, '{"bounds": {}}') for f in d2]
+    )
+    S._swap_pointer(legacy, 2)
+    assert S._manifest_rows(legacy, 1)[0]["meta"] is None
+    assert sorted(r.k for r in S.read_table(spark, legacy, 1).collect()) == [1]
+    assert sorted(r.k for r in S.read_table(spark, legacy).collect()) == [1, 2]
+    inc = S.read_appends_since(spark, legacy, 1)
+    assert [r.k for r in inc.collect()] == [2]
+    ddl = [
+        ("file", "string"),
+        ("kind", "string"),
+        ("epoch_id", "bigint"),
+        ("seq", "int"),
+        ("meta", "string"),
+    ]
+    old_tf = S.table_files(spark, legacy, 1)
+    assert old_tf.dtypes == ddl
+    assert [r.meta for r in old_tf.collect()] == [None]
+    # a commit on the Spark-era table writes the new manifest format
+    S.append_snapshot(spark, legacy, spark.createDataFrame([(3, "c")], schema))
+    assert S.table_files(spark, legacy).dtypes == ddl
+    assert S.table_files(spark, path).dtypes == ddl
+    assert [r.epoch_id for r in S.table_files(spark, legacy).collect()] == [
+        -1,
+        3,
+        -1,
+    ]
+    res = S.expire_snapshots(spark, legacy, keep_last=2)
+    assert res["snapshots_removed"] == 1
+    assert sorted(r.k for r in S.read_table(spark, legacy, 2).collect()) == [1, 2]
+    assert sorted(r.k for r in S.read_table(spark, legacy).collect()) == [1, 2, 3]
 
 
 def test_versioned_table_branches_tags_and_wap(spark, tmp_path):
@@ -1422,7 +1547,7 @@ def test_versioned_table_branch_commit_claims_and_global_ids(spark, tmp_path):
     claim = S._claim_path(path, 4, "b")
     _os.close(_os.open(claim, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY))
     with _pytest.raises(S.CommitConflictError):
-        S._commit(spark, path, 4, [("", "epoch_marker", 0, None)], branch="b")
+        S._commit(path, 4, [("", "epoch_marker", 0, None)], branch="b")
     _os.remove(claim)
     # ... and after release the branch commits fine, to a fresh global id
     s2 = S.append_snapshot(spark, path, spark.createDataFrame([(5,)], "k long"), branch="b")
@@ -1607,12 +1732,12 @@ def test_versioned_table_cow_delete_aborts_on_concurrent_delete(
 
     orig = S._retrying_commit
 
-    def hijack(spark_, p, build, branch="main"):
+    def hijack(spark_, p, build, **kw):
         # restore first so the interleaved MOR delete commits normally,
         # then hand the COW build to the real commit loop
         monkeypatch.setattr(S, "_retrying_commit", orig)
         S.delete_where(spark_, p, "k", F.col("k") == 1)
-        return orig(spark_, p, build, branch=branch)
+        return orig(spark_, p, build, **kw)
 
     monkeypatch.setattr(S, "_retrying_commit", hijack)
     with _pytest.raises(RuntimeError, match="concurrent delete"):

@@ -1991,9 +1991,9 @@ def test_snapshot_cdf_refuses_delete_compaction(spark, tmp_path):
     S.delete_where(spark, path, "k", F.col("k") == 2)  # snap 2
     cur = S.current_snapshot(path)
     kept = [
-        e for e in S._manifest_entries(spark, path, cur) if e[1] != "delete"
+        e for e in S._manifest_entries(path, cur) if e[1] != "delete"
     ]
-    S._commit(spark, path, cur + 1, kept)  # simulated delete compaction
+    S._commit(path, cur + 1, kept)  # simulated delete compaction
     sch = StructType.fromDDL(
         "k long, v string, `_change_type` string, `_commit_snapshot` bigint"
     )
