@@ -377,79 +377,36 @@ def simhash_pairs(
     )
 
 
-# r14 optimization (guide §5 driver discipline / §1.2 fix-the-algorithm —
-# the pagerank _DRIVER_GRAPH_* convention applied to CC): after phase 1 +
-# contraction, the remaining fixed-point rounds run over the CONTRACTED
-# graph, which on dedup-shaped corpora is component-count-sized (hundreds
-# of rows at sf0.1) — yet the distributed loop paid one count job (plus
-# exchanges) per round, and the final resolution joined the corpus-sized
-# phase-1 frame against a statistics-less checkpoint (SortMergeJoin, one
-# full node-sized exchange). When a limit-probe bounds the contracted
-# table at _CC_DRIVER_MAX_ROWS, the rounds run on the DRIVER as a
-# bit-exact Python replica of the distributed step (same neighbor/bucket
-# min, same pointer jump, same carried-old changed count, same budget
-# accounting — so the ``max_iterations`` raise fires on exactly the same
-# inputs) and the resolution map comes back as a BROADCAST local relation,
-# so the corpus-sized frame never shuffles. The threshold is on the DATA
-# (contracted size), not the environment: a 100 TB corpus whose post-
-# contraction graph exceeds the bound keeps the distributed loop.
+# Connected components (CC) by min-label propagation. Two front ends, one
+# per graph form, each run ONE full-size round (phase 1) and contract the
+# graph to label space: _propagate_min_labels for (id, bucket) band
+# memberships, _propagate_min_labels_edges for id_a/id_b pair lists (each
+# contracted edge becomes a 2-member bucket keyed by the (src, dst)
+# struct). Phase 2 is one kernel, _finish_min_labels, over the contracted
+# memberships. Contracted tables are component-count-sized on dedup-shaped
+# corpora, so a limit-probe bounds them at _CC_DRIVER_MAX_ROWS memberships
+# (a contracted edge is two) and the rounds run on the DRIVER as a
+# bit-exact Python replica of the distributed round (same bucket min, same
+# pointer jump, same carried-old changed count, same budget, so the
+# ``max_iterations`` raise fires on exactly the same inputs); the
+# resolution map comes back as a BROADCAST local relation, so the
+# corpus-sized phase-1 frame never shuffles. The bound is on the DATA, not
+# the environment: a corpus whose contracted graph exceeds it keeps the
+# distributed loop (one checkpoint + filter-count per round) and a
+# label-sized left join.
 _CC_DRIVER_MAX_ROWS = 100_000
 
 
-def _edge_rounds_driver(
-    edge_rows, budget: int, err_msg: str
-) -> dict:
-    """Bit-exact driver replica of :func:`_edge_min_label_loop` over a
-    collected symmetric contracted edge list [(src, dst), ...]: per round
-    a neighbor-min (``nm(d) = min label(s) over in-edges``), the
-    ``least(own, nm)`` step, the pointer jump through the stepped table,
-    and the carried-old ``changed`` count — one budget unit per round,
-    raising ``err_msg`` when the budget is exhausted before ``changed ==
-    0``, exactly like the distributed loop. Labels are member ids; min
-    over Python ints/strs orders identically to Spark's bigint/UTF8
-    ordering (UTF-8 byte order is code-point order), so the fixed point
-    is bit-identical. Nodes outside every edge (isolated phase-1 labels)
-    keep themselves and contribute 0 to ``changed`` in both forms, so
-    restricting the replica to edge-touching nodes changes nothing."""
-    label: dict = {}
-    for s, d in edge_rows:
-        label[s] = s
-        label[d] = d
-    while budget > 0:
-        budget -= 1
-        nm: dict = {}
-        for s, d in edge_rows:
-            v = label[s]
-            prev = nm.get(d)
-            if prev is None or v < prev:
-                nm[d] = v
-        stepped = {}
-        for x, lx in label.items():
-            v = nm.get(x)
-            stepped[x] = lx if v is None or lx < v else v
-        changed = 0
-        new = {}
-        for x, sx in stepped.items():
-            t = stepped.get(sx, sx)
-            nx = sx if sx < t else t
-            new[x] = nx
-            if nx != label[x]:
-                changed += 1
-        label = new
-        if changed == 0:
-            return label
-    raise RuntimeError(err_msg)
-
-
-def _bucket_rounds_driver(
-    mem_rows, budget: int, err_msg: str
-) -> dict:
+def _bucket_rounds_driver(mem_rows, budget: int) -> dict | None:
     """Bit-exact driver replica of :func:`_bucket_min_label_loop` over a
     collected contracted membership list [(id, bucket), ...]: per round
     the per-bucket member-label min, the per-member min over its buckets,
-    the pointer jump, and the carried-old ``changed`` count — identical
-    budget accounting and raise behavior to the distributed loop (see
-    :func:`_edge_rounds_driver` for the ordering argument)."""
+    the pointer jump, and the carried-old ``changed`` count, one budget
+    unit per round. Returns None when the budget runs out before
+    ``changed == 0``, like the distributed loop. Labels are member ids;
+    min over Python ints/strs orders identically to Spark's bigint/UTF8
+    ordering (UTF-8 byte order is code-point order), so the fixed point
+    is bit-identical."""
     by_bucket: dict = {}
     by_id: dict = {}
     for i, b in mem_rows:
@@ -471,15 +428,14 @@ def _bucket_rounds_driver(
         label = new
         if changed == 0:
             return label
-    raise RuntimeError(err_msg)
+    return None
 
 
 def _resolve_with_driver_labels(l0: DataFrame, final: dict, id_col: str) -> DataFrame:
     """Resolve every phase-1 label through a driver-computed contracted
     fixed point: the (label -> component min) map — only the entries that
     actually move — becomes a local relation and the join is an explicit
-    BROADCAST, so the corpus-sized ``l0`` frame is never exchanged (the
-    former statistics-less checkpoint forced a SortMergeJoin here).
+    BROADCAST, so the corpus-sized ``l0`` frame is never exchanged.
     Missing labels keep themselves via the left join's coalesce, exactly
     like the distributed resolution."""
     from pyspark.sql.types import StructField, StructType
@@ -497,38 +453,17 @@ def _resolve_with_driver_labels(l0: DataFrame, final: dict, id_col: str) -> Data
     )
 
 
-def _bucket_min_label_step(
-    bands_df: DataFrame, labels: DataFrame | None, id_col: str
-):
-    """One bipartite min-label round + pointer jump: per-bucket min label,
-    per-member min over its buckets, then ``label(x) <- min(label(x),
-    label(label(x)))`` (labels-sized self-join; every label is a member
-    id, so the lookup always resolves). ``labels=None`` means identity
-    labels — the bucket min is then a plain member-id aggregate with no
-    join. Returns (id_col, _old, cluster_id) with the previous label
-    carried for the caller's filter-count convergence test."""
-    if labels is None:
-        m = bands_df.select(
-            F.col(id_col), F.col("bucket"), F.col(id_col).alias("cluster_id")
-        )
-    else:
-        m = bands_df.join(labels, id_col)
-    old_expr = F.min("_old") if "_old" in m.columns else F.min("cluster_id")
-    bucket_min = m.groupBy("bucket").agg(F.min("cluster_id").alias("_bm"))
-    stepped = (
-        m.join(bucket_min, "bucket")
-        .groupBy(id_col)
-        .agg(
-            old_expr.alias("_old"),
-            F.min("_bm").alias("cluster_id"),
-        )
-    )
+def _pointer_jump(stepped: DataFrame, id_col: str, *carry: str) -> DataFrame:
+    """``label(x) <- min(label(x), label(label(x)))`` over a stepped
+    (id_col, cluster_id) frame: a labels-sized self-join (every label is
+    a member id, so the lookup always resolves). ``carry`` columns pass
+    through unchanged."""
     lk = stepped.select(
         F.col(id_col).alias("_lid"), F.col("cluster_id").alias("_llbl")
     )
     return stepped.join(lk, stepped["cluster_id"] == lk["_lid"], "left").select(
         stepped[id_col],
-        F.col("_old"),
+        *carry,
         F.least(
             F.col("cluster_id"),
             F.coalesce(F.col("_llbl"), F.col("cluster_id")),
@@ -536,70 +471,118 @@ def _bucket_min_label_step(
     )
 
 
+def _bucket_min_label_step(
+    bands_df: DataFrame, labels: DataFrame | None, id_col: str
+):
+    """One bipartite min-label round + pointer jump: per-bucket min label,
+    per-member min over its buckets, then the jump. ``labels=None`` means
+    identity labels — the bucket min is then a plain member-id aggregate
+    with no join. Returns (id_col, _old, cluster_id) with the previous
+    label carried for the caller's filter-count convergence test."""
+    if labels is None:
+        m = bands_df.select(
+            F.col(id_col), F.col("bucket"), F.col(id_col).alias("cluster_id")
+        )
+    else:
+        m = bands_df.join(labels, id_col)
+    bucket_min = m.groupBy("bucket").agg(F.min("cluster_id").alias("_bm"))
+    stepped = (
+        m.join(bucket_min, "bucket")
+        .groupBy(id_col)
+        .agg(
+            F.min("cluster_id").alias("_old"),
+            F.min("_bm").alias("cluster_id"),
+        )
+    )
+    return _pointer_jump(stepped, id_col, "_old")
+
+
 def _bucket_min_label_loop(
-    bands_df: DataFrame, id_col: str, max_iterations: int,
-    steps_per_round: int = 1,
-) -> DataFrame:
+    bands_df: DataFrame, id_col: str, budget: int
+) -> DataFrame | None:
     """Bipartite min-label rounds to the exact fixed point, one lazy
-    localCheckpoint job per ``steps_per_round`` propagation steps: the
-    carried ``_old`` label (from before the batch's first step) makes
+    localCheckpoint per round: the carried ``_old`` label makes
     ``changed`` a filter-count over the just-materialized checkpoint
-    blocks (the former separate old-vs-new labels join + count job is
-    gone). Step batching stays available but defaults to 1 —
-    measured and rejected, see :func:`_edge_min_label_loop`. Labels are monotonically non-increasing, so ``changed == 0`` is an
-    EXACT convergence test; exceeding ``max_iterations`` total steps
-    raises rather than returning unconverged labels."""
+    blocks. Labels are monotonically non-increasing, so ``changed == 0``
+    is an EXACT convergence test; returns None when ``budget`` rounds
+    run out first."""
     labels = None
-    budget = max_iterations
     while budget > 0:
-        cur = labels
-        for _ in range(min(steps_per_round, budget)):
-            cur = _bucket_min_label_step(bands_df, cur, id_col)
-            budget -= 1
-        new_labels = cur.localCheckpoint(eager=False)
+        budget -= 1
+        new_labels = _bucket_min_label_step(
+            bands_df, labels, id_col
+        ).localCheckpoint(eager=False)
         changed = new_labels.filter(F.col("cluster_id") != F.col("_old")).count()
         labels = new_labels.select(id_col, "cluster_id")
         if changed == 0:
             return labels
-    raise RuntimeError(
-        f"duplicate_clusters: label propagation did not converge within "
+    return None
+
+
+def _finish_min_labels(
+    l0: DataFrame, mem: DataFrame, id_col: str, max_iterations: int
+) -> DataFrame:
+    """Phase 2 of both CC front ends: the min-label fixed point over the
+    contracted memberships ``mem`` (id_col = a phase-1 label, bucket),
+    composed with the phase-1 labels ``l0`` (id_col, cluster_id). Phase 1
+    spent one of the ``max_iterations`` rounds. A limit-probe picks the
+    driver replica or the distributed loop (see ``_CC_DRIVER_MAX_ROWS``);
+    both raise the same error when the budget runs out before the fixed
+    point, never returning unconverged labels. Returns (id_col,
+    cluster_id) for every row of ``l0``."""
+    not_converged = RuntimeError(
+        f"connected components: label propagation did not converge within "
         f"{max_iterations} iterations — raise max_iterations (labels are "
         "exact only at the fixed point)"
+    )
+    if max_iterations < 1:
+        raise not_converged
+    budget = max(1, max_iterations - 1)
+    probe = mem.limit(_CC_DRIVER_MAX_ROWS + 1).collect()
+    if len(probe) <= _CC_DRIVER_MAX_ROWS:
+        final = _bucket_rounds_driver([(r[0], r[1]) for r in probe], budget)
+        if final is None:
+            raise not_converged
+        return _resolve_with_driver_labels(l0, final, id_col)
+    cl = _bucket_min_label_loop(mem, id_col, budget)
+    if cl is None:
+        raise not_converged
+    return l0.join(
+        cl.select(F.col(id_col).alias("_cl"), F.col("cluster_id").alias("_cmin")),
+        l0["cluster_id"] == F.col("_cl"),
+        "left",
+    ).select(
+        l0[id_col], F.coalesce("_cmin", "cluster_id").alias("cluster_id")
     )
 
 
 def _propagate_min_labels(
     bands_df: DataFrame, id_col: str, max_iterations: int
 ) -> DataFrame:
-    """Min-label propagation over a bipartite (id, bucket) membership
-    table to the exact fixed point — two-phase since the r13.5
-    optimization round (each phase's rounds also pointer-jump, so chains
-    of buckets converge in ~log2(diameter) rounds, not ~diameter/2):
+    """Connected components over a bipartite (id, bucket) membership
+    table: every id gets the minimum id reachable through shared buckets.
 
     - **Phase 1**: one full-membership round from identity labels (the
       bucket min is then a plain member-id aggregate — no labels join) +
       pointer jump. Dup-farm buckets collapse here: every member of a
       farm bucket takes the bucket min immediately.
-    - **Phase 2**: memberships CONTRACT to distinct (label, bucket) rows
-      — component-count-sized on dup-heavy corpora, never corpus-sized —
-      and the remaining rounds run on that contracted table (one lazy
-      localCheckpoint job per round; convergence via the carried old
-      label's filter-count). The full membership table is scanned twice
-      total (phase-1 aggregate + contraction join) instead of twice per
-      round. A final label-sized left join resolves every member.
+    - **Contraction**: memberships are rewritten to distinct (label,
+      bucket) rows — component-count-sized on dup-heavy corpora, never
+      corpus-sized. The full membership table is scanned twice in total
+      (phase-1 aggregate + contraction join).
+    - **Phase 2**: :func:`_finish_min_labels` runs the remaining rounds on
+      the contracted table and resolves every member.
 
     Exactness: labels are member ids and only decrease; contraction
     preserves bipartite connectivity, and the component minimum keeps its
     own label through phase 1, so the contracted fixed point composed
-    with the resolution join IS the component-min fixed point. Raises
-    rather than returning silently-unconverged labels if the
-    ``max_iterations`` backstop is hit — never an accepted truncation."""
-    if max_iterations < 1:
-        raise RuntimeError(
-            f"duplicate_clusters: label propagation did not converge within "
-            f"{max_iterations} iterations — raise max_iterations (labels are "
-            "exact only at the fixed point)"
-        )
+    with the resolution join IS the component-min fixed point. Rows with
+    a NULL id or bucket are dropped first, so an id whose memberships are
+    all NULL-bucket is absent from the output. Raises rather than
+    returning unconverged labels if ``max_iterations`` is hit."""
+    bands_df = bands_df.filter(
+        F.col(id_col).isNotNull() & F.col("bucket").isNotNull()
+    )
     l0 = _bucket_min_label_step(bands_df, None, id_col).drop(
         "_old"
     ).localCheckpoint(eager=False)
@@ -608,31 +591,102 @@ def _propagate_min_labels(
         .select(F.col("cluster_id").alias(id_col), "bucket")
         .distinct()
     ).localCheckpoint(eager=False)
-    # r14: contracted memberships small enough to collect finish on the
-    # driver (bit-exact round replica incl. the max_iterations raise) and
-    # resolve via a broadcast map — no per-round count jobs, no node-sized
-    # resolution exchange. Oversized contracted tables keep the
-    # distributed loop (the probe is on the data, not the environment).
-    probe = mem.limit(_CC_DRIVER_MAX_ROWS + 1).collect()
-    budget = max(1, max_iterations - 1)
-    err_msg = (
-        f"duplicate_clusters: label propagation did not converge within "
-        f"{budget} iterations — raise max_iterations (labels are "
-        "exact only at the fixed point)"
-    )
-    if len(probe) <= _CC_DRIVER_MAX_ROWS:
-        final = _bucket_rounds_driver(
-            [(r[0], r[1]) for r in probe], budget, err_msg
-        )
-        return _resolve_with_driver_labels(l0, final, id_col)
-    cl = _bucket_min_label_loop(mem, id_col, max(1, max_iterations - 1))
-    return l0.join(
-        cl.select(F.col(id_col).alias("_cl"), F.col("cluster_id").alias("_cmin")),
-        l0["cluster_id"] == F.col("_cl"),
-        "left",
+    return _finish_min_labels(l0, mem, id_col, max_iterations)
+
+
+def _edge_min_label_step(sym: DataFrame, labels: DataFrame, id_col: str):
+    """Phase 1 of the edge front end: from identity ``labels``, take the
+    neighbour min over the symmetrized edges (a plain aggregate, no
+    labels join), then the pointer jump. Returns (id_col, cluster_id)."""
+    nbr_min = sym.groupBy("_dst").agg(F.min("_src").alias("_nm"))
+    stepped = labels.join(
+        nbr_min, labels[id_col] == nbr_min["_dst"], "left"
     ).select(
-        l0[id_col], F.coalesce("_cmin", "cluster_id").alias("cluster_id")
+        labels[id_col],
+        F.least(
+            F.col("cluster_id"), F.coalesce(F.col("_nm"), F.col("cluster_id"))
+        ).alias("cluster_id"),
     )
+    return _pointer_jump(stepped, id_col)
+
+
+def _propagate_min_labels_edges(
+    pairs: DataFrame, universe: DataFrame, id_col: str, max_iterations: int
+) -> DataFrame:
+    """Connected components over an EDGE LIST (``id_a``/``id_b`` pairs)
+    and a node ``universe`` frame (column ``id_col``) — shared by
+    :func:`_survivors_from_pairs`, ``similarity.knn_clusters`` and
+    ``graph.connected_components``. Every universe id gets the minimum id
+    reachable from it; ids without edges keep themselves.
+
+    - **Phase 1 — one full-edge round + pointer jump**: neighbour min over
+      the symmetrized edges from identity labels, then ``label(x) <-
+      min(label(x), label(label(x)))``. On dedup-shaped graphs (dense
+      near-duplicate families) this alone collapses most nodes to their
+      component min.
+    - **Contraction**: edges are rewritten to distinct label-space pairs
+      ``(_src < _dst)``, and each such edge becomes a 2-member bucket
+      keyed by the ``(_src, _dst)`` struct (a struct key cannot collide,
+      so no two edges share a bucket). The full edge table is scanned
+      exactly twice (the phase-1 aggregate and the contraction join).
+    - **Phase 2**: :func:`_finish_min_labels`. A round over 2-member
+      buckets gives ``min(own label, neighbour labels)``, which is the
+      edge round.
+
+    Exactness: phase-1 labels are member ids that only decrease;
+    contraction preserves connectivity, and the component minimum keeps
+    its own label through phase 1, so the contracted component min IS the
+    component min. The universe must contain every edge endpoint: the
+    contraction joins drop edges whose endpoints have no label. Edges
+    with a NULL endpoint and NULL universe ids are dropped first. Raises
+    rather than returning unconverged labels if ``max_iterations`` is
+    hit. Returns (id_col, cluster_id)."""
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
+    # symmetrize in ONE scan: a two-branch union would re-run the caller's
+    # whole pair subtree once per direction; inline_outer emits both
+    # directions from a single pass, map-only
+    sym = pairs.select(
+        F.inline_outer(
+            F.array(
+                F.struct(
+                    F.col("id_a").alias("_src"), F.col("id_b").alias("_dst")
+                ),
+                F.struct(
+                    F.col("id_b").alias("_src"), F.col("id_a").alias("_dst")
+                ),
+            )
+        )
+    ).localCheckpoint(eager=False)
+    base = (
+        universe.select(F.col(id_col))
+        .filter(F.col(id_col).isNotNull())
+        .distinct()
+        .withColumn("cluster_id", F.col(id_col))
+    )
+    l0 = _edge_min_label_step(sym, base, id_col).localCheckpoint(eager=False)
+    la = l0.select(F.col(id_col).alias("_ia"), F.col("cluster_id").alias("_la"))
+    lb = l0.select(F.col(id_col).alias("_ib"), F.col("cluster_id").alias("_lb"))
+    edge = F.struct("_src", "_dst")
+    mem = (
+        sym.join(la, sym["_src"] == la["_ia"])
+        .join(lb, sym["_dst"] == lb["_ib"])
+        .filter(F.col("_la") != F.col("_lb"))
+        .select(
+            F.least("_la", "_lb").alias("_src"),
+            F.greatest("_la", "_lb").alias("_dst"),
+        )
+        .distinct()
+        .select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("_src").alias(id_col), edge.alias("bucket")),
+                    F.struct(F.col("_dst").alias(id_col), edge.alias("bucket")),
+                )
+            )
+        )
+        .localCheckpoint(eager=False)
+    )
+    return _finish_min_labels(l0, mem, id_col, max_iterations)
 
 
 def duplicate_clusters(
@@ -647,16 +701,14 @@ def duplicate_clusters(
     cluster graph connects docs sharing any LSH band bucket.
 
     This is how dup-farm buckets (too big for pairwise verification — see
-    minhash_candidates.max_bucket) are handled at scale: label propagation
-    over the bipartite doc<->bucket graph instead of quadratic pair expansion.
-    Each iteration is two aggregate/join rounds (doc->bucket min, bucket->doc
-    min); labels are monotonically non-increasing, so convergence is exact
-    when an iteration changes nothing — the loop runs to that fixed point
-    and RAISES if the ``max_iterations`` backstop is hit (never returns
-    unconverged labels silently; >10-hop chains pinned by test). Iterations
-    are driver-side loops over lazy plans with localCheckpoint() to cut
-    lineage (standard iterative Spark); diameter of real dup clusters is
-    tiny, so it converges in a few rounds.
+    minhash_candidates.max_bucket) are handled at scale: connected
+    components over the bipartite doc<->bucket graph
+    (:func:`_propagate_min_labels`) instead of quadratic pair expansion.
+    One full-membership round collapses farm buckets; the contracted
+    graph then runs the shared phase-2 kernel to the exact fixed point,
+    on the driver when it is small enough to collect. Exceeding the
+    ``max_iterations`` backstop RAISES (never returns unconverged labels;
+    >10-hop chains pinned by test).
 
     Returns (id_col, cluster_id).
     """
@@ -1756,220 +1808,13 @@ def read_near_dup_pairs(spark, index_path: str) -> DataFrame:
     ).select("id_a", "id_b", "jaccard").dropDuplicates(["id_a", "id_b"])
 
 
-def _edge_min_label_step(sym: DataFrame, labels: DataFrame, id_col: str, first: bool):
-    """One edge-list min-label round + pointer jump over a symmetrized
-    edge frame: neighbor min (a plain aggregate when labels are still the
-    identity, else one edge-sized join + aggregate), then the shortcut
-    ``label(x) <- min(label(x), label(label(x)))`` (labels-sized
-    self-join; every label IS a member id, so the lookup always
-    resolves). Returns (id_col, _old, cluster_id) — the label from BEFORE
-    the oldest chained step is carried through (an ``_old`` column on the
-    input is preserved, else the input label becomes ``_old``) so callers
-    can test convergence with a filter-count on the materialized result
-    instead of re-joining old vs new labels."""
-    old_expr = F.col("_old") if "_old" in labels.columns else F.col("cluster_id")
-    if first:
-        nbr_min = sym.groupBy("_dst").agg(F.min("_src").alias("_nm"))
-    else:
-        nbr_min = (
-            sym.join(labels, sym["_src"] == labels[id_col])
-            .groupBy("_dst")
-            .agg(F.min("cluster_id").alias("_nm"))
-        )
-    stepped = labels.join(
-        nbr_min, labels[id_col] == nbr_min["_dst"], "left"
-    ).select(
-        labels[id_col],
-        old_expr.alias("_old"),
-        F.least(
-            F.col("cluster_id"), F.coalesce(F.col("_nm"), F.col("cluster_id"))
-        ).alias("cluster_id"),
-    )
-    lk = stepped.select(
-        F.col(id_col).alias("_lid"), F.col("cluster_id").alias("_llbl")
-    )
-    return stepped.join(lk, stepped["cluster_id"] == lk["_lid"], "left").select(
-        stepped[id_col],
-        F.col("_old"),
-        F.least(
-            F.col("cluster_id"),
-            F.coalesce(F.col("_llbl"), F.col("cluster_id")),
-        ).alias("cluster_id"),
-    )
-
-
-def _edge_min_label_loop(
-    sym: DataFrame,
-    universe: DataFrame,
-    id_col: str,
-    max_iterations: int,
-    steps_per_round: int = 1,
-) -> DataFrame:
-    """Run edge-list min-label rounds to the exact fixed point. ONE lazy
-    localCheckpoint job per ``steps_per_round`` propagation steps (the
-    r13.5 shape): each materialized result carries the label from before
-    its chained steps, so ``changed`` is a filter-count over the
-    just-materialized checkpoint blocks — the former separate
-    labels-vs-labels rejoin (one full shuffle join + an extra job per
-    round) is gone. The fixed point is absorbing, so ``changed == 0``
-    across a batch still certifies the exact component-min fixed point
-    at any ``steps_per_round``; the default stays 1 because batching was
-    MEASURED AND REJECTED on this hardware (same-session A/B at sf0.1,
-    steps=2 vs 1: dedup_survivors 5.2-7.2 vs 4.0-4.3 s, knn_clusters
-    4.1-5.0 vs 3.4-3.6 s — the extra steps past the fixed point and the
-    doubled per-job plan cost more than the saved materializations).
-    Exceeding ``max_iterations`` total steps raises rather than
-    returning unconverged labels."""
-    labels = universe.select(F.col(id_col)).distinct().withColumn(
-        "cluster_id", F.col(id_col)
-    )
-    budget, first = max_iterations, True
-    while budget > 0:
-        cur = labels
-        for _ in range(min(steps_per_round, budget)):
-            cur = _edge_min_label_step(sym, cur, id_col, first=first)
-            first = False
-            budget -= 1
-        new_labels = cur.localCheckpoint(eager=False)
-        # the count materializes the checkpoint (one job) and then scans
-        # cached blocks only — no join against the previous labels
-        changed = new_labels.filter(F.col("cluster_id") != F.col("_old")).count()
-        labels = new_labels.select(id_col, "cluster_id")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"_propagate_min_labels_edges: label propagation did not converge "
-        f"within {max_iterations} iterations"
-    )
-
-
-def _propagate_min_labels_edges(
-    pairs: DataFrame, universe: DataFrame, id_col: str, max_iterations: int
-) -> DataFrame:
-    """Min-label connected components over an EDGE LIST (``id_a``/``id_b``
-    pairs) — the fast path shared by :func:`_survivors_from_pairs` and
-    ``similarity.knn_clusters``. Two-phase (the r13.5 optimization-round
-    shape, replacing full-edge rounds to the fixed point):
-
-    - **Phase 1 — one full-edge round + pointer jump**: neighbor min over
-      the symmetrized edges from identity labels (a plain aggregate — no
-      labels join) followed by ``label(x) <- min(label(x),
-      label(label(x)))``. On dedup-shaped graphs (dense near-duplicate
-      families) this alone collapses most nodes to their component min.
-    - **Phase 2 — contract and finish in label space**: edges are
-      rewritten to distinct (label, label) pairs — the classic CC
-      contraction step — and the remaining rounds run on that contracted
-      graph, which is component-count-sized, NOT corpus-sized. The full
-      edge table is scanned exactly twice (the phase-1 aggregate and the
-      contraction join) instead of once per round. Since r14 the rounds
-      run ON THE DRIVER when a limit-probe bounds the contracted table
-      (``_CC_DRIVER_MAX_ROWS`` — a bit-exact replica of the distributed
-      round incl. the budget raise), and the resolution is a BROADCAST
-      map join, so no per-round jobs and no node-sized resolution
-      exchange; oversized contracted graphs keep the distributed loop
-      (edge round + jump, one lazy-checkpoint job each, convergence via
-      a carried-old-label filter-count) and the label-sized left join.
-
-    Exactness is untouched: phase-1 labels are member ids that only
-    decrease; contraction preserves connectivity (each edge maps to a
-    label-space edge or a self-loop), the component minimum M keeps label
-    M through phase 1 (all its neighbors have larger ids), so the
-    contracted component min IS the component min, and ``changed == 0``
-    on the contracted graph is still the exact convergence certificate.
-    Measured (sf0.1, this round's A/B): dedup_survivors' CC 11.1 ->
-    5.3 s over 4.5M dense pairs (5 full-edge rounds -> 1 full-edge round
-    + a 223-edge contracted graph), labels bit-identical. Real
-    multi-member band buckets (:func:`read_dedup_clusters`,
-    :func:`duplicate_clusters`) use the bipartite twin
-    (:func:`_propagate_min_labels`) — there the bucket IS what avoids
-    quadratic pair expansion. Returns (id_col, cluster_id)."""
-    if max_iterations < 1:
-        raise RuntimeError(
-            f"_propagate_min_labels_edges: label propagation did not converge "
-            f"within {max_iterations} iterations"
-        )
-    # symmetrize in ONE scan (r14): the former two-branch union re-ran the
-    # caller's whole pair subtree (parquet read + ledger semi-join) once
-    # per direction to materialize this checkpoint; inline_outer emits both
-    # directions from a single pass, map-only
-    sym = pairs.select(
-        F.inline_outer(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("_src"), F.col("id_b").alias("_dst")
-                ),
-                F.struct(
-                    F.col("id_b").alias("_src"), F.col("id_a").alias("_dst")
-                ),
-            )
-        )
-    ).localCheckpoint(eager=False)
-    base = universe.select(F.col(id_col)).distinct().withColumn(
-        "cluster_id", F.col(id_col)
-    )
-    l0 = _edge_min_label_step(sym, base, id_col, first=True).drop(
-        "_old"
-    ).localCheckpoint(eager=False)
-    # contract: distinct label-space edges (tiny once dense families have
-    # collapsed); scanning sym here is the second and LAST full-edge pass
-    la = l0.select(F.col(id_col).alias("_ia"), F.col("cluster_id").alias("_la"))
-    lb = l0.select(F.col(id_col).alias("_ib"), F.col("cluster_id").alias("_lb"))
-    contracted = (
-        sym.join(la, sym["_src"] == la["_ia"])
-        .join(lb, sym["_dst"] == lb["_ib"])
-        .filter(F.col("_la") != F.col("_lb"))
-        .select(
-            F.least("_la", "_lb").alias("_src"),
-            F.greatest("_la", "_lb").alias("_dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # r14: dedup-shaped corpora contract to component-count-sized graphs —
-    # finish the fixed point on the driver (bit-exact round replica incl.
-    # the max_iterations raise; see _edge_rounds_driver) and resolve with a
-    # broadcast map instead of per-round count jobs + a node-sized
-    # SortMergeJoin against a statistics-less checkpoint.
-    probe = contracted.limit(_CC_DRIVER_MAX_ROWS + 1).collect()
-    budget = max(1, max_iterations - 1)
-    if len(probe) <= _CC_DRIVER_MAX_ROWS:
-        # replicate the symmetric view the distributed loop iterates over
-        sym_rows = [(r[0], r[1]) for r in probe]
-        sym_rows += [(b, a) for a, b in sym_rows]
-        final = _edge_rounds_driver(
-            sym_rows,
-            budget,
-            f"_propagate_min_labels_edges: label propagation did not "
-            f"converge within {budget} iterations",
-        )
-        return _resolve_with_driver_labels(l0, final, id_col)
-    csym = contracted.unionByName(
-        contracted.select(F.col("_dst").alias("_src"), F.col("_src").alias("_dst"))
-    ).localCheckpoint(eager=False)
-    cl = _edge_min_label_loop(
-        csym,
-        l0.select(F.col("cluster_id").alias(id_col)),
-        id_col,
-        budget,
-    )
-    return l0.join(
-        cl.select(F.col(id_col).alias("_cl"), F.col("cluster_id").alias("_cmin")),
-        l0["cluster_id"] == F.col("_cl"),
-        "left",
-    ).select(
-        l0[id_col], F.coalesce("_cmin", "cluster_id").alias("cluster_id")
-    )
-
-
 def _survivors_from_pairs(
     pairs: DataFrame, universe: DataFrame, id_col: str, max_iterations: int
 ) -> DataFrame:
     """Shared CC step for keep/drop decisions: min-label fixed point over
-    verified pairs (:func:`_propagate_min_labels_edges` — edge-list rounds
-    + pointer jumping); isolated docs in ``universe`` keep themselves.
-    Returns (id_col, cluster_id, keep) with keep = (id == component min);
-    the fixed point is identical to the r12 bucket formulation, so the
-    unrolled oracle replays are unchanged."""
+    verified pairs (:func:`_propagate_min_labels_edges`); isolated docs in
+    ``universe`` keep themselves. Returns (id_col, cluster_id, keep) with
+    keep = (id == component min)."""
     labels = _propagate_min_labels_edges(
         pairs.select("id_a", "id_b"), universe, id_col, max_iterations
     )

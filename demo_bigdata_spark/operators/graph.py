@@ -483,45 +483,29 @@ def connected_components(
     nodes: DataFrame | None = None,
     max_iterations: int = 64,
 ) -> DataFrame:
-    """Connected components over an undirected edge frame — the public
-    graph-tier form of the min-label propagation that powers
-    ``dedup.duplicate_clusters`` (operators/dedup.py:380): each edge
-    becomes a 2-member bucket in a bipartite membership table, and labels
-    propagate node -> bucket -> node to the EXACT fixed point (monotone
-    min-labels; ``changed == 0`` is exact convergence, and exceeding
-    ``max_iterations`` raises rather than returning unconverged labels).
+    """Connected components over an undirected edge frame: the dedup
+    tier's edge-list front end (``dedup._propagate_min_labels_edges``)
+    with the node universe = ``nodes`` ∪ edge endpoints. One full-edge
+    min-label round + pointer jump, then the contracted label-space graph
+    runs the shared phase-2 kernel to the EXACT fixed point (on the
+    driver when the contracted graph is small enough to collect);
+    exceeding ``max_iterations`` raises rather than returning unconverged
+    labels.
 
-    ``nodes`` optionally supplies the node universe so isolated vertices
-    (no edges) still emit their own singleton component. Returns
-    (node, component) with component = the minimum node id reachable.
-    Scale shape: per round one join keyed by node + one aggregate keyed by
-    bucket + a checkpointed node-sized label frame — rounds needed track
-    the component DIAMETER, which for dedup-style cluster graphs is tiny;
-    no collect of edges or labels ever happens."""
-    from demo_bigdata_spark.operators.dedup import _propagate_min_labels
+    ``nodes`` optionally adds vertices without edges, which emit their
+    own singleton component. An edge with a NULL endpoint is dropped (its
+    other endpoint is still a node), and NULL node ids are dropped.
+    Returns (node, component) with component = the minimum node id
+    reachable."""
+    from demo_bigdata_spark.operators.dedup import _propagate_min_labels_edges
 
-    e = edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b"))
-    # hash each endpoint BEFORE concatenating: a separator-based pair key
-    # could collide for string nodes containing the separator, and a
-    # bucket collision between distinct edges would MERGE components
-    bucket = F.concat(
-        F.md5(F.least(F.col("_a"), F.col("_b")).cast("string")),
-        F.md5(F.greatest(F.col("_a"), F.col("_b")).cast("string")),
-    )
-    mem = (
-        e.select(F.col("_a").alias(node_col), bucket.alias("bucket"))
-        .unionAll(e.select(F.col("_b").alias(node_col), bucket.alias("bucket")))
-        .distinct()
+    e = edges.select(F.col(src_col).alias("id_a"), F.col(dst_col).alias("id_b"))
+    universe = e.select(F.col("id_a").alias(node_col)).unionAll(
+        e.select(F.col("id_b").alias(node_col))
     )
     if nodes is not None:
-        singletons = nodes.select(
-            F.col(node_col),
-            F.md5(F.concat(F.lit("node:"), F.col(node_col).cast("string"))).alias(
-                "bucket"
-            ),
-        )
-        mem = mem.unionAll(singletons).distinct()
-    out = _propagate_min_labels(mem, node_col, max_iterations)
+        universe = universe.unionAll(nodes.select(node_col))
+    out = _propagate_min_labels_edges(e, universe, node_col, max_iterations)
     return out.withColumnRenamed("cluster_id", "component")
 
 

@@ -2401,15 +2401,14 @@ def knn_clusters(
     one cluster — the grouping you want for topic discovery or
     one-per-cluster diversity pruning.
 
-    Reuses the dedup tier's convergent min-label CC over the edge list
-    (``_propagate_min_labels_edges``: exact fixed point, raises on the
-    backstop; r13 — edge-list rounds + pointer jumping replaced the
-    2-member-bucket bipartite form, whose ~diameter round count made long
-    threshold-graph chains a fixed-overhead wall: the sf0.1 CC measured
-    12.1 -> 2.4 s over the same 6k edges). Isolated vectors keep their own
-    label via the universe frame. Pass ``graph=`` to reuse an existing
-    (src, dst, cosine) edge frame (e.g. :func:`knn_graph_ivf` output at
-    scale).
+    Reuses the dedup tier's edge-list CC front end
+    (``_propagate_min_labels_edges``: one full-edge round + pointer jump,
+    then the shared phase-2 kernel over the contracted graph; exact fixed
+    point, raises on the backstop). Pointer jumping keeps long
+    threshold-graph chains at ~log(diameter) rounds. Isolated vectors
+    keep their own label via the universe frame. Pass ``graph=`` to
+    reuse an existing (src, dst, cosine) edge frame (e.g.
+    :func:`knn_graph_ivf` output at scale).
 
     Output: (id_col, cluster_id) with cluster_id = min member id.
     """

@@ -1075,31 +1075,6 @@ def test_bpe_merge_fold_semantics(spark):
     assert got2 == ["z a b </w>", "za b </w>", "aa a </w>", "a b a b </w>"]
 
 
-def test_label_propagation_converges_past_ten_hops(spark):
-    """A 31-doc bucket chain (doc i shares a bucket with doc i+1 only) has
-    propagation depth > 10: plain min-label needs ~diameter/2 two-hop
-    rounds to reach the far end, and the two-phase contract+jump form
-    must still reach the exact fixed point (all labels = 1). A too-small
-    backstop must RAISE, never silently return unconverged labels —
-    max_iterations=1 gives the contracted phase a single round, which
-    cannot close a 31-hop chain even with the pointer jump."""
-    import pytest as _pytest
-
-    from demo_bigdata_spark.operators.dedup import _propagate_min_labels
-
-    n = 31
-    rows = [(i, f"b{i}") for i in range(1, n + 1)] + [
-        (i, f"b{i - 1}") for i in range(2, n + 1)
-    ]
-    bands = spark.createDataFrame(rows, "doc_id long, bucket string")
-    labels = _propagate_min_labels(bands, "doc_id", max_iterations=64)
-    got = {r.doc_id: r.cluster_id for r in labels.collect()}
-    assert got == {i: 1 for i in range(1, n + 1)}
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        _propagate_min_labels(bands, "doc_id", max_iterations=1)
-
-
 def test_bpe_batch_selection_rules():
     """The batch selector's sequential-equivalence guards: stop at the
     first symbol-sharing candidate, drop ties with the stop bound, treat
@@ -2184,6 +2159,62 @@ def test_connected_components_chain_triangle_isolated(spark):
         for r in connected_components(edges, nodes=nodes).collect()
     }
     assert got2 == {**got, 99: 99}
+
+
+def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """Contracted CC graphs finish on the driver replica; forcing the
+    distributed phase-2 loop (_CC_DRIVER_MAX_ROWS = 0) on the SAME graphs
+    must give identical labels for both front ends, and a too-small
+    max_iterations must raise on both paths. The bucket graph is a 31-doc
+    chain (doc i shares a bucket with doc i+1 only): propagation depth >
+    10, and max_iterations=1 leaves one contracted round, which cannot
+    close it even with the pointer jump. The edge graph has a chain, a
+    triangle, an isolated universe node, a self-loop, a duplicate edge;
+    both graphs carry NULL ids, which are dropped."""
+    import pytest as _pytest
+
+    from demo_bigdata_spark.operators import dedup as D
+
+    n = 31
+    rows = [(i, f"b{i}") for i in range(1, n + 1)] + [
+        (i, f"b{i - 1}") for i in range(2, n + 1)
+    ]
+    rows += [(40, None), (41, None), (None, "b3")]
+    bands = spark.createDataFrame(rows, "doc_id long, bucket string")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)]
+        + [(3, 2), (10, 11), (11, 12), (12, 10), (30, 30), (11, None)],
+        "id_a long, id_b long",
+    )
+    universe = spark.createDataFrame(
+        [(i,) for i in [*range(1, 9), 10, 11, 12, 20, 30, None]], "doc_id long"
+    )
+
+    def run():
+        got_b = {
+            r.doc_id: r.cluster_id
+            for r in D._propagate_min_labels(bands, "doc_id", 64).collect()
+        }
+        got_e = {
+            r.doc_id: r.cluster_id
+            for r in D._propagate_min_labels_edges(
+                pairs, universe, "doc_id", 64
+            ).collect()
+        }
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            D._propagate_min_labels(bands, "doc_id", max_iterations=1)
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            D._propagate_min_labels_edges(pairs, universe, "doc_id", 1)
+        return got_b, got_e
+
+    via_driver = run()
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_ROWS", 0)
+    via_dist = run()
+    assert via_driver == via_dist
+    assert via_driver[0] == {i: 1 for i in range(1, n + 1)}
+    assert via_driver[1] == {
+        **{i: 1 for i in range(1, 9)}, 10: 10, 11: 10, 12: 10, 20: 20, 30: 30
+    }
 
 
 def test_personalized_pagerank_matches_integer_reference(spark):

@@ -502,8 +502,11 @@ def test_propagate_min_labels_edges_matches_union_find(spark, edges, extra):
     """_propagate_min_labels_edges (edge-list rounds + pointer jumping)
     must produce EXACTLY component-min labels for arbitrary random graphs
     — self-loops, duplicate edges, isolated universe nodes, chains and
-    cliques alike — equal to an independent pure-Python union-find."""
+    cliques alike — equal to an independent pure-Python union-find. So
+    must graph.connected_components when its ``nodes`` frame omits some
+    edge endpoints: its universe is nodes ∪ endpoints."""
     from demo_bigdata_spark.operators.dedup import _propagate_min_labels_edges
+    from demo_bigdata_spark.operators.graph import connected_components
 
     universe = sorted({a for a, b in edges} | {b for a, b in edges} | set(range(41, extra + 1)))
     parent = {u: u for u in universe}
@@ -541,3 +544,12 @@ def test_propagate_min_labels_edges_matches_union_find(spark, edges, extra):
         for r in _propagate_min_labels_edges(pairs, uni, "doc_id", 64).collect()
     }
     assert got == want
+
+    nodes = uni.filter("doc_id % 3 != 0 OR doc_id > 40")
+    got_cc = {
+        r["doc_id"]: r["component"]
+        for r in connected_components(
+            pairs, "id_a", "id_b", "doc_id", nodes=nodes
+        ).collect()
+    }
+    assert got_cc == want
