@@ -1749,48 +1749,51 @@ def append_dedup_batch(
     )
     cands = cross.unionByName(internal).distinct()
     toks_all = read_dedup_toks(spark, index_path).unionByName(nt)
+    epoch = F.lit(int(epoch_id)).cast("long")
     pairs = (
         _jaccard_from_toks(cands, toks_all)
         .filter(F.col("jaccard") >= threshold)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", epoch)
         .localCheckpoint(eager=True)
     )
 
     pairs.write.mode("append").parquet(index_path + "/pairs")
-    nb.withColumn("epoch_id", F.lit(int(epoch_id))).write.mode("append").partitionBy(
+    nb.withColumn("epoch_id", epoch).write.mode("append").partitionBy(
         "band_idx"
     ).parquet(index_path + "/bands")
-    nt.withColumn("epoch_id", F.lit(int(epoch_id))).write.mode("append").parquet(
+    nt.withColumn("epoch_id", epoch).write.mode("append").parquet(
         index_path + "/toks"
     )
     commit_epoch(spark, epochs_path, epoch_id)
+
+
+# the committed-view schemas of the live near-dup index's three tables
+_BANDS_SCHEMA = "doc_id long, band_sig string, band_idx int, epoch_id long"
+_TOKS_SCHEMA = "doc_id long, toks array<bigint>, n int, epoch_id long"
+_PAIRS_SCHEMA = "id_a long, id_b long, jaccard double, epoch_id long"
 
 
 def read_dedup_bands(spark, index_path: str) -> DataFrame:
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     # band_idx in the dedup keys: it is the partition column probes filter
-    # on, and committed_view's Aggregate only lets such filters push to
-    # parquet pruning when they reference grouping columns
-    return committed_view(
-        spark,
-        index_path + "/bands",
-        index_path + "_epochs",
-        ["doc_id", "band_idx", "epoch_id"],
-        "doc_id long, band_sig string, band_idx int, epoch_id long",
-    ).select("doc_id", "band_idx", "band_sig")
+    # on, and the dedup's Aggregate only lets such filters push to parquet
+    # pruning when they reference grouping columns
+    bands = committed_view(
+        spark, index_path + "/bands", index_path + "_epochs", _BANDS_SCHEMA
+    )
+    return bands.dropDuplicates(["doc_id", "band_idx", "epoch_id"]).select(
+        "doc_id", "band_idx", "band_sig"
+    )
 
 
 def read_dedup_toks(spark, index_path: str) -> DataFrame:
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
-    return committed_view(
-        spark,
-        index_path + "/toks",
-        index_path + "_epochs",
-        ["doc_id", "epoch_id"],
-        "doc_id long, toks array<bigint>, n int, epoch_id long",
-    ).select("doc_id", "toks", "n")
+    toks = committed_view(
+        spark, index_path + "/toks", index_path + "_epochs", _TOKS_SCHEMA
+    )
+    return toks.dropDuplicates(["doc_id", "epoch_id"]).select("doc_id", "toks", "n")
 
 
 def read_near_dup_pairs(spark, index_path: str) -> DataFrame:
@@ -1799,13 +1802,10 @@ def read_near_dup_pairs(spark, index_path: str) -> DataFrame:
     candidates) over everything ingested so far."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
-    return committed_view(
-        spark,
-        index_path + "/pairs",
-        index_path + "_epochs",
-        ["id_a", "id_b", "epoch_id"],
-        "id_a long, id_b long, jaccard double, epoch_id long",
-    ).select("id_a", "id_b", "jaccard").dropDuplicates(["id_a", "id_b"])
+    pairs = committed_view(
+        spark, index_path + "/pairs", index_path + "_epochs", _PAIRS_SCHEMA
+    )
+    return pairs.dropDuplicates(["id_a", "id_b"]).select("id_a", "id_b", "jaccard")
 
 
 def _survivors_from_pairs(
@@ -1856,24 +1856,6 @@ def near_dup_survivors(
     )
 
 
-def _committed_rows_nodedup(spark, rows_path: str, epochs_path: str, empty_schema: str):
-    """Ledger-gated rows WITHOUT the committed view's dedup shuffle — for
-    the CC readers below, where row MULTIPLICITY cannot change the fixed
-    point: a replayed epoch appends identical edge/membership rows, and
-    min-label propagation over a multigraph labels exactly like the
-    simple graph. Crash leftovers (rows of uncommitted epochs) are still
-    excluded by the ledger semi-join — those COULD add edges that merge
-    components, so the semi-join is the correctness line; the dedup was
-    only ever a (harmless, but corpus-pair-sized) shuffle here."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    rows = _read_parquet_if_exists(spark, rows_path)
-    if rows is None or ledger is None:
-        return spark.createDataFrame([], empty_schema)
-    return rows.join(ledger, "epoch_id", "left_semi")
-
-
 def read_dedup_survivors(spark, index_path: str, max_iterations: int = 64) -> DataFrame:
     """Per-doc KEEP/DROP decisions from the committed near-dup index (r11
     VERDICT item 3 — a crawl pipeline needs decisions, not pairs):
@@ -1883,11 +1865,11 @@ def read_dedup_survivors(spark, index_path: str, max_iterations: int = 64) -> Da
     the committed pair set equals the uncapped batch pipeline's pairs,
     these labels equal "batch near_duplicates -> CC -> min-id per
     component" over everything ingested so far, at any epoch boundary.
-    The pair and token tables are read ledger-gated but UN-deduplicated
-    (:func:`_committed_rows_nodedup`): CC is invariant to edge
-    multiplicity and the universe is distinct-ed inside the propagation,
-    so the two corpus-pair-sized dedup shuffles the committed views pay
-    are skipped here.
+    The pair and token tables are read through the committed view
+    without a dedup: a replayed epoch's duplicate rows cannot change the
+    components (CC is invariant to edge multiplicity, and the universe is
+    distinct-ed inside the propagation), while rows of uncommitted epochs,
+    which could add edges, are filtered out by the view.
 
     Returns (doc_id, cluster_id, keep). Like every committed view this is
     a READER — recompute after appends, or materialize via the snapshot
@@ -1897,17 +1879,13 @@ def read_dedup_survivors(spark, index_path: str, max_iterations: int = 64) -> Da
     which is why replica-farm corpora should use
     :func:`read_dedup_clusters` instead.
     """
-    pairs = _committed_rows_nodedup(
-        spark,
-        index_path + "/pairs",
-        index_path + "_epochs",
-        "id_a long, id_b long, jaccard double, epoch_id long",
+    from demo_bigdata_spark.streaming.pipeline import committed_view
+
+    pairs = committed_view(
+        spark, index_path + "/pairs", index_path + "_epochs", _PAIRS_SCHEMA
     )
-    toks = _committed_rows_nodedup(
-        spark,
-        index_path + "/toks",
-        index_path + "_epochs",
-        "doc_id long, toks array<bigint>, n int, epoch_id long",
+    toks = committed_view(
+        spark, index_path + "/toks", index_path + "_epochs", _TOKS_SCHEMA
     )
     return _survivors_from_pairs(
         pairs.select("id_a", "id_b"),
@@ -1929,20 +1907,18 @@ def read_dedup_clusters(spark, index_path: str, max_iterations: int = 64) -> Dat
     difference from :func:`read_dedup_survivors`, inherited from the batch
     twins: bucket-graph components link any band collision (no Jaccard
     verify), the recall-over-precision trade that makes it farm-safe.
-    Like the survivors reader, the band table is read ledger-gated but
-    un-deduplicated — membership multiplicity cannot change the bucket
-    graph's components, so the committed view's dedup shuffle is skipped;
-    the lazy checkpoint pins the memberships once for the propagation's
-    two full-table consumers.
+    Like the survivors reader, the band table is read through the
+    committed view without a dedup — membership multiplicity cannot change
+    the bucket graph's components; the lazy checkpoint pins the
+    memberships once for the propagation's two full-table consumers.
 
     Returns (doc_id, cluster_id).
     """
+    from demo_bigdata_spark.streaming.pipeline import committed_view
+
     bands = (
-        _committed_rows_nodedup(
-            spark,
-            index_path + "/bands",
-            index_path + "_epochs",
-            "doc_id long, band_sig string, band_idx int, epoch_id long",
+        committed_view(
+            spark, index_path + "/bands", index_path + "_epochs", _BANDS_SCHEMA
         )
         .select("doc_id", F.concat_ws("|", "band_idx", "band_sig").alias("bucket"))
         .localCheckpoint(eager=False)

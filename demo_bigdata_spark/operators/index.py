@@ -156,7 +156,7 @@ def append_positional_postings(
         return
     (
         _positional_postings(batch_df, text_col, id_col, n_buckets)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .repartition("term_bucket")
         .write.mode("append")
         .partitionBy("term_bucket")
@@ -168,20 +168,19 @@ def append_positional_postings(
 def read_positional_postings(
     spark: SparkSession, path: str, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Committed view of an incrementally-maintained positional index:
-    rows semi-joined to the epoch ledger, deduplicated on
-    (doc, term, epoch) — replays write identical rows, so the dedup is
-    exact. Bucket/term predicates push below the broadcast ledger join."""
+    """Committed view of an incrementally-maintained positional index,
+    deduplicated on (doc, term, bucket, epoch) — replays write identical
+    rows, so the dedup is exact. Bucket/term predicates push through the
+    dedup to the partitioned scan."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
         spark,
         path,
         path + "_epochs",
-        [id_col, "term", "term_bucket", "epoch_id"],
         f"{id_col} long, term string, positions array<int>, "
         "term_bucket int, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "term", "term_bucket", "epoch_id"])
 
 
 def phrase_search(
@@ -204,11 +203,11 @@ def phrase_search(
     never match. Pass ``postings=`` to override."""
     if not phrase:
         raise ValueError("phrase must be non-empty")
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import committed_epochs
 
     buckets = sorted({python_term_bucket(t, n_buckets) for t in phrase})
     if postings is None:
-        if _read_parquet_if_exists(spark, path + "_epochs") is not None:
+        if committed_epochs(path + "_epochs"):
             postings = read_positional_postings(spark, path, id_col)
         else:
             postings = spark.read.parquet(path)
@@ -277,7 +276,7 @@ def append_postings(
     tf = term_frequencies(batch_df, text_col, id_col).localCheckpoint(eager=False)
     (
         tf.withColumn("term_bucket", hash_bucket("term", n_buckets))
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .repartition("term_bucket")
         .write.mode("append")
         .partitionBy("term_bucket")
@@ -288,14 +287,14 @@ def append_postings(
     # (bm25_rank_indexed) works off a continuously-maintained index too.
     # Empty docs get dl=0 rows here too (same N/avgdl contract as a build).
     _doclens_with_empty_docs(batch_df, tf, id_col).withColumn(
-        "epoch_id", F.lit(int(epoch_id))
+        "epoch_id", F.lit(int(epoch_id)).cast("long")
     ).write.mode("append").parquet(path + "/doclens")
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of an incrementally-maintained postings table
-    (streaming.pipeline.committed_view): ledger semi-join + exact dedup.
+    (streaming.pipeline.committed_view) + exact replay dedup.
     term_bucket is IN the dedup keys even though it is determined by term:
     dropDuplicates is an Aggregate, and only grouping columns let a
     caller's bucket predicate push through to the partitioned scan —
@@ -306,23 +305,26 @@ def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> Dat
         spark,
         path + "/postings",
         path + "_epochs",
-        [id_col, "term", "term_bucket", "epoch_id"],
         f"{id_col} long, term string, tf long, term_bucket int, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "term", "term_bucket", "epoch_id"])
 
 
 def read_doclens(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of the doclens side table: same ledger semantics as
-    read_postings (no ledger = batch-built index, read as-is)."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
-    rows = spark.read.parquet(path + "/doclens")
-    ledger = _read_parquet_if_exists(spark, path + "_epochs")
-    if ledger is None:
-        return rows
-    return rows.join(ledger, "epoch_id", "left_semi").dropDuplicates(
-        [id_col, "epoch_id"]
+    read_postings (no committed epoch = batch-built index, read as-is)."""
+    from demo_bigdata_spark.streaming.pipeline import (
+        committed_epochs,
+        committed_view,
     )
+
+    if not committed_epochs(path + "_epochs"):
+        return spark.read.parquet(path + "/doclens")
+    return committed_view(
+        spark,
+        path + "/doclens",
+        path + "_epochs",
+        f"{id_col} long, dl long, epoch_id long",
+    ).dropDuplicates([id_col, "epoch_id"])
 
 
 def conjunctive_search(
@@ -382,12 +384,12 @@ def bm25_rank_indexed(
     otherwise double-count df_t / n_hits / term scores. A batch-built
     index (no ledger) reads the files directly. Pass ``postings=`` to
     override either way (conjunctive_search's contract)."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import committed_epochs
 
     uniq = sorted(set(terms))
     buckets = sorted({python_term_bucket(t, n_buckets) for t in uniq})
     if postings is None:
-        if _read_parquet_if_exists(spark, path + "_epochs") is not None:
+        if committed_epochs(path + "_epochs"):
             postings = read_postings(spark, path, id_col)
         else:
             postings = spark.read.parquet(path + "/postings")

@@ -860,17 +860,23 @@ def multi_query_ivf_topk_indexed(
     shape: Q queries amortize one pruned scan and zero assignment
     recompute. Honors the epoch-ledger committed view like the
     single-query probe."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
     qids, Q, Qn, allowed, union = _multi_query_probes(
         centroids, query_vecs, n_probe
     )
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
-        assigned = read_ivf_index(spark, index_path, id_col)
-    else:
-        assigned = spark.read.parquet(index_path)
+    assigned = _index_rows(spark, index_path, read_ivf_index, id_col)
     scoped = assigned.filter(F.col("cluster").isin(union))
     return _masked_multi_query_scan(scoped, qids, Q, Qn, allowed, k, id_col)
+
+
+def _index_rows(spark, index_path: str, read_committed, id_col: str) -> DataFrame:
+    """An IVF index's rows: ``read_committed``'s committed view when the
+    index is maintained incrementally (its ledger has committed epochs),
+    else the batch-built files as they are."""
+    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+
+    if committed_epochs(index_path + "_epochs"):
+        return read_committed(spark, index_path, id_col)
+    return spark.read.parquet(index_path)
 
 
 def build_ivf_index(
@@ -906,16 +912,11 @@ def ivf_topk_indexed(
     On an incrementally-maintained index (an ``_epochs`` ledger exists,
     see ``append_vectors``) the committed view is read instead —
     uncommitted crash-window vectors never appear in results."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
     q = np.asarray(query_vec, dtype=np.float64)
     Cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
-        assigned = read_ivf_index(spark, index_path, id_col)
-    else:
-        assigned = spark.read.parquet(index_path)
+    assigned = _index_rows(spark, index_path, read_ivf_index, id_col)
     scoped = assigned.filter(F.col("cluster").isin(probes))
     return brute_force_topk(scoped, [float(x) for x in q], k=k, vec_col="v", id_col=id_col)
 
@@ -1147,7 +1148,7 @@ def append_vectors(
         return
     (
         assign_clusters(batch_df, centroids, vec_col, id_col)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .repartition("cluster")
         .write.mode("append")
         .partitionBy("cluster")
@@ -1158,7 +1159,7 @@ def append_vectors(
 
 def read_ivf_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
     """Committed view of an incrementally-maintained IVF index
-    (streaming.pipeline.committed_view): ledger semi-join + exact dedup.
+    (streaming.pipeline.committed_view) + exact replay dedup.
     ``cluster`` is in the dedup keys (functionally dependent on the
     vector, so semantics are unchanged) because dropDuplicates is an
     Aggregate and only grouping columns let the probe's cluster predicate
@@ -1169,9 +1170,8 @@ def read_ivf_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
         spark,
         index_path,
         index_path + "_epochs",
-        [id_col, "cluster", "epoch_id"],
         f"{id_col} long, v array<double>, cluster int, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "cluster", "epoch_id"])
 
 
 def build_ivf_pq_index(
@@ -1228,7 +1228,7 @@ def append_pq_vectors(
             id_col=id_col,
             keep_cols=("cluster",),
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .repartition("cluster")
         .write.mode("append")
         .partitionBy("cluster")
@@ -1238,19 +1238,17 @@ def append_pq_vectors(
 
 
 def read_ivf_pq_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
-    """Committed view of an incrementally-maintained IVF-PQ index —
-    ledger semi-join + exact dedup, ``cluster`` in the dedup keys so the
-    probe's partition pruning still fires (same rationale as
-    ``read_ivf_index``)."""
+    """Committed view of an incrementally-maintained IVF-PQ index + exact
+    replay dedup, ``cluster`` in the dedup keys so the probe's partition
+    pruning still fires (same rationale as ``read_ivf_index``)."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
         spark,
         index_path,
         index_path + "_epochs",
-        [id_col, "cluster", "epoch_id"],
         f"{id_col} long, codes array<int>, cluster int, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "cluster", "epoch_id"])
 
 
 def ivf_pq_topk_indexed(
@@ -1277,18 +1275,13 @@ def ivf_pq_topk_indexed(
 
     On an incrementally-maintained index (``_epochs`` ledger exists) the
     committed view is read — crash-window rows never appear."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
     q = np.asarray(query_vec, dtype=np.float64)
     Cn = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
     )
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
-        enc = read_ivf_pq_index(spark, index_path, id_col)
-    else:
-        enc = spark.read.parquet(index_path)
+    enc = _index_rows(spark, index_path, read_ivf_pq_index, id_col)
     scoped = enc.filter(F.col("cluster").isin(probes))
     cands = pq_topk(
         scoped, codebooks, [float(x) for x in q], k=refine, id_col=id_col
@@ -1328,8 +1321,6 @@ def multi_query_pq_topk_indexed(
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
     qids, Q, Qn, allowed, union = _multi_query_probes(
         centroids, query_vecs, n_probe
     )
@@ -1344,10 +1335,7 @@ def multi_query_pq_topk_indexed(
     lut_sq = (CB**2).sum(axis=2)  # (m, ks)
     idx = np.arange(m)
 
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
-        enc = read_ivf_pq_index(spark, index_path, id_col)
-    else:
-        enc = spark.read.parquet(index_path)
+    enc = _index_rows(spark, index_path, read_ivf_pq_index, id_col)
     scoped = enc.filter(F.col("cluster").isin(union))
 
     adc_schema = T.StructType(
@@ -2026,14 +2014,14 @@ def append_knn_graph_batch(
     )
 
     edges = new_src_edges.unionByName(affected_edges).withColumn(
-        "epoch_id", F.lit(int(epoch_id))
+        "epoch_id", F.lit(int(epoch_id)).cast("long")
     )
     edges.write.mode("append").parquet(graph_path)
     (
         batch_probes.select(
             F.col(id_col), F.col("v"), F.col("cluster").alias("probe_cluster")
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .write.mode("append")
         .partitionBy("probe_cluster")
         .parquet(probes_path)
@@ -2048,8 +2036,8 @@ def _read_knn_probes(spark, probes_path: str, epochs_path: str, id_col: str):
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     schema = f"{id_col} long, v array<double>, probe_cluster int, epoch_id long"
-    return committed_view(
-        spark, probes_path, epochs_path, [id_col, "probe_cluster", "epoch_id"], schema
+    return committed_view(spark, probes_path, epochs_path, schema).dropDuplicates(
+        [id_col, "probe_cluster", "epoch_id"]
     )
 
 
@@ -2087,16 +2075,16 @@ def read_knn_clusters(
 
 def read_knn_graph(spark, graph_path: str, k: int, id_col: str = "vec_id") -> DataFrame:
     """Current kNN graph from the incrementally-maintained edge set:
-    committed view (ledger semi-join + replay dedup) then the same
-    deterministic per-src (cosine desc, dst asc) window knn_graph_ivf
-    ends with. ``k`` must match the maintenance calls.
+    committed view, a (src, dst) dedup, then the same deterministic
+    per-src (cosine desc, dst asc) window knn_graph_ivf ends with. ``k``
+    must match the maintenance calls.
 
-    The extra (src, dst) dedup collapses the one legitimate duplication
-    source: a :func:`compact_knn_graph` epoch rewrites edges that ALSO
-    still exist under their original epoch ids until the vacuum step
-    physically drops them. Cosine is a pure function of the pair, so any
-    surviving copy is identical in every selected column — the dedup is
-    deterministic."""
+    The (src, dst) dedup collapses both duplication sources: a replayed
+    epoch's second copy of its rows, and a :func:`compact_knn_graph`
+    epoch rewriting edges that ALSO still exist under their original
+    epoch ids until the vacuum step physically drops them. Cosine is a
+    pure function of the pair, so any surviving copy is identical in
+    every selected column — the dedup is deterministic."""
     from pyspark.sql.window import Window
 
     from demo_bigdata_spark.streaming.pipeline import committed_view
@@ -2105,7 +2093,6 @@ def read_knn_graph(spark, graph_path: str, k: int, id_col: str = "vec_id") -> Da
         spark,
         graph_path,
         graph_path + "_epochs",
-        ["src", "dst", "epoch_id"],
         "src long, dst long, cosine double, epoch_id long",
     )
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.col("dst"))
@@ -2175,30 +2162,27 @@ def compact_knn_graph(
     point).
     """
     from demo_bigdata_spark.streaming.pipeline import (
-        _read_parquet_if_exists,
         commit_epoch,
+        committed_epochs,
     )
 
     epochs_path = graph_path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    if ledger is None:
-        return  # nothing committed yet
-    committed = [r["epoch_id"] for r in ledger.select("epoch_id").distinct().collect()]
+    committed = committed_epochs(epochs_path)
     if not committed:
-        return
+        return  # nothing committed yet
     ce = min(0, min(committed)) - 1
 
     compacted = (
         read_knn_graph(spark, graph_path, k=k, id_col=id_col)
         .select("src", "dst", "cosine")
-        .withColumn("epoch_id", F.lit(int(ce)))
+        .withColumn("epoch_id", F.lit(int(ce)).cast("long"))
         .localCheckpoint(eager=True)
     )
     probes_path = graph_path + "_probes"
     probes = _read_knn_probes(spark, probes_path, epochs_path, id_col)
     probes_c = (
         probes.dropDuplicates([id_col, "probe_cluster"])
-        .withColumn("epoch_id", F.lit(int(ce)))
+        .withColumn("epoch_id", F.lit(int(ce)).cast("long"))
         .localCheckpoint(eager=True)
     )
     compacted.write.mode("append").parquet(graph_path)
@@ -2225,14 +2209,9 @@ def compact_knn_graph(
         # (e.g. a batch that wrote rows but has not committed yet), never
         # just epoch_id == ce. Snapshot epochs are exactly what the ce
         # rows subsume, so only those are safe to drop.
-        ledger_now = _read_parquet_if_exists(spark, epochs_path)
-        committed_now = {
-            r["epoch_id"]
-            for r in ledger_now.select("epoch_id").distinct().collect()
-        }
-        if committed_now - set(committed) - {ce}:
+        if committed_epochs(epochs_path) - committed - {ce}:
             return  # new epochs landed mid-compaction: leave files intact
-        stale = [int(e) for e in committed]  # pre-compaction snapshot only
+        stale = sorted(committed)  # pre-compaction snapshot only
         live_e = (
             spark.read.parquet(graph_path)
             .filter(~F.col("epoch_id").isin(stale))
@@ -2285,17 +2264,11 @@ def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    epochs_path = graph_path + "_epochs"
-    if not os.path.isdir(epochs_path) or not os.path.isdir(graph_path):
+    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+
+    committed = committed_epochs(graph_path + "_epochs")
+    if not committed or not os.path.isdir(graph_path):
         return {"due": False, "reason": "no committed graph"}
-    committed = set(
-        pads.dataset(epochs_path, format="parquet")
-        .to_table(columns=["epoch_id"])
-        .column("epoch_id")
-        .to_pylist()
-    )
-    if not committed:
-        return {"due": False, "reason": "empty ledger"}
     compactions = [e for e in committed if e < 0]
     ce = min(compactions) if compactions else None
 

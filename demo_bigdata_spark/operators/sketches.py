@@ -480,28 +480,25 @@ def append_histogram_batch(
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part = histogram_sketch(batch_df, value_col, lo, hi, n_bins)
-    part.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        f"{path}/epoch_id={int(epoch_id)}"
-    )
+    write_epoch_partition(part, path, epoch_id)
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_histogram(spark, path: str) -> DataFrame:
     """Committed (bin, n) sketch from the incrementally-maintained table:
-    ledger semi-join over the epoch-partitioned layout (no dedup shuffle —
-    see committed_view_epoch_partitioned), then the exact integer re-sum."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        committed_view_epoch_partitioned,
-    )
+    the committed view (epoch-partition pruning, no dedup shuffle), then
+    the exact integer re-sum."""
+    from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return (
-        committed_view_epoch_partitioned(
+        committed_view(
             spark,
             path,
             path + "_epochs",

@@ -708,6 +708,7 @@ def append_term_counts_batch(
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = path + "_epochs"
@@ -722,9 +723,7 @@ def append_term_counts_batch(
         .groupBy("grp", "tok")
         .agg(F.count("*").alias("n"))
     )
-    part.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        f"{path}/epoch_id={int(epoch_id)}"
-    )
+    write_epoch_partition(part, path, epoch_id)
     commit_epoch(spark, epochs_path, epoch_id)
 
 
@@ -732,18 +731,15 @@ def read_group_kl(
     spark, path: str, group_col: str = "source", top_v: int = 256, scale: int = 6
 ) -> DataFrame:
     """Per-group KL divergence from the incrementally-maintained count
-    table: committed view (ledger semi-join over the epoch-partitioned
-    layout — no dedup shuffle, see committed_view_epoch_partitioned) ->
+    table: committed view (epoch-partition pruning, no dedup shuffle) ->
     exact integer re-sum per (group, token) -> the SAME vocab/OOV/KL tail
     as the batch operator (:func:`_kl_from_counts`), so live == batch
     bit-for-bit at any epoch boundary — the streaming answer to 'which
     crawl snapshot shifted the mixture'."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        committed_view_epoch_partitioned,
-    )
+    from demo_bigdata_spark.streaming.pipeline import committed_view
 
     gt = (
-        committed_view_epoch_partitioned(
+        committed_view(
             spark,
             path,
             path + "_epochs",

@@ -532,7 +532,6 @@ def _write_manifest(
     a CLEARED ``snapshots/<snap>/`` directory: a temp file, then
     ``os.replace``. Returns the directory."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     schema = pa.schema(
         [
@@ -550,10 +549,23 @@ def _write_manifest(
     d = _manifest_path(path, snap)
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
-    tmp = os.path.join(d, f".{_MANIFEST}.tmp-{uuid.uuid4().hex}")
-    pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
-    os.replace(tmp, os.path.join(d, _MANIFEST))
+    write_parquet_atomic(
+        pa.Table.from_pylist(rows, schema=schema), os.path.join(d, _MANIFEST)
+    )
     return d
+
+
+def write_parquet_atomic(table, dest: str) -> None:
+    """Write the pyarrow ``table`` as the one parquet file ``dest``: a
+    dot-prefixed temp file beside it (skipped by parquet directory reads),
+    then ``os.replace``, so a reader sees the old file or the new one and
+    a crash leaves at most an ignored temp file."""
+    import pyarrow.parquet as pq
+
+    d, name = os.path.split(dest)
+    tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, dest)
 
 
 def _commit(

@@ -21,11 +21,14 @@ watermark horizon.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from demo_bigdata_spark.schemas import EVENTS_SCHEMA
+from demo_bigdata_spark.sources.snapshot_cdc import _strip_uri
 
 
 def read_events_stream(
@@ -409,16 +412,19 @@ def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
     ``except Exception`` would treat ANY read failure (transient FS error,
     corrupt footer mid-write, permissions) as "first epoch" and then
     overwrite the state table with only the current micro-batch — silently
-    discarding all accumulated state. Only the documented no-state error
-    conditions map to None: PATH_NOT_FOUND (nothing written yet) and
-    UNABLE_TO_INFER_SCHEMA (the directory exists but holds no parquet
-    footers — e.g. created empty by a crashed first write; mapping it to
-    "failed" would permanently fail every micro-batch retry). Everything
-    else propagates so foreachBatch fails the micro-batch and Structured
-    Streaming retries it.
+    discarding all accumulated state. A missing path is seen on the driver
+    before Spark is asked (no ``FileNotFoundException`` WARN); of Spark's
+    error conditions only UNABLE_TO_INFER_SCHEMA (the directory exists but
+    holds no parquet footers — e.g. created empty by a crashed first write;
+    mapping it to "failed" would permanently fail every micro-batch retry)
+    and PATH_NOT_FOUND (the path vanished after the check) map to None.
+    Everything else propagates so foreachBatch fails the micro-batch and
+    Structured Streaming retries it.
     """
     from pyspark.errors import AnalysisException
 
+    if not os.path.exists(_strip_uri(path)):
+        return None
     _NO_STATE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
     try:
         return spark.read.parquet(path)
@@ -440,84 +446,116 @@ def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
         raise
 
 
+# --- The epoch ledger ---------------------------------------------------------
+#
+# Every exactly-once fold appends its epoch's rows tagged with ``epoch_id``
+# and then commits the epoch to a ledger beside the table
+# (``<path>_epochs``). The ledger is a directory with one small parquet file
+# per committed epoch, written and read on the driver with pyarrow — no Spark
+# job. The three functions below are the only code that touches it.
+
+
+def committed_epochs(epochs_path: str) -> frozenset[int]:
+    """The epoch ids committed in the ledger at ``epochs_path``, read on
+    the driver; empty when the ledger does not exist yet. The directory
+    read skips ``_``/``.``-prefixed names, so a ledger Spark wrote
+    (``part-*`` files, ``_SUCCESS``, ``.crc``) reads the same as one
+    :func:`commit_epoch` wrote, and a temp file left by a crashed commit
+    is never read."""
+    import pyarrow.dataset as pads
+
+    local = _strip_uri(epochs_path)
+    if not os.path.isdir(local):
+        return frozenset()
+    ledger = pads.dataset(local, format="parquet")
+    if not ledger.files:
+        return frozenset()
+    return frozenset(ledger.to_table(columns=["epoch_id"])["epoch_id"].to_pylist())
+
+
 def epoch_already_applied(spark, epochs_path: str, epoch_id: int) -> bool:
     """True iff ``epoch_id`` is committed in the ledger at ``epochs_path`` —
     the idempotence check every exactly-once fold performs first."""
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    return ledger is not None and bool(
-        ledger.filter(F.col("epoch_id") == int(epoch_id)).head(1)
-    )
+    return int(epoch_id) in committed_epochs(epochs_path)
 
 
 def commit_epoch(spark, epochs_path: str, epoch_id: int) -> None:
-    """Append ``epoch_id`` to the ledger — the commit that makes an epoch's
-    appended rows visible to committed-view reads. Always called AFTER the
-    data append: a crash in between leaves only uncommitted rows, and the
-    deterministic replay appends identical rows that the committed view's
-    dedup collapses."""
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode(
-        "append"
-    ).parquet(epochs_path)
+    """Commit ``epoch_id``: the write that makes an epoch's rows visible to
+    :func:`committed_view`. Always called AFTER the data write. The epoch's
+    ledger file lands through a temp file and ``os.replace`` on the local
+    warehouse (the snapshot pointer's commit), so the epoch is either
+    committed or not; a crash before it leaves only uncommitted rows, which
+    no reader sees and the deterministic replay rewrites. Recommitting an
+    epoch replaces its file with the same content."""
+    import pyarrow as pa
+
+    from demo_bigdata_spark.sources.snapshots import write_parquet_atomic
+
+    local = _strip_uri(epochs_path)
+    os.makedirs(local, exist_ok=True)
+    write_parquet_atomic(
+        pa.table({"epoch_id": pa.array([int(epoch_id)], pa.int64())}),
+        os.path.join(local, f"epoch-{int(epoch_id)}.parquet"),
+    )
 
 
 def committed_view(
-    spark,
-    rows_path: str,
-    epochs_path: str,
-    dedup_keys: list[str],
-    empty_schema: str,
+    spark, rows_path: str, epochs_path: str, schema: str
 ) -> DataFrame:
-    """Committed view of an incrementally-appended table: rows semi-joined
-    to the epoch ledger (crash leftovers excluded), deduplicated on
-    ``dedup_keys`` — replays append identical rows, so the dedup is exact.
-    Returns an empty frame with ``empty_schema`` before the first commit.
+    """The committed rows of a table that exactly-once folds write under
+    ``epoch_id``: a read with the declared ``schema`` (DDL; columns come
+    back in its order), filtered to the epochs committed when the view is
+    built. That set is a plan-time literal, so a later commit never changes
+    a view already built, and on a table laid out as ``epoch_id=<k>``
+    directories the filter is a partition filter that prunes uncommitted
+    epochs. Before the first commit the view is empty, with ``schema``.
 
-    ``dedup_keys`` MUST include any partition/bucket column callers filter
-    on (term_bucket, cluster, ...): dropDuplicates compiles to an
-    Aggregate, and Catalyst only pushes filters through an Aggregate when
-    they reference grouping columns — a bucket column left out of the keys
-    silently turns every pruned probe into a full-index scan. The extra
-    key never changes semantics when it is functionally dependent on the
-    others (a bucket is a pure function of its term/cluster)."""
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    rows = _read_parquet_if_exists(spark, rows_path)
-    if rows is None or ledger is None:
-        return spark.createDataFrame([], empty_schema)
-    return rows.join(ledger, "epoch_id", "left_semi").dropDuplicates(dedup_keys)
+    Exactly once, per layout:
+
+    - per-epoch directories written with ``mode("overwrite")``: a replay of
+      an uncommitted epoch replaces its directory, and a committed epoch is
+      never rewritten (every fold checks :func:`epoch_already_applied`
+      first), so the view holds each epoch's rows once;
+    - flat appends: a replay of an uncommitted epoch appends a second copy
+      of identical rows. The view keeps both; each caller of such a table
+      drops the duplicates on its own keys. A bucket or cluster column a
+      probe filters on belongs in those keys: ``dropDuplicates`` is an
+      Aggregate, and only filters on grouping columns push through it to
+      partition pruning."""
+    empty = spark.createDataFrame([], schema)
+    committed = committed_epochs(epochs_path)
+    if not committed or not os.path.isdir(_strip_uri(rows_path)):
+        return empty
+    return (
+        spark.read.schema(empty.schema)
+        .parquet(rows_path)
+        .filter(F.col("epoch_id").isin(sorted(committed)))
+        .select(*empty.columns)
+    )
 
 
-def committed_view_epoch_partitioned(
-    spark,
-    rows_path: str,
-    epochs_path: str,
-    empty_schema: str,
-) -> DataFrame:
-    """Committed view of a table maintained by IDEMPOTENT per-epoch
-    partition overwrites (``<rows_path>/epoch_id=<k>``, each fold writing
-    its epoch's rows with ``mode("overwrite")`` into that one directory):
-    the ledger semi-join alone — NO dedup shuffle (r14, r13 VERDICT item
-    4). The exactly-once argument, per layout rather than per reader:
+committed_view_epoch_partitioned = committed_view
 
-    - a crash BEFORE the ledger commit leaves rows only in an uncommitted
-      epoch directory — invisible through the semi-join (unchanged
-      correctness line);
-    - the deterministic replay of an uncommitted epoch OVERWRITES that
-      same directory, so the committed table can never hold two copies of
-      an epoch's rows — the case the flat-append layout needed the
-      corpus-sized ``dropDuplicates`` for;
-    - a COMMITTED epoch is never rewritten (every fold checks
-      ``epoch_already_applied`` first), so the directory is immutable
-      once visible.
 
-    ``epoch_id`` comes back as a directory-inferred partition column
-    (int); it is cast to long to keep the documented schema. Returns an
-    empty frame with ``empty_schema`` before the first commit."""
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    rows = _read_parquet_if_exists(spark, rows_path)
-    if rows is None or ledger is None:
-        return spark.createDataFrame([], empty_schema)
-    rows = rows.withColumn("epoch_id", F.col("epoch_id").cast("long"))
-    return rows.join(ledger, "epoch_id", "left_semi")
+def write_epoch_partition(part: DataFrame, path: str, epoch_id: int) -> None:
+    """Write one epoch's rows into the table's ``path/epoch_id=<k>``
+    directory with ``mode("overwrite")``, so a replay of an uncommitted
+    epoch replaces them. Raises ValueError when the table root already
+    holds data files of the older flat-append layout, which Spark could
+    not read beside the epoch directories."""
+    root = _strip_uri(path)
+    if os.path.isdir(root) and any(
+        not n.startswith(("_", ".")) and os.path.isfile(os.path.join(root, n))
+        for n in os.listdir(root)
+    ):
+        raise ValueError(
+            f"{path} holds data files at its root from the flat-append "
+            "layout; this table keeps one epoch_id=<k> directory per epoch. "
+            f"Move {path} and {path}_epochs aside and fold the batches again."
+        )
+    part.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+        f"{path}/epoch_id={int(epoch_id)}"
+    )
 
 
 def combine_hourly_partial(
@@ -540,11 +578,7 @@ def combine_hourly_partial(
     from pyspark.sql import functions as F
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part = batch_df.groupBy(
         F.date_trunc("hour", F.col(ts_col)).alias("bucket")
@@ -559,9 +593,7 @@ def combine_hourly_partial(
     else:  # first epoch: no state yet
         merged = part
     merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode("append").parquet(
-        epochs_path
-    )
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def incremental_hourly_stats(
@@ -647,11 +679,7 @@ def combine_sketch_partial(
     from pyspark.sql import functions as F
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part = batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
         F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("sketch")
@@ -666,9 +694,7 @@ def combine_sketch_partial(
     else:  # first epoch: no state yet
         merged = part
     merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode("append").parquet(
-        epochs_path
-    )
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def incremental_distinct_sketches(
@@ -770,11 +796,7 @@ def combine_cms_partial(
     from demo_bigdata_spark.operators.sketches import merge_count_min
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part_rows = (
         batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
@@ -802,9 +824,7 @@ def combine_cms_partial(
     spark.createDataFrame(
         sorted(merged.items()), "day string, blob binary"
     ).write.mode("overwrite").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode(
-        "append"
-    ).parquet(epochs_path)
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def incremental_token_frequencies(
@@ -854,6 +874,12 @@ def read_frequency_estimates(spark, path: str, probes: list[str], days: list[str
     return [(p, reader.estimate_count(p)) for p in probes]
 
 
+_PACK_SCHEMA = (
+    "doc_id long, n_tokens long, tok_offset long, pack_id long, "
+    "pack_offset long, spans_boundary boolean, epoch_id long"
+)
+
+
 def combine_pack_partial(
     spark,
     path: str,
@@ -881,29 +907,20 @@ def combine_pack_partial(
     append and the ledger append leaves only UNCOMMITTED rows — the replay
     recomputes the identical base, appends byte-identical rows, then
     commits the epoch; the stale first copy is an exact duplicate that
-    ``read_pack_assignments`` removes with a (doc_id, epoch_id) dedup over
-    the ledger semi-join. No gap, no double-advance, deterministic layout.
+    ``read_pack_assignments`` removes with a (doc_id, epoch_id) dedup. No
+    gap, no double-advance, deterministic layout.
     """
     from demo_bigdata_spark.operators.text import pack_sequences
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    state = _read_parquet_if_exists(spark, path)
-    if state is not None and applied:
-        committed = state.filter(F.col("epoch_id").isin([int(e) for e in applied]))
-        base = (
-            committed.agg(
-                F.max(F.col("tok_offset") + F.col("n_tokens")).alias("m")
-            ).first()["m"]
-            or 0
-        )
-    else:
-        base = 0
+    base = (
+        committed_view(spark, path, epochs_path, _PACK_SCHEMA)
+        .agg(F.max(F.col("tok_offset") + F.col("n_tokens")))
+        .first()[0]
+        or 0
+    )
     local = pack_sequences(batch_df, seq_len, text_col, id_col)
     assigned = (
         local.withColumn("tok_offset", F.col("tok_offset") + F.lit(int(base)))
@@ -917,32 +934,21 @@ def combine_pack_partial(
                 != F.col("pack_id")
             ),
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
     )
     # pin before writing so the batch plan runs once
     assigned = assigned.localCheckpoint(eager=True)
     assigned.write.mode("append").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode(
-        "append"
-    ).parquet(epochs_path)
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_pack_assignments(spark, path: str) -> DataFrame:
-    """The committed view of the continuous pack layout: assignment rows
-    semi-joined to the epoch ledger (uncommitted crash leftovers excluded),
-    deduplicated on (doc_id, epoch_id) — replayed epochs write byte-identical
-    rows (see combine_pack_partial), so the dedup is exact, not lossy."""
-    ledger = _read_parquet_if_exists(spark, path + "_epochs")
-    rows = _read_parquet_if_exists(spark, path)
-    if rows is None or ledger is None:
-        schema = (
-            "doc_id long, n_tokens long, tok_offset long, pack_id long, "
-            "pack_offset long, spans_boundary boolean, epoch_id long"
-        )
-        return spark.createDataFrame([], schema)
-    return rows.join(ledger, "epoch_id", "left_semi").dropDuplicates(
-        ["doc_id", "epoch_id"]
-    )
+    """The committed view of the continuous pack layout, deduplicated on
+    (doc_id, epoch_id) — replayed epochs write byte-identical rows (see
+    combine_pack_partial), so the dedup is exact, not lossy."""
+    return committed_view(
+        spark, path, path + "_epochs", _PACK_SCHEMA
+    ).dropDuplicates(["doc_id", "epoch_id"])
 
 
 def incremental_sequence_packing(
@@ -1027,7 +1033,7 @@ def append_contamination_flags(
         check_contamination_batch(
             spark, batch_df, index_path, n, text_col, id_col, portable
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .write.mode("append")
         .parquet(out_path)
     )
@@ -1036,14 +1042,13 @@ def append_contamination_flags(
 
 def read_contamination_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of the incrementally-maintained contamination flags:
-    ledger semi-join + (doc, epoch) dedup — the exactly-once read."""
+    committed epochs + (doc, epoch) dedup — the exactly-once read."""
     return committed_view(
         spark,
         out_path,
         out_path + "_epochs",
-        [id_col, "epoch_id"],
         f"{id_col} long, n_shared_shingles long, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "epoch_id"])
 
 
 def append_span_batch(
@@ -1109,24 +1114,22 @@ def append_span_batch(
     grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
         eager=False
     )
-    history = committed_view(
-        spark,
-        out_path,
-        epochs_path,
-        ["span_hash", "epoch_id"],
-        "span_hash string, epoch_id long",
-    ).select(F.col("span_hash").alias("_h")).distinct()
+    history = (
+        committed_view(spark, out_path, epochs_path, "span_hash string, epoch_id long")
+        .select(F.col("span_hash").alias("_h"))
+        .distinct()
+    )
     in_hist = grams.join(history, "_h", "left_semi").select(id_col, "_p")
     fresh = grams.join(history, "_h", "left_anti")
     in_batch = _flag_grams(fresh, min_count, "first", id_col)
     flags = in_hist.unionByName(in_batch).select(
         F.col(id_col),
         F.col("_p").cast("long").alias("start"),
-        F.lit(int(epoch_id)).alias("epoch_id"),
+        F.lit(int(epoch_id)).cast("long").alias("epoch_id"),
     )
     flags.write.mode("append").parquet(out_path + "_flags")
     grams.select(F.col("_h").alias("span_hash")).distinct().withColumn(
-        "epoch_id", F.lit(int(epoch_id))
+        "epoch_id", F.lit(int(epoch_id)).cast("long")
     ).write.mode("append").parquet(out_path)
     commit_epoch(spark, epochs_path, epoch_id)
 
@@ -1197,9 +1200,8 @@ def append_span_batch_counted(
         spark,
         out_path,
         epochs_path,
-        ["span_hash", id_col, "start"],
         f"span_hash string, {id_col} long, start long, epoch_id long",
-    ).select(
+    ).dropDuplicates(["span_hash", id_col, "start"]).select(
         F.col("span_hash").alias("_h"),
         F.col(id_col),
         F.col("start").alias("_p"),
@@ -1270,17 +1272,16 @@ def append_span_batch_counted(
 
 
 def read_span_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
-    """Committed view of the incrementally-maintained span flags: ledger
-    semi-join + (id, start, epoch) dedup — feed these starts to the same
+    """Committed view of the incrementally-maintained span flags +
+    (id, start, epoch) dedup — feed these starts to the same
     coverage/reassembly tail as the batch operator to materialize the
     deduplicated text."""
     return committed_view(
         spark,
         out_path + "_flags",
         out_path + "_epochs",
-        [id_col, "start", "epoch_id"],
         f"{id_col} long, start long, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "start", "epoch_id"])
 
 
 def incremental_span_index(
@@ -1349,7 +1350,7 @@ def append_quality_scores(
         classifier_quality_score(
             batch_df, weights, n_buckets, bias, text_col, id_col
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .write.mode("append")
         .parquet(out_path)
     )
@@ -1360,16 +1361,15 @@ def read_quality_scores(
     spark, out_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
     """Committed view of the incrementally-maintained quality scores:
-    ledger semi-join + (doc, epoch) dedup — the exactly-once read the
+    committed epochs + (doc, epoch) dedup — the exactly-once read the
     downstream quality filter consumes."""
     return committed_view(
         spark,
         out_path,
         out_path + "_epochs",
-        [id_col, "epoch_id"],
         f"{id_col} long, n_tokens bigint, raw_score double, "
         "quality_prob double, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "epoch_id"])
 
 
 def incremental_quality_scoring(
@@ -1441,7 +1441,7 @@ def append_bigram_lm_batch(
     (
         bg.groupBy("w1", "w2")
         .agg(F.count("*").alias("c12"))
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .write.mode("append")
         .parquet(out_path)
     )
@@ -1449,7 +1449,7 @@ def append_bigram_lm_batch(
         batch_df.select(F.explode(tokens(text_col)).alias("token"))
         .filter(F.col("token") != "")
         .distinct()
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
+        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
         .write.mode("append")
         .parquet(out_path + "_vocab")
     )
@@ -1466,18 +1466,16 @@ def read_bigram_lm(spark, out_path: str):
         spark,
         out_path,
         out_path + "_epochs",
-        ["w1", "w2", "epoch_id"],
         "w1 string, w2 string, c12 bigint, epoch_id long",
-    )
+    ).dropDuplicates(["w1", "w2", "epoch_id"])
     c12 = c12_rows.groupBy("w1", "w2").agg(F.sum("c12").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab_rows = committed_view(
         spark,
         out_path + "_vocab",
         out_path + "_epochs",
-        ["token", "epoch_id"],
         "token string, epoch_id long",
-    )
+    ).dropDuplicates(["token", "epoch_id"])
     vocab = vocab_rows.agg(F.count_distinct("token").alias("v"))
     return c12, c1, vocab
 
@@ -1705,9 +1703,8 @@ def read_soft_dedup_weights(
         spark,
         out_path,
         out_path + "_epochs",
-        [id_col, "shingle_hash"],
         f"{id_col} long, shingle_hash string, epoch_id long",
-    )
+    ).dropDuplicates([id_col, "shingle_hash"])
     return soft_dedup_weights(rows.select(id_col, "shingle_hash"), id_col=id_col)
 
 
@@ -1773,16 +1770,15 @@ def append_edge_batch(
 
 def read_edge_counts(spark, out_path: str) -> DataFrame:
     """Committed weighted edges over the incrementally-appended per-epoch
-    counts: semi-join the ledger (crash leftovers invisible), dedup on
+    counts: committed epochs only (crash leftovers invisible), dedup on
     (src, dst, epoch) so a replay's identical rows collapse, then SUM —
     fold == batch exactly (integer counts)."""
     rows = committed_view(
         spark,
         out_path,
         out_path + "_epochs",
-        ["src", "dst", "epoch_id"],
         "src long, dst long, w long, epoch_id long",
-    )
+    ).dropDuplicates(["src", "dst", "epoch_id"])
     return rows.groupBy("src", "dst").agg(
         F.sum("w").cast("bigint").alias("w")
     )

@@ -4943,21 +4943,12 @@ def _incremental_dedup_index(spark, sf_dir):
         + sf_dir.rstrip("/").rsplit("/", 1)[-1]
         + f"_{os.getpid()}"
     )
-    # ONE ledger read decides all three epochs' idempotence checks (the
-    # ledger is epoch-count-sized, bounded); the per-epoch
-    # epoch_already_applied probe inside append_dedup_batch re-reads the
-    # ledger per epoch, which the CONSTRUCT_TIMED bench rows would re-pay
-    # on every timed construction
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import committed_epochs
 
-    ledger = _read_parquet_if_exists(spark, path + "_epochs")
-    done = {r.epoch_id for r in ledger.collect()} if ledger is not None else set()
-    if done >= {0, 1, 2}:
+    if committed_epochs(path + "_epochs") >= {0, 1, 2}:
         return path
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     for e in range(3):
-        if e in done:
-            continue
         D.append_dedup_batch(
             spark, docs.filter(F.col("doc_id") % 3 == e), path, epoch_id=e,
             threshold=NEAR_DUP_THRESHOLD,

@@ -2854,7 +2854,7 @@ def test_epoch_partitioned_folds_crash_replay_and_plan(spark, sf_dir, tmp_path):
     exactly ONE copy (the flat-append layout double-appended and needed a
     corpus-sized dropDuplicates to collapse it), and (b) the committed
     read plans contain NO dedup: exactly one Exchange (the re-sum
-    aggregate), ledger semi-join broadcast."""
+    aggregate), and the committed epochs are a partition filter."""
     import re
 
     from demo_bigdata_spark.operators.sketches import (
@@ -2900,7 +2900,7 @@ def test_epoch_partitioned_folds_crash_replay_and_plan(spark, sf_dir, tmp_path):
 
     plan = executed_plan(read_histogram(spark, path))
     assert len(re.findall(r"\bExchange\b", plan)) == 1, plan  # re-sum only, no dedup
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    assert re.search(r"PartitionFilters: \[[^\]]*epoch_id", plan), plan
 
     # same layout + plan shape for the KL term-count fold
     kpath = str(tmp_path / "kl_crash")
@@ -3162,3 +3162,183 @@ def test_incremental_group_kl_matches_batch(spark, sf_dir, tmp_path):
         for r in read_group_kl(spark, spath, top_v=64).collect()
     }
     assert slive == batch
+
+
+def test_epoch_ledger_reads_and_commits_on_the_driver(spark, tmp_path):
+    """The epoch ledger is driver-side metadata. One ledger mixing
+    Spark-written files (epochs 0-1), a commit_epoch file (epoch 2) and the
+    temp file of a crashed commit reads as {0, 1, 2}; the applied check,
+    the commit and building the committed view run no Spark job; and the
+    view over epoch_id=0..3 directories leaves out the uncommitted epoch 3
+    through a partition filter."""
+    import re
+
+    from demo_bigdata_spark.plans.inspect import executed_plan
+    from demo_bigdata_spark.streaming.pipeline import (
+        commit_epoch,
+        committed_epochs,
+        committed_view,
+        epoch_already_applied,
+    )
+    from tests.test_sources_serving import _jobs_in
+
+    ledger = str(tmp_path / "t_epochs")
+    for e in (0, 1):
+        spark.createDataFrame([(e,)], "epoch_id long").write.mode("append").parquet(ledger)
+    _, commit_jobs = _jobs_in(spark, lambda: commit_epoch(spark, ledger, 2))
+    (tmp_path / "t_epochs" / ".epoch-3.parquet.tmp-0").write_bytes(b"torn")
+
+    assert committed_epochs(ledger) == {0, 1, 2}
+    assert committed_epochs(str(tmp_path / "never_written")) == frozenset()
+    applied, check_jobs = _jobs_in(
+        spark, lambda: [epoch_already_applied(spark, ledger, e) for e in range(4)]
+    )
+    assert applied == [True, True, True, False]
+    assert commit_jobs == 0 and check_jobs == 0
+
+    rows = str(tmp_path / "t")
+    for e in range(4):
+        spark.range(3).withColumn("x", F.lit(e)).write.parquet(f"{rows}/epoch_id={e}")
+    view, view_jobs = _jobs_in(
+        spark, lambda: committed_view(spark, rows, ledger, "id long, x int, epoch_id long")
+    )
+    assert view_jobs == 0
+    assert view.schema.simpleString() == "struct<id:bigint,x:int,epoch_id:bigint>"
+    assert sorted({(r["x"], r["epoch_id"]) for r in view.collect()}) == [
+        (0, 0), (1, 1), (2, 2)
+    ]
+    plan = executed_plan(view)
+    assert re.search(r"PartitionFilters: \[[^\]]*epoch_id", plan), plan
+
+
+def test_committed_views_keep_their_schema_after_the_first_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Committed views read with the schema their reader declares. For
+    every reader family, the view before the first commit and after one
+    committed epoch have the same schema, and the declared columns and
+    types are the ones the fold wrote (a partition column is compared by
+    name only: its directory-inferred type is not the declared one). A
+    wrong declaration would otherwise drop or mistype a column silently."""
+    import numpy as np
+
+    import demo_bigdata_spark.streaming.pipeline as SPL
+    from demo_bigdata_spark.operators import dedup as D
+    from demo_bigdata_spark.operators import index as IX
+    from demo_bigdata_spark.operators import similarity as SIM
+    from demo_bigdata_spark.operators.sketches import (
+        append_histogram_batch,
+        read_histogram,
+    )
+    from demo_bigdata_spark.operators.text import (
+        append_term_counts_batch,
+        read_group_kl,
+    )
+
+    views = []
+    real = SPL.committed_view
+
+    def recording(spark_, rows_path, epochs_path, schema):
+        view = real(spark_, rows_path, epochs_path, schema)
+        views.append((rows_path, view))
+        return view
+
+    monkeypatch.setattr(SPL, "committed_view", recording)
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = emb.filter(F.col("vec_id") < 40)
+    dim = len(emb.first()["embedding"])
+    C = np.random.default_rng(0).normal(size=(4, dim))
+    p = {n: str(tmp_path / n) for n in ("pack", "idx", "dd", "ivf", "gr", "hist", "kl")}
+
+    # (fold one epoch, readers with an empty form, readers without one)
+    families = [
+        (
+            lambda: SPL.combine_pack_partial(spark, p["pack"], docs, 0, seq_len=64),
+            [lambda: SPL.read_pack_assignments(spark, p["pack"])],
+            [],
+        ),
+        (
+            lambda: IX.append_postings(spark, docs, p["idx"], 0),
+            [lambda: IX.read_postings(spark, p["idx"])],
+            # no committed epoch means a batch-built index, read as-is
+            [lambda: IX.read_doclens(spark, p["idx"])],
+        ),
+        (
+            lambda: D.append_dedup_batch(spark, docs, p["dd"], 0),
+            [
+                lambda: D.read_dedup_bands(spark, p["dd"]),
+                lambda: D.read_dedup_toks(spark, p["dd"]),
+                lambda: D.read_near_dup_pairs(spark, p["dd"]),
+                lambda: D.read_dedup_clusters(spark, p["dd"]),
+                lambda: D.read_dedup_survivors(spark, p["dd"]),
+            ],
+            [],
+        ),
+        (
+            lambda: SIM.append_knn_graph_batch(
+                spark, emb, p["ivf"], p["gr"], C, 0, k=3, n_probe=2
+            ),
+            [
+                lambda: SIM.read_ivf_index(spark, p["ivf"]),
+                lambda: SIM.read_knn_graph(spark, p["gr"], k=3),
+                lambda: SIM._read_knn_probes(
+                    spark, p["gr"] + "_probes", p["gr"] + "_epochs", "vec_id"
+                ),
+            ],
+            [],
+        ),
+        (
+            lambda: append_histogram_batch(
+                spark, docs, p["hist"], 0, "n_chars", 0.0, 4096.0, 64
+            ),
+            [lambda: read_histogram(spark, p["hist"])],
+            [],
+        ),
+        (
+            lambda: append_term_counts_batch(spark, docs, p["kl"], 0),
+            [lambda: read_group_kl(spark, p["kl"], top_v=16)],
+            [],
+        ),
+    ]
+    for fold, readers, committed_only in families:
+        views.clear()
+        empty_readers = [r().schema for r in readers]
+        empty_views = {rows: v.schema for rows, v in views}
+        fold()
+        views.clear()
+        assert [r().schema for r in readers] == empty_readers
+        for r in committed_only:
+            r()
+        assert views
+        for rows, view in views:
+            assert view.schema == empty_views.get(rows, view.schema), rows
+            view.collect()  # typed read of the written files
+            partition_cols = {n.split("=")[0] for n in os.listdir(rows) if "=" in n}
+            written = {f.name: f.dataType for f in spark.read.parquet(rows).schema}
+            declared = {f.name: f.dataType for f in view.schema}
+            assert declared.keys() == written.keys(), rows
+            for name, dtype in declared.items():
+                if name not in partition_cols:
+                    assert dtype == written[name], (rows, name)
+
+
+def test_epoch_partitioned_folds_reject_a_flat_layout_root(spark, sf_dir, tmp_path):
+    """A histogram or term-count table whose root still holds data files
+    of the older flat-append layout fails with a migration hint instead of
+    Spark's 'conflicting directory structures' at read time."""
+    from demo_bigdata_spark.operators.sketches import append_histogram_batch
+    from demo_bigdata_spark.operators.text import append_term_counts_batch
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
+    for name, fold in (
+        ("hist", lambda path: append_histogram_batch(
+            spark, docs, path, 1, "n_chars", 0.0, 4096.0, 64)),
+        ("kl", lambda path: append_term_counts_batch(spark, docs, path, 1)),
+    ):
+        path = str(tmp_path / name)
+        spark.range(3).withColumn("epoch_id", F.lit(0)).write.parquet(path)
+        with pytest.raises(ValueError, match="flat-append layout"):
+            fold(path)
+        assert not os.path.exists(f"{path}/epoch_id=1")
