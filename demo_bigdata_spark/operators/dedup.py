@@ -1692,10 +1692,8 @@ def append_dedup_batch(
     """Fold one arrival batch into the live near-dup index exactly once:
     probe committed bands for cross-history candidates, add the batch's
     internal candidates, Jaccard-verify against committed + batch token
-    sets, then append (pairs, bands, toks) rows under ``epoch_id`` with
-    ONE ledger commit making all three visible atomically-enough (crash
-    before the commit leaves invisible rows; deterministic replay appends
-    identical rows and the committed views' dedup collapses them).
+    sets, then write (pairs, bands, toks) rows as the epoch's partitions
+    with ONE ledger commit making all three visible.
 
     Cost contract (measured, SCALE_NOTES): per-epoch work = the batch's
     hashing + one scan of the committed band table (3 narrow columns; the
@@ -1711,6 +1709,7 @@ def append_dedup_batch(
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = index_path + "_epochs"
@@ -1749,21 +1748,10 @@ def append_dedup_batch(
     )
     cands = cross.unionByName(internal).distinct()
     toks_all = read_dedup_toks(spark, index_path).unionByName(nt)
-    epoch = F.lit(int(epoch_id)).cast("long")
-    pairs = (
-        _jaccard_from_toks(cands, toks_all)
-        .filter(F.col("jaccard") >= threshold)
-        .withColumn("epoch_id", epoch)
-        .localCheckpoint(eager=True)
-    )
-
-    pairs.write.mode("append").parquet(index_path + "/pairs")
-    nb.withColumn("epoch_id", epoch).write.mode("append").partitionBy(
-        "band_idx"
-    ).parquet(index_path + "/bands")
-    nt.withColumn("epoch_id", epoch).write.mode("append").parquet(
-        index_path + "/toks"
-    )
+    pairs = _jaccard_from_toks(cands, toks_all).filter(F.col("jaccard") >= threshold)
+    write_epoch_partition(pairs, index_path + "/pairs", epoch_id)
+    write_epoch_partition(nb, index_path + "/bands", epoch_id, ("band_idx",))
+    write_epoch_partition(nt, index_path + "/toks", epoch_id)
     commit_epoch(spark, epochs_path, epoch_id)
 
 
@@ -1776,36 +1764,30 @@ _PAIRS_SCHEMA = "id_a long, id_b long, jaccard double, epoch_id long"
 def read_dedup_bands(spark, index_path: str) -> DataFrame:
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
-    # band_idx in the dedup keys: it is the partition column probes filter
-    # on, and the dedup's Aggregate only lets such filters push to parquet
-    # pruning when they reference grouping columns
-    bands = committed_view(
+    return committed_view(
         spark, index_path + "/bands", index_path + "_epochs", _BANDS_SCHEMA
-    )
-    return bands.dropDuplicates(["doc_id", "band_idx", "epoch_id"]).select(
-        "doc_id", "band_idx", "band_sig"
-    )
+    ).select("doc_id", "band_idx", "band_sig")
 
 
 def read_dedup_toks(spark, index_path: str) -> DataFrame:
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
-    toks = committed_view(
+    return committed_view(
         spark, index_path + "/toks", index_path + "_epochs", _TOKS_SCHEMA
-    )
-    return toks.dropDuplicates(["doc_id", "epoch_id"]).select("doc_id", "toks", "n")
+    ).select("doc_id", "toks", "n")
 
 
 def read_near_dup_pairs(spark, index_path: str) -> DataFrame:
     """Committed (id_a, id_b, jaccard) pairs accumulated by
     append_dedup_batch — equals the batch near-dup pipeline (uncapped
-    candidates) over everything ingested so far."""
+    candidates) over everything ingested so far. Each pair is emitted
+    once, by the epoch that ingests the later of its two documents, so
+    the view needs no dedup."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
-    pairs = committed_view(
+    return committed_view(
         spark, index_path + "/pairs", index_path + "_epochs", _PAIRS_SCHEMA
-    )
-    return pairs.dropDuplicates(["id_a", "id_b"]).select("id_a", "id_b", "jaccard")
+    ).select("id_a", "id_b", "jaccard")
 
 
 def _survivors_from_pairs(
@@ -1865,11 +1847,7 @@ def read_dedup_survivors(spark, index_path: str, max_iterations: int = 64) -> Da
     the committed pair set equals the uncapped batch pipeline's pairs,
     these labels equal "batch near_duplicates -> CC -> min-id per
     component" over everything ingested so far, at any epoch boundary.
-    The pair and token tables are read through the committed view
-    without a dedup: a replayed epoch's duplicate rows cannot change the
-    components (CC is invariant to edge multiplicity, and the universe is
-    distinct-ed inside the propagation), while rows of uncommitted epochs,
-    which could add edges, are filtered out by the view.
+    The pair and token tables are read through their committed views.
 
     Returns (doc_id, cluster_id, keep). Like every committed view this is
     a READER — recompute after appends, or materialize via the snapshot
@@ -1907,10 +1885,9 @@ def read_dedup_clusters(spark, index_path: str, max_iterations: int = 64) -> Dat
     difference from :func:`read_dedup_survivors`, inherited from the batch
     twins: bucket-graph components link any band collision (no Jaccard
     verify), the recall-over-precision trade that makes it farm-safe.
-    Like the survivors reader, the band table is read through the
-    committed view without a dedup — membership multiplicity cannot change
-    the bucket graph's components; the lazy checkpoint pins the
-    memberships once for the propagation's two full-table consumers.
+    The band table is read through its committed view; the lazy
+    checkpoint pins the memberships once for the propagation's two
+    full-table consumers.
 
     Returns (doc_id, cluster_id).
     """

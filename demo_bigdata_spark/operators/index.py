@@ -139,28 +139,27 @@ def append_positional_postings(
     n_buckets: int = 256,
 ) -> None:
     """Exactly-once incremental maintenance for the POSITIONAL index —
-    the same committed-view epoch-ledger discipline as append_postings:
-    an applied epoch is a no-op, a crash between the rows append and the
-    ledger commit leaves only uncommitted rows, and a replay appends
-    identical rows (positions are a pure function of the batch), so the
-    (doc, term, epoch) dedup on read is exact. Work per epoch is
-    O(batch) — history is never re-tokenized. Same append-only
-    document-stream contract as the inverted index."""
+    the same epoch-ledger discipline as append_postings: the epoch's rows
+    land in its own ``term_bucket=<b>/epoch_id=<k>`` partitions, and an
+    applied epoch is a no-op. Work per epoch is O(batch) — history is
+    never re-tokenized. Same append-only document-stream contract as the
+    inverted index."""
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
-        _positional_postings(batch_df, text_col, id_col, n_buckets)
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .repartition("term_bucket")
-        .write.mode("append")
-        .partitionBy("term_bucket")
-        .parquet(path)
+    write_epoch_partition(
+        _positional_postings(batch_df, text_col, id_col, n_buckets).repartition(
+            "term_bucket"
+        ),
+        path,
+        epoch_id,
+        ("term_bucket",),
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
@@ -168,10 +167,8 @@ def append_positional_postings(
 def read_positional_postings(
     spark: SparkSession, path: str, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Committed view of an incrementally-maintained positional index,
-    deduplicated on (doc, term, bucket, epoch) — replays write identical
-    rows, so the dedup is exact. Bucket/term predicates push through the
-    dedup to the partitioned scan."""
+    """Committed view of an incrementally-maintained positional index;
+    bucket predicates prune its partitioned scan."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
@@ -180,7 +177,7 @@ def read_positional_postings(
         path + "_epochs",
         f"{id_col} long, term string, positions array<int>, "
         "term_bucket int, epoch_id long",
-    ).dropDuplicates([id_col, "term", "term_bucket", "epoch_id"])
+    )
 
 
 def phrase_search(
@@ -198,19 +195,18 @@ def phrase_search(
     FIRST term's per-doc positions — per-row work bounded by doc length.
     Emits (doc, n_matches, first_pos) for matching docs.
 
-    On an incrementally-maintained index (``_epochs`` ledger present) the
-    committed view is read automatically — uncommitted crash-window rows
+    An incrementally-maintained index is read through its committed view
+    (streaming.pipeline.live_or_built) — uncommitted crash-window rows
     never match. Pass ``postings=`` to override."""
     if not phrase:
         raise ValueError("phrase must be non-empty")
-    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+    from demo_bigdata_spark.streaming.pipeline import live_or_built
 
     buckets = sorted({python_term_bucket(t, n_buckets) for t in phrase})
     if postings is None:
-        if committed_epochs(path + "_epochs"):
-            postings = read_positional_postings(spark, path, id_col)
-        else:
-            postings = spark.read.parquet(path)
+        postings = live_or_built(
+            spark, path, lambda: read_positional_postings(spark, path, id_col)
+        )
     postings = postings.filter(
         F.col("term_bucket").isin(buckets)
         & F.col("term").isin(sorted(set(phrase)))
@@ -251,15 +247,12 @@ def append_postings(
     id_col: str = "doc_id",
     n_buckets: int = 256,
 ) -> None:
-    """Exactly-once incremental index maintenance: append one micro-batch's
-    postings (tagged with ``epoch_id``) to the bucket layout, then commit
-    the epoch to the ledger — the committed-view pattern shared with
-    combine_pack_partial (streaming/pipeline.py). An already-committed
-    epoch is a no-op; a crash between the data append and the ledger
-    append leaves only uncommitted rows, and the replay appends identical
-    rows (postings are a pure function of the batch), so
-    ``read_postings``'s (doc, term, epoch) dedup is exact. Work per epoch
-    is O(batch) — history is never re-tokenized.
+    """Exactly-once incremental index maintenance: write one micro-batch's
+    postings as the epoch's ``term_bucket=<b>/epoch_id=<k>`` partitions,
+    then commit the epoch to the ledger — the committed-view pattern
+    shared with combine_pack_partial (streaming/pipeline.py). An
+    already-committed epoch is a no-op. Work per epoch is O(batch) —
+    history is never re-tokenized.
 
     Assumes an append-only document stream (each doc_id ingested in exactly
     one epoch) — the same contract as the continuous packer; a re-ingested
@@ -268,37 +261,35 @@ def append_postings(
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     tf = term_frequencies(batch_df, text_col, id_col).localCheckpoint(eager=False)
-    (
-        tf.withColumn("term_bucket", hash_bucket("term", n_buckets))
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .repartition("term_bucket")
-        .write.mode("append")
-        .partitionBy("term_bucket")
-        .parquet(path + "/postings")
+    write_epoch_partition(
+        tf.withColumn("term_bucket", hash_bucket("term", n_buckets)).repartition(
+            "term_bucket"
+        ),
+        path + "/postings",
+        epoch_id,
+        ("term_bucket",),
     )
-    # the doclens side table rides the same epoch: appended before the
-    # ledger commit, deduped on read — so ranked retrieval
-    # (bm25_rank_indexed) works off a continuously-maintained index too.
-    # Empty docs get dl=0 rows here too (same N/avgdl contract as a build).
-    _doclens_with_empty_docs(batch_df, tf, id_col).withColumn(
-        "epoch_id", F.lit(int(epoch_id)).cast("long")
-    ).write.mode("append").parquet(path + "/doclens")
+    # the doclens side table rides the same epoch and ledger commit, so
+    # ranked retrieval (bm25_rank_indexed) works off a continuously-
+    # maintained index too. Empty docs get dl=0 rows here too (same
+    # N/avgdl contract as a build).
+    write_epoch_partition(
+        _doclens_with_empty_docs(batch_df, tf, id_col), path + "/doclens", epoch_id
+    )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of an incrementally-maintained postings table
-    (streaming.pipeline.committed_view) + exact replay dedup.
-    term_bucket is IN the dedup keys even though it is determined by term:
-    dropDuplicates is an Aggregate, and only grouping columns let a
-    caller's bucket predicate push through to the partitioned scan —
-    without it every pruned probe becomes a full-index scan."""
+    (streaming.pipeline.committed_view); a caller's bucket predicate
+    prunes its partitioned scan."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
@@ -306,25 +297,24 @@ def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> Dat
         path + "/postings",
         path + "_epochs",
         f"{id_col} long, term string, tf long, term_bucket int, epoch_id long",
-    ).dropDuplicates([id_col, "term", "term_bucket", "epoch_id"])
+    )
 
 
 def read_doclens(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
-    """Committed view of the doclens side table: same ledger semantics as
-    read_postings (no committed epoch = batch-built index, read as-is)."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        committed_epochs,
-        committed_view,
-    )
+    """The doclens side table: its committed view on an incrementally-
+    maintained index, the files as they are on a batch build."""
+    from demo_bigdata_spark.streaming.pipeline import committed_view, live_or_built
 
-    if not committed_epochs(path + "_epochs"):
-        return spark.read.parquet(path + "/doclens")
-    return committed_view(
+    return live_or_built(
         spark,
         path + "/doclens",
-        path + "_epochs",
-        f"{id_col} long, dl long, epoch_id long",
-    ).dropDuplicates([id_col, "epoch_id"])
+        lambda: committed_view(
+            spark,
+            path + "/doclens",
+            path + "_epochs",
+            f"{id_col} long, dl long, epoch_id long",
+        ),
+    )
 
 
 def conjunctive_search(
@@ -378,21 +368,19 @@ def bm25_rank_indexed(
     the query terms' pruned buckets + one broadcast aggregate over
     doclens; the doclens join touches only matching docs.
 
-    On an incrementally-maintained index (an ``_epochs`` ledger exists)
-    the postings are read through ``read_postings``'s committed view —
-    crash leftovers between a data append and its ledger commit would
-    otherwise double-count df_t / n_hits / term scores. A batch-built
-    index (no ledger) reads the files directly. Pass ``postings=`` to
-    override either way (conjunctive_search's contract)."""
-    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+    An incrementally-maintained index is read through ``read_postings``'s
+    committed view (streaming.pipeline.live_or_built) — rows written
+    before their epoch's commit would otherwise count in df_t / n_hits /
+    term scores. A batch-built index reads the files directly. Pass
+    ``postings=`` to override either way (conjunctive_search's contract)."""
+    from demo_bigdata_spark.streaming.pipeline import live_or_built
 
     uniq = sorted(set(terms))
     buckets = sorted({python_term_bucket(t, n_buckets) for t in uniq})
     if postings is None:
-        if committed_epochs(path + "_epochs"):
-            postings = read_postings(spark, path, id_col)
-        else:
-            postings = spark.read.parquet(path + "/postings")
+        postings = live_or_built(
+            spark, path + "/postings", lambda: read_postings(spark, path, id_col)
+        )
     postings = (
         postings.filter(F.col("term_bucket").isin(buckets))
         .filter(F.col("term").isin(uniq))

@@ -870,13 +870,13 @@ def multi_query_ivf_topk_indexed(
 
 def _index_rows(spark, index_path: str, read_committed, id_col: str) -> DataFrame:
     """An IVF index's rows: ``read_committed``'s committed view when the
-    index is maintained incrementally (its ledger has committed epochs),
-    else the batch-built files as they are."""
-    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+    index is maintained incrementally, else the batch-built files as they
+    are (streaming.pipeline.live_or_built)."""
+    from demo_bigdata_spark.streaming.pipeline import live_or_built
 
-    if committed_epochs(index_path + "_epochs"):
-        return read_committed(spark, index_path, id_col)
-    return spark.read.parquet(index_path)
+    return live_or_built(
+        spark, index_path, lambda: read_committed(spark, index_path, id_col)
+    )
 
 
 def build_ivf_index(
@@ -909,9 +909,9 @@ def ivf_topk_indexed(
     predicate prunes parquet partitions, so only the probed inverted lists
     are read — no assignment recompute, no full scan.
 
-    On an incrementally-maintained index (an ``_epochs`` ledger exists,
-    see ``append_vectors``) the committed view is read instead —
-    uncommitted crash-window vectors never appear in results."""
+    On an incrementally-maintained index (see ``append_vectors``) the
+    committed view is read instead — uncommitted crash-window vectors
+    never appear in results."""
     q = np.asarray(query_vec, dtype=np.float64)
     Cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
     qn = q / max(np.linalg.norm(q), 1e-12)
@@ -1127,12 +1127,10 @@ def append_vectors(
     id_col: str = "vec_id",
 ) -> None:
     """Exactly-once incremental IVF maintenance: assign one micro-batch of
-    new vectors to the FROZEN centroids and append its inverted-list rows
-    (tagged with ``epoch_id``) under the committed-view epoch-ledger
-    discipline shared with append_postings — applied epoch = no-op, crash
-    between data append and ledger commit leaves only uncommitted rows,
-    replay appends identical rows (assignment is a pure function of batch
-    + centroids), dedup on read is exact. Work per epoch is O(batch).
+    new vectors to the FROZEN centroids and write its inverted-list rows
+    as the epoch's ``cluster=<c>/epoch_id=<k>`` partitions, under the
+    epoch-ledger discipline shared with append_postings (applied epoch =
+    no-op). Work per epoch is O(batch).
 
     Centroids stay fixed between retrains — the standard production IVF
     flow (FAISS add-after-train): drift is handled by periodic re-train +
@@ -1141,29 +1139,25 @@ def append_vectors(
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = index_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
-        assign_clusters(batch_df, centroids, vec_col, id_col)
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .repartition("cluster")
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(index_path)
+    write_epoch_partition(
+        assign_clusters(batch_df, centroids, vec_col, id_col).repartition("cluster"),
+        index_path,
+        epoch_id,
+        ("cluster",),
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_ivf_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
     """Committed view of an incrementally-maintained IVF index
-    (streaming.pipeline.committed_view) + exact replay dedup.
-    ``cluster`` is in the dedup keys (functionally dependent on the
-    vector, so semantics are unchanged) because dropDuplicates is an
-    Aggregate and only grouping columns let the probe's cluster predicate
-    push through to partition pruning — the point of the index."""
+    (streaming.pipeline.committed_view); the probe's cluster predicate
+    prunes its partitioned scan — the point of the index."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
@@ -1171,7 +1165,7 @@ def read_ivf_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
         index_path,
         index_path + "_epochs",
         f"{id_col} long, v array<double>, cluster int, epoch_id long",
-    ).dropDuplicates([id_col, "cluster", "epoch_id"])
+    )
 
 
 def build_ivf_pq_index(
@@ -1207,40 +1201,37 @@ def append_pq_vectors(
     id_col: str = "vec_id",
 ) -> None:
     """Exactly-once incremental IVF-PQ maintenance: assign + PQ-encode one
-    micro-batch against the FROZEN models and append its code rows under
+    micro-batch against the FROZEN models and write its code rows under
     the same epoch-ledger discipline as ``append_vectors`` (FAISS
-    add-after-train: both k-means models stay fixed between retrains, so
-    replayed epochs encode to identical rows and dedup on read is exact).
+    add-after-train: both k-means models stay fixed between retrains).
     Work per epoch is O(batch)."""
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = index_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
+    write_epoch_partition(
         pq_encode(
             assign_clusters(batch_df, centroids, vec_col, id_col),
             codebooks,
             vec_col="v",
             id_col=id_col,
             keep_cols=("cluster",),
-        )
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .repartition("cluster")
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(index_path)
+        ).repartition("cluster"),
+        index_path,
+        epoch_id,
+        ("cluster",),
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_ivf_pq_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
-    """Committed view of an incrementally-maintained IVF-PQ index + exact
-    replay dedup, ``cluster`` in the dedup keys so the probe's partition
-    pruning still fires (same rationale as ``read_ivf_index``)."""
+    """Committed view of an incrementally-maintained IVF-PQ index, pruned
+    by the probe's cluster predicate like ``read_ivf_index``."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
@@ -1248,7 +1239,7 @@ def read_ivf_pq_index(spark, index_path: str, id_col: str = "vec_id") -> DataFra
         index_path,
         index_path + "_epochs",
         f"{id_col} long, codes array<int>, cluster int, epoch_id long",
-    ).dropDuplicates([id_col, "cluster", "epoch_id"])
+    )
 
 
 def ivf_pq_topk_indexed(
@@ -1273,8 +1264,8 @@ def ivf_pq_topk_indexed(
     pushdown, the honest exact-refine cost; a production serving layer
     fronts it with an id-keyed row store). Returned cosines are exact.
 
-    On an incrementally-maintained index (``_epochs`` ledger exists) the
-    committed view is read — crash-window rows never appear."""
+    On an incrementally-maintained index the committed view is read —
+    crash-window rows never appear."""
     q = np.asarray(query_vec, dtype=np.float64)
     Cn = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
@@ -1952,18 +1943,17 @@ def append_knn_graph_batch(
          new vectors there. A dst in src's final top-k ranks top-k within
          any candidate subset, so per-batch top-k cuts lose nothing.
 
-    Edges and probe rows append with ``epoch_id``; one ledger commit at
-    ``graph_path + "_epochs"`` makes both visible atomically-enough (crash
-    before commit leaves only uncommitted rows; replay regenerates
-    identical rows — assignment and scoring are pure functions of
-    batch + frozen centroids + committed state). Reads go through
-    :func:`read_knn_graph` (committed view + per-src window). Edge rows
-    accumulate ~k + k·(arrival fan-in) per vector; compact by periodic
-    rebuild, like every index family here.
+    Edges (``epoch_id=<k>``) and probe rows
+    (``probe_cluster=<c>/epoch_id=<k>``) are written as the epoch's
+    partitions; one ledger commit at ``graph_path + "_epochs"`` makes
+    both visible. Reads go through :func:`read_knn_graph` (committed view
+    + per-src window). Edge rows accumulate ~k + k·(arrival fan-in) per
+    vector; :func:`compact_knn_graph` cuts them back to the exact top-k.
     """
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
+        write_epoch_partition,
     )
 
     epochs_path = graph_path + "_epochs"
@@ -1988,9 +1978,9 @@ def append_knn_graph_batch(
     # a bounded driver-side set (<= n_probe x batch, capped by
     # n_centroids). Without the filter the cogroup shuffles the ENTIRE
     # member index every epoch (unprobed clusters ride along just to
-    # produce empty groups); with it the cluster predicate pushes through
-    # the committed view's Aggregate into parquet partition pruning, so
-    # per-epoch IO is the probed slice, as the docstring promises.
+    # produce empty groups); with it the cluster predicate is a partition
+    # filter on the committed view, so per-epoch IO is the probed slice,
+    # as the docstring promises.
     touched = sorted(
         r["cluster"] for r in batch_probes.select("cluster").distinct().collect()
     )
@@ -2013,32 +2003,27 @@ def append_knn_graph_batch(
         id_col,
     )
 
-    edges = new_src_edges.unionByName(affected_edges).withColumn(
-        "epoch_id", F.lit(int(epoch_id)).cast("long")
+    write_epoch_partition(
+        new_src_edges.unionByName(affected_edges), graph_path, epoch_id
     )
-    edges.write.mode("append").parquet(graph_path)
-    (
+    write_epoch_partition(
         batch_probes.select(
             F.col(id_col), F.col("v"), F.col("cluster").alias("probe_cluster")
-        )
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .partitionBy("probe_cluster")
-        .parquet(probes_path)
+        ),
+        probes_path,
+        epoch_id,
+        ("probe_cluster",),
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def _read_knn_probes(spark, probes_path: str, epochs_path: str, id_col: str):
     """Committed view of the probe table (empty frame before the first
-    commit). probe_cluster joins the dedup keys so the cogroup's cluster
-    grouping stays partition-prunable."""
+    commit)."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     schema = f"{id_col} long, v array<double>, probe_cluster int, epoch_id long"
-    return committed_view(spark, probes_path, epochs_path, schema).dropDuplicates(
-        [id_col, "probe_cluster", "epoch_id"]
-    )
+    return committed_view(spark, probes_path, epochs_path, schema)
 
 
 def read_knn_clusters(
@@ -2079,12 +2064,12 @@ def read_knn_graph(spark, graph_path: str, k: int, id_col: str = "vec_id") -> Da
     per-src (cosine desc, dst asc) window knn_graph_ivf ends with. ``k``
     must match the maintenance calls.
 
-    The (src, dst) dedup collapses both duplication sources: a replayed
-    epoch's second copy of its rows, and a :func:`compact_knn_graph`
-    epoch rewriting edges that ALSO still exist under their original
-    epoch ids until the vacuum step physically drops them. Cosine is a
-    pure function of the pair, so any surviving copy is identical in
-    every selected column — the dedup is deterministic."""
+    The (src, dst) dedup covers compaction: a :func:`compact_knn_graph`
+    epoch rewrites edges that still exist under their original epoch ids
+    until its vacuum deletes those partitions, and stay there if the
+    vacuum was interrupted or skipped. Cosine is a pure function of the
+    pair, so any surviving copy is identical in every selected column —
+    the dedup is deterministic."""
     from pyspark.sql.window import Window
 
     from demo_bigdata_spark.streaming.pipeline import committed_view
@@ -2110,16 +2095,15 @@ def compact_knn_graph(
     graph_path: str,
     k: int,
     id_col: str = "vec_id",
-    vacuum: bool = True,
 ) -> None:
     """Compaction for the incrementally-maintained kNN graph (r10 VERDICT
     item 4 — the ``maintenance.compact_parquet`` discipline applied to the
     graph): accumulated per-batch edge rows (~k + k·arrival-fan-in per
     vector) are rewritten into the EXACT current per-src top-k (~n·k rows)
-    and the probe table is rewritten deduplicated, both under one fresh
-    compaction epoch with a single ledger append as the commit point —
-    readers see old-or-new atomically (same guarantee as every streaming
-    epoch).
+    and the probe table is rewritten deduplicated, both as the partitions
+    of one fresh compaction epoch with a single ledger commit as the
+    commit point — readers see old-or-new atomically (same guarantee as
+    every streaming epoch).
 
     Correctness of pruning non-top-k edges: cosines never change, so an
     edge outside the CURRENT per-src top-k can never re-enter a FUTURE
@@ -2132,38 +2116,30 @@ def compact_knn_graph(
     compaction id can never collide with a future stream epoch, and —
     critically — the old epoch ids STAY in the ledger, so a crash-replayed
     already-applied batch is still recognized by ``epoch_already_applied``
-    and skipped instead of double-appending. The interim state (compacted
+    and skipped instead of written again. The interim state (compacted
     rows + originals both committed) is handled by ``read_knn_graph``'s
     (src, dst) dedup.
 
-    ``vacuum=True`` then physically rewrites both directories, keeping the
-    compaction epoch's rows PLUS any rows whose epoch is not in the
-    pre-compaction ledger snapshot (localCheckpoint first — the frames must
-    be materialized OFF the files being overwritten). The not-in-snapshot
-    clause protects concurrent writers: a micro-batch that committed (or
-    wrote data but had not yet committed) between this function's ledger
-    read and the overwrite has an epoch id outside the snapshot, and
-    dropping its rows would be silent committed-data loss — its replay
-    would be skipped by ``epoch_already_applied``. As an extra guard the
-    ledger is re-read after the commit point and vacuum is SKIPPED entirely
-    if new epochs landed (the interim duplicated state is correct under
-    ``read_knn_graph``'s dedup; the next compaction reclaims it).
-
-    DATA-LOSS HAZARD (r11 ADVICE): the overwrite itself is non-atomic and
-    the staged rows live in a session-scoped localCheckpoint — a session
-    crash after the overwrite deletes the old files but before the new
-    files land loses the graph permanently, and a concurrent reader that
-    planned against the old listing can transiently fail. Run vacuum ONLY
-    with writer/reader exclusion (between micro-batches, from the
-    maintenance schedule) and on storage you can afford to rebuild, or use
-    ``vacuum=False`` + the transactional snapshot sink
-    (``sources/snapshots.py``) when that guarantee matters. Re-running is
-    harmless (each run commits a fresh epoch; reads are correct at every
-    point).
+    The vacuum then deletes the partition directories of the epochs in
+    the pre-compaction ledger snapshot, which the compaction epoch
+    subsumes; rows of any other epoch are never touched, so a batch that
+    wrote or committed its epoch meanwhile keeps its rows. If an epoch
+    committed since the snapshot the vacuum is skipped, and the next
+    quiet compaction reclaims the interim copies. A crash before or during
+    the vacuum leaves subsumed directories behind: reads stay correct
+    through the dedup, :func:`knn_graph_compaction_due` discounts them,
+    and the next compaction deletes them. Run it between micro-batches
+    (writer exclusion, from the maintenance schedule).
     """
+    import os
+
+    import pyarrow as pa
+
+    from demo_bigdata_spark.sources.snapshots import write_parquet_atomic
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         committed_epochs,
+        write_epoch_partition,
     )
 
     epochs_path = graph_path + "_epochs"
@@ -2172,80 +2148,75 @@ def compact_knn_graph(
         return  # nothing committed yet
     ce = min(0, min(committed)) - 1
 
-    compacted = (
-        read_knn_graph(spark, graph_path, k=k, id_col=id_col)
-        .select("src", "dst", "cosine")
-        .withColumn("epoch_id", F.lit(int(ce)).cast("long"))
-        .localCheckpoint(eager=True)
+    compacted = read_knn_graph(spark, graph_path, k=k, id_col=id_col).select(
+        "src", "dst", "cosine"
     )
     probes_path = graph_path + "_probes"
-    probes = _read_knn_probes(spark, probes_path, epochs_path, id_col)
-    probes_c = (
-        probes.dropDuplicates([id_col, "probe_cluster"])
-        .withColumn("epoch_id", F.lit(int(ce)).cast("long"))
-        .localCheckpoint(eager=True)
+    # the dedup collapses the probe copies an earlier compaction left
+    # behind when its vacuum was skipped or interrupted
+    probes_c = _read_knn_probes(spark, probes_path, epochs_path, id_col).dropDuplicates(
+        [id_col, "probe_cluster"]
     )
-    compacted.write.mode("append").parquet(graph_path)
-    probes_c.write.mode("append").partitionBy("probe_cluster").parquet(probes_path)
+    write_epoch_partition(compacted, graph_path, ce)
+    write_epoch_partition(probes_c, probes_path, ce, ("probe_cluster",))
     # Subsumption sidecar (r12 ADVICE, medium): record which epochs this
     # compaction subsumed so knn_graph_compaction_due can exclude their
-    # never-vacuumed files from live_rows — without it, vacuum=False stale
-    # rows inflate the ratio forever and a repeated maintenance schedule
-    # appends an unbounded chain of n·k copies. Written BEFORE the ledger
-    # commit: the commit stays the single atomicity point, and a sidecar
-    # row whose compaction id never committed is ignored by the trigger.
-    spark.createDataFrame(
-        [(int(ce), int(e)) for e in committed],
-        "compaction_id long, subsumed_epoch long",
-    ).write.mode("append").parquet(graph_path + "_compactions")
+    # files from live_rows while an interrupted vacuum leaves them on disk.
+    # Written BEFORE the ledger commit: the commit stays the single
+    # atomicity point, and a sidecar file whose compaction id never
+    # committed is ignored by the trigger.
+    sidecar = graph_path + "_compactions"
+    os.makedirs(sidecar, exist_ok=True)
+    write_parquet_atomic(
+        pa.table(
+            {
+                "compaction_id": pa.array([int(ce)] * len(committed), pa.int64()),
+                "subsumed_epoch": pa.array(sorted(committed), pa.int64()),
+            }
+        ),
+        os.path.join(sidecar, f"compaction{int(ce)}.parquet"),
+    )
     commit_epoch(spark, epochs_path, ce)  # the commit point
 
-    if vacuum:
-        # Concurrent-writer guards (r11 ADVICE, medium): (a) skip vacuum if
-        # any epoch committed since our pre-compaction ledger snapshot —
-        # the duplicated interim state is correct under read_knn_graph's
-        # dedup and the next compaction reclaims it; (b) even when not
-        # skipped, keep every row whose epoch is OUTSIDE the snapshot
-        # (e.g. a batch that wrote rows but has not committed yet), never
-        # just epoch_id == ce. Snapshot epochs are exactly what the ce
-        # rows subsume, so only those are safe to drop.
-        if committed_epochs(epochs_path) - committed - {ce}:
-            return  # new epochs landed mid-compaction: leave files intact
-        stale = sorted(committed)  # pre-compaction snapshot only
-        live_e = (
-            spark.read.parquet(graph_path)
-            .filter(~F.col("epoch_id").isin(stale))
-            .localCheckpoint(eager=True)
-        )
-        live_e.write.mode("overwrite").parquet(graph_path)
-        live_p = (
-            spark.read.parquet(probes_path)
-            .filter(~F.col("epoch_id").isin(stale))
-            .localCheckpoint(eager=True)
-        )
-        live_p.write.mode("overwrite").partitionBy("probe_cluster").parquet(probes_path)
+    if committed_epochs(epochs_path) - committed - {ce}:
+        return  # an epoch committed mid-compaction: a writer is running
+    _drop_epoch_dirs(graph_path, committed)
+    _drop_epoch_dirs(probes_path, committed)
+
+
+def _drop_epoch_dirs(path: str, epochs) -> None:
+    """Delete the ``epoch_id=<e>`` partition directories of ``epochs``
+    under ``path``, at the root or one partition level down."""
+    import glob
+    import os
+    import shutil
+
+    from demo_bigdata_spark.sources.snapshot_cdc import _strip_uri
+
+    root = _strip_uri(path)
+    for e in epochs:
+        for pattern in (f"epoch_id={int(e)}", f"*/epoch_id={int(e)}"):
+            for d in glob.glob(os.path.join(root, pattern)):
+                shutil.rmtree(d)
 
 
 def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     """Cheap auto-trigger predicate for :func:`compact_knn_graph` (r11
     VERDICT item 5 — mirrors ``maintenance.compact_parquet``'s policy):
-    decides from the epoch LEDGER plus parquet FOOTER metadata only —
-    row-group counts and epoch_id min/max statistics via pyarrow, ZERO
-    Spark jobs and zero data-page reads, so it is safe to call before
-    every micro-batch.
+    decides from the epoch LEDGER, the partition directory names and
+    parquet FOOTER row counts only — ZERO Spark jobs and zero data-page
+    reads, so it is safe to call before every micro-batch.
 
-    ``live_rows`` = sum of footer row counts under the graph dir,
-    EXCLUDING files whose epoch stats pin them entirely to epochs some
-    committed compaction subsumed (the ``_compactions`` sidecar written at
-    compaction time): under ``vacuum=False`` those files are physically
-    present but logically dead (the compacted copy supersedes them), and
-    counting them would hold the ratio above threshold forever — a
-    repeated maintenance schedule would append an unbounded chain of n·k
-    copies (r12 ADVICE). Under ``vacuum=True`` the exclusion is a no-op
-    (the files are gone). ``baseline_rows`` = rows in files whose epoch_id
-    stats pin them to the LAST compaction epoch (footer min == max == ce)
-    — i.e. the exact n·k row count the last compaction left behind. Due
-    when live/baseline >= ``ratio``. Before any compaction the baseline is
+    ``live_rows`` = footer row counts of the files under the graph dir,
+    EXCLUDING the partitions of epochs some committed compaction subsumed
+    (the ``_compactions`` sidecar written at compaction time): after an
+    interrupted vacuum those files are physically present but logically
+    dead (the compacted copy supersedes them), and counting them would
+    hold the ratio above threshold forever — a repeated maintenance
+    schedule would append an unbounded chain of n·k copies (r12 ADVICE).
+    ``baseline_rows`` = rows in the LAST compaction epoch's partition —
+    the exact n·k row count the last compaction left behind. Due when
+    live/baseline >= ``ratio``. Before any compaction the baseline is
     unknown; then due kicks in once more than ``ratio`` epochs are
     committed (each stream epoch contributes ~k + fan-in rows per vector,
     so epoch count is the honest proxy for the same redundancy ratio).
@@ -2257,25 +2228,29 @@ def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     state while never firing on a freshly-compacted graph (ratio ~1), and
     keeps the read win >= ~2x per the measured curve. Schedule the actual
     compaction between micro-batches (writer exclusion — see
-    :func:`compact_knn_graph`'s vacuum hazard note).
+    :func:`compact_knn_graph`).
     """
     import os
 
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+    from demo_bigdata_spark.streaming.pipeline import (
+        _require_epoch_layout,
+        committed_epochs,
+    )
 
     committed = committed_epochs(graph_path + "_epochs")
     if not committed or not os.path.isdir(graph_path):
         return {"due": False, "reason": "no committed graph"}
+    _require_epoch_layout(graph_path)
     compactions = [e for e in committed if e < 0]
     ce = min(compactions) if compactions else None
 
     # Epochs some COMMITTED compaction subsumed (sidecar rows whose
     # compaction id never reached the ledger are crash leftovers — ignored).
-    # Files fully pinned inside this set are logically dead whether or not
-    # a vacuum removed them, so they must not count as live.
+    # Their partitions are logically dead whether or not a vacuum removed
+    # them, so they must not count as live.
     subsumed: set[int] = set()
     sidecar = graph_path + "_compactions"
     if compactions and os.path.isdir(sidecar):
@@ -2292,24 +2267,13 @@ def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     live_rows = 0
     baseline_rows = 0
     for fpath in pads.dataset(graph_path, format="parquet").files:
-        md = pq.ParquetFile(fpath).metadata
-        idx = {md.schema.column(i).name: i for i in range(len(md.schema))}
-        mins, maxs = set(), set()
-        if "epoch_id" in idx:
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx["epoch_id"]).statistics
-                if st is None or not st.has_min_max:
-                    mins.add(None)
-                    break
-                mins.add(st.min)
-                maxs.add(st.max)
-        pinned = None not in mins and mins and mins == maxs and len(mins) == 1
-        epoch = next(iter(mins)) if pinned else None
-        if pinned and epoch in subsumed and epoch != ce:
+        epoch = int(os.path.basename(os.path.dirname(fpath)).split("=", 1)[1])
+        if epoch in subsumed and epoch != ce:
             continue  # superseded by a committed compaction, never live
-        live_rows += md.num_rows
-        if ce is not None and pinned and epoch == ce:
-            baseline_rows += md.num_rows
+        n_rows = pq.read_metadata(fpath).num_rows
+        live_rows += n_rows
+        if epoch == ce:
+            baseline_rows += n_rows
 
     if ce is None or baseline_rows == 0:
         n_epochs = len(committed)
@@ -2334,26 +2298,22 @@ def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     }
 
 
-def maintain_knn_graph(
-    spark, graph_path: str, k: int, ratio: float = 3.0, vacuum: bool = True
-) -> dict:
+def maintain_knn_graph(spark, graph_path: str, k: int, ratio: float = 3.0) -> dict:
     """The trigger + compaction wired together for a maintenance schedule:
-    evaluate :func:`knn_graph_compaction_due` (footer stats only, ~ms) and
-    run :func:`compact_knn_graph` exactly when it fires. Call between
-    micro-batches (writer exclusion — see the vacuum hazard note); the
-    returned trigger report gains ``compacted: bool`` for observability.
+    evaluate :func:`knn_graph_compaction_due` (directory names and footers
+    only, ~ms) and run :func:`compact_knn_graph` exactly when it fires.
+    Call between micro-batches (writer exclusion); the returned trigger
+    report gains ``compacted: bool`` for observability.
 
-    Converges under BOTH vacuum modes: the trigger discounts files that a
-    committed compaction subsumed (the ``_compactions`` sidecar), so with
-    ``vacuum=False`` a quiet graph settles at ratio 1.0 after one
-    compaction instead of re-compacting (and appending another n·k copy)
-    on every schedule tick (r12 ADVICE). Stale bytes still accumulate
-    until a ``vacuum=True`` pass or the snapshot sink reclaims them —
-    vacuum=False trades disk for crash safety, not correctness.
+    Converges after an interrupted vacuum too: the trigger discounts the
+    partitions a committed compaction subsumed (the ``_compactions``
+    sidecar), so a quiet graph settles at ratio 1.0 after one compaction
+    instead of re-compacting (and writing another n·k copy) on every
+    schedule tick (r12 ADVICE); the next compaction deletes them.
     """
     report = knn_graph_compaction_due(graph_path, ratio=ratio)
     if report.get("due"):
-        compact_knn_graph(spark, graph_path, k=k, vacuum=vacuum)
+        compact_knn_graph(spark, graph_path, k=k)
     return {**report, "compacted": bool(report.get("due"))}
 
 

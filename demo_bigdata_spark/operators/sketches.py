@@ -471,12 +471,9 @@ def append_histogram_batch(
 ) -> None:
     """Exactly-once incremental histogram maintenance under the shared
     epoch-ledger discipline: write the batch's (bin, n) partial (<= n_bins
-    rows per epoch) into the epoch's OWN partition directory
-    (``path/epoch_id=<k>``, mode=overwrite — the idempotent layout, r14)
-    and commit the epoch. Integer bin counts sum across epochs to EXACTLY
-    the batch sketch of everything ingested; a replayed (uncommitted)
-    epoch REPLACES its directory instead of appending a second copy, so
-    the committed read needs no dedup shuffle."""
+    rows per epoch) as the epoch's partition and commit the epoch.
+    Integer bin counts sum across epochs to EXACTLY the batch sketch of
+    everything ingested."""
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
@@ -493,8 +490,7 @@ def append_histogram_batch(
 
 def read_histogram(spark, path: str) -> DataFrame:
     """Committed (bin, n) sketch from the incrementally-maintained table:
-    the committed view (epoch-partition pruning, no dedup shuffle), then
-    the exact integer re-sum."""
+    the committed view, then the exact integer re-sum."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return (

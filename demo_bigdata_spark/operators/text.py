@@ -698,13 +698,9 @@ def append_term_counts_batch(
     table :func:`group_kl_divergence` is built on, under the shared
     epoch-ledger discipline: write the batch's partial counts (one row
     per (group, distinct token) in the batch — Zipf-bounded, never the
-    corpus) into the epoch's OWN partition directory
-    (``path/epoch_id=<k>``, mode=overwrite — the idempotent layout, r14)
-    and commit the epoch. Token counts are ADDITIVE integers, so the
-    committed sums across epochs equal the batch count table of
-    everything ingested exactly; a replayed (uncommitted) epoch REPLACES
-    its directory instead of appending a second copy, so the committed
-    read needs no dedup shuffle."""
+    corpus) as the epoch's partition and commit the epoch. Token counts
+    are ADDITIVE integers, so the committed sums across epochs equal the
+    batch count table of everything ingested exactly."""
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         epoch_already_applied,
@@ -731,8 +727,7 @@ def read_group_kl(
     spark, path: str, group_col: str = "source", top_v: int = 256, scale: int = 6
 ) -> DataFrame:
     """Per-group KL divergence from the incrementally-maintained count
-    table: committed view (epoch-partition pruning, no dedup shuffle) ->
-    exact integer re-sum per (group, token) -> the SAME vocab/OOV/KL tail
+    table: committed view -> exact integer re-sum per (group, token) -> the SAME vocab/OOV/KL tail
     as the batch operator (:func:`_kl_from_counts`), so live == batch
     bit-for-bit at any epoch boundary — the streaming answer to 'which
     crawl snapshot shifted the mixture'."""

@@ -448,11 +448,12 @@ def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
 
 # --- The epoch ledger ---------------------------------------------------------
 #
-# Every exactly-once fold appends its epoch's rows tagged with ``epoch_id``
-# and then commits the epoch to a ledger beside the table
-# (``<path>_epochs``). The ledger is a directory with one small parquet file
-# per committed epoch, written and read on the driver with pyarrow — no Spark
-# job. The three functions below are the only code that touches it.
+# Every exactly-once fold writes its epoch's rows into the table's own
+# ``epoch_id=<k>`` partition (:func:`write_epoch_partition`) and then commits
+# the epoch to a ledger beside the table (``<path>_epochs``). The ledger is a
+# directory with one small parquet file per committed epoch, written and read
+# on the driver with pyarrow — no Spark job. The three functions below are
+# the only code that touches it.
 
 
 def committed_epochs(epochs_path: str) -> frozenset[int]:
@@ -499,29 +500,53 @@ def commit_epoch(spark, epochs_path: str, epoch_id: int) -> None:
     )
 
 
+def epoch_layout(path: str) -> bool | None:
+    """Whether the table at ``path`` keeps one ``epoch_id=<k>`` partition
+    per epoch, judged on the driver (no Spark job) from the first data file
+    a sorted directory walk finds: True when that file sits under an
+    ``epoch_id=<k>`` directory at any depth, False when it does not (a
+    batch build, or a fold table of the older flat-append layout), None
+    when ``path`` holds no data file yet. ``_``/``.``-prefixed names
+    (``_SUCCESS``, ``.crc``, Spark's staging directories) are skipped. A
+    directory's own files are seen before its subdirectories, so data
+    files at the root of an epoch-partitioned table read as flat."""
+    root = _strip_uri(path)
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(n for n in dirs if not n.startswith(("_", ".")))
+        if any(not n.startswith(("_", ".")) for n in files):
+            rel = os.path.relpath(d, root).split(os.sep)
+            return any(n.startswith("epoch_id=") for n in rel)
+    return None
+
+
+def _require_epoch_layout(path: str) -> None:
+    """Raise when the fold table at ``path`` is of the flat-append layout:
+    its replay copies would be read twice, since readers keep no dedup."""
+    if epoch_layout(path) is False:
+        raise ValueError(
+            f"{path} holds data files of the flat-append layout; this table "
+            "keeps one epoch_id=<k> partition per epoch. "
+            f"Move {path} and {path}_epochs aside and fold the batches again."
+        )
+
+
 def committed_view(
     spark, rows_path: str, epochs_path: str, schema: str
 ) -> DataFrame:
-    """The committed rows of a table that exactly-once folds write under
-    ``epoch_id``: a read with the declared ``schema`` (DDL; columns come
-    back in its order), filtered to the epochs committed when the view is
-    built. That set is a plan-time literal, so a later commit never changes
-    a view already built, and on a table laid out as ``epoch_id=<k>``
-    directories the filter is a partition filter that prunes uncommitted
-    epochs. Before the first commit the view is empty, with ``schema``.
+    """The committed rows of a table that exactly-once folds write with
+    :func:`write_epoch_partition`: a read with the declared ``schema``
+    (DDL; columns come back in its order), filtered to the epochs committed
+    when the view is built. That set is a plan-time literal, so a later
+    commit never changes a view already built, and the filter is a
+    partition filter that prunes uncommitted epochs. Before the first
+    commit the view is empty, with ``schema``. Raises ValueError on a table
+    of the flat-append layout.
 
-    Exactly once, per layout:
-
-    - per-epoch directories written with ``mode("overwrite")``: a replay of
-      an uncommitted epoch replaces its directory, and a committed epoch is
-      never rewritten (every fold checks :func:`epoch_already_applied`
-      first), so the view holds each epoch's rows once;
-    - flat appends: a replay of an uncommitted epoch appends a second copy
-      of identical rows. The view keeps both; each caller of such a table
-      drops the duplicates on its own keys. A bucket or cluster column a
-      probe filters on belongs in those keys: ``dropDuplicates`` is an
-      Aggregate, and only filters on grouping columns push through it to
-      partition pruning."""
+    Exactly once: a replay of an uncommitted epoch replaces that epoch's
+    partition, and a committed epoch is never rewritten (every fold checks
+    :func:`epoch_already_applied` first), so the view holds each epoch's
+    rows once and needs no dedup."""
+    _require_epoch_layout(rows_path)
     empty = spark.createDataFrame([], schema)
     committed = committed_epochs(epochs_path)
     if not committed or not os.path.isdir(_strip_uri(rows_path)):
@@ -537,24 +562,39 @@ def committed_view(
 committed_view_epoch_partitioned = committed_view
 
 
-def write_epoch_partition(part: DataFrame, path: str, epoch_id: int) -> None:
-    """Write one epoch's rows into the table's ``path/epoch_id=<k>``
-    directory with ``mode("overwrite")``, so a replay of an uncommitted
-    epoch replaces them. Raises ValueError when the table root already
-    holds data files of the older flat-append layout, which Spark could
-    not read beside the epoch directories."""
-    root = _strip_uri(path)
-    if os.path.isdir(root) and any(
-        not n.startswith(("_", ".")) and os.path.isfile(os.path.join(root, n))
-        for n in os.listdir(root)
-    ):
-        raise ValueError(
-            f"{path} holds data files at its root from the flat-append "
-            "layout; this table keeps one epoch_id=<k> directory per epoch. "
-            f"Move {path} and {path}_epochs aside and fold the batches again."
-        )
-    part.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        f"{path}/epoch_id={int(epoch_id)}"
+def live_or_built(spark, table: str, read_committed) -> DataFrame:
+    """An index table as its lifecycle reads it. A table whose data files
+    sit in ``epoch_id=<k>`` partitions is maintained by a fold and is read
+    through ``read_committed()``, its committed view (empty before the
+    first commit), and so is one with no data file yet; a flat table is a
+    batch build, read as it is. The choice rests on the layout
+    (:func:`epoch_layout`), not on the ledger, so rows written before
+    their epoch's commit are never served."""
+    if epoch_layout(table) is False:
+        return spark.read.parquet(table)
+    return read_committed()
+
+
+def write_epoch_partition(
+    part: DataFrame, path: str, epoch_id: int, partition_by: tuple[str, ...] = ()
+) -> None:
+    """Write one epoch's rows as the table's ``epoch_id=<k>`` partition,
+    the one way an exactly-once fold writes. ``part`` gets the literal
+    ``epoch_id`` and is written to the table root with a dynamic partition
+    overwrite, partitioned by ``(*partition_by, "epoch_id")``: a table with
+    an inner partition column is laid out ``<col>=<v>/epoch_id=<k>``, so a
+    view lists one directory level of buckets, not one per epoch. Only the
+    partitions ``part`` writes are replaced, so a replay of an uncommitted
+    epoch replaces its own rows and leaves every other epoch alone. A
+    ``part`` whose plan reads the partition it replaces must be pinned by
+    the caller. Raises ValueError on a table of the flat-append layout."""
+    _require_epoch_layout(path)
+    (
+        part.withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by, "epoch_id")
+        .parquet(path)
     )
 
 
@@ -902,13 +942,11 @@ def combine_pack_partial(
     history); WITHIN a batch, docs pack in id order.
 
     Exactly-once design: there is NO separate running-total file to drift
-    out of sync. The base offset derives from assignment rows whose epoch
-    is IN the ledger (the committed view), so a crash between the data
-    append and the ledger append leaves only UNCOMMITTED rows — the replay
-    recomputes the identical base, appends byte-identical rows, then
-    commits the epoch; the stale first copy is an exact duplicate that
-    ``read_pack_assignments`` removes with a (doc_id, epoch_id) dedup. No
-    gap, no double-advance, deterministic layout.
+    out of sync. The base offset derives from the committed view, so a
+    crash between the data write and the ledger commit leaves only
+    uncommitted rows; the replay recomputes the identical base and
+    replaces the epoch's partition. No gap, no double-advance,
+    deterministic layout.
     """
     from demo_bigdata_spark.operators.text import pack_sequences
 
@@ -934,21 +972,14 @@ def combine_pack_partial(
                 != F.col("pack_id")
             ),
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
     )
-    # pin before writing so the batch plan runs once
-    assigned = assigned.localCheckpoint(eager=True)
-    assigned.write.mode("append").parquet(path)
+    write_epoch_partition(assigned, path, epoch_id)
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_pack_assignments(spark, path: str) -> DataFrame:
-    """The committed view of the continuous pack layout, deduplicated on
-    (doc_id, epoch_id) — replayed epochs write byte-identical rows (see
-    combine_pack_partial), so the dedup is exact, not lossy."""
-    return committed_view(
-        spark, path, path + "_epochs", _PACK_SCHEMA
-    ).dropDuplicates(["doc_id", "epoch_id"])
+    """The committed view of the continuous pack layout."""
+    return committed_view(spark, path, path + "_epochs", _PACK_SCHEMA)
 
 
 def incremental_sequence_packing(
@@ -1018,37 +1049,32 @@ def append_contamination_flags(
 ) -> None:
     """Exactly-once per-epoch contamination flagging: check one micro-batch
     against the persisted eval shingle index
-    (operators.dedup.check_contamination_batch) and append the flagged
-    (doc, n_shared, epoch) rows under the same committed-view epoch-ledger
-    discipline as every incremental fold here — applied epoch = no-op,
-    crash between append and commit leaves only uncommitted rows, replay
-    appends identical rows (flags are a pure function of batch + static
-    index), dedup on read is exact."""
+    (operators.dedup.check_contamination_batch) and write the flagged
+    (doc, n_shared) rows as the epoch's partition, under the epoch ledger
+    every incremental fold here shares."""
     from demo_bigdata_spark.operators.dedup import check_contamination_batch
 
     epochs_path = out_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
+    write_epoch_partition(
         check_contamination_batch(
             spark, batch_df, index_path, n, text_col, id_col, portable
-        )
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .parquet(out_path)
+        ),
+        out_path,
+        epoch_id,
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_contamination_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
-    """Committed view of the incrementally-maintained contamination flags:
-    committed epochs + (doc, epoch) dedup — the exactly-once read."""
+    """Committed view of the incrementally-maintained contamination flags."""
     return committed_view(
         spark,
         out_path,
         out_path + "_epochs",
         f"{id_col} long, n_shared_shingles long, epoch_id long",
-    ).dropDuplicates([id_col, "epoch_id"])
+    )
 
 
 def append_span_batch(
@@ -1084,16 +1110,13 @@ def append_span_batch(
     arbitrary thresholds; the incremental path keeps exact equivalence.
 
     Storage: ``out_path`` holds (span_hash, epoch_id) history rows,
-    ``out_path + '_flags'`` holds (id, start, epoch_id) flag rows; ONE
-    ledger at ``out_path + '_epochs'`` commits both — a crash anywhere
-    before the ledger append leaves only uncommitted rows in either
-    table, and the deterministic replay (flags are a pure function of
-    batch + committed history) appends identical rows that the
-    committed-view dedup collapses.
+    ``out_path + '_flags'`` holds (id, start, epoch_id) flag rows, each
+    epoch in its own partition; ONE ledger at ``out_path + '_epochs'``
+    commits both.
 
     100 TB posture: per-batch work is O(batch grams) — one digest
     aggregate, one semi join against the history (digest-keyed shuffle or
-    broadcast at Zipf sizes), zero history rewrites (append-only)."""
+    broadcast at Zipf sizes), zero history rewrites."""
     from demo_bigdata_spark.operators.dedup import (
         _flag_grams,
         _span_base,
@@ -1114,6 +1137,8 @@ def append_span_batch(
     grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
         eager=False
     )
+    # distinct: each epoch stores its own distinct digests, so a digest
+    # seen in several committed epochs has a row in each
     history = (
         committed_view(spark, out_path, epochs_path, "span_hash string, epoch_id long")
         .select(F.col("span_hash").alias("_h"))
@@ -1123,14 +1148,12 @@ def append_span_batch(
     fresh = grams.join(history, "_h", "left_anti")
     in_batch = _flag_grams(fresh, min_count, "first", id_col)
     flags = in_hist.unionByName(in_batch).select(
-        F.col(id_col),
-        F.col("_p").cast("long").alias("start"),
-        F.lit(int(epoch_id)).cast("long").alias("epoch_id"),
+        F.col(id_col), F.col("_p").cast("long").alias("start")
     )
-    flags.write.mode("append").parquet(out_path + "_flags")
-    grams.select(F.col("_h").alias("span_hash")).distinct().withColumn(
-        "epoch_id", F.lit(int(epoch_id)).cast("long")
-    ).write.mode("append").parquet(out_path)
+    write_epoch_partition(flags, out_path + "_flags", epoch_id)
+    write_epoch_partition(
+        grams.select(F.col("_h").alias("span_hash")).distinct(), out_path, epoch_id
+    )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
@@ -1182,8 +1205,7 @@ def append_span_batch_counted(
 
     Layout mirrors the min_count=2 index: ``out_path`` holds occurrence
     rows, ``out_path + '_flags'`` the flags, one ledger at
-    ``out_path + '_epochs'`` commits both; crash-replay appends identical
-    rows the committed-view dedup collapses."""
+    ``out_path + '_epochs'`` commits both."""
     from demo_bigdata_spark.operators.dedup import _span_base, _span_grams
 
     k = int(min_count)
@@ -1196,6 +1218,9 @@ def append_span_batch_counted(
     grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
         eager=False
     )
+    # a document sent again in a later epoch stores its occurrences again;
+    # counting each (digest, id, start) once keeps h_count a count of
+    # corpus positions
     hist = committed_view(
         spark,
         out_path,
@@ -1252,36 +1277,32 @@ def append_span_batch_counted(
         )
         .select(id_col, "_p")
     )
-    # epoch_id written as LONG to match the ledger schema: parquet files
-    # with mixed int32/int64 epoch columns make reads inference-order
-    # dependent (int32->int64 upcasts, the reverse read fails)
     flags = flag_batch.unionByName(flag_hist).select(
-        F.col(id_col),
-        F.col("_p").cast("long").alias("start"),
-        F.lit(int(epoch_id)).cast("long").alias("epoch_id"),
+        F.col(id_col), F.col("_p").cast("long").alias("start")
     )
-    flags.write.mode("append").parquet(out_path + "_flags")
-    grams.select(
-        F.col("_h").alias("span_hash"),
-        F.col(id_col),
-        F.col("_p").cast("long").alias("start"),
-    ).withColumn(
-        "epoch_id", F.lit(int(epoch_id)).cast("long")
-    ).write.mode("append").parquet(out_path)
+    write_epoch_partition(flags, out_path + "_flags", epoch_id)
+    write_epoch_partition(
+        grams.select(
+            F.col("_h").alias("span_hash"),
+            F.col(id_col),
+            F.col("_p").cast("long").alias("start"),
+        ),
+        out_path,
+        epoch_id,
+    )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_span_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
-    """Committed view of the incrementally-maintained span flags +
-    (id, start, epoch) dedup — feed these starts to the same
-    coverage/reassembly tail as the batch operator to materialize the
-    deduplicated text."""
+    """Committed view of the incrementally-maintained span flags — feed
+    these starts to the same coverage/reassembly tail as the batch
+    operator to materialize the deduplicated text."""
     return committed_view(
         spark,
         out_path + "_flags",
         out_path + "_epochs",
         f"{id_col} long, start long, epoch_id long",
-    ).dropDuplicates([id_col, "start", "epoch_id"])
+    )
 
 
 def incremental_span_index(
@@ -1336,9 +1357,9 @@ def append_quality_scores(
     micro-batch with the hashed-feature linear classifier
     (operators.text.classifier_quality_score — broadcast weight join, no
     corpus-level state, so each doc's score is independent of every other
-    doc) and append the (doc, n_tokens, raw_score, quality_prob, epoch)
-    rows under the same committed-view epoch-ledger discipline as every
-    incremental fold here. A trained-weight refresh is a pure data swap —
+    doc) and write the (doc, n_tokens, raw_score, quality_prob) rows as
+    the epoch's partition, under the epoch ledger every incremental fold
+    here shares. A trained-weight refresh is a pure data swap —
     later epochs score with the new table, already-committed epochs keep
     the scores they shipped with (the auditable production behavior)."""
     from demo_bigdata_spark.operators.text import classifier_quality_score
@@ -1346,13 +1367,12 @@ def append_quality_scores(
     epochs_path = out_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
+    write_epoch_partition(
         classifier_quality_score(
             batch_df, weights, n_buckets, bias, text_col, id_col
-        )
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .parquet(out_path)
+        ),
+        out_path,
+        epoch_id,
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
@@ -1360,16 +1380,15 @@ def append_quality_scores(
 def read_quality_scores(
     spark, out_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Committed view of the incrementally-maintained quality scores:
-    committed epochs + (doc, epoch) dedup — the exactly-once read the
-    downstream quality filter consumes."""
+    """Committed view of the incrementally-maintained quality scores —
+    the exactly-once read the downstream quality filter consumes."""
     return committed_view(
         spark,
         out_path,
         out_path + "_epochs",
         f"{id_col} long, n_tokens bigint, raw_score double, "
         "quality_prob double, epoch_id long",
-    ).dropDuplicates([id_col, "epoch_id"])
+    )
 
 
 def incremental_quality_scoring(
@@ -1415,43 +1434,34 @@ def append_bigram_lm_batch(
 ) -> None:
     """Exactly-once incremental bigram-LM maintenance (round-8 — the LM is
     three COUNT frames, text.train_bigram_lm, so it folds like every index
-    family here): per micro-batch, append the batch's (w1, w2, c12) bigram
-    counts and its distinct tokens, committed by ONE epoch ledger. The
+    family here): per micro-batch, write the batch's (w1, w2, c12) bigram
+    counts and its distinct tokens as the epoch's partitions of two
+    tables, committed by ONE epoch ledger. The
     folded model (read_bigram_lm) is EXACTLY the batch-trained model on
     the union of committed batches: bigram counts are sums of per-batch
     integer counts, the context counts roll up from the folded bigram
     table, and the vocabulary is a distinct union — no floats anywhere in
     the model, so fold order cannot matter.
 
-    A crash between the appends and the ledger commit leaves uncommitted
-    rows in either table; the deterministic replay appends identical rows
-    and the committed-view (key, epoch) dedup collapses them — the
-    append_span_batch two-table/one-ledger discipline.
-
     100 TB posture: per-batch work is one bigram hash-aggregate + one
     distinct over the batch (Zipf keeps both vocabulary-sized); history is
-    append-only, folded at READ time by a count-keyed aggregate over
-    tables that grow with vocabulary x batches, never corpus tokens."""
+    folded at READ time by a count-keyed aggregate over tables that grow
+    with vocabulary x batches, never corpus tokens."""
     from demo_bigdata_spark.operators.text import _doc_bigrams, tokens
 
     epochs_path = out_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     bg = _doc_bigrams(batch_df, text_col, id_col)
-    (
-        bg.groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .parquet(out_path)
+    write_epoch_partition(
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c12")), out_path, epoch_id
     )
-    (
+    write_epoch_partition(
         batch_df.select(F.explode(tokens(text_col)).alias("token"))
         .filter(F.col("token") != "")
-        .distinct()
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .parquet(out_path + "_vocab")
+        .distinct(),
+        out_path + "_vocab",
+        epoch_id,
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
@@ -1467,7 +1477,7 @@ def read_bigram_lm(spark, out_path: str):
         out_path,
         out_path + "_epochs",
         "w1 string, w2 string, c12 bigint, epoch_id long",
-    ).dropDuplicates(["w1", "w2", "epoch_id"])
+    )
     c12 = c12_rows.groupBy("w1", "w2").agg(F.sum("c12").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab_rows = committed_view(
@@ -1475,7 +1485,7 @@ def read_bigram_lm(spark, out_path: str):
         out_path + "_vocab",
         out_path + "_epochs",
         "token string, epoch_id long",
-    ).dropDuplicates(["token", "epoch_id"])
+    )
     vocab = vocab_rows.agg(F.count_distinct("token").alias("v"))
     return c12, c1, vocab
 
@@ -1666,25 +1676,24 @@ def append_shingle_batch(
 ) -> None:
     """Exactly-once incremental maintenance of the corpus shingle frame —
     the shared input of the soft-dedup / contamination family: per
-    micro-batch, append the batch's distinct (id, shingle_hash) rows under
-    the epoch ledger. Consumers fold at read time
+    micro-batch, write the batch's distinct (id, shingle_hash) rows as the
+    epoch's partition under the epoch ledger. Consumers fold at read time
     (:func:`read_soft_dedup_weights`), so the corpus-relative quantities
     (document frequencies, weights) always reflect the full committed
     corpus — the same recompute-from-folded-counts semantics as the
     incremental bigram LM, with integer counts only.
 
-    Per-batch cost is one tokenize+shingle pass over the batch and an
-    append; nothing re-reads history at write time."""
+    Per-batch cost is one tokenize+shingle pass over the batch and one
+    write; nothing re-reads history at write time."""
     from demo_bigdata_spark.operators.dedup import shingle_hashes
 
     epochs_path = out_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
-        shingle_hashes(batch_df, n=n, text_col=text_col, id_col=id_col)
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .parquet(out_path)
+    write_epoch_partition(
+        shingle_hashes(batch_df, n=n, text_col=text_col, id_col=id_col),
+        out_path,
+        epoch_id,
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
@@ -1693,12 +1702,14 @@ def read_soft_dedup_weights(
     spark, out_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
     """Committed soft-dedup weights over the incrementally-maintained
-    shingle frame: fold == batch exactly (the committed view deduplicates
-    on (id, shingle_hash), so the folded frame IS the one-shot
-    shingle_hashes of the concatenated corpus; weights are pure integer
-    ratios of its aggregates)."""
+    shingle frame: fold == batch exactly (the folded frame, distinct on
+    (id, shingle_hash), IS the one-shot shingle_hashes of the
+    concatenated corpus; weights are pure integer ratios of its
+    aggregates)."""
     from demo_bigdata_spark.operators.dedup import soft_dedup_weights
 
+    # a document sent again in a later epoch stores its shingles again;
+    # the one-shot frame holds each (id, shingle) once
     rows = committed_view(
         spark,
         out_path,
@@ -1747,38 +1758,35 @@ def append_edge_batch(
 ) -> None:
     """[EXT] Exactly-once incremental maintenance of a weighted edge-count
     frame — the graph tier's fold (operators/graph.py): each micro-batch's
-    (src, dst) pairs aggregate to per-pair counts and append under the
-    epoch ledger. Edge weights are INTEGER COUNTS, so the committed fold
-    (sum over epochs) equals the one-shot aggregation of the concatenated
-    stream exactly — the bigram-LM recompute-from-counts discipline.
-    Per-batch cost is one batch-sized aggregate + an append; history is
-    never re-read at write time."""
+    (src, dst) pairs aggregate to per-pair counts, written as the epoch's
+    partition under the epoch ledger. Edge weights are INTEGER COUNTS, so
+    the committed fold (sum over epochs) equals the one-shot aggregation
+    of the concatenated stream exactly — the bigram-LM
+    recompute-from-counts discipline. Per-batch cost is one batch-sized
+    aggregate + one write; history is never re-read at write time."""
     epochs_path = out_path + "_epochs"
     if epoch_already_applied(spark, epochs_path, epoch_id):
         return
-    (
+    write_epoch_partition(
         batch_df.groupBy(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-        .withColumn("epoch_id", F.lit(int(epoch_id)).cast("long"))
-        .write.mode("append")
-        .parquet(out_path)
+        ).agg(F.count("*").cast("bigint").alias("w")),
+        out_path,
+        epoch_id,
     )
     commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_edge_counts(spark, out_path: str) -> DataFrame:
-    """Committed weighted edges over the incrementally-appended per-epoch
-    counts: committed epochs only (crash leftovers invisible), dedup on
-    (src, dst, epoch) so a replay's identical rows collapse, then SUM —
-    fold == batch exactly (integer counts)."""
+    """Committed weighted edges over the per-epoch counts: committed
+    epochs only (crash leftovers invisible), then SUM — fold == batch
+    exactly (integer counts)."""
     rows = committed_view(
         spark,
         out_path,
         out_path + "_epochs",
         "src long, dst long, w long, epoch_id long",
-    ).dropDuplicates(["src", "dst", "epoch_id"])
+    )
     return rows.groupBy("src", "dst").agg(
         F.sum("w").cast("bigint").alias("w")
     )

@@ -399,12 +399,9 @@ def test_classifier_quality_broadcasts_weights(spark, sf_dir):
 
 
 def test_committed_view_keeps_partition_pruning(spark, sf_dir, tmp_path):
-    """Bucket/cluster predicates must push THROUGH the committed view's
-    dedup aggregate to the partitioned scan: dropDuplicates is an
-    Aggregate, and Catalyst only pushes filters referencing grouping
-    columns — term_bucket/cluster are in the dedup keys precisely so a
-    pruned probe on a LIVE index stays pruned instead of scanning and
-    shuffling the whole index."""
+    """Bucket predicates on a LIVE index must reach the committed view's
+    partitioned scan, so a pruned probe stays pruned instead of scanning
+    and shuffling the whole index."""
     from demo_bigdata_spark.operators.index import (
         append_postings,
         bm25_rank_indexed,

@@ -2176,10 +2176,10 @@ def test_incremental_span_counted_matches_batch(spark, tmp_path):
     append_span_batch_counted(spark, b2, out, 1, window=3, min_count=3)
     assert read_span_flags(spark, out).count() == before
 
-    # crash window: rows appended without a ledger commit stay invisible
+    # crash window: rows written without a ledger commit stay invisible
     spark.createDataFrame(
-        [(99, 0, 77)], "doc_id long, start long, epoch_id long"
-    ).write.mode("append").parquet(out + "_flags")
+        [(99, 0)], "doc_id long, start long"
+    ).write.parquet(out + "_flags/epoch_id=77")
     got2 = {(r.doc_id, r.start) for r in read_span_flags(spark, out).collect()}
     assert (99, 0) not in got2
 
@@ -2226,10 +2226,10 @@ def test_incremental_soft_dedup_matches_batch(spark, tmp_path):
         for r in read_soft_dedup_weights(spark, out).collect()
     } == want
 
-    # crash window: appended rows without a ledger commit are invisible
+    # crash window: rows written without a ledger commit are invisible
     spark.createDataFrame(
-        [(99, "deadbeef", 7)], "doc_id long, shingle_hash string, epoch_id long"
-    ).write.mode("append").parquet(out)
+        [(99, "deadbeef")], "doc_id long, shingle_hash string"
+    ).write.parquet(out + "/epoch_id=7")
     assert 99 not in {
         r["doc_id"] for r in read_soft_dedup_weights(spark, out).collect()
     }
@@ -2331,16 +2331,16 @@ def test_incremental_edge_counts_pagerank_matches_batch(spark, tmp_path):
         (r.src, r.dst): r.w for r in read_edge_counts(spark, out).collect()
     } == want_edges
 
-    # crash window: appended rows without a ledger commit are invisible
+    # crash window: rows written without a ledger commit are invisible
     spark.createDataFrame(
-        [(7, 8, 100, 9)], "src long, dst long, w long, epoch_id long"
-    ).write.mode("append").parquet(out)
+        [(7, 8, 100)], "src long, dst long, w long"
+    ).write.parquet(out + "/epoch_id=9")
     assert {
         (r.src, r.dst): r.w for r in read_edge_counts(spark, out).collect()
     } == want_edges
 
 
-def test_compact_knn_graph_mid_stream(spark, sf_dir, tmp_path):
+def test_compact_knn_graph_mid_stream(spark, sf_dir, tmp_path, monkeypatch):
     """Compaction of the incremental kNN graph (r10 VERDICT item 4):
     mid-stream compaction must not change any read; disk edge rows drop to
     the ~n*k exact top-k; old epoch ids stay in the ledger so a replayed
@@ -2348,6 +2348,7 @@ def test_compact_knn_graph_mid_stream(spark, sf_dir, tmp_path):
     converge to the batch graph; the pre-vacuum interim state (compacted +
     original rows both committed) reads identically via the (src, dst)
     dedup."""
+    from demo_bigdata_spark.operators import similarity as SIM
     from demo_bigdata_spark.operators.similarity import (
         append_knn_graph_batch,
         compact_knn_graph,
@@ -2379,14 +2380,17 @@ def test_compact_knn_graph_mid_stream(spark, sf_dir, tmp_path):
     before = snap()
     rows_before = spark.read.parquet(gr_p).count()
 
-    # interim state first: compacted epoch committed, originals not yet
-    # vacuumed -> duplicates on disk, reads unchanged through the dedup
-    compact_knn_graph(spark, gr_p, k=k, vacuum=False)
+    # interim state first: compacted epoch committed, the vacuum cut off
+    # before it deleted anything -> duplicates on disk, reads unchanged
+    # through the dedup
+    with monkeypatch.context() as m:
+        m.setattr(SIM, "_drop_epoch_dirs", lambda path, epochs: None)
+        compact_knn_graph(spark, gr_p, k=k)
     assert snap() == before
     assert spark.read.parquet(gr_p).count() > rows_before  # dup rows present
 
     # full compaction: reads unchanged, disk rows == exact top-k row count
-    compact_knn_graph(spark, gr_p, k=k, vacuum=True)
+    compact_knn_graph(spark, gr_p, k=k)
     assert snap() == before
     rows_after = spark.read.parquet(gr_p).count()
     assert rows_after == len(before)  # ~n*k: exactly the top-k rows
@@ -2416,7 +2420,7 @@ def test_compact_knn_graph_vacuum_concurrent_writer_safety(
     """r11 ADVICE (medium): vacuum must never delete rows a concurrent
     writer produced after compaction's ledger snapshot. Two guards: (a)
     rows written but NOT yet committed (epoch outside the snapshot) survive
-    the overwrite and become visible once their epoch commits; (b) if a
+    the vacuum and become visible once their epoch commits; (b) if a
     concurrent epoch COMMITS between the compaction commit and the vacuum's
     ledger re-read, vacuum is skipped entirely — old rows stay on disk and
     every read stays correct."""
@@ -2451,9 +2455,9 @@ def test_compact_knn_graph_vacuum_concurrent_writer_safety(
 
     # (a) in-flight rows: epoch 99 wrote data but has not committed yet
     spark.createDataFrame(
-        [(-1, -2, 0.5, 99)], "src long, dst long, cosine double, epoch_id int"
-    ).write.mode("append").parquet(gr_p)
-    compact_knn_graph(spark, gr_p, k=k, vacuum=True)
+        [(-1, -2, 0.5)], "src long, dst long, cosine double"
+    ).write.parquet(gr_p + "/epoch_id=99")
+    compact_knn_graph(spark, gr_p, k=k)
     on_disk = spark.read.parquet(gr_p)
     assert on_disk.filter(F.col("epoch_id") == 99).count() == 1  # survived vacuum
     assert snap() == before  # still invisible: epoch 99 uncommitted
@@ -2468,15 +2472,14 @@ def test_compact_knn_graph_vacuum_concurrent_writer_safety(
         real_commit(spark_, path, eid)
         if eid < 0:  # the compaction commit: a concurrent batch lands now
             spark.createDataFrame(
-                [(-3, -4, 0.25, 100)],
-                "src long, dst long, cosine double, epoch_id int",
-            ).write.mode("append").parquet(gr_p)
+                [(-3, -4, 0.25)], "src long, dst long, cosine double"
+            ).write.parquet(gr_p + "/epoch_id=100")
             real_commit(spark_, path, 100)
 
     monkeypatch.setattr(SPL, "commit_epoch", racy_commit)
     rows_pre = spark.read.parquet(gr_p).count()
     epochs_pre = {r["epoch_id"] for r in spark.read.parquet(gr_p).select("epoch_id").distinct().collect()}
-    compact_knn_graph(spark, gr_p, k=k, vacuum=True)
+    compact_knn_graph(spark, gr_p, k=k)
     monkeypatch.setattr(SPL, "commit_epoch", real_commit)
     disk = spark.read.parquet(gr_p)
     assert disk.count() > rows_pre  # compacted rows appended, NOTHING vacuumed
@@ -2485,7 +2488,7 @@ def test_compact_knn_graph_vacuum_concurrent_writer_safety(
     assert snap() == before | {(-1, -2), (-3, -4)}  # concurrent row readable
 
     # a later quiet compaction reclaims the duplicated interim state
-    compact_knn_graph(spark, gr_p, k=k, vacuum=True)
+    compact_knn_graph(spark, gr_p, k=k)
     assert snap() == before | {(-1, -2), (-3, -4)}
     assert spark.read.parquet(gr_p).count() == len(snap())
 
@@ -2519,7 +2522,7 @@ def test_knn_graph_compaction_trigger(spark, sf_dir, tmp_path):
     assert pre["due"] is False
     assert knn_graph_compaction_due(gr_p, ratio=1.5)["due"] is True  # 2 > 1.5
 
-    compact_knn_graph(spark, gr_p, k=k, vacuum=True)
+    compact_knn_graph(spark, gr_p, k=k)
     post = knn_graph_compaction_due(gr_p)
     # freshly compacted: baseline == live (ratio ~1), never due
     assert post["row_ratio"] == 1.0 and post["due"] is False
@@ -2534,7 +2537,7 @@ def test_knn_graph_compaction_trigger(spark, sf_dir, tmp_path):
     assert grown["due"] is (grown["row_ratio"] >= 1.3)
 
     # after re-compaction the ratio collapses back to 1
-    compact_knn_graph(spark, gr_p, k=k, vacuum=True)
+    compact_knn_graph(spark, gr_p, k=k)
     again = knn_graph_compaction_due(gr_p)
     assert again["row_ratio"] == 1.0 and again["due"] is False
 
@@ -2848,13 +2851,13 @@ def test_incremental_histogram_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_epoch_partitioned_folds_crash_replay_and_plan(spark, sf_dir, tmp_path):
-    """r14 (r13 VERDICT item 4): the histogram/KL folds write each epoch
-    into its OWN partition directory with overwrite, so (a) the crash
-    window — data written, ledger commit lost, epoch replayed — leaves
-    exactly ONE copy (the flat-append layout double-appended and needed a
-    corpus-sized dropDuplicates to collapse it), and (b) the committed
-    read plans contain NO dedup: exactly one Exchange (the re-sum
-    aggregate), and the committed epochs are a partition filter."""
+    """Every fold writes each epoch into its OWN partition with overwrite,
+    so (a) the crash window — data written, ledger commit lost, epoch
+    replayed — leaves exactly ONE copy, and (b) the committed read plans
+    contain NO dedup. The histogram/KL folds pin the detail: exactly one
+    Exchange (the re-sum aggregate), and the committed epochs are a
+    partition filter. Every other fold family reads like a clean run
+    after the replay, with no epoch_id-keyed Aggregate in any view."""
     import re
 
     from demo_bigdata_spark.operators.sketches import (
@@ -2927,6 +2930,31 @@ def test_epoch_partitioned_folds_crash_replay_and_plan(spark, sf_dir, tmp_path):
     )
     assert "dropDuplicates" not in kplan  # structural: no dedup operator anywhere
 
+    # every other fold family: epoch 1 written without its commit, then
+    # replayed and committed, reads exactly like a clean run, and no view
+    # plan keeps an epoch_id-keyed Aggregate
+    import demo_bigdata_spark.streaming.pipeline as SPL
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    real_commit = SPL.commit_epoch
+    for name, _, fold, views, (b0, b1) in _migrated_fold_families(spark, sf_dir, tmp_path):
+        clean, crashed = str(tmp_path / f"{name}_clean"), str(tmp_path / f"{name}_crash")
+        fold(clean, 0, b0)
+        fold(clean, 1, b1)
+        fold(crashed, 0, b0)
+        SPL.commit_epoch = lambda *a: None
+        try:
+            fold(crashed, 1, b1)  # written, commit lost
+        finally:
+            SPL.commit_epoch = real_commit
+        fold(crashed, 1, b1)  # the replay
+        for want, got in zip(views(clean), views(crashed)):
+            assert rows(got) == rows(want), name
+            plan = executed_plan(got)
+            assert not re.search(r"Aggregate\(keys=\[[^\]]*epoch_id", plan), (name, plan)
+
 
 def test_domain_cap_stream_admits_first_arrivals(spark, tmp_path):
     """Streaming per-domain cap: across micro-batches each domain admits
@@ -2983,14 +3011,17 @@ def test_domain_cap_stream_admits_first_arrivals(spark, tmp_path):
     assert delegated.columns == ["doc_id", "ts", "url", "domain"]
 
 
-def test_maintain_knn_graph_vacuum_false_converges(spark, sf_dir, tmp_path):
-    """r12 ADVICE (medium): with vacuum=False the stale pre-compaction
-    files stay on disk, and a trigger that counted them as live would be
-    'due' forever — every maintenance tick would append another n·k
-    compacted copy, unbounded growth. The subsumption sidecar must make a
-    quiet just-compacted graph read ratio 1.0, a repeated maintain a
-    no-op, and new epochs after the compaction must still re-arm the
-    trigger."""
+def test_maintain_knn_graph_vacuum_false_converges(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """r12 ADVICE (medium): when the vacuum is interrupted after the
+    compaction commit, the stale pre-compaction partitions stay on disk,
+    and a trigger that counted them as live would be 'due' forever —
+    every maintenance tick would append another n·k compacted copy,
+    unbounded growth. The subsumption sidecar must make a quiet
+    just-compacted graph read ratio 1.0, a repeated maintain a no-op, and
+    new epochs after the compaction must still re-arm the trigger."""
+    from demo_bigdata_spark.operators import similarity as SIM
     from demo_bigdata_spark.operators.similarity import (
         append_knn_graph_batch,
         knn_graph_compaction_due,
@@ -3010,7 +3041,9 @@ def test_maintain_knn_graph_vacuum_false_converges(spark, sf_dir, tmp_path):
             spark, splits[e], idx_p, gr_p, C, epoch_id=e, k=k, n_probe=n_probe
         )
 
-    r1 = maintain_knn_graph(spark, gr_p, k=k, ratio=1.5, vacuum=False)
+    # every vacuum below is interrupted after its compaction committed
+    monkeypatch.setattr(SIM, "_drop_epoch_dirs", lambda path, epochs: None)
+    r1 = maintain_knn_graph(spark, gr_p, k=k, ratio=1.5)
     assert r1["compacted"] is True
     graph_rows = read_knn_graph(spark, gr_p, k=k).count()
     files_after_1 = spark.read.parquet(gr_p).count()
@@ -3020,18 +3053,18 @@ def test_maintain_knn_graph_vacuum_false_converges(spark, sf_dir, tmp_path):
     post = knn_graph_compaction_due(gr_p, ratio=1.5)
     assert post["row_ratio"] == 1.0 and post["due"] is False, post
     for _ in range(3):
-        r = maintain_knn_graph(spark, gr_p, k=k, ratio=1.5, vacuum=False)
+        r = maintain_knn_graph(spark, gr_p, k=k, ratio=1.5)
         assert r["compacted"] is False
     assert spark.read.parquet(gr_p).count() == files_after_1  # no growth
     assert read_knn_graph(spark, gr_p, k=k).count() == graph_rows
 
-    # new epochs re-arm the trigger; a second no-vacuum compaction also
+    # new epochs re-arm the trigger; a second interrupted compaction also
     # settles (its own stale copy + the older compacted copy are subsumed)
     for e in (10, 11, 12):
         append_knn_graph_batch(
             spark, splits[e % 4], idx_p, gr_p, C, epoch_id=e, k=k, n_probe=n_probe
         )
-    r2 = maintain_knn_graph(spark, gr_p, k=k, ratio=1.5, vacuum=False)
+    r2 = maintain_knn_graph(spark, gr_p, k=k, ratio=1.5)
     assert r2["compacted"] is True
     settled = knn_graph_compaction_due(gr_p, ratio=1.5)
     assert settled["row_ratio"] == 1.0 and settled["due"] is False, settled
@@ -3124,15 +3157,14 @@ def test_incremental_group_kl_matches_batch(spark, sf_dir, tmp_path):
         for r in read_group_kl(spark, path, top_v=64).collect()
     } == batch
 
-    # crash window: rows appended WITHOUT a ledger commit stay invisible
+    # crash window: rows written WITHOUT a ledger commit stay invisible
     extra = (
         docs.limit(5)
         .select(F.lit("crashsrc").alias("grp"), F.lit("crashtok").alias("tok"))
         .groupBy("grp", "tok")
         .agg(F.count("*").alias("n"))
-        .withColumn("epoch_id", F.lit(99))
     )
-    extra.write.mode("append").parquet(path)
+    extra.write.parquet(path + "/epoch_id=99")
     after = {
         r["source"]: (r["n_tokens"], r["kl"])
         for r in read_group_kl(spark, path, top_v=64).collect()
@@ -3261,9 +3293,11 @@ def test_committed_views_keep_their_schema_after_the_first_commit(
         ),
         (
             lambda: IX.append_postings(spark, docs, p["idx"], 0),
-            [lambda: IX.read_postings(spark, p["idx"])],
-            # no committed epoch means a batch-built index, read as-is
-            [lambda: IX.read_doclens(spark, p["idx"])],
+            [
+                lambda: IX.read_postings(spark, p["idx"]),
+                lambda: IX.read_doclens(spark, p["idx"]),
+            ],
+            [],
         ),
         (
             lambda: D.append_dedup_batch(spark, docs, p["dd"], 0),
@@ -3315,7 +3349,9 @@ def test_committed_views_keep_their_schema_after_the_first_commit(
         for rows, view in views:
             assert view.schema == empty_views.get(rows, view.schema), rows
             view.collect()  # typed read of the written files
-            partition_cols = {n.split("=")[0] for n in os.listdir(rows) if "=" in n}
+            partition_cols = {
+                n.split("=")[0] for _, dirs, _ in os.walk(rows) for n in dirs if "=" in n
+            }
             written = {f.name: f.dataType for f in spark.read.parquet(rows).schema}
             declared = {f.name: f.dataType for f in view.schema}
             assert declared.keys() == written.keys(), rows
@@ -3325,20 +3361,194 @@ def test_committed_views_keep_their_schema_after_the_first_commit(
 
 
 def test_epoch_partitioned_folds_reject_a_flat_layout_root(spark, sf_dir, tmp_path):
-    """A histogram or term-count table whose root still holds data files
-    of the older flat-append layout fails with a migration hint instead of
-    Spark's 'conflicting directory structures' at read time."""
-    from demo_bigdata_spark.operators.sketches import append_histogram_batch
-    from demo_bigdata_spark.operators.text import append_term_counts_batch
+    """A fold table whose root still holds data files of the older
+    flat-append layout fails with a migration hint, on write and on read,
+    instead of being read with its replay copies counted twice (readers
+    keep no dedup) or Spark's 'conflicting directory structures'."""
+    from demo_bigdata_spark.operators.sketches import (
+        append_histogram_batch,
+        read_histogram,
+    )
+    from demo_bigdata_spark.operators.text import append_term_counts_batch, read_group_kl
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    for name, fold in (
-        ("hist", lambda path: append_histogram_batch(
-            spark, docs, path, 1, "n_chars", 0.0, 4096.0, 64)),
-        ("kl", lambda path: append_term_counts_batch(spark, docs, path, 1)),
-    ):
-        path = str(tmp_path / name)
-        spark.range(3).withColumn("epoch_id", F.lit(0)).write.parquet(path)
+    families = [
+        (
+            "hist",
+            "",
+            lambda path, e, b: append_histogram_batch(
+                spark, b, path, e, "n_chars", 0.0, 4096.0, 64
+            ),
+            lambda path: [read_histogram(spark, path)],
+            (docs, docs),
+        ),
+        (
+            "kl",
+            "",
+            lambda path, e, b: append_term_counts_batch(spark, b, path, e),
+            lambda path: [read_group_kl(spark, path)],
+            (docs, docs),
+        ),
+        *_migrated_fold_families(spark, sf_dir, tmp_path),
+    ]
+    for name, table, fold, views, (b0, _) in families:
+        path = str(tmp_path / f"flat_{name}")
+        flat = path + table
+        spark.range(3).withColumn("epoch_id", F.lit(0)).write.parquet(flat)
         with pytest.raises(ValueError, match="flat-append layout"):
-            fold(path)
-        assert not os.path.exists(f"{path}/epoch_id=1")
+            fold(path, 1, b0)
+        assert not any("epoch_id=1" in d for d, _, _ in os.walk(flat)), name
+        with pytest.raises(ValueError, match="flat-append layout"):
+            views(path)
+
+
+def _migrated_fold_families(spark, sf_dir, tmp_path):
+    """One small input per fold family that writes through
+    write_epoch_partition: (name, table, fold, views, batches). ``table``
+    is a fold table, under the fold's path, that the fold touches before
+    it writes any other and that the first view reads;
+    ``fold(path, epoch_id, batch)`` folds one batch;
+    ``views(path)`` lists the family's committed read frames; ``batches``
+    holds two disjoint arrival batches."""
+    import numpy as np
+
+    import demo_bigdata_spark.streaming.pipeline as SPL
+    from demo_bigdata_spark.operators import dedup as D
+    from demo_bigdata_spark.operators import index as IX
+    from demo_bigdata_spark.operators import similarity as SIM
+    from demo_bigdata_spark.suites.suite_llm import CLS_BUCKETS, _cls_weights
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    d = (docs.filter(F.col("doc_id") < 20), docs.filter(F.col("doc_id").between(20, 39)))
+    edges = tuple(
+        b.select((F.col("doc_id") % 7).alias("src"), (F.col("doc_id") % 5).alias("dst"))
+        for b in d
+    )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    v = (emb.filter(F.col("vec_id") < 20), emb.filter(F.col("vec_id").between(20, 39)))
+    dim = len(emb.first()["embedding"])
+    rng = np.random.default_rng(0)
+    C, CB = rng.normal(size=(4, dim)), rng.normal(size=(8, 16, dim // 8))
+    weights = _cls_weights(spark)
+    eval_idx = str(tmp_path / "families_eval_idx")
+    D.build_decontamination_index(docs.filter(F.col("doc_id") < 10), eval_idx, n=8)
+    return [
+        (
+            "pack", "",
+            lambda p, e, b: SPL.combine_pack_partial(spark, p, b, e, seq_len=64),
+            lambda p: [SPL.read_pack_assignments(spark, p)], d,
+        ),
+        (
+            "contamination", "",
+            lambda p, e, b: SPL.append_contamination_flags(spark, b, p, eval_idx, e),
+            lambda p: [SPL.read_contamination_flags(spark, p)], d,
+        ),
+        (
+            "span", "_flags",
+            lambda p, e, b: SPL.append_span_batch(spark, b, p, e, window=5),
+            lambda p: [SPL.read_span_flags(spark, p)], d,
+        ),
+        (
+            "span_counted", "_flags",
+            lambda p, e, b: SPL.append_span_batch_counted(spark, b, p, e, window=5),
+            lambda p: [SPL.read_span_flags(spark, p)], d,
+        ),
+        (
+            "quality", "",
+            lambda p, e, b: SPL.append_quality_scores(
+                spark, b, p, weights, e, n_buckets=CLS_BUCKETS
+            ),
+            lambda p: [SPL.read_quality_scores(spark, p)], d,
+        ),
+        (
+            "bigram", "",
+            lambda p, e, b: SPL.append_bigram_lm_batch(spark, b, p, e),
+            lambda p: list(SPL.read_bigram_lm(spark, p)), d,
+        ),
+        (
+            "shingle", "",
+            lambda p, e, b: SPL.append_shingle_batch(spark, b, p, e),
+            lambda p: [SPL.read_soft_dedup_weights(spark, p)], d,
+        ),
+        (
+            "edge", "",
+            lambda p, e, b: SPL.append_edge_batch(spark, b, p, e),
+            lambda p: [SPL.read_edge_counts(spark, p)], edges,
+        ),
+        (
+            "positional", "",
+            lambda p, e, b: IX.append_positional_postings(spark, b, p, e),
+            lambda p: [IX.read_positional_postings(spark, p)], d,
+        ),
+        (
+            "postings", "/postings",
+            lambda p, e, b: IX.append_postings(spark, b, p, e),
+            lambda p: [IX.read_postings(spark, p), IX.read_doclens(spark, p)], d,
+        ),
+        (
+            "ivf", "",
+            lambda p, e, b: SIM.append_vectors(spark, b, p, C, e),
+            lambda p: [SIM.read_ivf_index(spark, p)], v,
+        ),
+        (
+            "ivf_pq", "",
+            lambda p, e, b: SIM.append_pq_vectors(spark, b, p, C, CB, e),
+            lambda p: [SIM.read_ivf_pq_index(spark, p)], v,
+        ),
+        (
+            "knn", "",
+            lambda p, e, b: SIM.append_knn_graph_batch(
+                spark, b, p + "_idx", p, C, e, k=3, n_probe=2
+            ),
+            lambda p: [
+                SIM.read_knn_graph(spark, p, k=3),
+                SIM._read_knn_probes(spark, p + "_probes", p + "_epochs", "vec_id"),
+            ],
+            v,
+        ),
+        (
+            "dedup", "/bands",
+            lambda p, e, b: D.append_dedup_batch(spark, b, p, e),
+            lambda p: [
+                D.read_dedup_bands(spark, p),
+                D.read_dedup_toks(spark, p),
+                D.read_near_dup_pairs(spark, p),
+            ],
+            d,
+        ),
+    ]
+
+
+def test_live_index_is_not_served_before_its_first_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A live index whose first epoch is written but not yet committed
+    serves nothing: the index readers choose the committed view by the
+    table's epoch_id=<k> layout, not by whether the ledger has a committed
+    epoch yet. Once the epoch commits, it is served."""
+    import numpy as np
+
+    import demo_bigdata_spark.streaming.pipeline as SPL
+    from demo_bigdata_spark.operators.index import append_postings, bm25_rank_indexed
+    from demo_bigdata_spark.operators.similarity import append_vectors, ivf_topk_indexed
+
+    real_commit = SPL.commit_epoch
+    monkeypatch.setattr(SPL, "commit_epoch", lambda *a: None)
+    docs = spark.createDataFrame(
+        [(1, "spark join plans"), (2, "a spark join")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "idx")
+    append_postings(spark, docs, idx, 0)
+    assert bm25_rank_indexed(spark, idx, ["spark", "join"]).count() == 0
+
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
+    C = np.random.default_rng(0).normal(size=(2, len(emb.first()["embedding"])))
+    q = [float(x) for x in emb.first()["embedding"]]
+    ivf = str(tmp_path / "ivf")
+    append_vectors(spark, emb, ivf, C, 0)
+    assert ivf_topk_indexed(spark, ivf, C, q, k=5, n_probe=2).count() == 0
+
+    real_commit(spark, idx + "_epochs", 0)
+    real_commit(spark, ivf + "_epochs", 0)
+    assert bm25_rank_indexed(spark, idx, ["spark", "join"]).count() == 2
+    assert ivf_topk_indexed(spark, ivf, C, q, k=5, n_probe=2).count() == 5
