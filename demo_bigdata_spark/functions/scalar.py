@@ -80,9 +80,16 @@ def pct_of_total(
     total = df.agg(F.sum(F.col(count_col)).alias(tot))
     return (
         df.join(F.broadcast(total))
-        .withColumn(out_col, F.round(F.col(count_col) * 100.0 / F.col(tot), decimals))
+        .withColumn(out_col, percent_of(F.col(count_col), F.col(tot), decimals))
         .drop(tot)
     )
+
+
+def percent_of(count: Column, total: Column, decimals: int = 2) -> Column:
+    """``round(count * 100.0 / total, decimals)``: the percentage expression
+    of :func:`pct_of_total`, for callers that already hold the total (as a
+    column or a literal)."""
+    return F.round(count * 100.0 / total, decimals)
 
 
 def round_signsafe(col: Column, scale: int) -> Column:

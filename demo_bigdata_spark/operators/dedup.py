@@ -20,6 +20,8 @@ Scale design:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -437,15 +439,20 @@ def _resolve_with_driver_labels(l0: DataFrame, final: dict, id_col: str) -> Data
     actually move — becomes a local relation and the join is an explicit
     BROADCAST, so the corpus-sized ``l0`` frame is never exchanged.
     Missing labels keep themselves via the left join's coalesce, exactly
-    like the distributed resolution."""
+    like the distributed resolution. The map is built as a pyarrow table
+    typed from ``l0``'s label type, so no Python worker starts."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
     dtype = l0.schema["cluster_id"].dataType
-    schema = StructType(
-        [StructField("_cl", dtype, True), StructField("_cmin", dtype, True)]
+    schema = to_arrow_schema(
+        StructType([StructField("_cl", dtype, True), StructField("_cmin", dtype, True)])
     )
-    moved = [(k, v) for k, v in final.items() if k != v]
-    cl = l0.sparkSession.createDataFrame(moved, schema)
+    moved = {k: v for k, v in final.items() if k != v}
+    cl = l0.sparkSession.createDataFrame(
+        pa.table({"_cl": list(moved), "_cmin": list(moved.values())}, schema=schema)
+    )
     return l0.join(
         F.broadcast(cl), l0["cluster_id"] == F.col("_cl"), "left"
     ).select(
@@ -937,9 +944,37 @@ def build_decontamination_index(
     # of `path` wipes stale meta BEFORE new hashes land — a crash between
     # the two writes leaves hashes-without-meta (validation skipped), never
     # new-hashes-beside-old-meta (validation passing wrongly)
-    eval_set.sparkSession.createDataFrame(
-        [(int(n), bool(portable))], "n int, portable boolean"
-    ).write.mode("overwrite").parquet(path + "/_meta")
+    import pyarrow as pa
+
+    from demo_bigdata_spark.sources.snapshot_cdc import _strip_uri
+    from demo_bigdata_spark.sources.snapshots import write_parquet_atomic
+
+    meta_dir = _strip_uri(path + "/_meta")
+    os.makedirs(meta_dir, exist_ok=True)
+    write_parquet_atomic(
+        pa.table(
+            {"n": pa.array([int(n)], pa.int32()), "portable": pa.array([bool(portable)])}
+        ),
+        os.path.join(meta_dir, "meta.parquet"),
+    )
+
+
+def _decontamination_index_meta(index_path: str) -> dict | None:
+    """The (n, portable) record :func:`build_decontamination_index` wrote
+    beside the hashes, read on the driver with pyarrow (no Spark job); None
+    when the index has none. The directory read skips ``_``/``.``-prefixed
+    names, so a record Spark wrote (``part-*``, ``_SUCCESS``) reads too."""
+    import pyarrow.dataset as pads
+
+    from demo_bigdata_spark.sources.snapshot_cdc import _strip_uri
+
+    meta_dir = _strip_uri(index_path + "/_meta")
+    if not os.path.isdir(meta_dir):
+        return None
+    meta = pads.dataset(meta_dir, format="parquet")
+    if not meta.files:
+        return None
+    return meta.to_table(columns=["n", "portable"]).to_pylist()[0]
 
 
 def check_contamination_batch(
@@ -957,11 +992,8 @@ def check_contamination_batch(
     probe — work per call never touches eval text or prior batches.
     Raises if the probe's (n, hash family) disagree with the parameters
     the index was built with — a mismatch would silently match nothing."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
-
-    meta = _read_parquet_if_exists(spark, index_path + "/_meta")
-    if meta is not None:
-        m = meta.first()
+    m = _decontamination_index_meta(index_path)
+    if m is not None:
         if int(m["n"]) != int(n) or bool(m["portable"]) != bool(portable):
             raise ValueError(
                 f"contamination index at {index_path} was built with "

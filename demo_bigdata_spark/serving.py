@@ -7,15 +7,27 @@ services/api-service/data_service.py:116-150 and 82-91). Here there is ONE
 library implementation returning DataFrames; serialization (S11: JSON/SSE,
 reference app.py:190-218) is a thin conversion at the edge.
 
-Driver-side `.collect()` happens only on bounded results (top-k, single-row
-totals, one page) — the same contract the reference relied on, but safe at
-any input scale because every collected set has a LIMIT."""
+Driver-side `.collect()` happens only on bounded results — the same contract
+the reference relied on, but safe at any input scale:
+- :func:`dashboard_stats` collects one row (the totals) while it builds its
+  rollup, and the rollup it pins holds one row per distinct group, category,
+  hour bucket and entity plus one total row, whatever the input size;
+- every panel and page is collected through :func:`to_json_rows`, which
+  applies a LIMIT."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from demo_bigdata_spark.functions.scalar import (
+    SYNTH_EVENT_CATEGORIES,
+    categorize,
+    percent_of,
+)
 from demo_bigdata_spark.operators import analytics as A
 
 
@@ -29,19 +41,88 @@ def dashboard_stats(
     entity_col: str = "user_id",
     k: int = 10,
 ) -> dict[str, DataFrame]:
-    """The six-result-set dashboard fan-out (§3.2) as lazy DataFrames.
+    """The six-result-set dashboard fan-out (§3.2). Computes the rollup when
+    called; the returned panels are lazy.
 
-    The time filter is applied once and shared; Spark reuses the pruned scan
-    per job. Callers materialize whichever panels they need."""
+    The rollup is one ``groupingSets`` aggregate over the time-scoped frame
+    with the sets (group), (category), (hour bucket), (entity) and (), each
+    row carrying ``count(*)`` and the sorted set of groups. The call pins it
+    with an eager ``localCheckpoint`` and collects the one-row totals (at
+    most three Spark jobs). The pin holds #groups + #categories + #hours + #entities +
+    1 rows (a NULL key is one more group), whatever the input size.
+
+    Totals, type, category and hourly panels are narrow queries over the
+    pin, with no Exchange and no Expand; percentages take the collected
+    total as a literal. top_entities is one top-k over the pin's entity
+    rows, and recent a top-k over the scoped frame, so serving a panel is
+    one job. Each panel returns the rows, in order, of the matching
+    ``operators.analytics`` operator on the scoped frame."""
     scoped = A.time_range(events, ts_col, start=start, end=end)
-    return {
-        "totals": A.global_stats(scoped, distinct_cols=(entity_col, group_col)),
-        "type_distribution": A.type_distribution(scoped, group_col),
-        "category_distribution": A.category_distribution(scoped, group_col),
-        "hourly_series": A.hourly_series(scoped, ts_col),
-        "top_entities": A.top_entities(
-            scoped, [entity_col], distinct_col=group_col, list_col=group_col, k=k
+    keys = {
+        "_grp": F.col(group_col),
+        "_cat": categorize(group_col, SYNTH_EVENT_CATEGORIES),
+        "_hour": F.date_trunc("hour", F.col(ts_col)),
+        "_ent": F.col(entity_col),
+    }
+    pin = (
+        scoped.select(*(e.alias(key) for key, e in keys.items()))
+        .groupingSets([[key] for key in keys] + [[]], *keys)
+        .agg(
+            F.count("*").alias("_n"),
+            F.array_sort(F.collect_set("_grp")).alias("_grps"),
+            *(F.grouping(key).alias(f"_in{key}") for key in keys),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+    def in_set(key: str) -> Column:
+        """Rows of the one-key grouping set (key): its grouping flag is 0."""
+        return F.col(f"_in{key}") == 0
+
+    in_grand_total = ~reduce(operator.or_, map(in_set, keys))
+    totals = pin.coalesce(1).agg(
+        F.coalesce(F.sum(F.when(in_grand_total, F.col("_n"))), F.lit(0)).alias(
+            "total_events"
         ),
+        *(
+            F.count(F.when(in_set(key) & F.col(key).isNotNull(), 1)).alias(f"unique_{col}")
+            for key, col in (("_ent", entity_col), ("_grp", group_col))
+        ),
+    )
+    total = totals.collect()[0]["total_events"]
+
+    def distribution(key: str, name: str) -> DataFrame:
+        return (
+            pin.filter(in_set(key))
+            .select(
+                F.col(key).alias(name),
+                F.col("_n").alias("event_count"),
+                percent_of(F.col("_n"), F.lit(total)).alias("percentage"),
+            )
+            .coalesce(1)
+            .sortWithinPartitions(F.desc("event_count"), name)
+        )
+
+    return {
+        "totals": totals,
+        "type_distribution": distribution("_grp", group_col),
+        "category_distribution": distribution("_cat", "event_category"),
+        "hourly_series": pin.filter(in_set("_hour"))
+        .select(
+            F.date_format("_hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
+            F.col("_n").alias("event_count"),
+        )
+        .coalesce(1)
+        .sortWithinPartitions("hour"),
+        "top_entities": pin.filter(in_set("_ent") & F.col("_ent").isNotNull())
+        .select(
+            F.col("_ent").alias(entity_col),
+            F.col("_n").alias("event_count"),
+            F.size("_grps").cast("long").alias(f"unique_{group_col}"),
+            F.col("_grps").alias(f"{group_col}s"),
+        )
+        .orderBy(F.desc("event_count"), entity_col)
+        .limit(k),
         "recent": A.recent_events(scoped, ts_col, n=200),
     }
 
@@ -65,8 +146,14 @@ def list_events(
 
 
 def to_json_rows(df: DataFrame, limit: int = 1000) -> list[str]:
-    """S11 JSON delivery: bounded collect + JVM-side JSON serialization."""
-    return [r for r in df.limit(limit).toJSON().collect()]
+    """S11 JSON delivery: bounded collect + JVM-side JSON serialization.
+
+    ``to_json(struct(*))`` runs the JSON generator ``DataFrame.toJSON``
+    uses, inside the plan, so a call plans one query and skips toJSON's
+    round trip through external ``Row`` objects. The output is toJSON's,
+    except that a day-time interval keeps its declared fields (toJSON
+    widens it to DAY TO SECOND)."""
+    return [r[0] for r in df.limit(limit).select(F.to_json(F.struct("*"))).collect()]
 
 
 def health_check(spark, events: DataFrame) -> dict:

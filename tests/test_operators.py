@@ -2170,27 +2170,25 @@ def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
     10, and max_iterations=1 leaves one contracted round, which cannot
     close it even with the pointer jump. The edge graph has a chain, a
     triangle, an isolated universe node, a self-loop, a duplicate edge;
-    both graphs carry NULL ids, which are dropped."""
+    both graphs carry NULL ids, which are dropped. Both graphs run with
+    bigint ids and with zero-padded string ids (same order), and the
+    driver path resolves its labels through a broadcast join."""
     import pytest as _pytest
 
     from demo_bigdata_spark.operators import dedup as D
+    from demo_bigdata_spark.plans.inspect import executed_plan
 
     n = 31
     rows = [(i, f"b{i}") for i in range(1, n + 1)] + [
         (i, f"b{i - 1}") for i in range(2, n + 1)
     ]
     rows += [(40, None), (41, None), (None, "b3")]
-    bands = spark.createDataFrame(rows, "doc_id long, bucket string")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)]
-        + [(3, 2), (10, 11), (11, 12), (12, 10), (30, 30), (11, None)],
-        "id_a long, id_b long",
-    )
-    universe = spark.createDataFrame(
-        [(i,) for i in [*range(1, 9), 10, 11, 12, 20, 30, None]], "doc_id long"
-    )
+    edges = [(i, i + 1) for i in range(1, 8)] + [
+        (3, 2), (10, 11), (11, 12), (12, 10), (30, 30), (11, None)
+    ]
+    nodes = [*range(1, 9), 10, 11, 12, 20, 30, None]
 
-    def run():
+    def run(bands, pairs, universe):
         got_b = {
             r.doc_id: r.cluster_id
             for r in D._propagate_min_labels(bands, "doc_id", 64).collect()
@@ -2207,14 +2205,32 @@ def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
             D._propagate_min_labels_edges(pairs, universe, "doc_id", 1)
         return got_b, got_e
 
-    via_driver = run()
-    monkeypatch.setattr(D, "_CC_DRIVER_MAX_ROWS", 0)
-    via_dist = run()
-    assert via_driver == via_dist
-    assert via_driver[0] == {i: 1 for i in range(1, n + 1)}
-    assert via_driver[1] == {
-        **{i: 1 for i in range(1, 9)}, 10: 10, 11: 10, 12: 10, 20: 20, 30: 30
-    }
+    for id_type, key in (
+        ("bigint", lambda i: i),
+        ("string", lambda i: None if i is None else f"{i:03d}"),
+    ):
+        bands = spark.createDataFrame(
+            [(key(i), b) for i, b in rows], f"doc_id {id_type}, bucket string"
+        )
+        pairs = spark.createDataFrame(
+            [(key(a), key(b)) for a, b in edges], f"id_a {id_type}, id_b {id_type}"
+        )
+        universe = spark.createDataFrame([(key(i),) for i in nodes], f"doc_id {id_type}")
+        assert "BroadcastHashJoin" in executed_plan(
+            D._propagate_min_labels(bands, "doc_id", 64)
+        )
+        with monkeypatch.context() as m:
+            via_driver = run(bands, pairs, universe)
+            m.setattr(D, "_CC_DRIVER_MAX_ROWS", 0)
+            via_dist = run(bands, pairs, universe)
+        assert via_driver == via_dist, id_type
+        assert via_driver[0] == {key(i): key(1) for i in range(1, n + 1)}
+        assert via_driver[1] == {
+            **{key(i): key(1) for i in range(1, 9)},
+            **{key(i): key(10) for i in (10, 11, 12)},
+            key(20): key(20),
+            key(30): key(30),
+        }
 
 
 def test_personalized_pagerank_matches_integer_reference(spark):

@@ -57,6 +57,33 @@ def test_topk_plans_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in executed_plan(df)
 
 
+def test_dashboard_refresh_runs_one_rollup(spark, sf_dir):
+    """One dashboard refresh — dashboard_stats plus to_json_rows on all six
+    panels — runs at most 9 Spark jobs (3 to build and pin the rollup, one
+    collect per panel; it ran 17 when each panel planned its own scan and
+    aggregate), the same count on a second refresh, and no panel plan
+    holds an Exchange or an Expand."""
+    from demo_bigdata_spark import serving
+    from tests.test_sources_serving import _jobs_in
+
+    ev = load_table(spark, sf_dir, "events")
+
+    def refresh():
+        panels, jobs = _jobs_in(
+            spark, lambda: serving.dashboard_stats(ev, start="2024-01-05", end="2024-01-25")
+        )
+        for df in panels.values():
+            jobs += _jobs_in(spark, lambda: serving.to_json_rows(df))[1]
+        return panels, jobs
+
+    panels, first = refresh()
+    assert first <= 9, first
+    assert refresh()[1] == first
+    for name, df in panels.items():
+        plan = executed_plan(df)
+        assert "Exchange" not in plan and "Expand" not in plan, (name, plan)
+
+
 def test_aggregates_are_codegenerated(spark, sf_dir):
     df = A.type_distribution(load_table(spark, sf_dir, "events"))
     assert wholestage_codegen_spans(df) >= 1

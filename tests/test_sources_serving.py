@@ -57,17 +57,75 @@ def test_ddl_create_describe_count(spark, sf_dir, tmp_path):
     assert formats.table_count(spark, "gh.events_fact") == 0
 
 
+def _dashboard_reference(ev, k=10, **window):
+    """The six panels built from the standalone analytics operators on the
+    time-scoped frame — what each dashboard panel must return."""
+    from demo_bigdata_spark.operators import analytics as A
+
+    scoped = A.time_range(ev, "ts", **window)
+    return {
+        "totals": A.global_stats(scoped, distinct_cols=("user_id", "event_type")),
+        "type_distribution": A.type_distribution(scoped, "event_type"),
+        "category_distribution": A.category_distribution(scoped, "event_type"),
+        "hourly_series": A.hourly_series(scoped, "ts"),
+        "top_entities": A.top_entities(
+            scoped, ["user_id"], distinct_col="event_type", list_col="event_type", k=k
+        ),
+        "recent": A.recent_events(scoped, "ts", n=200),
+    }
+
+
+def _panel_rows(panels):
+    return {name: [r.asDict() for r in df.collect()] for name, df in panels.items()}
+
+
 def test_dashboard_stats_fanout(spark, sf_dir):
+    """Every panel of the one-rollup dashboard returns, in order, the rows
+    of its standalone analytics operator on the time-scoped frame: on the
+    sf events table, on a small frame with NULL types, entities and
+    timestamps and tied counts, and on an empty range."""
+    import datetime as dt
+
     ev = load_table(spark, sf_dir, "events")
-    stats = serving.dashboard_stats(ev, start="2024-01-05", end="2024-01-25")
-    totals = stats["totals"].head()
-    assert totals["total_events"] > 0
-    assert stats["type_distribution"].count() == 5
-    assert stats["top_entities"].count() == 10
-    assert stats["recent"].count() == 200
-    assert abs(
-        sum(r["percentage"] for r in stats["type_distribution"].collect()) - 100.0
-    ) < 0.1
+    window = {"start": "2024-01-05", "end": "2024-01-25"}
+    stats = serving.dashboard_stats(ev, **window)
+    got = _panel_rows(stats)
+    assert got == _panel_rows(_dashboard_reference(ev, **window))
+    assert got["totals"][0]["total_events"] > 0
+    assert len(got["type_distribution"]) == 5
+    assert len(got["top_entities"]) == 10
+    assert len(got["recent"]) == 200
+    assert abs(sum(r["percentage"] for r in got["type_distribution"]) - 100.0) < 0.1
+
+    t = dt.datetime(2024, 1, 1, 10, 15)
+    rows = [
+        (1, t, 1, "click"),
+        (2, t, 2, "click"),
+        (3, t + dt.timedelta(hours=1), 1, "view"),
+        (4, t + dt.timedelta(hours=1), 2, "view"),
+        (5, t + dt.timedelta(hours=2), None, "purchase"),
+        (6, None, 3, "purchase"),
+        (7, t + dt.timedelta(minutes=5), 3, None),
+        (8, None, None, None),
+        (9, t + dt.timedelta(hours=2), 4, "nosuchtype"),
+    ]
+    small = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string"
+    )
+    got = _panel_rows(serving.dashboard_stats(small, k=3))
+    assert got == _panel_rows(_dashboard_reference(small, k=3))
+    assert got["totals"] == [
+        {"total_events": 9, "unique_user_id": 4, "unique_event_type": 4}
+    ]
+    assert got["hourly_series"][0] == {"hour": None, "event_count": 2}
+
+    empty = {"start": "2030-01-01"}
+    got = _panel_rows(serving.dashboard_stats(ev, **empty))
+    assert got == _panel_rows(_dashboard_reference(ev, **empty))
+    assert got["totals"] == [
+        {"total_events": 0, "unique_user_id": 0, "unique_event_type": 0}
+    ]
+    assert all(not got[name] for name in got if name != "totals")
 
 
 def test_list_events_pagination_contract(spark, sf_dir):
@@ -87,6 +145,11 @@ def test_json_rows_and_health(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     rows = serving.to_json_rows(ev.select("event_id", "event_type"), limit=3)
     assert len(rows) == 3 and all(r.startswith("{") for r in rows)
+    # the same JSON, in the same order, as DataFrame.toJSON
+    recent = ev.orderBy(F.desc("ts"), "event_id").withColumn(
+        "tags", F.array("event_type", F.lit(None))
+    )
+    assert serving.to_json_rows(recent, limit=50) == recent.limit(50).toJSON().collect()
     h = serving.health_check(spark, ev)
     assert h["status"] == "healthy" and h["row_count"] == ev.count()
 

@@ -974,6 +974,48 @@ def test_incremental_decontamination_matches_batch(spark, sf_dir, tmp_path):
     assert final == committed_after
 
 
+def test_decontamination_meta_on_the_driver(spark, sf_dir, tmp_path):
+    """The contamination index's (n, portable) record is written and read
+    with pyarrow on the driver: a probe with other shingle parameters
+    raises, a rebuild replaces the record, a record Spark wrote still
+    reads, and an index without a record skips validation. Reading the
+    record runs no Spark job: a matching probe launches as many jobs as a
+    probe of an index without a record."""
+    import shutil
+
+    from demo_bigdata_spark.operators import dedup as D
+    from tests.test_sources_serving import _jobs_in
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.filter(F.col("doc_id") < 40)
+    idx = str(tmp_path / "evalidx")
+    D.build_decontamination_index(docs.filter(F.col("doc_id") < 10), idx, n=4)
+
+    assert D._decontamination_index_meta(idx) == {"n": 4, "portable": True}
+    for n, portable in ((8, True), (4, False)):
+        with pytest.raises(ValueError, match="shingle families must match"):
+            D.check_contamination_batch(spark, docs, idx, n=n, portable=portable)
+    probe, jobs = _jobs_in(
+        spark, lambda: D.check_contamination_batch(spark, docs, idx, n=4)
+    )
+    assert set(range(10)) & {r["doc_id"] for r in probe.collect()}
+
+    D.build_decontamination_index(docs.filter(F.col("doc_id") < 10), idx, n=8)
+    assert D._decontamination_index_meta(idx) == {"n": 8, "portable": True}
+    shutil.rmtree(os.path.join(idx, "_meta"))
+    spark.createDataFrame([(5, False)], "n int, portable boolean").write.parquet(
+        os.path.join(idx, "_meta")
+    )
+    assert D._decontamination_index_meta(idx) == {"n": 5, "portable": False}
+    shutil.rmtree(os.path.join(idx, "_meta"))
+    assert D._decontamination_index_meta(idx) is None
+    # no record: no check; reading the record cost the matching probe no job
+    _, jobs_without = _jobs_in(
+        spark, lambda: D.check_contamination_batch(spark, docs, idx, n=3)
+    )
+    assert jobs == jobs_without
+
+
 def test_incremental_vector_index_matches_batch(spark, sf_dir, tmp_path):
     """IVF probes on a continuously-maintained vector index (frozen
     centroids, per-epoch appends) must equal a batch build over the same
