@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from demo_bigdata_spark.functions.scalar import spread_for_cpu
 from demo_bigdata_spark.operators.text import tokens
+from demo_bigdata_spark.session import local_frame
 
 # 28-bit token hash: first 7 hex chars of md5. Keeps a_i*h + b_i < 2^63
 # (int64-safe in both Spark and DuckDB).
@@ -439,19 +440,15 @@ def _resolve_with_driver_labels(l0: DataFrame, final: dict, id_col: str) -> Data
     actually move — becomes a local relation and the join is an explicit
     BROADCAST, so the corpus-sized ``l0`` frame is never exchanged.
     Missing labels keep themselves via the left join's coalesce, exactly
-    like the distributed resolution. The map is built as a pyarrow table
+    like the distributed resolution. The map is a :func:`local_frame`
     typed from ``l0``'s label type, so no Python worker starts."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
     dtype = l0.schema["cluster_id"].dataType
-    schema = to_arrow_schema(
-        StructType([StructField("_cl", dtype, True), StructField("_cmin", dtype, True)])
-    )
-    moved = {k: v for k, v in final.items() if k != v}
-    cl = l0.sparkSession.createDataFrame(
-        pa.table({"_cl": list(moved), "_cmin": list(moved.values())}, schema=schema)
+    cl = local_frame(
+        l0.sparkSession,
+        [(k, v) for k, v in final.items() if k != v],
+        StructType([StructField("_cl", dtype, True), StructField("_cmin", dtype, True)]),
     )
     return l0.join(
         F.broadcast(cl), l0["cluster_id"] == F.col("_cl"), "left"
@@ -1738,53 +1735,47 @@ def append_dedup_batch(
     component labeling, not pair emission (a probed x5 replica farm
     emitted 113M pairs with per-epoch cost growing in farm size — the
     measurement that pinned this contract)."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = index_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    if batch_df.isEmpty():
-        commit_epoch(spark, epochs_path, epoch_id)
-        return
+    def write() -> None:
+        if batch_df.isEmpty():  # nothing to write; the epoch still commits
+            return
 
-    nb, nt = _batch_band_tok_tables(batch_df, text_col, id_col, bands, rows)
-    nb = nb.localCheckpoint(eager=True)
-    nt = nt.localCheckpoint(eager=True)
+        nb, nt = _batch_band_tok_tables(batch_df, text_col, id_col, bands, rows)
+        nb = nb.localCheckpoint(eager=True)
+        nt = nt.localCheckpoint(eager=True)
 
-    ib = read_dedup_bands(spark, index_path)
-    cross = (
-        ib.join(F.broadcast(nb.withColumnRenamed("doc_id", "new_id")),
-                ["band_idx", "band_sig"])
-        .filter(F.col("doc_id") != F.col("new_id"))
-        .select(
-            F.least("doc_id", "new_id").alias("id_a"),
-            F.greatest("doc_id", "new_id").alias("id_b"),
+        ib = read_dedup_bands(spark, index_path)
+        cross = (
+            ib.join(F.broadcast(nb.withColumnRenamed("doc_id", "new_id")),
+                    ["band_idx", "band_sig"])
+            .filter(F.col("doc_id") != F.col("new_id"))
+            .select(
+                F.least("doc_id", "new_id").alias("id_a"),
+                F.greatest("doc_id", "new_id").alias("id_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    a = nb.alias("a")
-    b = nb.alias("b")
-    internal = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        a = nb.alias("a")
+        b = nb.alias("b")
+        internal = (
+            a.join(
+                b,
+                (F.col("a.band_idx") == F.col("b.band_idx"))
+                & (F.col("a.band_sig") == F.col("b.band_sig"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+            .distinct()
         )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    cands = cross.unionByName(internal).distinct()
-    toks_all = read_dedup_toks(spark, index_path).unionByName(nt)
-    pairs = _jaccard_from_toks(cands, toks_all).filter(F.col("jaccard") >= threshold)
-    write_epoch_partition(pairs, index_path + "/pairs", epoch_id)
-    write_epoch_partition(nb, index_path + "/bands", epoch_id, ("band_idx",))
-    write_epoch_partition(nt, index_path + "/toks", epoch_id)
-    commit_epoch(spark, epochs_path, epoch_id)
+        cands = cross.unionByName(internal).distinct()
+        toks_all = read_dedup_toks(spark, index_path).unionByName(nt)
+        pairs = _jaccard_from_toks(cands, toks_all).filter(F.col("jaccard") >= threshold)
+        write_epoch_partition(pairs, index_path + "/pairs", epoch_id)
+        write_epoch_partition(nb, index_path + "/bands", epoch_id, ("band_idx",))
+        write_epoch_partition(nt, index_path + "/toks", epoch_id)
+
+    fold_epoch(spark, index_path, epoch_id, write)
 
 
 # the committed-view schemas of the live near-dup index's three tables
@@ -1793,20 +1784,26 @@ _TOKS_SCHEMA = "doc_id long, toks array<bigint>, n int, epoch_id long"
 _PAIRS_SCHEMA = "id_a long, id_b long, jaccard double, epoch_id long"
 
 
-def read_dedup_bands(spark, index_path: str) -> DataFrame:
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+def _dedup_index_view(spark, index_path: str, table: str, schema: str) -> DataFrame:
+    """The committed view of one of the live near-dup index's three tables,
+    all committed by the index's one ledger."""
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     return committed_view(
-        spark, index_path + "/bands", index_path + "_epochs", _BANDS_SCHEMA
-    ).select("doc_id", "band_idx", "band_sig")
+        spark, f"{index_path}/{table}", ledger_path(index_path), schema
+    )
+
+
+def read_dedup_bands(spark, index_path: str) -> DataFrame:
+    return _dedup_index_view(spark, index_path, "bands", _BANDS_SCHEMA).select(
+        "doc_id", "band_idx", "band_sig"
+    )
 
 
 def read_dedup_toks(spark, index_path: str) -> DataFrame:
-    from demo_bigdata_spark.streaming.pipeline import committed_view
-
-    return committed_view(
-        spark, index_path + "/toks", index_path + "_epochs", _TOKS_SCHEMA
-    ).select("doc_id", "toks", "n")
+    return _dedup_index_view(spark, index_path, "toks", _TOKS_SCHEMA).select(
+        "doc_id", "toks", "n"
+    )
 
 
 def read_near_dup_pairs(spark, index_path: str) -> DataFrame:
@@ -1815,11 +1812,9 @@ def read_near_dup_pairs(spark, index_path: str) -> DataFrame:
     candidates) over everything ingested so far. Each pair is emitted
     once, by the epoch that ingests the later of its two documents, so
     the view needs no dedup."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
-
-    return committed_view(
-        spark, index_path + "/pairs", index_path + "_epochs", _PAIRS_SCHEMA
-    ).select("id_a", "id_b", "jaccard")
+    return _dedup_index_view(spark, index_path, "pairs", _PAIRS_SCHEMA).select(
+        "id_a", "id_b", "jaccard"
+    )
 
 
 def _survivors_from_pairs(
@@ -1889,17 +1884,9 @@ def read_dedup_survivors(spark, index_path: str, max_iterations: int = 64) -> Da
     which is why replica-farm corpora should use
     :func:`read_dedup_clusters` instead.
     """
-    from demo_bigdata_spark.streaming.pipeline import committed_view
-
-    pairs = committed_view(
-        spark, index_path + "/pairs", index_path + "_epochs", _PAIRS_SCHEMA
-    )
-    toks = committed_view(
-        spark, index_path + "/toks", index_path + "_epochs", _TOKS_SCHEMA
-    )
     return _survivors_from_pairs(
-        pairs.select("id_a", "id_b"),
-        toks.select("doc_id"),
+        read_near_dup_pairs(spark, index_path).select("id_a", "id_b"),
+        read_dedup_toks(spark, index_path).select("doc_id"),
         "doc_id",
         max_iterations,
     )
@@ -1923,12 +1910,8 @@ def read_dedup_clusters(spark, index_path: str, max_iterations: int = 64) -> Dat
 
     Returns (doc_id, cluster_id).
     """
-    from demo_bigdata_spark.streaming.pipeline import committed_view
-
     bands = (
-        committed_view(
-            spark, index_path + "/bands", index_path + "_epochs", _BANDS_SCHEMA
-        )
+        read_dedup_bands(spark, index_path)
         .select("doc_id", F.concat_ws("|", "band_idx", "band_sig").alias("bucket"))
         .localCheckpoint(eager=False)
     )

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demo_bigdata_spark.session import local_frame
+
 PAGERANK_SCALE = 10**12
 
 # r13 optimization (guide §1.2 step 1 — fix the distributed algorithm):
@@ -335,8 +337,8 @@ def pagerank(
                     StructField("rank", LongType(), True),
                 ]
             )
-            return nodes.sparkSession.createDataFrame(
-                [(v, rank[v]) for v, _, _ in prof_rows], schema
+            return local_frame(
+                nodes.sparkSession, [(v, rank[v]) for v, _, _ in prof_rows], schema
             )
 
     # normalize + co-partition the edges ONCE; every iteration reuses this.

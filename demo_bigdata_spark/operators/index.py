@@ -144,24 +144,19 @@ def append_positional_postings(
     applied epoch is a no-op. Work per epoch is O(batch) — history is
     never re-tokenized. Same append-only document-stream contract as the
     inverted index."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        _positional_postings(batch_df, text_col, id_col, n_buckets).repartition(
-            "term_bucket"
-        ),
-        path,
-        epoch_id,
-        ("term_bucket",),
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        write_epoch_partition(
+            _positional_postings(batch_df, text_col, id_col, n_buckets).repartition(
+                "term_bucket"
+            ),
+            path,
+            epoch_id,
+            ("term_bucket",),
+        )
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def read_positional_postings(
@@ -169,12 +164,12 @@ def read_positional_postings(
 ) -> DataFrame:
     """Committed view of an incrementally-maintained positional index;
     bucket predicates prune its partitioned scan."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     return committed_view(
         spark,
         path,
-        path + "_epochs",
+        ledger_path(path),
         f"{id_col} long, term string, positions array<int>, "
         "term_bucket int, epoch_id long",
     )
@@ -258,44 +253,39 @@ def append_postings(
     one epoch) — the same contract as the continuous packer; a re-ingested
     doc would contribute a second (doc, term) posting row and over-count
     conjunctive matches."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    tf = term_frequencies(batch_df, text_col, id_col).localCheckpoint(eager=False)
-    write_epoch_partition(
-        tf.withColumn("term_bucket", hash_bucket("term", n_buckets)).repartition(
-            "term_bucket"
-        ),
-        path + "/postings",
-        epoch_id,
-        ("term_bucket",),
-    )
-    # the doclens side table rides the same epoch and ledger commit, so
-    # ranked retrieval (bm25_rank_indexed) works off a continuously-
-    # maintained index too. Empty docs get dl=0 rows here too (same
-    # N/avgdl contract as a build).
-    write_epoch_partition(
-        _doclens_with_empty_docs(batch_df, tf, id_col), path + "/doclens", epoch_id
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        tf = term_frequencies(batch_df, text_col, id_col).localCheckpoint(eager=False)
+        write_epoch_partition(
+            tf.withColumn("term_bucket", hash_bucket("term", n_buckets)).repartition(
+                "term_bucket"
+            ),
+            path + "/postings",
+            epoch_id,
+            ("term_bucket",),
+        )
+        # the doclens side table rides the same epoch and ledger commit, so
+        # ranked retrieval (bm25_rank_indexed) works off a continuously-
+        # maintained index too. Empty docs get dl=0 rows here too (same
+        # N/avgdl contract as a build).
+        write_epoch_partition(
+            _doclens_with_empty_docs(batch_df, tf, id_col), path + "/doclens", epoch_id
+        )
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of an incrementally-maintained postings table
     (streaming.pipeline.committed_view); a caller's bucket predicate
     prunes its partitioned scan."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     return committed_view(
         spark,
         path + "/postings",
-        path + "_epochs",
+        ledger_path(path),
         f"{id_col} long, term string, tf long, term_bucket int, epoch_id long",
     )
 
@@ -303,7 +293,11 @@ def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> Dat
 def read_doclens(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """The doclens side table: its committed view on an incrementally-
     maintained index, the files as they are on a batch build."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view, live_or_built
+    from demo_bigdata_spark.streaming.pipeline import (
+        committed_view,
+        ledger_path,
+        live_or_built,
+    )
 
     return live_or_built(
         spark,
@@ -311,7 +305,7 @@ def read_doclens(spark: SparkSession, path: str, id_col: str = "doc_id") -> Data
         lambda: committed_view(
             spark,
             path + "/doclens",
-            path + "_epochs",
+            ledger_path(path),
             f"{id_col} long, dl long, epoch_id long",
         ),
     )

@@ -1136,34 +1136,29 @@ def append_vectors(
     flow (FAISS add-after-train): drift is handled by periodic re-train +
     full rebuild, not per-batch centroid updates, which would silently
     invalidate every earlier assignment."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = index_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        assign_clusters(batch_df, centroids, vec_col, id_col).repartition("cluster"),
-        index_path,
-        epoch_id,
-        ("cluster",),
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        write_epoch_partition(
+            assign_clusters(batch_df, centroids, vec_col, id_col).repartition("cluster"),
+            index_path,
+            epoch_id,
+            ("cluster",),
+        )
+
+    fold_epoch(spark, index_path, epoch_id, write)
 
 
 def read_ivf_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
     """Committed view of an incrementally-maintained IVF index
     (streaming.pipeline.committed_view); the probe's cluster predicate
     prunes its partitioned scan — the point of the index."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     return committed_view(
         spark,
         index_path,
-        index_path + "_epochs",
+        ledger_path(index_path),
         f"{id_col} long, v array<double>, cluster int, epoch_id long",
     )
 
@@ -1205,39 +1200,34 @@ def append_pq_vectors(
     the same epoch-ledger discipline as ``append_vectors`` (FAISS
     add-after-train: both k-means models stay fixed between retrains).
     Work per epoch is O(batch)."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = index_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        pq_encode(
-            assign_clusters(batch_df, centroids, vec_col, id_col),
-            codebooks,
-            vec_col="v",
-            id_col=id_col,
-            keep_cols=("cluster",),
-        ).repartition("cluster"),
-        index_path,
-        epoch_id,
-        ("cluster",),
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        write_epoch_partition(
+            pq_encode(
+                assign_clusters(batch_df, centroids, vec_col, id_col),
+                codebooks,
+                vec_col="v",
+                id_col=id_col,
+                keep_cols=("cluster",),
+            ).repartition("cluster"),
+            index_path,
+            epoch_id,
+            ("cluster",),
+        )
+
+    fold_epoch(spark, index_path, epoch_id, write)
 
 
 def read_ivf_pq_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
     """Committed view of an incrementally-maintained IVF-PQ index, pruned
     by the probe's cluster predicate like ``read_ivf_index``."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     return committed_view(
         spark,
         index_path,
-        index_path + "_epochs",
+        ledger_path(index_path),
         f"{id_col} long, codes array<int>, cluster int, epoch_id long",
     )
 
@@ -1945,76 +1935,78 @@ def append_knn_graph_batch(
 
     Edges (``epoch_id=<k>``) and probe rows
     (``probe_cluster=<c>/epoch_id=<k>``) are written as the epoch's
-    partitions; one ledger commit at ``graph_path + "_epochs"`` makes
+    partitions; one ledger commit at ``ledger_path(graph_path)`` makes
     both visible. Reads go through :func:`read_knn_graph` (committed view
     + per-src window). Edge rows accumulate ~k + k·(arrival fan-in) per
     vector; :func:`compact_knn_graph` cuts them back to the exact top-k.
     """
     from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
+        fold_epoch,
+        ledger_path,
         write_epoch_partition,
     )
 
-    epochs_path = graph_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    if batch_df.isEmpty():
-        # r10 ADVICE: an empty micro-batch (idle stream trigger) used to
-        # run the full append/collect/cogroup/write path with isin([])
-        # always-false predicates feeding empty cogroups. Commit the epoch
-        # (so replay stays idempotent and the ledger has no gaps) and stop.
-        commit_epoch(spark, epochs_path, epoch_id)
-        return
     C = np.asarray(centroids, dtype=np.float64)
     n_probe = min(n_probe, len(C))
 
-    # member index first (idempotent under its own ledger)
-    append_vectors(spark, batch_df, index_path, C, epoch_id, vec_col, id_col)
-    members = read_ivf_index(spark, index_path, id_col)  # committed: pre + batch
+    def write() -> None:
+        if batch_df.isEmpty():
+            # an empty micro-batch (idle stream trigger) would run the full
+            # append/collect/cogroup/write path with isin([]) always-false
+            # predicates feeding empty cogroups. Write nothing; the epoch
+            # still commits, so replay stays idempotent and the ledger has
+            # no gaps.
+            return
 
-    batch_probes = _explode_probes(batch_df, C, n_probe, vec_col, id_col)
-    # Scope BOTH cogroups to the clusters this batch actually touches —
-    # a bounded driver-side set (<= n_probe x batch, capped by
-    # n_centroids). Without the filter the cogroup shuffles the ENTIRE
-    # member index every epoch (unprobed clusters ride along just to
-    # produce empty groups); with it the cluster predicate is a partition
-    # filter on the committed view, so per-epoch IO is the probed slice,
-    # as the docstring promises.
-    touched = sorted(
-        r["cluster"] for r in batch_probes.select("cluster").distinct().collect()
-    )
-    new_src_edges = _cogroup_knn_candidates(
-        batch_probes, members.filter(F.col("cluster").isin(touched)), k, id_col
-    )
+        # member index first (idempotent under its own ledger)
+        append_vectors(spark, batch_df, index_path, C, epoch_id, vec_col, id_col)
+        members = read_ivf_index(spark, index_path, id_col)  # committed: pre + batch
 
-    # affected committed srcs vs the batch's ASSIGNMENT rows only
-    probes_path = graph_path + "_probes"
-    stored_probes = _read_knn_probes(spark, probes_path, epochs_path, id_col)
-    batch_assigned = assign_clusters(batch_df, C, vec_col, id_col)
-    assigned_clusters = sorted(
-        r["cluster"] for r in batch_assigned.select("cluster").distinct().collect()
-    )
-    affected_edges = _cogroup_knn_candidates(
-        stored_probes.filter(F.col("probe_cluster").isin(assigned_clusters))
-        .withColumnRenamed("probe_cluster", "cluster"),
-        batch_assigned,
-        k,
-        id_col,
-    )
+        batch_probes = _explode_probes(batch_df, C, n_probe, vec_col, id_col)
+        # Scope BOTH cogroups to the clusters this batch actually touches —
+        # a bounded driver-side set (<= n_probe x batch, capped by
+        # n_centroids). Without the filter the cogroup shuffles the ENTIRE
+        # member index every epoch (unprobed clusters ride along just to
+        # produce empty groups); with it the cluster predicate is a partition
+        # filter on the committed view, so per-epoch IO is the probed slice,
+        # as the docstring promises.
+        touched = sorted(
+            r["cluster"] for r in batch_probes.select("cluster").distinct().collect()
+        )
+        new_src_edges = _cogroup_knn_candidates(
+            batch_probes, members.filter(F.col("cluster").isin(touched)), k, id_col
+        )
 
-    write_epoch_partition(
-        new_src_edges.unionByName(affected_edges), graph_path, epoch_id
-    )
-    write_epoch_partition(
-        batch_probes.select(
-            F.col(id_col), F.col("v"), F.col("cluster").alias("probe_cluster")
-        ),
-        probes_path,
-        epoch_id,
-        ("probe_cluster",),
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+        # affected committed srcs vs the batch's ASSIGNMENT rows only
+        probes_path = graph_path + "_probes"
+        stored_probes = _read_knn_probes(
+            spark, probes_path, ledger_path(graph_path), id_col
+        )
+        batch_assigned = assign_clusters(batch_df, C, vec_col, id_col)
+        assigned_clusters = sorted(
+            r["cluster"] for r in batch_assigned.select("cluster").distinct().collect()
+        )
+        affected_edges = _cogroup_knn_candidates(
+            stored_probes.filter(F.col("probe_cluster").isin(assigned_clusters))
+            .withColumnRenamed("probe_cluster", "cluster"),
+            batch_assigned,
+            k,
+            id_col,
+        )
+
+        write_epoch_partition(
+            new_src_edges.unionByName(affected_edges), graph_path, epoch_id
+        )
+        write_epoch_partition(
+            batch_probes.select(
+                F.col(id_col), F.col("v"), F.col("cluster").alias("probe_cluster")
+            ),
+            probes_path,
+            epoch_id,
+            ("probe_cluster",),
+        )
+
+    fold_epoch(spark, graph_path, epoch_id, write)
 
 
 def _read_knn_probes(spark, probes_path: str, epochs_path: str, id_col: str):
@@ -2072,12 +2064,12 @@ def read_knn_graph(spark, graph_path: str, k: int, id_col: str = "vec_id") -> Da
     the dedup is deterministic."""
     from pyspark.sql.window import Window
 
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     edges = committed_view(
         spark,
         graph_path,
-        graph_path + "_epochs",
+        ledger_path(graph_path),
         "src long, dst long, cosine double, epoch_id long",
     )
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.col("dst"))
@@ -2139,10 +2131,11 @@ def compact_knn_graph(
     from demo_bigdata_spark.streaming.pipeline import (
         commit_epoch,
         committed_epochs,
+        ledger_path,
         write_epoch_partition,
     )
 
-    epochs_path = graph_path + "_epochs"
+    epochs_path = ledger_path(graph_path)
     committed = committed_epochs(epochs_path)
     if not committed:
         return  # nothing committed yet
@@ -2238,9 +2231,10 @@ def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     from demo_bigdata_spark.streaming.pipeline import (
         _require_epoch_layout,
         committed_epochs,
+        ledger_path,
     )
 
-    committed = committed_epochs(graph_path + "_epochs")
+    committed = committed_epochs(ledger_path(graph_path))
     if not committed or not os.path.isdir(graph_path):
         return {"due": False, "reason": "no committed graph"}
     _require_epoch_layout(graph_path)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demo_bigdata_spark.session import local_frame
+
 # log2m for the HLL registers: 12 -> 4096 registers, ~1.6% relative standard
 # error, ~4 KB per sketch. Raise to 14+ when a 0.4% error budget matters.
 DEFAULT_LGK = 12
@@ -174,7 +176,7 @@ def count_min_table(
     ).head()["sk"]
     sketch = CountMinReader(bytes(blob))
     rows = [(p, sketch.estimate_count(p)) for p in probes]
-    return df.sparkSession.createDataFrame(rows, "probe string, est_count long")
+    return local_frame(df.sparkSession, rows, "probe string, est_count long")
 
 
 def merge_count_min(blobs: list[bytes]) -> bytes:
@@ -474,30 +476,25 @@ def append_histogram_batch(
     rows per epoch) as the epoch's partition and commit the epoch.
     Integer bin counts sum across epochs to EXACTLY the batch sketch of
     everything ingested."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    part = histogram_sketch(batch_df, value_col, lo, hi, n_bins)
-    write_epoch_partition(part, path, epoch_id)
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        part = histogram_sketch(batch_df, value_col, lo, hi, n_bins)
+        write_epoch_partition(part, path, epoch_id)
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def read_histogram(spark, path: str) -> DataFrame:
     """Committed (bin, n) sketch from the incrementally-maintained table:
     the committed view, then the exact integer re-sum."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     return (
         committed_view(
             spark,
             path,
-            path + "_epochs",
+            ledger_path(path),
             "bin int, n bigint, epoch_id long",
         )
         .groupBy("bin")

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from demo_bigdata_spark.session import local_frame
+
 # Tiny per-language stopword markers for the n-gram/stopword heuristic
 # language-ID. Deliberately small + deterministic — a real pipeline would
 # plug a fastText-style model in via pandas_udf (operators/multimodal.py
@@ -221,7 +223,8 @@ def train_quality_classifier(
         # weights travel as a broadcast-joined table, not a literal map:
         # the same lookup shape as the serving path, and a 1024-entry map
         # literal would be re-interpreted per row
-        wdf = spark.createDataFrame(
+        wdf = local_frame(
+            spark,
             [(b, wb) for b, wb in enumerate(w) if wb != 0.0] or [(0, 0.0)],
             "bucket int, weight double",
         )
@@ -701,26 +704,21 @@ def append_term_counts_batch(
     corpus) as the epoch's partition and commit the epoch. Token counts
     are ADDITIVE integers, so the committed sums across epochs equal the
     batch count table of everything ingested exactly."""
-    from demo_bigdata_spark.streaming.pipeline import (
-        commit_epoch,
-        epoch_already_applied,
-        write_epoch_partition,
-    )
+    from demo_bigdata_spark.streaming.pipeline import fold_epoch, write_epoch_partition
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    part = (
-        batch_df.select(
-            F.col(group_col).alias("grp"),
-            F.explode(tokens(text_col)).alias("tok"),
+    def write() -> None:
+        part = (
+            batch_df.select(
+                F.col(group_col).alias("grp"),
+                F.explode(tokens(text_col)).alias("tok"),
+            )
+            .filter(F.col("tok") != "")
+            .groupBy("grp", "tok")
+            .agg(F.count("*").alias("n"))
         )
-        .filter(F.col("tok") != "")
-        .groupBy("grp", "tok")
-        .agg(F.count("*").alias("n"))
-    )
-    write_epoch_partition(part, path, epoch_id)
-    commit_epoch(spark, epochs_path, epoch_id)
+        write_epoch_partition(part, path, epoch_id)
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def read_group_kl(
@@ -731,13 +729,13 @@ def read_group_kl(
     as the batch operator (:func:`_kl_from_counts`), so live == batch
     bit-for-bit at any epoch boundary — the streaming answer to 'which
     crawl snapshot shifted the mixture'."""
-    from demo_bigdata_spark.streaming.pipeline import committed_view
+    from demo_bigdata_spark.streaming.pipeline import committed_view, ledger_path
 
     gt = (
         committed_view(
             spark,
             path,
-            path + "_epochs",
+            ledger_path(path),
             "grp string, tok string, n bigint, epoch_id long",
         )
         .groupBy("grp", "tok")

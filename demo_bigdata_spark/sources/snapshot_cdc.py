@@ -838,6 +838,8 @@ def mirror_changelog_stream(
     commit is epoch-idempotent — ``read_table(mirror)`` equals
     ``read_table(source)`` at every committed point (test-pinned across
     the full append/MOR-delete/upsert/position-delete lifecycle)."""
+    from demo_bigdata_spark.streaming.pipeline import _start_fold
+
     changes = read_changelog_stream(
         spark, source_path, max_snapshots_per_trigger=max_snapshots_per_trigger
     )
@@ -845,13 +847,7 @@ def mirror_changelog_stream(
     def _fold(batch_df, epoch_id):
         apply_changes_epoch(spark, mirror_path, batch_df, key_col, epoch_id)
 
-    return (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(changes, checkpoint, trigger_seconds, _fold)
 
 
 def read_snapshot_stream(

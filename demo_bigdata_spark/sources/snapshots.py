@@ -94,6 +94,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from demo_bigdata_spark.session import local_frame
+
 _POINTER = "_CURRENT"
 _PROPS = "_PROPERTIES"
 # inside snapshots/<id>/: the manifest file and the recorded read schema
@@ -1708,6 +1710,8 @@ def write_stream_to_versioned(
     time travel work on the live table. ``stats_cols`` declares the
     manifest-statistics columns when the sink creates the table, so
     downstream pruned reads work on stream-born tables too."""
+    from demo_bigdata_spark.streaming.pipeline import _start_fold
+
     spark = df.sparkSession
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1716,13 +1720,7 @@ def write_stream_to_versioned(
             branch=branch,
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def rewrite_table_layout(
@@ -1797,7 +1795,8 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
         )
         for h in snapshot_history(spark, path)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "snapshot int, n_data_files int, n_delete_files int, "
         "n_epoch_markers int, is_current boolean",
@@ -1814,6 +1813,4 @@ def table_refs(spark: SparkSession, path: str) -> DataFrame:
         for kind in ("branch", "tag")
         for name, snap in sorted(refs[kind].items())
     ]
-    return spark.createDataFrame(
-        rows, "name string, kind string, snapshot int, parent int"
-    )
+    return local_frame(spark, rows, "name string, kind string, snapshot int, parent int")

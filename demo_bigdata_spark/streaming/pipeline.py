@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from demo_bigdata_spark.schemas import EVENTS_SCHEMA
+from demo_bigdata_spark.session import local_frame
 from demo_bigdata_spark.sources.snapshot_cdc import _strip_uri
 
 
@@ -338,6 +339,26 @@ def running_user_totals_tws(df: DataFrame, key_col: str = "user_id") -> DataFram
     )
 
 
+def _start_fold(
+    df: DataFrame,
+    checkpoint: str,
+    trigger_seconds: int,
+    fold,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Start ``df`` as the reference's micro-batch sink (S2: api.py:312-318):
+    ``fold(batch_df, epoch_id)`` runs once per micro-batch through
+    foreachBatch, with a checkpoint and a ``trigger_seconds`` processingTime
+    trigger. The one stream starter every sink and fold here uses."""
+    return (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(fold)
+        .option("checkpointLocation", checkpoint)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
+
+
 def write_partitioned_stream(
     df: DataFrame,
     path: str,
@@ -353,13 +374,7 @@ def write_partitioned_stream(
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         write_partitioned(batch_df, path, ts_col="ts", mode="append")
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _write)
 
 
 def write_upsert_stream(
@@ -387,22 +402,15 @@ def write_upsert_stream(
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         deduped = batch_df.dropDuplicates(key_cols)
-        try:
-            target = spark.read.parquet(path)
-            merged = merge_upsert(target, deduped, key_cols)
-        except Exception:  # first batch: no target yet
-            merged = deduped
+        # only a missing target is a first batch: any other read or merge
+        # failure fails the micro-batch and leaves the target as it was
+        target = _read_parquet_if_exists(spark, path)
+        merged = deduped if target is None else merge_upsert(target, deduped, key_cols)
         # materialize before overwrite (the source of the write is the path
         # being overwritten); localCheckpoint cuts the lineage safely
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _merge, "update")
 
 
 def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
@@ -448,12 +456,19 @@ def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
 
 # --- The epoch ledger ---------------------------------------------------------
 #
-# Every exactly-once fold writes its epoch's rows into the table's own
-# ``epoch_id=<k>`` partition (:func:`write_epoch_partition`) and then commits
-# the epoch to a ledger beside the table (``<path>_epochs``). The ledger is a
-# directory with one small parquet file per committed epoch, written and read
-# on the driver with pyarrow — no Spark job. The three functions below are
-# the only code that touches it.
+# Every exactly-once fold runs through :func:`fold_epoch`: it writes its
+# epoch's rows into the table's own ``epoch_id=<k>`` partition
+# (:func:`write_epoch_partition`) and then commits the epoch to a ledger
+# beside the table (:func:`ledger_path`). The ledger is a directory with one
+# small parquet file per committed epoch, written and read on the driver
+# with pyarrow — no Spark job. The functions below are the only code that
+# names or touches it.
+
+
+def ledger_path(table: str) -> str:
+    """The epoch ledger of the fold table at ``table``, a directory beside
+    it; folds commit there and committed views of the table read it."""
+    return table + "_epochs"
 
 
 def committed_epochs(epochs_path: str) -> frozenset[int]:
@@ -500,6 +515,19 @@ def commit_epoch(spark, epochs_path: str, epoch_id: int) -> None:
     )
 
 
+def fold_epoch(spark, table: str, epoch_id: int, write) -> None:
+    """Apply one epoch of an exactly-once fold on ``table``: return at once
+    when the table's ledger already holds ``epoch_id``, else run ``write()``
+    and then :func:`commit_epoch`. A ``write`` that raises commits nothing,
+    so the micro-batch's retry runs it again; a crash between ``write`` and
+    the commit leaves only uncommitted rows, which the replay rewrites."""
+    epochs_path = ledger_path(table)
+    if epoch_already_applied(spark, epochs_path, epoch_id):
+        return
+    write()
+    commit_epoch(spark, epochs_path, epoch_id)
+
+
 def epoch_layout(path: str) -> bool | None:
     """Whether the table at ``path`` keeps one ``epoch_id=<k>`` partition
     per epoch, judged on the driver (no Spark job) from the first data file
@@ -526,7 +554,7 @@ def _require_epoch_layout(path: str) -> None:
         raise ValueError(
             f"{path} holds data files of the flat-append layout; this table "
             "keeps one epoch_id=<k> partition per epoch. "
-            f"Move {path} and {path}_epochs aside and fold the batches again."
+            f"Move {path} and {ledger_path(path)} aside and fold the batches again."
         )
 
 
@@ -615,25 +643,23 @@ def combine_hourly_partial(
     window. Closing it needs a transactional table format (Delta/Iceberg:
     state+ledger in one commit); plain parquet cannot express it.
     """
-    from pyspark.sql import functions as F
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    part = batch_df.groupBy(
-        F.date_trunc("hour", F.col(ts_col)).alias("bucket")
-    ).agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-    state = _read_parquet_if_exists(spark, path)
-    if state is not None:
-        merged = (
-            state.unionByName(part)
-            .groupBy("bucket")
-            .agg(F.sum("n").alias("n"), F.sum("sum_value").alias("sum_value"))
-        )
-    else:  # first epoch: no state yet
-        merged = part
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        part = batch_df.groupBy(
+            F.date_trunc("hour", F.col(ts_col)).alias("bucket")
+        ).agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
+        state = _read_parquet_if_exists(spark, path)
+        if state is not None:
+            merged = (
+                state.unionByName(part)
+                .groupBy("bucket")
+                .agg(F.sum("n").alias("n"), F.sum("sum_value").alias("sum_value"))
+            )
+        else:  # first epoch: no state yet
+            merged = part
+        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def incremental_hourly_stats(
@@ -655,13 +681,7 @@ def incremental_hourly_stats(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_hourly_partial(spark, path, batch_df, epoch_id)
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold, "update")
 
 
 def run_stream_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
@@ -716,25 +736,23 @@ def combine_sketch_partial(
     registers for the same input set. (HLL register-max merge is idempotent
     per key-set, so even the non-atomic state/ledger write pair — see
     combine_hourly_partial's caveat — cannot inflate estimates on replay.)"""
-    from pyspark.sql import functions as F
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    part = batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
-        F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("sketch")
-    )
-    state = _read_parquet_if_exists(spark, path)
-    if state is not None:
-        merged = (
-            state.unionByName(part)
-            .groupBy("day")
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
+    def write() -> None:
+        part = batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
+            F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("sketch")
         )
-    else:  # first epoch: no state yet
-        merged = part
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    commit_epoch(spark, epochs_path, epoch_id)
+        state = _read_parquet_if_exists(spark, path)
+        if state is not None:
+            merged = (
+                state.unionByName(part)
+                .groupBy("day")
+                .agg(F.hll_union_agg("sketch").alias("sketch"))
+            )
+        else:  # first epoch: no state yet
+            merged = part
+        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def incremental_distinct_sketches(
@@ -753,13 +771,7 @@ def incremental_distinct_sketches(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_sketch_partial(spark, path, batch_df, epoch_id, key_col, ts_col)
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold, "update")
 
 
 def read_distinct_estimates(spark, path: str) -> DataFrame:
@@ -835,36 +847,35 @@ def combine_cms_partial(
     """
     from demo_bigdata_spark.operators.sketches import merge_count_min
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    part_rows = (
-        batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
-        .agg(
-            F.count_min_sketch(
-                F.col(value_col), F.lit(0.001), F.lit(0.99), F.lit(42)
-            ).alias("blob")
+    def write() -> None:
+        part_rows = (
+            batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
+            .agg(
+                F.count_min_sketch(
+                    F.col(value_col), F.lit(0.001), F.lit(0.99), F.lit(42)
+                ).alias("blob")
+            )
+            .collect()
         )
-        .collect()
-    )
-    parts = {str(r["day"]): bytes(r["blob"]) for r in part_rows}
-    state = _read_parquet_if_exists(spark, path)
-    merged = (
-        {r["day"]: bytes(r["blob"]) for r in state.collect()}
-        if state is not None
-        else {}
-    )
-    for day, blob in parts.items():
-        merged[day] = (
-            merge_count_min([merged[day], blob]) if day in merged else blob
+        parts = {str(r["day"]): bytes(r["blob"]) for r in part_rows}
+        state = _read_parquet_if_exists(spark, path)
+        merged = (
+            {r["day"]: bytes(r["blob"]) for r in state.collect()}
+            if state is not None
+            else {}
         )
-    # direct overwrite is safe: prior state was already collect()ed into
-    # `merged`, so the write never reads the path it replaces (no staging
-    # round-trip, no leaked _tmp dir)
-    spark.createDataFrame(
-        sorted(merged.items()), "day string, blob binary"
-    ).write.mode("overwrite").parquet(path)
-    commit_epoch(spark, epochs_path, epoch_id)
+        for day, blob in parts.items():
+            merged[day] = (
+                merge_count_min([merged[day], blob]) if day in merged else blob
+            )
+        # direct overwrite is safe: prior state was already collect()ed into
+        # `merged`, so the write never reads the path it replaces (no staging
+        # round-trip, no leaked _tmp dir)
+        local_frame(
+            spark, sorted(merged.items()), "day string, blob binary"
+        ).write.mode("overwrite").parquet(path)
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def incremental_token_frequencies(
@@ -883,13 +894,7 @@ def incremental_token_frequencies(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_cms_partial(spark, path, batch_df, epoch_id, value_col, ts_col)
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold, "update")
 
 
 def read_frequency_estimates(spark, path: str, probes: list[str], days: list[str] | None = None):
@@ -950,36 +955,35 @@ def combine_pack_partial(
     """
     from demo_bigdata_spark.operators.text import pack_sequences
 
-    epochs_path = path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    base = (
-        committed_view(spark, path, epochs_path, _PACK_SCHEMA)
-        .agg(F.max(F.col("tok_offset") + F.col("n_tokens")))
-        .first()[0]
-        or 0
-    )
-    local = pack_sequences(batch_df, seq_len, text_col, id_col)
-    assigned = (
-        local.withColumn("tok_offset", F.col("tok_offset") + F.lit(int(base)))
-        .withColumn("pack_id", F.expr(f"tok_offset div {seq_len}"))
-        .withColumn("pack_offset", F.col("tok_offset") % seq_len)
-        .withColumn(
-            "spans_boundary",
-            (F.col("n_tokens") > 0)
-            & (
-                F.expr(f"(tok_offset + n_tokens - 1) div {seq_len}")
-                != F.col("pack_id")
-            ),
+    def write() -> None:
+        base = (
+            read_pack_assignments(spark, path)
+            .agg(F.max(F.col("tok_offset") + F.col("n_tokens")))
+            .first()[0]
+            or 0
         )
-    )
-    write_epoch_partition(assigned, path, epoch_id)
-    commit_epoch(spark, epochs_path, epoch_id)
+        local = pack_sequences(batch_df, seq_len, text_col, id_col)
+        assigned = (
+            local.withColumn("tok_offset", F.col("tok_offset") + F.lit(int(base)))
+            .withColumn("pack_id", F.expr(f"tok_offset div {seq_len}"))
+            .withColumn("pack_offset", F.col("tok_offset") % seq_len)
+            .withColumn(
+                "spans_boundary",
+                (F.col("n_tokens") > 0)
+                & (
+                    F.expr(f"(tok_offset + n_tokens - 1) div {seq_len}")
+                    != F.col("pack_id")
+                ),
+            )
+        )
+        write_epoch_partition(assigned, path, epoch_id)
+
+    fold_epoch(spark, path, epoch_id, write)
 
 
 def read_pack_assignments(spark, path: str) -> DataFrame:
     """The committed view of the continuous pack layout."""
-    return committed_view(spark, path, path + "_epochs", _PACK_SCHEMA)
+    return committed_view(spark, path, ledger_path(path), _PACK_SCHEMA)
 
 
 def incremental_sequence_packing(
@@ -997,13 +1001,7 @@ def incremental_sequence_packing(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_pack_partial(spark, path, batch_df, epoch_id, seq_len)
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_index_maintenance(
@@ -1027,13 +1025,7 @@ def incremental_index_maintenance(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         append_postings(spark, batch_df, path, epoch_id, text_col, id_col)
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def append_contamination_flags(
@@ -1054,17 +1046,16 @@ def append_contamination_flags(
     every incremental fold here shares."""
     from demo_bigdata_spark.operators.dedup import check_contamination_batch
 
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        check_contamination_batch(
-            spark, batch_df, index_path, n, text_col, id_col, portable
-        ),
-        out_path,
-        epoch_id,
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        write_epoch_partition(
+            check_contamination_batch(
+                spark, batch_df, index_path, n, text_col, id_col, portable
+            ),
+            out_path,
+            epoch_id,
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def read_contamination_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
@@ -1072,7 +1063,7 @@ def read_contamination_flags(spark, out_path: str, id_col: str = "doc_id") -> Da
     return committed_view(
         spark,
         out_path,
-        out_path + "_epochs",
+        ledger_path(out_path),
         f"{id_col} long, n_shared_shingles long, epoch_id long",
     )
 
@@ -1111,7 +1102,7 @@ def append_span_batch(
 
     Storage: ``out_path`` holds (span_hash, epoch_id) history rows,
     ``out_path + '_flags'`` holds (id, start, epoch_id) flag rows, each
-    epoch in its own partition; ONE ledger at ``out_path + '_epochs'``
+    epoch in its own partition; ONE ledger at ``ledger_path(out_path)``
     commits both.
 
     100 TB posture: per-batch work is O(batch grams) — one digest
@@ -1130,31 +1121,36 @@ def append_span_batch(
             "higher threshold is crossed in a later batch); use the batch "
             "span_flagged_starts for other thresholds"
         )
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    base = _span_base(batch_df.select(id_col, text_col), text_col, id_col)
-    grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
-        eager=False
-    )
-    # distinct: each epoch stores its own distinct digests, so a digest
-    # seen in several committed epochs has a row in each
-    history = (
-        committed_view(spark, out_path, epochs_path, "span_hash string, epoch_id long")
-        .select(F.col("span_hash").alias("_h"))
-        .distinct()
-    )
-    in_hist = grams.join(history, "_h", "left_semi").select(id_col, "_p")
-    fresh = grams.join(history, "_h", "left_anti")
-    in_batch = _flag_grams(fresh, min_count, "first", id_col)
-    flags = in_hist.unionByName(in_batch).select(
-        F.col(id_col), F.col("_p").cast("long").alias("start")
-    )
-    write_epoch_partition(flags, out_path + "_flags", epoch_id)
-    write_epoch_partition(
-        grams.select(F.col("_h").alias("span_hash")).distinct(), out_path, epoch_id
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+
+    def write() -> None:
+        base = _span_base(batch_df.select(id_col, text_col), text_col, id_col)
+        grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
+            eager=False
+        )
+        # distinct: each epoch stores its own distinct digests, so a digest
+        # seen in several committed epochs has a row in each
+        history = (
+            committed_view(
+                spark,
+                out_path,
+                ledger_path(out_path),
+                "span_hash string, epoch_id long",
+            )
+            .select(F.col("span_hash").alias("_h"))
+            .distinct()
+        )
+        in_hist = grams.join(history, "_h", "left_semi").select(id_col, "_p")
+        fresh = grams.join(history, "_h", "left_anti")
+        in_batch = _flag_grams(fresh, min_count, "first", id_col)
+        flags = in_hist.unionByName(in_batch).select(
+            F.col(id_col), F.col("_p").cast("long").alias("start")
+        )
+        write_epoch_partition(flags, out_path + "_flags", epoch_id)
+        write_epoch_partition(
+            grams.select(F.col("_h").alias("span_hash")).distinct(), out_path, epoch_id
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def append_span_batch_counted(
@@ -1205,92 +1201,92 @@ def append_span_batch_counted(
 
     Layout mirrors the min_count=2 index: ``out_path`` holds occurrence
     rows, ``out_path + '_flags'`` the flags, one ledger at
-    ``out_path + '_epochs'`` commits both."""
+    ``ledger_path(out_path)`` commits both."""
     from demo_bigdata_spark.operators.dedup import _span_base, _span_grams
 
     k = int(min_count)
     if k < 2:
         raise ValueError("min_count must be >= 2")
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    base = _span_base(batch_df.select(id_col, text_col), text_col, id_col)
-    grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
-        eager=False
-    )
-    # a document sent again in a later epoch stores its occurrences again;
-    # counting each (digest, id, start) once keeps h_count a count of
-    # corpus positions
-    hist = committed_view(
-        spark,
-        out_path,
-        epochs_path,
-        f"span_hash string, {id_col} long, start long, epoch_id long",
-    ).dropDuplicates(["span_hash", id_col, "start"]).select(
-        F.col("span_hash").alias("_h"),
-        F.col(id_col),
-        F.col("start").alias("_p"),
-    )
-    bstats = grams.groupBy("_h").agg(
-        F.count("*").alias("_bc"),
-        F.min(F.struct(F.col(id_col).alias("i"), F.col("_p").alias("p"))).alias(
-            "_bfirst"
-        ),
-    )
-    # history stats only for digests present in this batch: the join is
-    # keyed by digest, so per-batch work stays O(batch grams + matching
-    # history rows), never O(history)
-    hstats = (
-        hist.join(bstats.select("_h"), "_h", "left_semi")
-        .groupBy("_h")
-        .agg(
-            F.count("*").alias("_hc"),
-            F.min(
-                F.struct(F.col(id_col).alias("i"), F.col("_p").alias("p"))
-            ).alias("_hfirst"),
+
+    def write() -> None:
+        base = _span_base(batch_df.select(id_col, text_col), text_col, id_col)
+        grams = _span_grams(base, int(window), id_col, portable).localCheckpoint(
+            eager=False
         )
-    )
-    stats = (
-        bstats.join(hstats, "_h", "left")
-        .withColumn("_hc", F.coalesce(F.col("_hc"), F.lit(0)))
-        .filter(F.col("_hc") + F.col("_bc") >= k)
-        .localCheckpoint(eager=False)
-    )
-    flag_batch = (
-        grams.join(stats, "_h")
-        .filter(
-            ~(
-                (F.col("_hc") == 0)
-                & (F.col(id_col) == F.col("_bfirst.i"))
-                & (F.col("_p") == F.col("_bfirst.p"))
-            )
-        )
-        .select(id_col, "_p")
-    )
-    flag_hist = (
-        hist.join(stats.filter((F.col("_hc") > 0) & (F.col("_hc") < k)), "_h")
-        .filter(
-            ~(
-                (F.col(id_col) == F.col("_hfirst.i"))
-                & (F.col("_p") == F.col("_hfirst.p"))
-            )
-        )
-        .select(id_col, "_p")
-    )
-    flags = flag_batch.unionByName(flag_hist).select(
-        F.col(id_col), F.col("_p").cast("long").alias("start")
-    )
-    write_epoch_partition(flags, out_path + "_flags", epoch_id)
-    write_epoch_partition(
-        grams.select(
-            F.col("_h").alias("span_hash"),
+        # a document sent again in a later epoch stores its occurrences again;
+        # counting each (digest, id, start) once keeps h_count a count of
+        # corpus positions
+        hist = committed_view(
+            spark,
+            out_path,
+            ledger_path(out_path),
+            f"span_hash string, {id_col} long, start long, epoch_id long",
+        ).dropDuplicates(["span_hash", id_col, "start"]).select(
+            F.col("span_hash").alias("_h"),
             F.col(id_col),
-            F.col("_p").cast("long").alias("start"),
-        ),
-        out_path,
-        epoch_id,
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+            F.col("start").alias("_p"),
+        )
+        bstats = grams.groupBy("_h").agg(
+            F.count("*").alias("_bc"),
+            F.min(F.struct(F.col(id_col).alias("i"), F.col("_p").alias("p"))).alias(
+                "_bfirst"
+            ),
+        )
+        # history stats only for digests present in this batch: the join is
+        # keyed by digest, so per-batch work stays O(batch grams + matching
+        # history rows), never O(history)
+        hstats = (
+            hist.join(bstats.select("_h"), "_h", "left_semi")
+            .groupBy("_h")
+            .agg(
+                F.count("*").alias("_hc"),
+                F.min(
+                    F.struct(F.col(id_col).alias("i"), F.col("_p").alias("p"))
+                ).alias("_hfirst"),
+            )
+        )
+        stats = (
+            bstats.join(hstats, "_h", "left")
+            .withColumn("_hc", F.coalesce(F.col("_hc"), F.lit(0)))
+            .filter(F.col("_hc") + F.col("_bc") >= k)
+            .localCheckpoint(eager=False)
+        )
+        flag_batch = (
+            grams.join(stats, "_h")
+            .filter(
+                ~(
+                    (F.col("_hc") == 0)
+                    & (F.col(id_col) == F.col("_bfirst.i"))
+                    & (F.col("_p") == F.col("_bfirst.p"))
+                )
+            )
+            .select(id_col, "_p")
+        )
+        flag_hist = (
+            hist.join(stats.filter((F.col("_hc") > 0) & (F.col("_hc") < k)), "_h")
+            .filter(
+                ~(
+                    (F.col(id_col) == F.col("_hfirst.i"))
+                    & (F.col("_p") == F.col("_hfirst.p"))
+                )
+            )
+            .select(id_col, "_p")
+        )
+        flags = flag_batch.unionByName(flag_hist).select(
+            F.col(id_col), F.col("_p").cast("long").alias("start")
+        )
+        write_epoch_partition(flags, out_path + "_flags", epoch_id)
+        write_epoch_partition(
+            grams.select(
+                F.col("_h").alias("span_hash"),
+                F.col(id_col),
+                F.col("_p").cast("long").alias("start"),
+            ),
+            out_path,
+            epoch_id,
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def read_span_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
@@ -1300,7 +1296,7 @@ def read_span_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
     return committed_view(
         spark,
         out_path + "_flags",
-        out_path + "_epochs",
+        ledger_path(out_path),
         f"{id_col} long, start long, epoch_id long",
     )
 
@@ -1333,13 +1329,7 @@ def incremental_span_index(
             text_col, id_col, portable,
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def append_quality_scores(
@@ -1364,17 +1354,16 @@ def append_quality_scores(
     the scores they shipped with (the auditable production behavior)."""
     from demo_bigdata_spark.operators.text import classifier_quality_score
 
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        classifier_quality_score(
-            batch_df, weights, n_buckets, bias, text_col, id_col
-        ),
-        out_path,
-        epoch_id,
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        write_epoch_partition(
+            classifier_quality_score(
+                batch_df, weights, n_buckets, bias, text_col, id_col
+            ),
+            out_path,
+            epoch_id,
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def read_quality_scores(
@@ -1385,7 +1374,7 @@ def read_quality_scores(
     return committed_view(
         spark,
         out_path,
-        out_path + "_epochs",
+        ledger_path(out_path),
         f"{id_col} long, n_tokens bigint, raw_score double, "
         "quality_prob double, epoch_id long",
     )
@@ -1415,13 +1404,7 @@ def incremental_quality_scoring(
             text_col, id_col
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def append_bigram_lm_batch(
@@ -1449,21 +1432,20 @@ def append_bigram_lm_batch(
     with vocabulary x batches, never corpus tokens."""
     from demo_bigdata_spark.operators.text import _doc_bigrams, tokens
 
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    bg = _doc_bigrams(batch_df, text_col, id_col)
-    write_epoch_partition(
-        bg.groupBy("w1", "w2").agg(F.count("*").alias("c12")), out_path, epoch_id
-    )
-    write_epoch_partition(
-        batch_df.select(F.explode(tokens(text_col)).alias("token"))
-        .filter(F.col("token") != "")
-        .distinct(),
-        out_path + "_vocab",
-        epoch_id,
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        bg = _doc_bigrams(batch_df, text_col, id_col)
+        write_epoch_partition(
+            bg.groupBy("w1", "w2").agg(F.count("*").alias("c12")), out_path, epoch_id
+        )
+        write_epoch_partition(
+            batch_df.select(F.explode(tokens(text_col)).alias("token"))
+            .filter(F.col("token") != "")
+            .distinct(),
+            out_path + "_vocab",
+            epoch_id,
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def read_bigram_lm(spark, out_path: str):
@@ -1475,7 +1457,7 @@ def read_bigram_lm(spark, out_path: str):
     c12_rows = committed_view(
         spark,
         out_path,
-        out_path + "_epochs",
+        ledger_path(out_path),
         "w1 string, w2 string, c12 bigint, epoch_id long",
     )
     c12 = c12_rows.groupBy("w1", "w2").agg(F.sum("c12").alias("c12"))
@@ -1483,7 +1465,7 @@ def read_bigram_lm(spark, out_path: str):
     vocab_rows = committed_view(
         spark,
         out_path + "_vocab",
-        out_path + "_epochs",
+        ledger_path(out_path),
         "token string, epoch_id long",
     )
     vocab = vocab_rows.agg(F.count_distinct("token").alias("v"))
@@ -1510,13 +1492,7 @@ def incremental_bigram_lm(
             spark, batch_df, out_path, epoch_id, text_col, id_col
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_decontamination(
@@ -1543,13 +1519,7 @@ def incremental_decontamination(
             id_col, portable
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_vector_index(
@@ -1577,13 +1547,7 @@ def incremental_vector_index(
             spark, batch_df, index_path, centroids, epoch_id, vec_col, id_col
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_knn_graph(
@@ -1624,13 +1588,7 @@ def incremental_knn_graph(
             id_col=id_col,
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_positional_index_maintenance(
@@ -1656,13 +1614,7 @@ def incremental_positional_index_maintenance(
             spark, batch_df, path, epoch_id, text_col, id_col
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def append_shingle_batch(
@@ -1687,15 +1639,14 @@ def append_shingle_batch(
     write; nothing re-reads history at write time."""
     from demo_bigdata_spark.operators.dedup import shingle_hashes
 
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        shingle_hashes(batch_df, n=n, text_col=text_col, id_col=id_col),
-        out_path,
-        epoch_id,
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+    def write() -> None:
+        write_epoch_partition(
+            shingle_hashes(batch_df, n=n, text_col=text_col, id_col=id_col),
+            out_path,
+            epoch_id,
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def read_soft_dedup_weights(
@@ -1713,7 +1664,7 @@ def read_soft_dedup_weights(
     rows = committed_view(
         spark,
         out_path,
-        out_path + "_epochs",
+        ledger_path(out_path),
         f"{id_col} long, shingle_hash string, epoch_id long",
     ).dropDuplicates([id_col, "shingle_hash"])
     return soft_dedup_weights(rows.select(id_col, "shingle_hash"), id_col=id_col)
@@ -1739,13 +1690,7 @@ def incremental_soft_dedup(
             spark, batch_df, out_path, epoch_id, n, text_col, id_col
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def append_edge_batch(
@@ -1764,17 +1709,17 @@ def append_edge_batch(
     of the concatenated stream exactly — the bigram-LM
     recompute-from-counts discipline. Per-batch cost is one batch-sized
     aggregate + one write; history is never re-read at write time."""
-    epochs_path = out_path + "_epochs"
-    if epoch_already_applied(spark, epochs_path, epoch_id):
-        return
-    write_epoch_partition(
-        batch_df.groupBy(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).agg(F.count("*").cast("bigint").alias("w")),
-        out_path,
-        epoch_id,
-    )
-    commit_epoch(spark, epochs_path, epoch_id)
+
+    def write() -> None:
+        write_epoch_partition(
+            batch_df.groupBy(
+                F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+            ).agg(F.count("*").cast("bigint").alias("w")),
+            out_path,
+            epoch_id,
+        )
+
+    fold_epoch(spark, out_path, epoch_id, write)
 
 
 def read_edge_counts(spark, out_path: str) -> DataFrame:
@@ -1784,7 +1729,7 @@ def read_edge_counts(spark, out_path: str) -> DataFrame:
     rows = committed_view(
         spark,
         out_path,
-        out_path + "_epochs",
+        ledger_path(out_path),
         "src long, dst long, w long, epoch_id long",
     )
     return rows.groupBy("src", "dst").agg(
@@ -1817,13 +1762,7 @@ def incremental_edge_counts(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         append_edge_batch(spark, batch_df, out_path, epoch_id, src_col, dst_col)
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_dedup(
@@ -1860,13 +1799,7 @@ def incremental_dedup(
             rows=rows,
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def domain_cap_stream(
@@ -1952,13 +1885,7 @@ def incremental_histogram(
             value_col=value_col, lo=lo, hi=hi, n_bins=n_bins,
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def incremental_group_kl(
@@ -1986,10 +1913,4 @@ def incremental_group_kl(
             group_col=group_col, text_col=text_col,
         )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)

@@ -4943,9 +4943,9 @@ def _incremental_dedup_index(spark, sf_dir):
         + sf_dir.rstrip("/").rsplit("/", 1)[-1]
         + f"_{os.getpid()}"
     )
-    from demo_bigdata_spark.streaming.pipeline import committed_epochs
+    from demo_bigdata_spark.streaming.pipeline import committed_epochs, ledger_path
 
-    if committed_epochs(path + "_epochs") >= {0, 1, 2}:
+    if committed_epochs(ledger_path(path)) >= {0, 1, 2}:
         return path
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     for e in range(3):

@@ -530,3 +530,25 @@ def test_correlations_has_no_negative_zero(spark, sf_dir):
         for v in row[1:]:
             if v == 0.0:
                 assert math.copysign(1.0, v) == 1.0
+
+
+def test_local_frame_equals_the_list_built_frame(spark):
+    """local_frame (a pyarrow-built frame, no Python worker) gives the
+    list-built frame's schema and rows for every column type the driver
+    builds frames of, NULLs included, and for an empty row list."""
+    from demo_bigdata_spark.session import local_frame
+
+    ddl = "i bigint, s string, d double, b binary, f boolean"
+    rows = [
+        (1, "a", 1.5, b"\x00\x01", True),
+        (None, None, None, None, None),
+        (-(2**62), "", -0.0, b"", False),
+    ]
+    for data in (rows, []):
+        want = spark.createDataFrame(data, ddl)
+        got = local_frame(spark, data, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    typed = local_frame(spark, rows, want.schema)
+    assert typed.schema == want.schema
+    assert typed.collect() == spark.createDataFrame(rows, ddl).collect()

@@ -3594,3 +3594,122 @@ def test_live_index_is_not_served_before_its_first_commit(
     real_commit(spark, ivf + "_epochs", 0)
     assert bm25_rank_indexed(spark, idx, ["spark", "join"]).count() == 2
     assert ivf_topk_indexed(spark, ivf, C, q, k=5, n_probe=2).count() == 5
+
+
+def test_upsert_stream_fails_the_batch_and_keeps_an_unmergeable_target(
+    spark, tmp_path
+):
+    """Only a missing target is a first batch: a target the batch cannot be
+    merged into (here it carries an extra column) fails the micro-batch and
+    keeps its rows, instead of being overwritten by the batch alone."""
+    from pyspark.errors import StreamingQueryException
+
+    from demo_bigdata_spark.streaming.pipeline import write_upsert_stream
+
+    out = str(tmp_path / "uout")
+    spark.createDataFrame(
+        [(7, "g", 7.0, "x"), (8, "h", 8.0, "y"), (9, "i", 9.0, "z")],
+        "id long, tag string, v double, extra string",
+    ).write.parquet(out)
+    src = str(tmp_path / "usrc")
+    batch = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0)], "id long, tag string, v double"
+    )
+    batch.repartition(1).write.parquet(src)
+
+    stream = spark.readStream.schema(batch.schema).parquet(src)
+    q = write_upsert_stream(stream, out, str(tmp_path / "uckpt"), ["id"], 1)
+    try:
+        with pytest.raises(StreamingQueryException):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    kept = spark.read.parquet(out)
+    assert kept.columns == ["id", "tag", "v", "extra"]
+    assert sorted(tuple(r) for r in kept.collect()) == [
+        (7, "g", 7.0, "x"), (8, "h", 8.0, "y"), (9, "i", 9.0, "z")
+    ]
+
+
+def test_fold_epoch_skips_writes_and_commits_in_order(spark, tmp_path, monkeypatch):
+    """fold_epoch is the one check/write/commit sequence: a write that
+    raises commits nothing, the retry writes once and commits through the
+    module's commit_epoch, and a committed epoch never runs its write."""
+    import demo_bigdata_spark.streaming.pipeline as SPL
+
+    table = str(tmp_path / "t")
+    ledger = SPL.ledger_path(table)
+    assert ledger == table + "_epochs"
+    calls = []
+
+    def failing():
+        calls.append("fail")
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        SPL.fold_epoch(spark, table, 3, failing)
+    assert SPL.committed_epochs(ledger) == frozenset()
+
+    commits = []
+    real_commit = SPL.commit_epoch
+
+    def recording(spark_, path, eid):
+        commits.append((path, eid))
+        real_commit(spark_, path, eid)
+
+    monkeypatch.setattr(SPL, "commit_epoch", recording)
+    SPL.fold_epoch(spark, table, 3, lambda: calls.append("write"))
+    assert calls == ["fail", "write"]
+    assert commits == [(ledger, 3)]
+    assert SPL.committed_epochs(ledger) == {3}
+
+    SPL.fold_epoch(spark, table, 3, lambda: calls.append("again"))
+    assert calls == ["fail", "write"]
+    assert commits == [(ledger, 3)]
+
+
+def test_one_fold_driver_and_one_ledger_name():
+    """The stream starter, the applied-epoch check and the ledger's name
+    live in streaming/pipeline.py alone: a fold elsewhere goes through
+    fold_epoch and _start_fold, and a reader names its ledger with
+    ledger_path."""
+    import ast
+    import re
+
+    import demo_bigdata_spark
+
+    root = os.path.dirname(demo_bigdata_spark.__file__)
+    home = os.path.join(root, "streaming", "pipeline.py")
+    # the ledger suffix in any string form: "_epochs", '_epochs', f"{p}_epochs"
+    needles = {
+        "start": re.compile(r"\.foreachBatch\("),
+        "check": re.compile(r"\bepoch_already_applied\("),
+        "ledger": re.compile(r"(?<!\w)_epochs[\"']"),
+    }
+    found = {k: [] for k in needles}
+    for d, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(d, name)
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    for k, rx in needles.items():
+                        if rx.search(line):
+                            found[k].append((path, i, line.strip()))
+    outside = [hit for hits in found.values() for hit in hits if hit[0] != home]
+    assert outside == []
+    assert [h[2] for h in found["start"]] == [".foreachBatch(fold)"]
+    assert [h[2] for h in found["ledger"]] == ['return table + "_epochs"']
+    # inside pipeline.py, fold_epoch is the only caller of the check
+    with open(home) as f:
+        tree = ast.parse(f.read())
+    callers = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "epoch_already_applied"
+    ]
+    assert callers == ["fold_epoch"]
