@@ -123,11 +123,13 @@ def pin(expr: Column) -> Column:
     The always-true guard must not be provably-true: Spark 4 range-folds
     rand() comparisons (rand ∈ [0,1)), erasing the barrier; randn() is
     unbounded so randn() > -1e9 survives, and unlike
-    monotonically_increasing_id it is allowed in streaming plans. Cost: one
+    monotonically_increasing_id it is allowed in streaming plans. The seed
+    is fixed because it is compiled into the generated class: a fresh seed
+    per call made every warm run of a pinned query recompile. Cost: one
     gaussian draw per row. Use on parse/hash/array-heavy columns whose
     downstream filters would otherwise re-evaluate them (measured 2x on
     ingest, 6x on n-gram jaccard)."""
-    return F.when(F.randn() > -1e9, expr)
+    return F.when(F.randn(0) > -1e9, expr)
 
 
 def spread_for_cpu(df, min_bytes: int = 32 * 1024):
@@ -146,7 +148,12 @@ def spread_for_cpu(df, min_bytes: int = 32 * 1024):
       parallel win on inputs that small (the r5 winnowed_fingerprints
       regression), and a frame that tiny finishes instantly either way;
     - streaming plans can't inspect partitioning (no .rdd) and
-      micro-batches are already planned per-trigger — untouched."""
+      micro-batches are already planned per-trigger — untouched;
+    - a plan holding an Exchange (or adaptive subqueries) is left to AQE:
+      counting its partitions through ``.rdd`` runs its shuffle stages as
+      a throwaway job, which the real query then runs again. An
+      exchange-free plan (scan, local relation, checkpoint) is counted
+      through ``.rdd``, which launches nothing."""
     if df.isStreaming:
         return df
     if min_bytes:
@@ -158,6 +165,9 @@ def spread_for_cpu(df, min_bytes: int = 32 * 1024):
             est = None
         if est is not None and est < min_bytes:
             return df
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or "Exchange" in plan.toString():
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)

@@ -110,53 +110,27 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # --- MinHash + LSH -----------------------------------------------------------
 
 
-def minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 16,
-    shingle_n: int | None = None,
-    portable: bool = True,
-) -> DataFrame:
-    """Append ``sig``: array<bigint> of k MinHash values over distinct tokens
-    (or distinct ``shingle_n``-token shingles when given — the classic
-    shingle->minhash->band pipeline).
+def _hashed_token_set(text_col: str, portable: bool) -> Column:
+    """The distinct 28-bit hashes of a document's distinct tokens: the unit
+    set of both the MinHash signature and the Jaccard verifier. Hashing
+    shrinks the arrays carried through the pair joins and makes the
+    intersect integer-typed; any hash collision merges the same tokens on
+    both sides of an engine comparison, so the DuckDB twin (which hashes
+    identically) stays exact."""
+    return F.array_distinct(F.transform(distinct_tokens(text_col), _hasher(portable)))
 
-    minhash_i = min over units u of (a_i * h(u) + b_i) mod P. Linear scan,
-    no shuffle; k folds over the token array, all inside codegen. The
-    hashing is spread to core count when the scan is byte-thin
-    (scalar.spread_for_cpu — no-op on many-split production tables).
-    """
-    df = spread_for_cpu(df)
-    src = df
-    tk_col = None
-    if shingle_n is not None:
-        # two-step: materialize the token array behind a pinned projection,
-        # then shingle from the attribute — an inline tokens() expression
-        # inside the shingle lambda re-runs the regex split once per shingle
-        # position (O(L^2); measured 2.8x on minhash_shingles at sf0.1).
-        # The internal column name is collision-proofed: withColumn would
-        # silently REPLACE (and the final drop delete) a caller's column of
-        # the same name (the pct_of_total alias-collision class).
-        from demo_bigdata_spark.functions.scalar import pin
-        from demo_bigdata_spark.operators.text import shingles_of, tokens
 
-        tk_col = "_tk"
-        while tk_col in df.columns:
-            tk_col += "_"
-        src = df.withColumn(tk_col, pin(tokens(F.col(text_col))))
-        toks = F.array_distinct(shingles_of(F.col(tk_col), shingle_n))
-    else:
-        toks = distinct_tokens(text_col)
-    hashes = F.transform(toks, _hasher(portable))
+def _minhash_fold(hashes: Column, k: int) -> Column:
+    """array<bigint> of the k minima min over h of (a_i * h + b_i) mod P.
+
+    Single-pass fold computing all k mins at once. The naive form — k
+    separate array_min(transform(hashes, ...)) projections — gets the
+    `hashes` subtree (tokenize+shingle+md5) INLINED k times by Catalyst's
+    CollapseProject (no common-subexpression elimination across array
+    expressions), costing k full re-evaluations per row (~20x slower for
+    shingles). One aggregate references `hashes` exactly once; the finish
+    lambda keeps the struct->array extraction inside the fold too."""
     coeffs = MINHASH_COEFFS[:k]
-
-    # Single-pass fold computing all k mins at once. The naive form —
-    # k separate array_min(transform(hashes, ...)) projections — gets the
-    # `hashes` subtree (tokenize+shingle+md5) INLINED k times by Catalyst's
-    # CollapseProject (no common-subexpression elimination across array
-    # expressions), costing k full re-evaluations per row (~20x slower for
-    # shingles). One aggregate references `hashes` exactly once; the finish
-    # lambda keeps the struct->array extraction inside the fold too.
     init = F.struct(
         *[F.lit(MINHASH_PRIME).cast("bigint").alias(f"m{i}") for i in range(k)]
     )
@@ -174,8 +148,66 @@ def minhash_signature(
     def _finish(acc):
         return F.array(*[acc[f"m{i}"] for i in range(k)])
 
-    out = src.withColumn("sig", F.aggregate(hashes, init, _merge, _finish))
-    return out.drop(tk_col) if tk_col is not None else out
+    return F.aggregate(hashes, init, _merge, _finish)
+
+
+def minhash_signature(
+    df: DataFrame,
+    text_col: str = "text",
+    k: int = 16,
+    shingle_n: int | None = None,
+    portable: bool = True,
+) -> DataFrame:
+    """Append ``sig``: array<bigint> of k MinHash values over distinct tokens
+    (or distinct ``shingle_n``-token shingles when given — the classic
+    shingle->minhash->band pipeline).
+
+    minhash_i = min over units u of (a_i * h(u) + b_i) mod P. Linear scan,
+    no shuffle; k folds over the token array, all inside codegen. The
+    hashing is spread to core count when the scan is byte-thin
+    (scalar.spread_for_cpu — no-op on many-split production tables).
+    """
+    df = spread_for_cpu(df)
+    if shingle_n is None:
+        return df.withColumn("sig", _minhash_fold(_hashed_token_set(text_col, portable), k))
+    # two-step: materialize the token array behind a pinned projection,
+    # then shingle from the attribute — an inline tokens() expression
+    # inside the shingle lambda re-runs the regex split once per shingle
+    # position (O(L^2); measured 2.8x on minhash_shingles at sf0.1).
+    # The internal column name is collision-proofed: withColumn would
+    # silently REPLACE (and the final drop delete) a caller's column of
+    # the same name (the pct_of_total alias-collision class).
+    from demo_bigdata_spark.functions.scalar import pin
+    from demo_bigdata_spark.operators.text import shingles_of
+
+    tk_col = "_tk"
+    while tk_col in df.columns:
+        tk_col += "_"
+    src = df.withColumn(tk_col, pin(tokens(F.col(text_col))))
+    units = F.array_distinct(shingles_of(F.col(tk_col), shingle_n))
+    hashes = F.transform(units, _hasher(portable))
+    return src.withColumn("sig", _minhash_fold(hashes, k)).drop(tk_col)
+
+
+def _minhash_features(
+    df: DataFrame, text_col: str, id_col: str, portable: bool = True
+) -> DataFrame:
+    """The near-dup feature table ``(id_col, toks, n, sig)``: each document
+    is tokenized and hashed ONCE into its hashed token set ``toks``, and
+    both the LSH bands (via ``sig``, folded from ``toks``) and the Jaccard
+    verifier (``toks``, ``n``) read it. ``sig`` equals
+    :func:`minhash_signature`'s: the fold takes a min over the same hashes,
+    and dropping duplicate hashes cannot change a min. Spread to core count
+    when the scan is byte-thin, and materialized once behind a lazy
+    localCheckpoint — the persist-the-feature-table shape, as in
+    char_ngram_jaccard_pairs — because the band self-join, the bucket cap
+    and both verifier sides each read it."""
+    hashed = spread_for_cpu(df).select(
+        F.col(id_col), _hashed_token_set(text_col, portable).alias("toks")
+    )
+    return hashed.select(
+        id_col, "toks", F.size("toks").alias("n"), _minhash_fold(F.col("toks"), 16).alias("sig")
+    ).localCheckpoint(eager=False)
 
 
 def lsh_bands(df: DataFrame, id_col: str = "doc_id", bands: int = 4, rows: int = 4) -> DataFrame:
@@ -194,25 +226,15 @@ def lsh_bands(df: DataFrame, id_col: str = "doc_id", bands: int = 4, rows: int =
     )
 
 
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows: int = 4,
-    max_bucket: int | None = 1000,
-    portable: bool = True,
+def _band_self_join(
+    bands_df: DataFrame, id_col: str, max_bucket: int | None = None
 ) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing >=1 LSH band bucket.
-
-    Equi-join on (band_idx, band_sig); ``max_bucket`` drops degenerate
-    dup-farm buckets whose pairwise expansion would be quadratic (handle those
-    clusters by connected-component labeling instead)."""
-    sigs = minhash_signature(df, text_col, portable=portable)
-    bands_df = lsh_bands(sigs, id_col, bands, rows)
+    """Distinct candidate pairs (id_a < id_b) sharing >=1 LSH band bucket of
+    ``bands_df`` (id_col, band_idx, band_sig): the classic band-bucket
+    equi-join on (band_idx, band_sig). ``max_bucket`` drops degenerate
+    dup-farm buckets whose pairwise expansion would be quadratic (handle
+    those clusters by connected-component labeling instead)."""
     if max_bucket is not None:
-        from pyspark.sql import Window
-
         counts = bands_df.groupBy("band_idx", "band_sig").agg(F.count("*").alias("bn"))
         bands_df = bands_df.join(
             counts.filter(F.col("bn") <= max_bucket), ["band_idx", "band_sig"]
@@ -231,6 +253,77 @@ def minhash_candidates(
     )
 
 
+def _jaccard_verify(
+    cands: DataFrame,
+    feats: DataFrame,
+    id_col: str,
+    size_prune_threshold: float | None = None,
+    feats_b: DataFrame | None = None,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for candidate pairs (id_a, id_b): exact Jaccard
+    of the hashed token sets in ``feats`` (id_col, toks, n), with the id_b
+    side read from ``feats_b`` when given (a probe against another table),
+    rounded to 4 decimals.
+
+    ``size_prune_threshold`` t: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs
+    failing the size-ratio bound are dropped BEFORE the array joins, on the
+    two ints — a cheap prefilter that kills most skew from length-divergent
+    candidate pairs. It can drop a pair whose rounded Jaccard reaches t,
+    so callers without it keep every pair."""
+    from demo_bigdata_spark.functions.scalar import pin
+
+    feats_b = feats if feats_b is None else feats_b
+    cands = cands.select("id_a", "id_b")
+    if size_prune_threshold is not None:
+        sizes_a = feats.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
+        sizes_b = feats_b.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
+        cands = (
+            cands.join(sizes_a, "id_a")
+            .join(sizes_b, "id_b")
+            .filter(F.least("na", "nb") >= F.greatest("na", "nb") * size_prune_threshold)
+            .select("id_a", "id_b")
+        )
+    a = feats.select(
+        F.col(id_col).alias("id_a"), F.col("toks").alias("toks_a"), F.col("n").alias("na")
+    )
+    b = feats_b.select(
+        F.col(id_col).alias("id_b"), F.col("toks").alias("toks_b"), F.col("n").alias("nb")
+    )
+    # |A∪B| = |A|+|B|-|A∩B|: ONE array_intersect per pair (no array_union),
+    # pinned so neither the numerator/denominator pair nor a pushed-down
+    # threshold filter re-evaluates it (unpinned: 4 intersects per pair)
+    step = cands.join(a, "id_a").join(b, "id_b").select(
+        "id_a",
+        "id_b",
+        "na",
+        "nb",
+        pin(F.size(F.array_intersect("toks_a", "toks_b"))).alias("inter"),
+    )
+    return step.select(
+        "id_a",
+        "id_b",
+        F.round(
+            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
+            4,
+        ).alias("jaccard"),
+    )
+
+
+def minhash_candidates(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bands: int = 4,
+    rows: int = 4,
+    max_bucket: int | None = 1000,
+    portable: bool = True,
+) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) sharing >=1 LSH band bucket
+    (:func:`_band_self_join`, ``max_bucket`` capped)."""
+    sigs = minhash_signature(df, text_col, portable=portable)
+    return _band_self_join(lsh_bands(sigs, id_col, bands, rows), id_col, max_bucket)
+
+
 def jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -240,65 +333,28 @@ def jaccard_pairs(
     portable: bool = True,
 ) -> DataFrame:
     """Verify candidate pairs with token-set Jaccard computed on *hashed*
-    token sets (array<bigint> instead of array<string>).
+    token sets (array<bigint> instead of array<string>;
+    :func:`_jaccard_verify` over :func:`_minhash_features`)."""
+    feats = _minhash_features(df, text_col, id_col, portable)
+    return _jaccard_verify(pairs, feats, id_col, size_prune_threshold)
 
-    Hashing shrinks the arrays carried through the pair join and makes the
-    intersect integer-typed (much cheaper than string compares). Any hash
-    collision merges the same tokens on both sides of an engine comparison,
-    so the DuckDB twin (which hashes identically) stays exact.
 
-    ``size_prune_threshold``: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs
-    failing the size-ratio bound can be dropped BEFORE the array join without
-    changing any result above the threshold — a cheap int-only prefilter that
-    kills most skew from length-divergent candidate pairs.
-    """
-    toks = df.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(distinct_tokens(text_col), _hasher(portable))
-        ).alias("toks"),
-    ).withColumn("n", F.size("toks"))
-    # four branches below (sizes_a/sizes_b/a/b) would each re-run the
-    # tokenize+md5 subtree; materialize the token table once (lazy
-    # localCheckpoint — the persist-the-feature-table shape, as in
-    # char_ngram_jaccard_pairs)
-    toks = toks.localCheckpoint(eager=False)
-    sizes_a = toks.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    sizes_b = toks.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-    pruned = pairs.join(sizes_a, "id_a").join(sizes_b, "id_b")
-    if size_prune_threshold is not None:
-        pruned = pruned.filter(
-            F.least("na", "nb") >= F.greatest("na", "nb") * size_prune_threshold
-        )
-    a = toks.select(F.col(id_col).alias("id_a"), F.col("toks").alias("toks_a"))
-    b = toks.select(F.col(id_col).alias("id_b"), F.col("toks").alias("toks_b"))
-    from demo_bigdata_spark.functions.scalar import pin
-
-    # |A∪B| = |A|+|B|-|A∩B|: ONE array_intersect per pair (no array_union),
-    # pinned so neither the numerator/denominator pair nor a pushed-down
-    # threshold filter re-evaluates it (unpinned: 4 intersects per pair)
-    step = (
-        pruned.select("id_a", "id_b", "na", "nb")
-        .join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "na",
-            "nb",
-            pin(F.size(F.array_intersect("toks_a", "toks_b"))).alias("inter"),
-        )
-    )
-    return (
-        step.select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
-                4,
-            ).alias("jaccard"),
-        )
+def _near_dup_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    bands: int,
+    rows: int,
+    max_bucket: int | None,
+    portable: bool,
+) -> DataFrame:
+    """Verified (id_a, id_b, jaccard >= threshold) pairs: one feature table
+    feeds both the band self-join and the verifier."""
+    feats = _minhash_features(df, text_col, id_col, portable)
+    cands = _band_self_join(lsh_bands(feats, id_col, bands, rows), id_col, max_bucket)
+    return _jaccard_verify(cands, feats, id_col, size_prune_threshold=threshold).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -320,10 +376,7 @@ def near_duplicates(
     hash family, so borderline candidate recall can differ, but verified
     pairs at a given threshold are hash-family-independent in practice
     (pinned on the fixture corpus by tests/test_fast_hash_path.py)."""
-    cands = minhash_candidates(df, text_col, id_col, bands, rows, portable=portable)
-    return jaccard_pairs(
-        df, cands, text_col, id_col, size_prune_threshold=threshold, portable=portable
-    ).filter(F.col("jaccard") >= threshold)
+    return _near_dup_pairs(df, text_col, id_col, threshold, bands, rows, 1000, portable)
 
 
 def simhash_pairs(
@@ -1021,14 +1074,11 @@ def build_dedup_index(
     probe it (``incremental_near_duplicates``) without re-hashing history —
     the only sane dedup flow once the corpus is 100 TB.
     """
-    sigs = minhash_signature(df, text_col)
-    lsh_bands(sigs, id_col, bands, rows).write.mode("overwrite").partitionBy(
+    feats = _minhash_features(df, text_col, id_col)
+    lsh_bands(feats, id_col, bands, rows).write.mode("overwrite").partitionBy(
         "band_idx"
     ).parquet(path + "/bands")
-    df.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(distinct_tokens(text_col), token_hash)).alias("toks"),
-    ).write.mode("overwrite").parquet(path + "/toks")
+    feats.select(id_col, "toks").write.mode("overwrite").parquet(path + "/toks")
 
 
 def incremental_near_duplicates(
@@ -1048,8 +1098,8 @@ def incremental_near_duplicates(
     computed fresh, corpus side read from the index. Returns
     (new_id, corpus_id, jaccard) pairs at or above ``threshold``.
     """
-    new_sigs = minhash_signature(new_docs, text_col)
-    nb = lsh_bands(new_sigs, id_col, bands, rows).select(
+    new = _minhash_features(new_docs, text_col, id_col)
+    nb = lsh_bands(new, id_col, bands, rows).select(
         F.col(id_col).alias("new_id"), "band_idx", "band_sig"
     )
     ib = spark.read.parquet(index_path + "/bands").select(
@@ -1058,27 +1108,14 @@ def incremental_near_duplicates(
     cands = (
         ib.join(F.broadcast(nb), ["band_idx", "band_sig"])
         .filter(F.col("corpus_id") != F.col("new_id"))
-        .select("new_id", "corpus_id")
+        .select(F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b"))
         .distinct()
     )
-    new_toks = new_docs.select(
-        F.col(id_col).alias("new_id"),
-        F.array_distinct(F.transform(distinct_tokens(text_col), token_hash)).alias("toks_n"),
-    )
-    idx_toks = spark.read.parquet(index_path + "/toks").select(
-        F.col(id_col).alias("corpus_id"), F.col("toks").alias("toks_c")
-    )
-    inter = F.size(F.array_intersect("toks_n", "toks_c"))
-    union = F.size("toks_n") + F.size("toks_c") - inter
+    idx_toks = spark.read.parquet(index_path + "/toks").withColumn("n", F.size("toks"))
     return (
-        cands.join(F.broadcast(new_toks), "new_id")
-        .join(idx_toks, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(inter / union.cast("double"), 4).alias("jaccard"),
-        )
+        _jaccard_verify(cands, F.broadcast(new), id_col, feats_b=idx_toks)
         .filter(F.col("jaccard") >= threshold)
+        .select(F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard")
     )
 
 
@@ -1658,55 +1695,6 @@ def soft_dedup_weights(
 # contract already states the full scan).
 
 
-def _jaccard_from_toks(cands: DataFrame, toks: DataFrame) -> DataFrame:
-    """jaccard_pairs' exact formula over a prebuilt (id, toks, n) table —
-    identical hashed-token math, so incremental values equal batch values
-    bit-for-bit."""
-    from demo_bigdata_spark.functions.scalar import pin
-
-    a = toks.select(
-        F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"), F.col("n").alias("na")
-    )
-    b = toks.select(
-        F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"), F.col("n").alias("nb")
-    )
-    step = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "na",
-            "nb",
-            pin(F.size(F.array_intersect("toks_a", "toks_b"))).alias("inter"),
-        )
-    )
-    return step.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
-            4,
-        ).alias("jaccard"),
-    )
-
-
-def _batch_band_tok_tables(
-    batch_df: DataFrame, text_col: str, id_col: str, bands: int, rows: int
-):
-    sigs = minhash_signature(batch_df, text_col)
-    nb = lsh_bands(sigs, id_col, bands, rows).select(
-        F.col(id_col).alias("doc_id"), "band_idx", "band_sig"
-    )
-    nt = batch_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(F.transform(distinct_tokens(text_col), token_hash)).alias(
-            "toks"
-        ),
-    ).withColumn("n", F.size("toks"))
-    return nb, nt
-
-
 def append_dedup_batch(
     spark,
     batch_df: DataFrame,
@@ -1741,9 +1729,11 @@ def append_dedup_batch(
         if batch_df.isEmpty():  # nothing to write; the epoch still commits
             return
 
-        nb, nt = _batch_band_tok_tables(batch_df, text_col, id_col, bands, rows)
-        nb = nb.localCheckpoint(eager=True)
-        nt = nt.localCheckpoint(eager=True)
+        feats = _minhash_features(
+            batch_df.select(F.col(id_col).alias("doc_id"), text_col), text_col, "doc_id"
+        )
+        nb = lsh_bands(feats, "doc_id", bands, rows)
+        nt = feats.select("doc_id", "toks", "n")
 
         ib = read_dedup_bands(spark, index_path)
         cross = (
@@ -1756,21 +1746,11 @@ def append_dedup_batch(
             )
             .distinct()
         )
-        a = nb.alias("a")
-        b = nb.alias("b")
-        internal = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_sig") == F.col("b.band_sig"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .distinct()
-        )
-        cands = cross.unionByName(internal).distinct()
+        cands = cross.unionByName(_band_self_join(nb, "doc_id")).distinct()
         toks_all = read_dedup_toks(spark, index_path).unionByName(nt)
-        pairs = _jaccard_from_toks(cands, toks_all).filter(F.col("jaccard") >= threshold)
+        pairs = _jaccard_verify(cands, toks_all, "doc_id").filter(
+            F.col("jaccard") >= threshold
+        )
         write_epoch_partition(pairs, index_path + "/pairs", epoch_id)
         write_epoch_partition(nb, index_path + "/bands", epoch_id, ("band_idx",))
         write_epoch_partition(nt, index_path + "/toks", epoch_id)
@@ -1854,12 +1834,9 @@ def near_dup_survivors(
     :func:`duplicate_clusters`-style labeling — compose both when farms are
     expected). Returns (id_col, cluster_id, keep) for EVERY input doc.
     """
-    cands = minhash_candidates(
-        df, text_col, id_col, bands, rows, max_bucket=max_bucket, portable=portable
+    pairs = _near_dup_pairs(
+        df, text_col, id_col, threshold, bands, rows, max_bucket, portable
     )
-    pairs = jaccard_pairs(
-        df, cands, text_col, id_col, size_prune_threshold=threshold, portable=portable
-    ).filter(F.col("jaccard") >= threshold)
     return _survivors_from_pairs(
         pairs.select("id_a", "id_b"), df.select(id_col), id_col, max_iterations
     )

@@ -94,6 +94,9 @@ def get_spark(
         # INT96 (the default) is deprecated and stats-less in parquet
         # footers; micros keeps manifest timestamp bounds harvestable
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        # generated-class cache (static): the default 100 entries is smaller
+        # than one corpus-curation pass, so every warm pass recompiled ~155
+        "spark.sql.codegen.cache.maxEntries": "2000",
         "spark.ui.showConsoleProgress": "false",
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),

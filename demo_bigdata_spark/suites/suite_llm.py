@@ -4986,7 +4986,7 @@ def _sql_dedup_survivors() -> str:
     # UNCAPPED candidates (all_bands, not the capped `bands` view): the
     # incremental index deliberately applies no bucket cap — see
     # append_dedup_batch's cost contract. Jaccard rounds to 4dp before the
-    # threshold, matching _jaccard_from_toks.
+    # threshold, matching dedup._jaccard_verify.
     return f"""
 WITH {_SQL_SIGS_CTE},
 toksh AS (SELECT doc_id, list_distinct(list_transform(tk, t -> {SQL_H7})) AS hk FROM toks),

@@ -1296,6 +1296,55 @@ def test_spread_for_cpu_guards(spark, sf_dir):
     assert spread_for_cpu(stream) is stream
 
 
+def test_spread_for_cpu_launches_no_job(spark, sf_dir):
+    """spread_for_cpu decides without running its input: a grouped frame
+    (its partition count is AQE's to decide at run time) comes back
+    untouched with zero Spark jobs launched, and a one-file scan is still
+    counted and widened to defaultParallelism, also without a job."""
+    import uuid
+
+    from demo_bigdata_spark.functions.scalar import spread_for_cpu
+
+    sc = spark.sparkContext
+
+    def jobs_in(fn):
+        group = f"spread-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "spread_for_cpu job count")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    grouped = spark.range(200_000).groupBy((F.col("id") % 1000).alias("k")).count()
+    out, jobs = jobs_in(lambda: spread_for_cpu(grouped))
+    assert out is grouped and jobs == 0
+
+    thin = load_table(spark, sf_dir, "documents")
+    out, jobs = jobs_in(lambda: spread_for_cpu(thin, min_bytes=0))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == sc.defaultParallelism
+
+
+def test_warm_curation_chain_compiles_no_new_class(spark, sf_dir):
+    """The generated-class cache holds a whole corpus-curation chain (URL,
+    exact, near-dup CC, Gopher, mixture): a second identical run reuses
+    its generated classes. At Spark's default 100 entries the second run
+    recompiled 94 of the first run's 124. A few recompiles remain possible:
+    adaptive execution can turn a join into a broadcast join on one run
+    and not the other, which generates a differently shaped stage (seen:
+    0 to 4 per run)."""
+    from demo_bigdata_spark.suites.suite_llm import q_corpus_pipeline_v5
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = compiled.METRIC_COMPILATION_TIME()
+    first = sorted(q_corpus_pipeline_v5(spark, sf_dir).collect())
+    before = compiled.getCount()
+    second = sorted(q_corpus_pipeline_v5(spark, sf_dir).collect())
+    assert second == first and first
+    assert compiled.getCount() - before <= 10
+
+
 def test_scd2_merge_versioning_chain(spark):
     """Multi-batch SCD2: latest-update-wins within a batch, no-op updates
     leave the version chain untouched, real changes close the open row

@@ -2745,6 +2745,38 @@ def test_incremental_dedup_matches_batch(spark, sf_dir, tmp_path):
     append_dedup_batch(spark, docs.filter(F.lit(False)), idx_p, epoch_id=78)
     assert live() == after
 
+    # one near-dup kernel behind every entry point: the batch pipeline, the
+    # verifier over batch candidates, a two-epoch live index and the
+    # cross-half probe give the same (id_a, id_b, jaccard) rows, bit for bit
+    from demo_bigdata_spark.operators.dedup import (
+        _minhash_features,
+        build_dedup_index,
+        incremental_near_duplicates,
+        minhash_signature,
+        near_duplicates,
+    )
+
+    assert {tuple(r) for r in near_duplicates(docs, threshold=thr).collect()} == batch_pairs
+    cut = docs.agg(F.expr("percentile(doc_id, 0.5)")).first()[0]
+    old, new = docs.filter(F.col("doc_id") <= cut), docs.filter(F.col("doc_id") > cut)
+    two = str(tmp_path / "didx2")
+    append_dedup_batch(spark, old, two, epoch_id=0, threshold=thr)
+    append_dedup_batch(spark, new, two, epoch_id=1, threshold=thr)
+    assert {tuple(r) for r in read_near_dup_pairs(spark, two).collect()} == batch_pairs
+    built = str(tmp_path / "dbuilt")
+    build_dedup_index(old, built)
+    cross = {
+        (r["corpus_id"], r["new_id"], r["jaccard"])
+        for r in incremental_near_duplicates(spark, new, built, threshold=thr).collect()
+    }
+    assert cross == {p for p in batch_pairs if p[0] <= cut < p[1]} and cross
+
+    # the feature table's signature is minhash_signature's, for both hashes
+    for portable in (True, False):
+        feats = _minhash_features(docs, "text", "doc_id", portable).select("doc_id", "sig")
+        sigs = minhash_signature(docs, portable=portable).select("doc_id", "sig")
+        assert dict(map(tuple, feats.collect())) == dict(map(tuple, sigs.collect()))
+
 
 def _unionfind_survivors(pairs, universe):
     """Independent reference: pure-Python union-find over (id_a, id_b)
