@@ -265,100 +265,14 @@ def pagerank(
         prof = nodes.join(
             srcs.withColumn("_t0", F.lit(1).cast("bigint")), node_col, "left"
         ).select(node_col, F.coalesce("_t0", F.lit(0)).alias("_t"))
-    # --- dimension-sized graphs: iterate on the driver (r13, see the
-    # _DRIVER_GRAPH_* constants). The node universe is already counted;
-    # the edge bound is enforced by a limit-probe collect, so a tiny
-    # universe with a pathological multi-edge frame still falls through
-    # to the distributed loop.
-    if n_nodes <= _DRIVER_GRAPH_MAX_NODES:
-        cand = edges.join(wout, src_col).select(
-            F.col(src_col).alias("_src"),
-            F.col(dst_col).alias("_dst"),
-            F.col(weight_col).cast("bigint").alias("_w"),
-            "_wout",
-        )
-        erows = cand.limit(_DRIVER_GRAPH_MAX_EDGES + 1).collect()
-        if len(erows) <= _DRIVER_GRAPH_MAX_EDGES:
-            profd = prof.join(
-                wout.select(F.col(src_col).alias(node_col), F.lit(1).alias("_o")),
-                node_col,
-                "left",
-            ).select(
-                node_col,
-                "_t",
-                F.when(F.col("_o").isNull(), F.lit(1))
-                .otherwise(F.lit(0))
-                .alias("_d"),
-            )
-            prof_rows = [(r[node_col], r["_t"], r["_d"]) for r in profd.collect()]
-            if sources is None:
-                n_tele = n_nodes
-            else:
-                n_tele = sum(1 for r in prof_rows if r[1] == 1)
-                if n_tele == 0:
-                    raise ValueError("pagerank: no source is in the node universe")
-            base = ((scale // n_tele) * (den - num)) // den
-            init_rank = None
-            if init_ranks is not None:
-                # bound the collect to the (<=256-node) universe: a warm-
-                # start frame carried over from a much larger graph must
-                # not land on the driver wholesale (r13 ADVICE) — the
-                # distributed path joins it, so only universe rows matter
-                init_rank = {
-                    r[node_col]: int(r["rank"])
-                    for r in init_ranks.select(node_col, "rank")
-                    .join(F.broadcast(nodes), node_col, "left_semi")
-                    .collect()
-                }
-            rank = _pagerank_driver_loop(
-                prof_rows,
-                [
-                    (r["_src"], r["_dst"], int(r["_w"]), int(r["_wout"]))
-                    for r in erows
-                ],
-                n_tele,
-                base,
-                num,
-                den,
-                scale,
-                init_rank,
-                iters if eps is None else int(max_iters),
-                eps,
-                stats,
-            )
-            edges.unpersist(blocking=False)
-            if edges is not raw_edges:
-                raw_edges.unpersist(blocking=False)
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            schema = StructType(
-                [
-                    StructField(node_col, nodes.schema[node_col].dataType, True),
-                    StructField("rank", LongType(), True),
-                ]
-            )
-            return local_frame(
-                nodes.sparkSession, [(v, rank[v]) for v, _, _ in prof_rows], schema
-            )
-
-    # normalize + co-partition the edges ONCE; every iteration reuses this.
-    # CACHE, not localCheckpoint: a checkpoint erases outputPartitioning
-    # and size statistics, so every iteration's join re-exchanged BOTH
-    # sides (measured on the x30 probe: SortMergeJoin with two Exchanges);
-    # the cached plan keeps the repartition's hash partitioning, so only
-    # the node-sized rank frame ever moves
-    en = (
-        edges.join(wout, src_col)
-        .select(
-            F.col(src_col).alias("_src"),
-            F.col(dst_col).alias("_dst"),
-            F.col(weight_col).cast("bigint").alias("_w"),
-            "_wout",
-        )
-        .repartition(F.col("_src"))
-        .persist()
+    # the normalized edge list (_src, _dst, _w, _wout) and the static
+    # per-node profile (_t teleport, _d dangling flag), shared by both loops
+    cand = edges.join(wout, src_col).select(
+        F.col(src_col).alias("_src"),
+        F.col(dst_col).alias("_dst"),
+        F.col(weight_col).cast("bigint").alias("_w"),
+        "_wout",
     )
-    en.count()  # materialize the cache before the loop
     prof = prof.join(
         wout.select(F.col(src_col).alias(node_col), F.lit(1).alias("_o")),
         node_col,
@@ -368,18 +282,80 @@ def pagerank(
         "_t",
         F.when(F.col("_o").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("_d"),
     )
+    # --- dimension-sized graphs iterate on the driver (r13, see the
+    # _DRIVER_GRAPH_* constants). The node universe is already counted;
+    # the edge bound is enforced by a limit-probe collect, so a tiny
+    # universe with a pathological multi-edge frame still falls through
+    # to the distributed loop.
+    erows = None
+    if n_nodes <= _DRIVER_GRAPH_MAX_NODES:
+        erows = cand.limit(_DRIVER_GRAPH_MAX_EDGES + 1).collect()
+        if len(erows) > _DRIVER_GRAPH_MAX_EDGES:
+            erows = None
+    if erows is not None:
+        prof_rows = [(r[node_col], r["_t"], r["_d"]) for r in prof.collect()]
+    else:
+        # normalize + co-partition the edges ONCE; every iteration reuses
+        # this. CACHE, not localCheckpoint: a checkpoint erases
+        # outputPartitioning and size statistics, so every iteration's join
+        # re-exchanged BOTH sides (measured on the x30 probe: SortMergeJoin
+        # with two Exchanges); the cached plan keeps the repartition's hash
+        # partitioning, so only the node-sized rank frame ever moves
+        en = cand.repartition(F.col("_src")).persist()
+        en.count()  # materialize the cache before the loop
+        prof = prof.localCheckpoint(eager=True)
     if sources is None:
         n_tele = n_nodes
-        prof = prof.localCheckpoint(eager=True)
     else:
-        prof = prof.localCheckpoint(eager=True)
-        n_tele = prof.filter(F.col("_t") == 1).count()
+        n_tele = (
+            sum(1 for r in prof_rows if r[1] == 1)
+            if erows is not None
+            else prof.filter(F.col("_t") == 1).count()
+        )
         if n_tele == 0:
             raise ValueError("pagerank: no source is in the node universe")
     base = ((scale // n_tele) * (den - num)) // den
-    edges.unpersist(blocking=False)  # en/nodes/prof are pinned copies
+    edges.unpersist(blocking=False)  # the loops read pinned copies
     if edges is not raw_edges:
         raw_edges.unpersist(blocking=False)
+
+    if erows is not None:
+        init_rank = None
+        if init_ranks is not None:
+            # bound the collect to the (<=256-node) universe: a warm-
+            # start frame carried over from a much larger graph must
+            # not land on the driver wholesale (r13 ADVICE) — the
+            # distributed path joins it, so only universe rows matter
+            init_rank = {
+                r[node_col]: int(r["rank"])
+                for r in init_ranks.select(node_col, "rank")
+                .join(F.broadcast(nodes), node_col, "left_semi")
+                .collect()
+            }
+        rank = _pagerank_driver_loop(
+            prof_rows,
+            [(r["_src"], r["_dst"], int(r["_w"]), int(r["_wout"])) for r in erows],
+            n_tele,
+            base,
+            num,
+            den,
+            scale,
+            init_rank,
+            iters if eps is None else int(max_iters),
+            eps,
+            stats,
+        )
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        schema = StructType(
+            [
+                StructField(node_col, nodes.schema[node_col].dataType, True),
+                StructField("rank", LongType(), True),
+            ]
+        )
+        return local_frame(
+            nodes.sparkSession, [(v, rank[v]) for v, _, _ in prof_rows], schema
+        )
 
     ranks = prof.select(
         F.col(node_col),

@@ -14,8 +14,12 @@ same shape: assign -> bucket join -> score.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -72,71 +76,20 @@ def multi_query_topk(
     numeric contract as ``all_pairs_above``. At 100 TB: corpus scanned
     once regardless of Q; the final window moves only
     partitions * k * Q candidate rows."""
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
     qids = sorted(query_vecs)
     Q = np.array([query_vecs[q] for q in qids], dtype=np.float64)
-    Qn = np.linalg.norm(Q, axis=1)
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    # one constant cluster that every query may read: the masked scan
+    # of the batched IVF variants with nothing masked out
+    scoped = df.select(
+        F.col(id_col), F.lit(0).alias("cluster"), _as_double(vec_col).alias("v")
+    )
+    allowed = np.ones((1, len(qids)), dtype=bool)
+    return _masked_multi_query_scan(
+        scoped, qids, Q, np.linalg.norm(Q, axis=1), allowed, k, id_col
     )
 
-    def _score(batches):
-        # accumulate per-partition top-k per query across Arrow batches
-        best: dict[int, list] = {q: [] for q in qids}
-        import heapq
 
-        for pdf in batches:
-            V = np.array(list(pdf["v"]), dtype=np.float64)
-            if not len(V):
-                continue
-            ids = pdf["_id"].to_numpy()
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.round(
-                    (V @ Q.T)
-                    / np.outer(np.linalg.norm(V, axis=1), Qn),
-                    4,
-                )
-            cos = np.nan_to_num(cos, nan=-2.0)  # zero vectors sort last
-            for j, qid in enumerate(qids):
-                col = cos[:, j]
-                # (cosine, -id) max-heap semantics via heapq.nlargest
-                cand = best[qid] + list(zip(col.tolist(), (-ids).tolist()))
-                best[qid] = heapq.nlargest(k, cand)
-        rows = {
-            "query_id": [],
-            id_col: [],
-            "cosine": [],
-        }
-        for qid in qids:
-            for c, negid in best[qid]:
-                if c <= -2.0:
-                    continue
-                rows["query_id"].append(qid)
-                rows[id_col].append(-negid)
-                rows["cosine"].append(c)
-        yield pd.DataFrame(rows, dtype=None).astype(
-            {"query_id": "int64", id_col: "int64", "cosine": "float64"}
-        )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), _as_double(vec_col).alias("v")
-    )
-    local = src.mapInPandas(_score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col(id_col)
-    )
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("query_id", F.desc("cosine"), id_col)
-    )
+_PAIR_SCHEMA = "id_a long, id_b long, cosine double"
 
 
 def all_pairs_above(
@@ -144,151 +97,148 @@ def all_pairs_above(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "blocked",
     n_blocks: int = 8,
 ) -> DataFrame:
     """All pairs with cosine >= threshold (id_a < id_b). Exact, O(n^2) —
     the correctness baseline; :func:`lsh_pairs_above` is the sub-quadratic
     scale path.
 
-    method="blocked" (default): block-matrix strategy — hash-partition ids
-    into ``n_blocks`` blocks, nest each block's vectors into one row
-    (collect_list), cross-join the O(n_blocks^2 / 2) block pairs, and score
-    each pair of blocks with one vectorized numpy GEMM inside mapInPandas
-    (Arrow-batched). This turns ~n^2 interpreted expression evaluations into
-    a handful of BLAS calls — ~50x faster than the expression path at 2k
-    vectors, and each task's memory is bounded by two blocks.
-
-    method="expr": pure-Catalyst nested-loop join with per-pair dot products.
-    Keep for reference/debug; higher-order-function aggregates are interpreted
-    (not codegen'd), so this path is slow at scale.
-
-    method="arrow": the blocked strategy on ``mapInArrow`` — vectors are
-    reshaped straight from the Arrow list buffers into the GEMM operand
-    (zero pandas object conversion of the nested structs). Same results,
-    same plan shape; preferable when block rows are large enough that the
-    pandas materialization of list<struct<long,list<double>>> shows up.
+    Block-matrix strategy: hash-partition ids into ``n_blocks`` blocks,
+    nest each block's vectors into one row, cross-join the
+    O(n_blocks^2 / 2) block pairs (:func:`_block_pairs`), and score each
+    pair of blocks with one vectorized numpy GEMM (:func:`_score_block_pairs`).
+    This turns ~n^2 interpreted expression evaluations into a handful of
+    BLAS calls — ~50x faster than a per-pair Catalyst self-join at 2k
+    vectors, and each task's memory is bounded by two blocks. A zero vector
+    has no cosine and is never paired.
     """
-    if method == "expr":
-        a = df.select(F.col(id_col).alias("id_a"), _as_double(vec_col).alias("va"))
-        b = df.select(F.col(id_col).alias("id_b"), _as_double(vec_col).alias("vb"))
+    rows = df.select(
+        F.col(id_col).alias("vid"), _as_double(vec_col).alias("v")
+    ).withColumn("blk", F.pmod(F.hash("vid"), F.lit(n_blocks)))
+    return _score_block_pairs(
+        _block_pairs(rows), partial(_emit_pairs, threshold), _PAIR_SCHEMA
+    )
+
+
+def _block_pairs(rows: DataFrame, *keys: str) -> DataFrame:
+    """The blocked-GEMM block pairs of a rows frame ``(keys…, blk, vid, v)``:
+    each ``(keys…, blk)`` group nests into one ``items`` list of
+    ``(vid, v)`` structs, and the blocks self-join on ``keys`` with
+    ``blk_a <= blk_b``, so every unordered pair of rows that share the keys
+    meets in exactly one block pair. Without keys the join is the
+    O(n_blocks^2 / 2) nested loop over a fixed block count. With keys it
+    is an equi-join (never a cartesian product); the callers derive the
+    per-key block count from a window count, so the nested blocks are
+    pinned with an eager localCheckpoint first — otherwise both join sides
+    recompute the window + collect_list chain."""
+    blocks = rows.groupBy(*keys, "blk").agg(
+        F.collect_list(F.struct("vid", "v")).alias("items")
+    )
+    if keys:
+        blocks = blocks.localCheckpoint(eager=True)
+    a = blocks.select(
+        *keys, F.col("blk").alias("blk_a"), F.col("items").alias("items_a")
+    )
+    b = blocks.select(
+        *keys, F.col("blk").alias("blk_b"), F.col("items").alias("items_b")
+    )
+    if keys:
+        return a.join(b, list(keys)).filter(F.col("blk_a") <= F.col("blk_b"))
+    return a.join(b, F.col("blk_a") <= F.col("blk_b"))
+
+
+def _score_block_pairs(block_pairs: DataFrame, emit, schema: str) -> DataFrame:
+    """The one blocked-GEMM scorer loop, on mapInArrow. Each block-pair row
+    unpacks into ``(ia, A)`` and ``(ib, B)`` straight from the Arrow list
+    buffers (no pandas object conversion of the nested structs); then
+    ``emit(ia, A, ib, B, same_block)`` returns a list of column tuples in
+    ``schema`` order, and the parts of one input batch concatenate into
+    one output batch."""
+    names = [c.split()[0].strip("`") for c in schema.split(",")]
+
+    def _unpack(items):
+        items = items.values  # this row's StructArray slice
+        ids = items.field("vid").to_numpy(zero_copy_only=False)
+        vecs = items.field("v")
+        # the reshape below would silently misalign a NULL or ragged vector
+        dims = pc.unique(pc.list_value_length(vecs))
+        if vecs.null_count or len(dims) != 1:
+            raise ValueError("blocked GEMM: NULL or unequal-length vectors")
+        flat = vecs.flatten().to_numpy(zero_copy_only=False)
         return (
-            a.join(b, F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                F.round(cosine_similarity(F.col("va"), F.col("vb")), 4).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
+            ids.astype(np.int64, copy=False),
+            flat.reshape(len(ids), -1).astype(np.float64, copy=False),
         )
 
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    blocks = (
-        df.select(F.col(id_col).alias("vid"), _as_double(vec_col).alias("v"))
-        .withColumn("blk", F.pmod(F.hash("vid"), F.lit(n_blocks)))
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("vid", "v")).alias("items"))
-    )
-    a = blocks.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
-    b = blocks.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
-    block_pairs = a.join(b, F.col("blk_a") <= F.col("blk_b"))
-
     def _score(batches):
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                ia = np.array([it["vid"] for it in row["items_a"]], dtype=np.int64)
-                ib = np.array([it["vid"] for it in row["items_b"]], dtype=np.int64)
-                A = np.array([it["v"] for it in row["items_a"]], dtype=np.float64)
-                B = np.array([it["v"] for it in row["items_b"]], dtype=np.float64)
-                S = A @ B.T
-                cos = S / np.outer(np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1))
-                cos = np.round(cos, 4)
-                # id_a < id_b (blocks partition ids, so each unordered pair
-                # appears in exactly one block pair; order within it here)
-                mask = (cos >= threshold) & (ia[:, None] < ib[None, :])
-                xi, yi = np.nonzero(mask)
-                if len(xi):
-                    outs.append(
-                        pd.DataFrame(
-                            {"id_a": ia[xi], "id_b": ib[yi], "cosine": cos[xi, yi]}
-                        )
-                    )
-                # cross-block pairs where the b-side id is smaller
-                if row["blk_a"] != row["blk_b"]:
-                    mask2 = (cos >= threshold) & (ia[:, None] > ib[None, :])
-                    xi2, yi2 = np.nonzero(mask2)
-                    if len(xi2):
-                        outs.append(
-                            pd.DataFrame(
-                                {"id_a": ib[yi2], "id_b": ia[xi2], "cosine": cos[xi2, yi2]}
-                            )
-                        )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"id_a": [], "id_b": [], "cosine": []}
-            )
-
-    def _score_pair(ia, ib, A, B, same_block):
-        """Shared GEMM + masking for both UDF transports."""
-        S = A @ B.T
-        cos = S / np.outer(np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1))
-        cos = np.round(cos, 4)
-        mask = (cos >= threshold) & (ia[:, None] < ib[None, :])
-        xi, yi = np.nonzero(mask)
-        parts = [(ia[xi], ib[yi], cos[xi, yi])] if len(xi) else []
-        if not same_block:
-            mask2 = (cos >= threshold) & (ia[:, None] > ib[None, :])
-            xi2, yi2 = np.nonzero(mask2)
-            if len(xi2):
-                parts.append((ib[yi2], ia[xi2], cos[xi2, yi2]))
-        return parts
-
-    def _score_arrow(batches):
-        import pyarrow as pa
-
-        def _unpack(list_scalar):
-            items = list_scalar.values  # StructArray slice
-            ids = items.field("vid").to_numpy(zero_copy_only=False)
-            vecs = items.field("v")
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            return ids, flat.reshape(len(ids), -1).astype(np.float64, copy=False)
-
         for batch in batches:
-            blk_a = batch.column("blk_a")
-            blk_b = batch.column("blk_b")
-            items_a = batch.column("items_a")
-            items_b = batch.column("items_b")
-            outs_a, outs_b, outs_c = [], [], []
+            blk_a, blk_b = batch.column("blk_a"), batch.column("blk_b")
+            items_a, items_b = batch.column("items_a"), batch.column("items_b")
+            parts = []
             for i in range(batch.num_rows):
                 ia, A = _unpack(items_a[i])
                 ib, B = _unpack(items_b[i])
-                same = blk_a[i].as_py() == blk_b[i].as_py()
-                for pa_ids, pb_ids, cs in _score_pair(ia, ib, A, B, same):
-                    outs_a.append(pa_ids)
-                    outs_b.append(pb_ids)
-                    outs_c.append(cs)
-            if outs_a:
+                parts += emit(ia, A, ib, B, blk_a[i].as_py() == blk_b[i].as_py())
+            if parts:
                 yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(outs_a), pa.int64()),
-                        pa.array(np.concatenate(outs_b), pa.int64()),
-                        pa.array(np.concatenate(outs_c), pa.float64()),
-                    ],
-                    names=["id_a", "id_b", "cosine"],
+                    [pa.array(np.concatenate(c)) for c in zip(*parts)], names=names
                 )
 
-    if method == "arrow":
-        return block_pairs.mapInArrow(_score_arrow, out_schema)
-    return block_pairs.mapInPandas(_score, out_schema)
+    return block_pairs.mapInArrow(_score, schema)
+
+
+def _block_cosine(A, B):
+    """round(cosine, 4) of every (row of A, row of B). A zero-norm row
+    gives NaN, which passes no threshold — the NULL of the Catalyst
+    ``cosine_similarity``."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.round(
+            (A @ B.T)
+            / np.outer(np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)),
+            4,
+        )
+
+
+def _floored_cosine(A, B):
+    """The kNN cosine: round(cosine, 4) with norms floored at 1e-12, so a
+    zero vector scores 0.0 against every row."""
+    An = np.maximum(np.linalg.norm(A, axis=1), 1e-12)
+    Bn = np.maximum(np.linalg.norm(B, axis=1), 1e-12)
+    return np.round((A @ B.T) / np.outer(An, Bn), 4)
+
+
+def _emit_pairs(threshold, ia, A, ib, B, same_block):
+    """Block-pair emitter: (id_a, id_b, cosine) with cosine >= threshold
+    and id_a < id_b. Blocks partition ids, so each unordered pair lives in
+    one block pair; a cross-block pair also carries the orientation where
+    the b-side id is smaller."""
+    cos = _block_cosine(A, B)
+    hit = cos >= threshold
+    xi, yi = np.nonzero(hit & (ia[:, None] < ib[None, :]))
+    parts = [(ia[xi], ib[yi], cos[xi, yi])]
+    if not same_block:
+        xi, yi = np.nonzero(hit & (ia[:, None] > ib[None, :]))
+        parts.append((ib[yi], ia[xi], cos[xi, yi]))
+    return parts
+
+
+def _emit_drops(threshold, ia, A, ib, B, same_block):
+    """Block-pair emitter for keep-first dedup: the distinct id_b of the
+    :func:`_emit_pairs` pairs (a row is dropped when a lower id sits at
+    cosine >= threshold)."""
+    pairs = _emit_pairs(threshold, ia, A, ib, B, same_block)
+    return [(np.unique(np.concatenate([b for _, b, _ in pairs])),)]
+
+
+def _emit_knn(k, ia, A, ib, B, same_block):
+    """Block-pair emitter for the kNN graph: the exact per-row top-k cut
+    (:func:`_emit_row_topk`) for the a-side rows and, across blocks, for
+    the b-side rows too; self pairs are excluded."""
+    cos = _floored_cosine(A, B)
+    parts = [_emit_row_topk(ia, ib, cos, k, exclude_self=same_block)]
+    if not same_block:
+        parts.append(_emit_row_topk(ib, ia, cos.T, k, exclude_self=False))
+    return parts
 
 
 def assign_clusters(
@@ -361,6 +311,15 @@ def train_ivf_centroids(
     return C
 
 
+def _ivf_probes(centroids: np.ndarray, q: np.ndarray, n_probe: int) -> list[int]:
+    """The ``n_probe`` centroid indices closest to query ``q`` by cosine
+    (norms floored at 1e-12), best first — the driver-side probe ranking
+    every IVF query shares."""
+    Cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
+    qn = q / max(np.linalg.norm(q), 1e-12)
+    return [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
+
+
 def ivf_topk(
     df: DataFrame,
     centroids: np.ndarray,
@@ -379,9 +338,7 @@ def ivf_topk(
     of the corpus.
     """
     q = np.asarray(query_vec, dtype=np.float64)
-    Cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
+    probes = _ivf_probes(centroids, q, n_probe)
     assigned = assign_clusters(df, centroids, vec_col, id_col)
     scoped = assigned.filter(F.col("cluster").isin(probes))
     return brute_force_topk(scoped, [float(x) for x in q], k=k, vec_col="v", id_col=id_col)
@@ -779,12 +736,9 @@ def _multi_query_probes(centroids, query_vecs, n_probe):
     Q = np.array([query_vecs[q] for q in qids], dtype=np.float64)
     Qn = np.linalg.norm(Q, axis=1)
     C = np.asarray(centroids, dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     allowed = np.zeros((C.shape[0], len(qids)), dtype=bool)
     for j in range(len(qids)):
-        qv = Q[j] / max(Qn[j], 1e-12)
-        for c in np.argsort(-(Cn @ qv))[:n_probe]:
-            allowed[int(c), j] = True
+        allowed[_ivf_probes(C, Q[j], n_probe), j] = True
     union = [int(c) for c in np.nonzero(allowed.any(axis=1))[0]]
     return qids, Q, Qn, allowed, union
 
@@ -913,9 +867,7 @@ def ivf_topk_indexed(
     committed view is read instead — uncommitted crash-window vectors
     never appear in results."""
     q = np.asarray(query_vec, dtype=np.float64)
-    Cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
+    probes = _ivf_probes(centroids, q, n_probe)
     assigned = _index_rows(spark, index_path, read_ivf_index, id_col)
     scoped = assigned.filter(F.col("cluster").isin(probes))
     return brute_force_topk(scoped, [float(x) for x in q], k=k, vec_col="v", id_col=id_col)
@@ -1098,11 +1050,7 @@ def ivf_pq_topk(
     is governed by n_probe (cluster misses) and refine (ADC
     approximation misses)."""
     q = np.asarray(query_vec, dtype=np.float64)
-    Cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
+    probes = _ivf_probes(centroids, q, n_probe)
     scoped = (
         assign_clusters(df, centroids, vec_col, id_col)
         .filter(F.col("cluster").isin(probes))
@@ -1257,11 +1205,7 @@ def ivf_pq_topk_indexed(
     On an incrementally-maintained index the committed view is read —
     crash-window rows never appear."""
     q = np.asarray(query_vec, dtype=np.float64)
-    Cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
+    probes = _ivf_probes(centroids, q, n_probe)
     enc = _index_rows(spark, index_path, read_ivf_pq_index, id_col)
     scoped = enc.filter(F.col("cluster").isin(probes))
     cands = pq_topk(
@@ -1523,78 +1467,9 @@ def lsh_pairs_above(
             F.greatest(F.lit(1), F.ceil(_cn / F.lit(block_size)).cast("int")),
         ).alias("blk"),
     )
-    # Materialize the nested blocks once (eager localCheckpoint, the
-    # semantic_dedup pattern): the a x b self-join below would otherwise
-    # recompute the explode + window + collect_list chain TWICE per
-    # action — two full corpus scans instead of none.
-    blocks = rows.groupBy("tb", "blk").agg(
-        F.collect_list(F.struct("vid", "v")).alias("items")
-    ).localCheckpoint(eager=True)
-    a = blocks.select(
-        "tb", F.col("blk").alias("blk_a"), F.col("items").alias("items_a")
+    scored = _score_block_pairs(
+        _block_pairs(rows, "tb"), partial(_emit_pairs, threshold), _PAIR_SCHEMA
     )
-    b = blocks.select(
-        "tb", F.col("blk").alias("blk_b"), F.col("items").alias("items_b")
-    )
-    block_pairs = a.join(b, "tb").filter(F.col("blk_a") <= F.col("blk_b"))
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def _score(batches):
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                ia = np.array([it["vid"] for it in row["items_a"]], dtype=np.int64)
-                ib = np.array([it["vid"] for it in row["items_b"]], dtype=np.int64)
-                A = np.array([it["v"] for it in row["items_a"]], dtype=np.float64)
-                B = np.array([it["v"] for it in row["items_b"]], dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.round(
-                        (A @ B.T)
-                        / np.outer(
-                            np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)
-                        ),
-                        4,
-                    )
-                hit = cos >= threshold
-                m = hit & (ia[:, None] < ib[None, :])
-                xi, yi = np.nonzero(m)
-                if len(xi):
-                    outs.append(
-                        pd.DataFrame(
-                            {"id_a": ia[xi], "id_b": ib[yi], "cosine": cos[xi, yi]}
-                        )
-                    )
-                if row["blk_a"] != row["blk_b"]:
-                    m2 = hit & (ia[:, None] > ib[None, :])
-                    xi2, yi2 = np.nonzero(m2)
-                    if len(xi2):
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "id_a": ib[yi2],
-                                    "id_b": ia[xi2],
-                                    "cosine": cos[xi2, yi2],
-                                }
-                            )
-                        )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {
-                    "id_a": pd.Series([], dtype="int64"),
-                    "id_b": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
-
-    scored = block_pairs.mapInPandas(_score, out_schema)
     return scored.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
 
 
@@ -1727,50 +1602,14 @@ def knn_graph(
     sub-quadratic scale path (probes only nearby clusters, measured-recall
     invariant).
     """
-    from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
-    out_schema = T.StructType(
-        [
-            T.StructField("src", T.LongType()),
-            T.StructField("dst", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    rows = df.select(
+        F.col(id_col).alias("vid"), _as_double(vec_col).alias("v")
+    ).withColumn("blk", F.pmod(F.hash("vid"), F.lit(n_blocks)))
+    cands = _score_block_pairs(
+        _block_pairs(rows), partial(_emit_knn, k), "src long, dst long, cosine double"
     )
-    blocks = (
-        df.select(F.col(id_col).alias("vid"), _as_double(vec_col).alias("v"))
-        .withColumn("blk", F.pmod(F.hash("vid"), F.lit(n_blocks)))
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("vid", "v")).alias("items"))
-    )
-    a = blocks.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
-    b = blocks.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
-    block_pairs = a.join(b, F.col("blk_a") <= F.col("blk_b"))
-
-    def _score(batches):
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                ia = np.array([it["vid"] for it in row["items_a"]], dtype=np.int64)
-                ib = np.array([it["vid"] for it in row["items_b"]], dtype=np.int64)
-                A = np.array([it["v"] for it in row["items_a"]], dtype=np.float64)
-                B = np.array([it["v"] for it in row["items_b"]], dtype=np.float64)
-                An = np.maximum(np.linalg.norm(A, axis=1), 1e-12)
-                Bn = np.maximum(np.linalg.norm(B, axis=1), 1e-12)
-                cos = np.round((A @ B.T) / np.outer(An, Bn), 4)
-                same = row["blk_a"] == row["blk_b"]
-                s, d, c = _emit_row_topk(ia, ib, cos, k, exclude_self=same)
-                if len(s):
-                    outs.append(pd.DataFrame({"src": s, "dst": d, "cosine": c}))
-                if not same:  # b-side rows need their A candidates too
-                    s2, d2, c2 = _emit_row_topk(ib, ia, cos.T, k, exclude_self=False)
-                    if len(s2):
-                        outs.append(pd.DataFrame({"src": s2, "dst": d2, "cosine": c2}))
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"src": [], "dst": [], "cosine": []}
-            )
-
-    cands = block_pairs.mapInPandas(_score, out_schema)
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.col("dst"))
     return (
         cands.withColumn("rank", F.row_number().over(w))
@@ -1880,10 +1719,7 @@ def _cogroup_knn_candidates(probes, members, k, id_col):
         A = np.array(list(probes_pdf["v"]), dtype=np.float64)
         ib = members_pdf[id_col].to_numpy(dtype=np.int64)
         B = np.array(list(members_pdf["v"]), dtype=np.float64)
-        An = np.maximum(np.linalg.norm(A, axis=1), 1e-12)
-        Bn = np.maximum(np.linalg.norm(B, axis=1), 1e-12)
-        cos = np.round((A @ B.T) / np.outer(An, Bn), 4)
-        s, d, c = _emit_row_topk(ia, ib, cos, k, exclude_self=True)
+        s, d, c = _emit_row_topk(ia, ib, _floored_cosine(A, B), k, exclude_self=True)
         return pd.DataFrame({"src": s, "dst": d, "cosine": c})
 
     return (
@@ -2880,7 +2716,7 @@ def _cluster_dropped_gemm(
     (round 10): rows hash into ceil(|cluster|/block_size) blocks per
     cluster, each cluster's block pairs meet in an equi-JOIN ON THE
     CLUSTER KEY (never a cartesian product), and one numpy GEMM scores
-    each block pair inside Arrow-batched ``mapInPandas``. This replaces
+    each block pair (``_score_block_pairs``, mapInArrow). This replaces
     ~sum_c |c|^2 INTERPRETED Catalyst pair predicates (higher-order-
     function folds don't codegen, and the cosine predicate gets pushed
     into the SMJ extra condition) with a handful of BLAS calls — the
@@ -2890,8 +2726,6 @@ def _cluster_dropped_gemm(
     block_size^2 score matrix (~8 MB at the 1024 default) regardless of
     corpus size; with the default ``max_cluster`` cap a cluster has at
     most ceil(cap/block_size) blocks."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import Window
 
     # Cluster size via a window count, not agg+join: ONE exchange on the
@@ -2909,56 +2743,11 @@ def _cluster_dropped_gemm(
             ),
         ).alias("blk"),
     )
-    # Materialize the nested blocks once (eager localCheckpoint): the
-    # a x b self-join below would otherwise recompute the window +
-    # collect_list chain twice per action, and the checkpoint is the
-    # "index build" moment — block rows are what a production run would
-    # persist anyway.
-    blocks = rows.groupBy("cluster", "blk").agg(
-        F.collect_list(F.struct("vid", "v")).alias("items")
-    ).localCheckpoint(eager=True)
-    a = blocks.select(
-        "cluster", F.col("blk").alias("blk_a"), F.col("items").alias("items_a")
+    # no .distinct() on the dropped ids: the caller's left_anti join
+    # ignores right-side duplicates, and _emit_drops dedups within a
+    # block pair
+    return _score_block_pairs(
+        _block_pairs(rows, "cluster"),
+        partial(_emit_drops, threshold),
+        f"`{id_col}` long",
     )
-    b = blocks.select(
-        "cluster", F.col("blk").alias("blk_b"), F.col("items").alias("items_b")
-    )
-    block_pairs = a.join(b, "cluster").filter(F.col("blk_a") <= F.col("blk_b"))
-
-    def _drop(batches):
-        for pdf in batches:
-            drops = []
-            for _, row in pdf.iterrows():
-                ia = np.array([it["vid"] for it in row["items_a"]], dtype=np.int64)
-                ib = np.array([it["vid"] for it in row["items_b"]], dtype=np.int64)
-                A = np.array([it["v"] for it in row["items_a"]], dtype=np.float64)
-                B = np.array([it["v"] for it in row["items_b"]], dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.round(
-                        (A @ B.T)
-                        / np.outer(
-                            np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)
-                        ),
-                        4,
-                    )
-                hit = cos >= threshold  # NaN (zero vector) compares False
-                m = hit & (ia[:, None] < ib[None, :])
-                if m.any():
-                    drops.append(ib[np.unique(np.nonzero(m)[1])])
-                if row["blk_a"] != row["blk_b"]:
-                    # the same unordered block pair carries the reversed
-                    # id orientation too (blocks hash-partition ids)
-                    m2 = hit & (ia[:, None] > ib[None, :])
-                    if m2.any():
-                        drops.append(ia[np.unique(np.nonzero(m2)[0])])
-            yield pd.DataFrame(
-                {
-                    id_col: np.unique(np.concatenate(drops))
-                    if drops
-                    else np.array([], dtype=np.int64)
-                }
-            )
-
-    # no .distinct(): the caller's left_anti join ignores right-side
-    # duplicates, and np.unique already dedups within each task
-    return block_pairs.mapInPandas(_drop, f"`{id_col}` long")

@@ -918,8 +918,7 @@ PAIR_THRESHOLD = 0.35
 
 
 def q_embedding_pairs(spark, sf_dir):
-    # arrow transport: GEMM operands reshaped straight from Arrow buffers
-    return S.all_pairs_above(_emb(spark, sf_dir), PAIR_THRESHOLD, method="arrow")
+    return S.all_pairs_above(_emb(spark, sf_dir), PAIR_THRESHOLD)
 
 
 SQL_EMBEDDING_PAIRS = f"""

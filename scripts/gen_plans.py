@@ -79,7 +79,7 @@ SHOWCASE = {
         "r10 blocked-GEMM SemDeDup: the cluster key is materialized by an "
         "eager localCheckpoint (Scan ExistingRDD), GEMM blocks meet in a "
         "cluster-keyed equi-join (BroadcastHashJoin here; SMJ at scale), one "
-        "MapInPandas scores each block pair with BLAS, and the survivors "
+        "MapInArrow scores each block pair with BLAS, and the survivors "
         "come from a left-anti join on the dropped ids — no cartesian "
         "product, no interpreted per-pair expression anywhere."
     ),
@@ -92,7 +92,7 @@ SHOWCASE = {
     ),
     "knn_graph": (
         "Exact kNN graph: nested block rows meet in a blk_a <= blk_b "
-        "equi-range join, ONE MapInPandas GEMM-scores each block pair and "
+        "equi-range join, ONE MapInArrow GEMM-scores each block pair and "
         "emits exactly k candidates per row under the global total order, "
         "and the final per-src window runs over O(n*k*n_blocks) candidate "
         "rows — the O(n^2) score matrix never materializes, never shuffles."

@@ -555,19 +555,116 @@ def test_quantization_roundtrip_and_recall(spark, sf_dir):
     assert len(exact_ids & approx_ids) >= 8, (exact_ids, approx_ids)
 
 
-def test_all_pairs_arrow_matches_pandas_transport(spark, sf_dir):
-    """mapInArrow and mapInPandas block scorers are transports around the
-    same GEMM — results must be identical pair-for-pair."""
+def test_all_pairs_matches_numpy_reference(spark, sf_dir):
+    """all_pairs_above == a numpy brute-force reference over the collected
+    embeddings, pair for pair and cosine for cosine, with one block (a
+    single in-block GEMM) and with 8 blocks (cross-block pairs in both
+    orientations)."""
+    import numpy as np
+
+    rows = load_table(spark, sf_dir, "embeddings").collect()
+    ids = [r["vec_id"] for r in rows]
+    V = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    n = np.linalg.norm(V, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.round((V @ V.T) / np.outer(n, n), 4)
+    ref = {
+        (min(ids[i], ids[j]), max(ids[i], ids[j]), cos[i, j])
+        for i in range(len(ids))
+        for j in range(i + 1, len(ids))
+        if cos[i, j] >= 0.35
+    }
+    assert ref
     emb = load_table(spark, sf_dir, "embeddings")
-    blocked = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in all_pairs_above(emb, 0.35, method="blocked").collect()
-    }
-    arrow = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in all_pairs_above(emb, 0.35, method="arrow").collect()
-    }
-    assert blocked == arrow and len(blocked) > 0
+    for n_blocks in (1, 8):
+        got = [
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in all_pairs_above(emb, 0.35, n_blocks=n_blocks).collect()
+        ]
+        assert len(got) == len(ref) and set(got) == ref, n_blocks
+
+
+def test_block_gemm_operators_reject_null_and_ragged_vectors(spark):
+    """A NULL or unequal-length vector fails the block scorers loudly: a
+    block's vectors are reshaped from one flat buffer, where lengths 3 and
+    5 would silently read as two vectors of 4."""
+    from demo_bigdata_spark.operators.similarity import knn_graph
+
+    for rows in (
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0, 1.0])],
+        [(0, [1.0, 0.0]), (1, None), (2, [1.0, 1.0])],
+    ):
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match="NULL or unequal-length vectors"):
+            all_pairs_above(df, 0.0, n_blocks=1).collect()
+        with pytest.raises(Exception, match="NULL or unequal-length vectors"):
+            knn_graph(df, k=1, n_blocks=1).collect()
+
+
+def test_block_gemm_operators_zero_vector(spark):
+    """A zero vector has no cosine. The thresholded block scorers
+    (all_pairs_above, lsh_pairs_above, semantic_dedup) never pair it, even
+    at threshold 0.0; knn_graph floors norms at 1e-12, so the zero vector
+    scores cosine 0.0 against every other row."""
+    import numpy as np
+
+    from demo_bigdata_spark.operators.similarity import knn_graph, semantic_dedup
+
+    rng = np.random.RandomState(5)
+    base = rng.randn(6, 8)
+    vecs = [v for b in base for v in (b, b + rng.randn(8) * 0.1)]
+    zero = len(vecs)
+    vecs.append(np.zeros(8))
+    V = np.array(vecs)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    nonzero = df.filter(F.col("vec_id") != zero)
+    n = np.linalg.norm(V, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.round((V @ V.T) / np.outer(n, n), 4)
+    for t in (0.35, 0.0):
+        ref = {
+            (i, j, cos[i, j])
+            for i in range(len(vecs))
+            for j in range(i + 1, len(vecs))
+            if cos[i, j] >= t
+        }
+        exact = {
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in all_pairs_above(df, t, n_blocks=3).collect()
+        }
+        assert exact == ref and all(zero not in p[:2] for p in exact)
+        lsh = {
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in lsh_pairs_above(df, t, n_planes=2, n_tables=4, dim=8).collect()
+        }
+        assert lsh <= exact and all(zero not in p[:2] for p in lsh)
+        kept = {
+            r["vec_id"]
+            for r in semantic_dedup(df, t, n_planes=1, dim=8, block_size=4).collect()
+        }
+        kept_nonzero = {
+            r["vec_id"]
+            for r in semantic_dedup(
+                nonzero, t, n_planes=1, dim=8, block_size=4
+            ).collect()
+        }
+        assert kept == kept_nonzero | {zero}
+    nf = np.maximum(n, 1e-12)
+    kcos = np.round((V @ V.T) / np.outer(nf, nf), 4)
+    np.fill_diagonal(kcos, -np.inf)
+    k = 3
+    ref = {}
+    for i in range(len(vecs)):
+        order = sorted(range(len(vecs)), key=lambda j: (-kcos[i, j], j))[:k]
+        ref[i] = [(j, kcos[i, j], r + 1) for r, j in enumerate(order)]
+    assert ref[zero] == [(0, 0.0, 1), (1, 0.0, 2), (2, 0.0, 3)]
+    got = {}
+    for r in knn_graph(df, k=k, n_blocks=3).collect():
+        got.setdefault(r["src"], []).append((r["dst"], r["cosine"], r["rank"]))
+    assert got == ref
 
 
 def test_mixture_sample_rates_and_determinism(spark, sf_dir):
