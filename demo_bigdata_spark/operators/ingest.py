@@ -9,17 +9,24 @@ Streaming runs it unchanged).
 Key semantic preserved (SURVEY.md §1.2): payload fields are extracted from
 the *raw JSON string* with ``get_json_object``, never from a parsed
 map<string,string>, so nested payload objects survive verbatim in
-``payload_json`` (reference: event_processor.py:73-81).
+``payload_json`` (reference: event_processor.py:73-81) with their source
+key order and bytes.
 
-Determinism fix: partition columns (processing_date/hour) derive from event
-time by default, not ``current_timestamp()`` — this also fixes the
-reference's partition-vs-filter mismatch (BASELINE.md) so event-time
-predicates prune partitions.
+One chain: every caller (batch suites, streams, the serving workload) runs
+``process_raw_events``. A Spark 4 VariantType single-parse fork was
+measured slower at every document size from 0.2 KB to 17 KB and
+re-serialized ``payload_json`` with sorted keys, so it was removed
+(docs/SCALE_NOTES.md, "One ingest chain").
+
+Determinism fix: partition columns (processing_date/hour) always derive from
+event time, not ``current_timestamp()`` — this also fixes the reference's
+partition-vs-filter mismatch (BASELINE.md) so event-time predicates prune
+partitions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from demo_bigdata_spark.functions.scalar import categorize, pin
@@ -58,7 +65,7 @@ def parse_events(df: DataFrame, raw_col: str = "raw_json") -> DataFrame:
     return parsed.filter(F.col("event").isNotNull())
 
 
-def flatten_events(df: DataFrame, raw_col: str = "raw_json", event_time_partitions: bool = True) -> DataFrame:
+def flatten_events(df: DataFrame, raw_col: str = "raw_json") -> DataFrame:
     """P4-P8: flatten nested structs, parse timestamps, extract payload
     scalars via JSONPath on the raw string, derive partition columns and the
     event category (reference: event_processor.py:43-110).
@@ -69,12 +76,6 @@ def flatten_events(df: DataFrame, raw_col: str = "raw_json", event_time_partitio
     single ``json_tuple`` (2 parses total), preserving the raw-string
     semantics (nested payload objects survive in payload_json)."""
     created_at = F.to_timestamp(F.col("event.created_at"))
-    if event_time_partitions:
-        part_date: Column = F.date_format(created_at, "yyyy-MM-dd")
-        part_hour: Column = F.hour(created_at)
-    else:  # reference behavior (processing time) — nondeterministic, kept for parity
-        part_date = F.date_format(F.current_timestamp(), "yyyy-MM-dd")
-        part_hour = F.hour(F.current_timestamp())
     base = df.select(
         F.col("event.id").alias("event_id"),
         F.col("event.type").alias("event_type"),
@@ -90,8 +91,8 @@ def flatten_events(df: DataFrame, raw_col: str = "raw_json", event_time_partitio
         F.col("event.org.login").alias("org_login"),
         F.col("event.public").alias("is_public"),
         F.get_json_object(F.col(raw_col), "$.payload").alias("payload_json"),
-        part_date.alias("processing_date"),
-        part_hour.alias("processing_hour"),
+        F.date_format(created_at, "yyyy-MM-dd").alias("processing_date"),
+        F.hour(created_at).alias("processing_hour"),
     )
     return base.select(
         "*",
@@ -122,71 +123,11 @@ def finalize_columns(df: DataFrame) -> DataFrame:
     return df.select(*FLATTENED_EVENT_COLUMNS)
 
 
-def process_raw_events(df: DataFrame, raw_col: str = "raw_json", event_time_partitions: bool = True) -> DataFrame:
+def process_raw_events(df: DataFrame, raw_col: str = "raw_json") -> DataFrame:
     """Full P2-P11 pipeline: parse -> flatten -> quality -> final projection.
     Works on batch and streaming DataFrames alike."""
     parsed = parse_events(df, raw_col)
-    flat = flatten_events(parsed, raw_col, event_time_partitions)
+    flat = flatten_events(parsed, raw_col)
     checked = quality_checks(flat)
     return finalize_columns(checked)
 
-
-def flatten_events_variant(
-    df: DataFrame, raw_col: str = "raw_json", event_time_partitions: bool = True
-) -> DataFrame:
-    """P2-P8 on Spark 4 VariantType: ONE ``try_parse_json`` per row into the
-    binary variant encoding, every scalar pulled with ``variant_get`` path
-    extraction. The legacy path pays two full text parses per row
-    (``from_json`` envelope + ``get_json_object``/``json_tuple`` payload);
-    this one parses once and extracts from the binary form. Measured ~1.7x
-    faster on the sf0.1 corpus; the gap widens with document size, which is
-    what matters on real GitHub archive payloads (kB-scale, 100 TB total).
-
-    Fidelity caveat: ``payload_json`` is re-serialized from the variant
-    subtree, so nested objects survive semantically but key order /
-    whitespace are normalized — where byte-level payload fidelity is the
-    contract, use the ``get_json_object`` path (``flatten_events``).
-
-    Malformed handling: ``try_parse_json`` -> NULL drops unparsable lines
-    (P3); valid-but-non-object JSON yields NULL scalars and is dropped by
-    the P9 required-field filter — same end-to-end drop set as the legacy
-    chain.
-    """
-    parsed = df.withColumn("_v", _pin(F.try_parse_json(F.col(raw_col)))).filter(
-        F.col("_v").isNotNull()
-    )
-    created_at = F.to_timestamp(F.variant_get(F.col("_v"), "$.created_at", "string"))
-    if event_time_partitions:
-        part_date: Column = F.date_format(created_at, "yyyy-MM-dd")
-        part_hour: Column = F.hour(created_at)
-    else:
-        part_date = F.date_format(F.current_timestamp(), "yyyy-MM-dd")
-        part_hour = F.hour(F.current_timestamp())
-    g = lambda path, typ: F.variant_get(F.col("_v"), path, typ)  # noqa: E731
-    return parsed.select(
-        g("$.id", "string").alias("event_id"),
-        g("$.type", "string").alias("event_type"),
-        created_at.alias("created_at"),
-        F.to_timestamp(g("$.processed_at", "string")).alias("processed_at"),
-        g("$.actor.id", "int").alias("actor_id"),
-        g("$.actor.login", "string").alias("actor_login"),
-        g("$.actor.avatar_url", "string").alias("actor_avatar_url"),
-        g("$.repo.id", "int").alias("repo_id"),
-        g("$.repo.name", "string").alias("repo_name"),
-        g("$.repo.url", "string").alias("repo_url"),
-        g("$.org.id", "int").alias("org_id"),
-        g("$.org.login", "string").alias("org_login"),
-        g("$.public", "boolean").alias("is_public"),
-        F.to_json(g("$.payload", "variant")).alias("payload_json"),
-        part_date.alias("processing_date"),
-        part_hour.alias("processing_hour"),
-        *[g(f"$.payload.{f}", "string").alias(f) for f in PAYLOAD_SCALAR_FIELDS],
-    ).withColumn("event_category", categorize("event_type"))
-
-
-def process_raw_events_variant(
-    df: DataFrame, raw_col: str = "raw_json", event_time_partitions: bool = True
-) -> DataFrame:
-    """``process_raw_events`` on the single-parse variant path."""
-    flat = flatten_events_variant(df, raw_col, event_time_partitions)
-    return finalize_columns(quality_checks(flat))

@@ -17,7 +17,6 @@ from __future__ import annotations
 from functools import partial
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
@@ -263,6 +262,8 @@ def assign_clusters(
     )
 
     def _assign(batches):
+        import pandas as pd
+
         for pdf in batches:
             V = np.array(list(pdf["v"]), dtype=np.float64)
             Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
@@ -760,6 +761,8 @@ def _masked_multi_query_scan(scoped, qids, Q, Qn, allowed, k, id_col):
     )
 
     def _score(batches):
+        import pandas as pd
+
         best: dict[int, list] = {q: [] for q in qids}
         for pdf in batches:
             V = np.array(list(pdf["v"]), dtype=np.float64)
@@ -961,6 +964,8 @@ def pq_encode(
     out_schema = T.StructType(fields)
 
     def _enc(batches):
+        import pandas as pd
+
         for pdf in batches:
             V = np.array(list(pdf["v"]), dtype=np.float64)
             n = V.shape[0]
@@ -1014,6 +1019,8 @@ def pq_topk(
     )
 
     def _score(batches):
+        import pandas as pd
+
         for pdf in batches:
             Cd = np.array(list(pdf["codes"]), dtype=np.int64)
             if len(Cd):
@@ -1272,6 +1279,8 @@ def multi_query_pq_topk_indexed(
     )
 
     def _adc(batches):
+        import pandas as pd
+
         best: dict[int, list] = {q: [] for q in qids}
         for pdf in batches:
             Cd = np.array(list(pdf["codes"]), dtype=np.int64)
@@ -1325,6 +1334,8 @@ def multi_query_pq_topk_indexed(
     qpos = {qid: i for i, qid in enumerate(qids)}
 
     def _exact(batches):
+        import pandas as pd
+
         for pdf in batches:
             V = np.array(list(pdf["v"]), dtype=np.float64)
             if not len(V):
@@ -1677,6 +1688,8 @@ def _explode_probes(df, centroids, n_probe, vec_col, id_col):
     )
 
     def _probes(batches):
+        import pandas as pd
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1713,6 +1726,8 @@ def _cogroup_knn_candidates(probes, members, k, id_col):
     )
 
     def _score(_key, probes_pdf, members_pdf):
+        import pandas as pd
+
         if len(probes_pdf) == 0 or len(members_pdf) == 0:
             return pd.DataFrame({"src": [], "dst": [], "cosine": []})
         ia = probes_pdf[id_col].to_numpy(dtype=np.int64)
@@ -2274,6 +2289,8 @@ def rp_topk(
         )
 
     def _score(batches):
+        import pandas as pd
+
         for b in batches:
             if len(b) == 0:
                 continue
@@ -2466,6 +2483,8 @@ def random_projection(
     signs_t = signs.T.copy()  # (in_dim, out_dim)
 
     def _proj(batches):
+        import pandas as pd
+
         for b in batches:
             if len(b) == 0:
                 continue

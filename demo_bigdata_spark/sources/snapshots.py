@@ -839,10 +839,6 @@ def _range_condition(prune: dict):
     return cond
 
 
-def _read_manifest(spark: SparkSession, path: str, snap: int) -> DataFrame:
-    return spark.read.parquet(_manifest_path(path, snap))
-
-
 def _manifest_rows(path: str, snap: int) -> list[dict]:
     """A snapshot's manifest entries in ``seq`` order, read on the driver
     with pyarrow (no Spark job). The directory read ignores ``_``/``.``
@@ -1770,15 +1766,19 @@ def table_files(
 ) -> DataFrame:
     """Iceberg's ``files`` metadata table: the manifest AS a queryable
     DataFrame — (file, kind, epoch_id, seq, meta) per entry, meta holding
-    the recorded bounds/key-column JSON. Operators debug pruning and audit
-    commits with SQL instead of spelunking the directory tree."""
+    the recorded bounds/key-column JSON, in ``seq`` order. Operators debug
+    pruning and audit commits with SQL instead of spelunking the directory
+    tree. Built on the driver from the manifest (no Spark job)."""
     snap = current_snapshot(path) if snapshot is None else int(snapshot)
     if snap is None:
         raise ValueError(f"no versioned table at {path}")
-    m = _read_manifest(spark, path, snap)
-    if "meta" not in m.columns:  # pre-metadata manifests
-        m = m.withColumn("meta", F.lit(None).cast("string"))
-    return m.orderBy("seq")
+    rows = [
+        (r["file"], r["kind"], r["epoch_id"], r["seq"], r["meta"])
+        for r in _manifest_rows(path, snap)
+    ]
+    return local_frame(
+        spark, rows, "file string, kind string, epoch_id bigint, seq int, meta string"
+    )
 
 
 def table_history(spark: SparkSession, path: str) -> DataFrame:

@@ -83,14 +83,10 @@ def raw_github_json(spark, sf_dir):
 
 
 def q_ingest_category_stats(spark, sf_dir):
-    """Runs on the single-parse VariantType chain (~1.7x faster than the
-    from_json+json_tuple chain; category stats never touch payload bytes, so
-    the variant re-serialization caveat is irrelevant here). The legacy chain
-    stays oracle-gated via ingest_payload_extract / ingest_partitions, and
-    test_ingest_variant_path_matches_legacy pins the two chains equal."""
-    from demo_bigdata_spark.operators.ingest import process_raw_events_variant
-
-    flat = process_raw_events_variant(raw_github_json(spark, sf_dir))
+    """Per-category counts over the one ingest chain (``process_raw_events``)
+    on raw lines with garbage injected: the malformed lines must drop
+    before they reach a category."""
+    flat = process_raw_events(raw_github_json(spark, sf_dir))
     return (
         flat.groupBy("event_category")
         .agg(

@@ -24,6 +24,11 @@ UNKNOWN_TYPE = (
 )
 NO_CREATED = '{"id":"3","type":"PushEvent","payload":{}}'
 MALFORMED = "{this is not json"
+UNSORTED_PAYLOAD = '{"zeta":1,"action":"opened","alpha":{"y":[2,1],"b":true}}'
+UNSORTED = (
+    '{"id":"4","type":"PullRequestEvent","actor":{"id":9,"login":"carol"},'
+    '"created_at":"2024-01-01T12:00:00Z","payload":' + UNSORTED_PAYLOAD + "}"
+)
 
 
 @pytest.fixture(scope="module")
@@ -44,36 +49,15 @@ def test_ingest_categorizes(flat):
     assert cats == {"1": "code", "2": "other"}
 
 
-def test_ingest_payload_survives_nesting(flat):
+def test_ingest_payload_survives_nesting(spark, flat):
     row = flat.filter(F.col("event_id") == "1").head()
     assert row["action"] == "opened"
     assert '"a":[1,2]' in row["payload_json"].replace(" ", "")
-
-
-def test_ingest_variant_path_matches_legacy(spark, flat):
-    """The single-parse VariantType chain must produce the same 26-column
-    output as the from_json+json_tuple chain on the same input — identical
-    drop set, values, and dtypes; payload_json compares parse-equal (variant
-    re-serialization normalizes key order/whitespace, not content)."""
-    from demo_bigdata_spark.operators.ingest import process_raw_events_variant
-
-    raw = spark.createDataFrame(
-        [(GOOD,), (UNKNOWN_TYPE,), (NO_CREATED,), (MALFORMED,)], ["raw_json"]
-    )
-    vflat = process_raw_events_variant(raw)
-    assert vflat.schema == flat.schema
-    legacy = {r["event_id"]: r.asDict() for r in flat.collect()}
-    variant = {r["event_id"]: r.asDict() for r in vflat.collect()}
-    assert set(legacy) == set(variant)
-    for eid, lrow in legacy.items():
-        vrow = variant[eid]
-        for col, lval in lrow.items():
-            if col == "payload_json":
-                continue
-            assert vrow[col] == lval, f"{eid}.{col}: {vrow[col]!r} != {lval!r}"
-        l_norm = lrow["payload_json"] and lrow["payload_json"].replace(" ", "")
-        v_norm = vrow["payload_json"] and vrow["payload_json"].replace(" ", "")
-        assert sorted(l_norm) == sorted(v_norm)  # same chars = same content here
+    # payload keys out of alphabetical order at two levels keep source order
+    raw = spark.createDataFrame([(UNSORTED,)], ["raw_json"])
+    row = process_raw_events(raw).head()
+    assert row["action"] == "opened"
+    assert row["payload_json"] == UNSORTED_PAYLOAD
 
 
 def test_ingest_flags(flat):
@@ -102,6 +86,25 @@ def test_asof_join_semantics(spark):
     # L1: only 09:30 precedes -> 10.0; L2: equal ts matches (<=) -> 30.0;
     # L3: no right row at or before 09:00 -> null
     assert out == {"L1": 10.0, "L2": 30.0, "L3": None}
+
+
+def test_similarity_import_loads_no_pandas():
+    """A fresh Arrow worker that unpickles a block-pair emitter imports
+    operators.similarity; pandas must load only inside the mapInPandas
+    bodies that use it, not with the module."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, demo_bigdata_spark.operators.similarity; "
+        "print('pandas' in sys.modules)"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False", out.stdout + out.stderr
 
 
 def test_lsh_recall_and_precision(spark, sf_dir):

@@ -116,13 +116,9 @@ def test_ingest_parse_not_reinlined_into_filter(spark, sf_dir):
     substitute the parse expression into every filter conjunct, and
     FilterExec does no subexpression elimination — measured ~4 parses per
     row (2x wall time) on the ingest queries. Guarded by the
-    nondeterministic pin in ingest._pin; this pins both the legacy
-    from_json chain and the Spark-4 variant chain to exactly one parse
-    per branch of the plan."""
-    from demo_bigdata_spark.operators.ingest import (
-        process_raw_events,
-        process_raw_events_variant,
-    )
+    nondeterministic pin in ingest._pin; this pins the from_json chain to
+    exactly one parse per branch of the plan."""
+    from demo_bigdata_spark.operators.ingest import process_raw_events
     from demo_bigdata_spark.suites.suite_ingest import raw_github_json
 
     def filter_nodes(df):
@@ -133,9 +129,6 @@ def test_ingest_parse_not_reinlined_into_filter(spark, sf_dir):
     legacy = process_raw_events(raw).groupBy("event_category").count()
     for node in filter_nodes(legacy):
         assert "from_json" not in node, node
-    variant = process_raw_events_variant(raw).groupBy("event_category").count()
-    for node in filter_nodes(variant):
-        assert "parseJson" not in node, node
 
 
 def test_range_join_is_hash_join_not_nested_loop(spark, sf_dir):

@@ -1001,7 +1001,9 @@ def test_versioned_table_manifest_stats_prune_files(spark, tmp_path):
 
     # metadata tables: `files` lists every manifest entry in seq order,
     # `history` flags the current snapshot (file counts are per PART FILE)
-    trows = S.table_files(spark, path).collect()
+    tf, jobs = _jobs_in(spark, lambda: S.table_files(spark, path))
+    assert jobs == 0  # the frame is built on the driver from the manifest
+    trows = tf.collect()
     n_data = sum(1 for r in trows if r["kind"] == "data")
     n_del = sum(1 for r in trows if r["kind"] == "delete")
     assert n_data == len(datas) and n_del >= 1

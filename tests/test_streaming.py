@@ -407,11 +407,11 @@ def test_partitioned_stream_sink(spark, stream_src, tmp_path):
     assert "PartitionFilters: [isnotnull(event_date" in plan
 
 
-def test_variant_ingest_runs_on_stream(spark, tmp_path):
-    """The VariantType ingest chain is stateless map/filter, so Structured
-    Streaming runs it unchanged: text-file micro-batches of raw JSON through
-    process_raw_events_variant must equal the batch run on the same lines."""
-    from demo_bigdata_spark.operators.ingest import process_raw_events_variant
+def test_ingest_runs_on_stream(spark, tmp_path):
+    """The ingest chain is stateless map/filter, so Structured Streaming
+    runs it unchanged: text-file micro-batches of raw JSON through
+    process_raw_events must equal the batch run on the same lines."""
+    from demo_bigdata_spark.operators.ingest import process_raw_events
     from demo_bigdata_spark.suites.suite_ingest import raw_github_json
 
     raw = raw_github_json(spark, "/root/testdata/sf0.001").limit(400)
@@ -423,7 +423,7 @@ def test_variant_ingest_runs_on_stream(spark, tmp_path):
     batch_lines = spark.read.text(src).withColumnRenamed("value", "raw_json")
     expected = sorted(
         (r["event_id"], r["event_category"], r["actor_id"])
-        for r in process_raw_events_variant(batch_lines).collect()
+        for r in process_raw_events(batch_lines).collect()
     )
 
     stream = (
@@ -431,13 +431,13 @@ def test_variant_ingest_runs_on_stream(spark, tmp_path):
         .text(src)
         .withColumnRenamed("value", "raw_json")
     )
-    out = process_raw_events_variant(stream)
-    q = out.writeStream.outputMode("append").format("memory").queryName("vstream").start()
+    out = process_raw_events(stream)
+    q = out.writeStream.outputMode("append").format("memory").queryName("ingest_stream").start()
     try:
         q.processAllAvailable()
         got = sorted(
             (r["event_id"], r["event_category"], r["actor_id"])
-            for r in spark.sql("SELECT * FROM vstream").collect()
+            for r in spark.sql("SELECT * FROM ingest_stream").collect()
         )
     finally:
         q.stop()
@@ -2004,7 +2004,7 @@ def test_mirror_changelog_stream_replicates_table(spark, tmp_path):
     applied_epochs = sorted(
         {
             r["epoch_id"]
-            for r in S._read_manifest(spark, mir, before).collect()
+            for r in S._manifest_rows(mir, before)
             if r["epoch_id"] >= 0
         }
     )
