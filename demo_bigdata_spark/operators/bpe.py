@@ -61,9 +61,13 @@ def word_frequencies(
 
 
 def _initial_symbols(word: Column) -> Column:
-    """'table' -> 't a b l e </w>' (space-separated symbols + end marker)."""
+    """'table' -> 't a b l e </w>' (space-separated symbols + end marker).
+    ``(?s)`` makes ``.`` match the line terminators U+0085, U+2028 and
+    U+2029 too; whitespace tokenization keeps them inside words, and
+    without it they would glue to the next character ('a\\x85b' ->
+    'a', '\\x85b')."""
     return F.concat(
-        F.trim(F.regexp_replace(word, "(.)", "$1 ")), F.lit(" " + END_MARK)
+        F.trim(F.regexp_replace(word, "(?s)(.)", "$1 ")), F.lit(" " + END_MARK)
     )
 
 
@@ -92,9 +96,8 @@ def _merge_pair(sym: Column, pair: str, merged: str) -> Column:
     marker), so the delimiter test is exact.
 
     Interpreted-HOF cost is per VOCAB row (distinct words), not per
-    corpus row; a production path for huge vocabularies would swap this
-    one projection for an Arrow-batched mapInPandas without touching the
-    surrounding algorithm."""
+    corpus row; on a training round this fold beats an Arrow-batched
+    mapInPandas rewrite (docs/SCALE_NOTES.md)."""
     a, b = pair.split(" ")
 
     def _step(acc: Column, x: Column) -> Column:
@@ -147,7 +150,9 @@ def _split_rules(rules: list[tuple[str, str]]) -> list:
     (a, b, escaped replacement, padded probe, compiled boundary-safe
     pattern). The zero-width lookarounds assert full-symbol boundaries
     without consuming the separators, so consecutive occurrences all
-    match in one pass ('a b a b' -> 'ab ab'). The replacement is
+    match in one pass ('a b a b' -> 'ab ab'); they test for the literal
+    space delimiter, not ``\\s``, which also matches U+0085, U+2028 and
+    U+2029 inside a symbol. The replacement is
     backslash-escaped HERE, once per rule: re.sub treats its repl string
     as a template, so a merged symbol containing a backslash (code,
     LaTeX, Windows paths) would otherwise raise 'bad escape' or silently
@@ -162,30 +167,10 @@ def _split_rules(rules: list[tuple[str, str]]) -> list:
                 b,
                 merged.replace("\\", "\\\\"),
                 f" {a} {b} ",
-                re.compile(rf"(?<!\S){re.escape(a)} {re.escape(b)}(?!\S)"),
+                re.compile(rf"(?<![^ ]){re.escape(a)} {re.escape(b)}(?![^ ])"),
             )
         )
     return out
-
-
-def _merge_rules_arrow(
-    df: DataFrame, rules: list[tuple[str, str]], sym_col: str = "sym"
-) -> DataFrame:
-    """[production path, VERDICT r6 #2] the merge rewrite as ONE
-    Arrow-batched ``mapInPandas`` instead of a chained interpreted
-    Catalyst fold: the per-element HOF interpretation cost disappears —
-    each executor core rewrites whole Arrow batches in a tight Python
-    loop (the token_hash_fast pattern). Same narrow no-shuffle plan
-    shape; parity-pinned bit-identical to the Catalyst path."""
-    rl = _split_rules(rules)
-    schema = df.schema
-
-    def gen(batches):
-        for pdf in batches:
-            pdf[sym_col] = [_apply_rules_py(s, rl) for s in pdf[sym_col]]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
 
 
 def _select_disjoint_batch(
@@ -243,7 +228,6 @@ def bpe_train(
     text_col: str = "text",
     max_batch: int = 16,
     candidate_limit: int = 256,
-    engine: str = "catalyst",
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Learn ``n_merges`` BPE merge rules. Returns (rules, merges_df) where
     rules = [(round, pair, merged, pair_count)] in learning order and
@@ -259,20 +243,9 @@ def bpe_train(
     docstring; pinned by tests against max_batch=1) — so a 32k-vocab
     training run needs ~vocab/batch driver round-trips instead of one per
     merge, with no semantic drift. ``max_batch=1`` recovers the exact
-    classic loop.
-
-    ``engine`` picks the merge-rewrite implementation: ``"catalyst"``
-    (default — the pure-Catalyst fold, interpreted per element, fully
-    SQL-oracle-replayable) or ``"arrow"`` (the production path for huge
-    vocabularies: one Arrow-batched mapInPandas per round, no per-element
-    HOF interpretation — parity-pinned bit-identical; candidate counting
-    stays Catalyst either way). Non-BMP caveat: Java regex splits
-    initial symbols per UTF-16 code unit, Python per code point — on a
-    corpus with astral-plane characters the engines could diverge; the
-    parity test covers the real corpus."""
+    classic loop. The merge rewrite is the Catalyst fold
+    (:func:`_merge_pair`), which the SQL oracle replays."""
     global LAST_TRAIN_ROUNDS
-    if engine not in ("catalyst", "arrow"):
-        raise ValueError(f"bpe_train: unknown engine {engine!r}")
     spark = df.sparkSession
     syms = word_frequencies(df, text_col).select(
         _initial_symbols(F.col("word")).alias("sym"), "freq"
@@ -309,18 +282,14 @@ def bpe_train(
             merged = pair.replace(" ", "")
             rules.append((len(rules) + 1, pair, merged, cnt))
             round_rules.append((pair, merged))
-        if engine == "arrow":
-            rewritten = _merge_rules_arrow(syms, round_rules)
-        else:
-            col = F.col("sym")
-            for pair, merged in round_rules:
-                # disjoint rules commute and can't create each other's
-                # pairs, so chaining the folds in one projection is exact
-                col = _merge_pair(col, pair, merged)
-            rewritten = syms.select(col.alias("sym"), "freq")
+        col = F.col("sym")
+        for pair, merged in round_rules:
+            # disjoint rules commute and can't create each other's
+            # pairs, so chaining the folds in one projection is exact
+            col = _merge_pair(col, pair, merged)
         # pin each round: without the checkpoint, round i's plan nests i
         # rewrite stages and recomputes every prior round per action
-        syms = rewritten.localCheckpoint(eager=False)
+        syms = syms.select(col.alias("sym"), "freq").localCheckpoint(eager=False)
     merges_df = spark.createDataFrame(
         rules, "round int, pair string, merged string, pair_count bigint"
     )

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from demo_bigdata_spark.schemas import EVENTS_SCHEMA
-from demo_bigdata_spark.session import local_frame
 from demo_bigdata_spark.sources.snapshot_cdc import _strip_uri
 
 
@@ -416,11 +415,12 @@ def write_upsert_stream(
 def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
     """Read ``path``, or return None iff the path does not exist yet.
 
-    The distinction is load-bearing for the exactly-once folds below: a bare
-    ``except Exception`` would treat ANY read failure (transient FS error,
-    corrupt footer mid-write, permissions) as "first epoch" and then
-    overwrite the state table with only the current micro-batch — silently
-    discarding all accumulated state. A missing path is seen on the driver
+    The distinction is load-bearing for the upsert sink
+    (:func:`write_upsert_stream`), the one caller: a bare ``except
+    Exception`` would treat ANY read failure (transient FS error, corrupt
+    footer mid-write, permissions) as "first batch" and then overwrite the
+    target with only the current micro-batch — silently discarding every
+    merged row. A missing path is seen on the driver
     before Spark is asked (no ``FileNotFoundException`` WARN); of Spark's
     error conditions only UNABLE_TO_INFER_SCHEMA (the directory exists but
     holds no parquet footers — e.g. created empty by a crashed first write;
@@ -629,37 +629,34 @@ def write_epoch_partition(
 def combine_hourly_partial(
     spark, path: str, batch_df: DataFrame, epoch_id: int, ts_col: str = "ts"
 ) -> None:
-    """Merge one micro-batch's hourly partial aggregate into the materialized
-    state at ``path`` exactly once per epoch.
-
-    Partial-aggregate combination (counts sum, sums sum) is NOT idempotent
-    under foreachBatch's at-least-once replay, so applied epoch ids are
-    recorded beside the state and replayed epochs are skipped — that
-    epoch ledger is what upgrades the sink to exactly-once.
-
-    Caveat: the state overwrite and the ledger append are two writes, not
-    one atomic commit. A crash BETWEEN them leaves the batch applied but
-    unrecorded, so the retry applies it twice — a narrow at-least-once
-    window. Closing it needs a transactional table format (Delta/Iceberg:
-    state+ledger in one commit); plain parquet cannot express it.
-    """
+    """Fold one micro-batch's hourly partial aggregate into the stats table
+    at ``path`` exactly once per epoch: write its (bucket, n, sum_value)
+    rows as the epoch's partition and commit the epoch. Counts and sums
+    are additive, so :func:`read_hourly_stats` re-sums the committed
+    partials into the batch aggregate of everything ingested."""
 
     def write() -> None:
         part = batch_df.groupBy(
             F.date_trunc("hour", F.col(ts_col)).alias("bucket")
         ).agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        state = _read_parquet_if_exists(spark, path)
-        if state is not None:
-            merged = (
-                state.unionByName(part)
-                .groupBy("bucket")
-                .agg(F.sum("n").alias("n"), F.sum("sum_value").alias("sum_value"))
-            )
-        else:  # first epoch: no state yet
-            merged = part
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        write_epoch_partition(part, path, epoch_id)
 
     fold_epoch(spark, path, epoch_id, write)
+
+
+def read_hourly_stats(spark, path: str) -> DataFrame:
+    """Current (bucket, n, sum_value) hourly stats: the committed view of
+    the table :func:`combine_hourly_partial` folds, re-summed per bucket."""
+    return (
+        committed_view(
+            spark,
+            path,
+            ledger_path(path),
+            "bucket timestamp, n bigint, sum_value double, epoch_id long",
+        )
+        .groupBy("bucket")
+        .agg(F.sum("n").alias("n"), F.sum("sum_value").alias("sum_value"))
+    )
 
 
 def incremental_hourly_stats(
@@ -672,16 +669,17 @@ def incremental_hourly_stats(
     hourly partials into the stats table instead of recomputing the window
     from raw history — the fix for the reference dashboard's
     full-recompute-per-second design (BASELINE.md: '6 Spark jobs per
-    refresh ... no incrementalization'; data_service.py:116-150). Readers
-    get the current table with a plain scan; cost per refresh is
-    O(micro-batch + touched buckets), independent of history length.
+    refresh ... no incrementalization'; data_service.py:116-150). Read it
+    with :func:`read_hourly_stats`: a write costs O(micro-batch), a read
+    merges one partial row per committed epoch and touched bucket,
+    independent of raw history length.
     """
     spark = df.sparkSession
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_hourly_partial(spark, path, batch_df, epoch_id)
 
-    return _start_fold(df, checkpoint, trigger_seconds, _fold, "update")
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def run_stream_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
@@ -724,33 +722,22 @@ def combine_sketch_partial(
     ts_col: str = "ts",
     lgk: int = 12,
 ) -> None:
-    """Merge one micro-batch's per-day HLL partials into the sketch table at
-    ``path`` exactly once per epoch (ledger beside the state, as in
-    combine_hourly_partial).
+    """Fold one micro-batch's per-day HLL partials into the sketch table at
+    ``path`` exactly once per epoch: write its (day, sketch) rows as the
+    epoch's partition and commit the epoch.
 
     Streaming countDistinct normally means keeping every key in state; here
-    state per day is one ~4 KB sketch regardless of cardinality, and the
-    merge (hll_union_agg) is commutative/associative/idempotent-per-key-set,
-    so the table answers "uniques per day / any range" at any moment with a
-    plain scan + optional further merge. Batch and stream produce the SAME
-    registers for the same input set. (HLL register-max merge is idempotent
-    per key-set, so even the non-atomic state/ledger write pair — see
-    combine_hourly_partial's caveat — cannot inflate estimates on replay.)"""
+    an epoch's partial per day is one ~4 KB sketch regardless of
+    cardinality, and the merge (hll_union_agg) is commutative and
+    associative, so :func:`read_distinct_estimates` answers "uniques per
+    day" at any moment by merging the committed partials. Batch and
+    stream produce the SAME registers for the same input set."""
 
     def write() -> None:
         part = batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
             F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("sketch")
         )
-        state = _read_parquet_if_exists(spark, path)
-        if state is not None:
-            merged = (
-                state.unionByName(part)
-                .groupBy("day")
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        else:  # first epoch: no state yet
-            merged = part
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        write_epoch_partition(part, path, epoch_id)
 
     fold_epoch(spark, path, epoch_id, write)
 
@@ -771,15 +758,18 @@ def incremental_distinct_sketches(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_sketch_partial(spark, path, batch_df, epoch_id, key_col, ts_col)
 
-    return _start_fold(df, checkpoint, trigger_seconds, _fold, "update")
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def read_distinct_estimates(spark, path: str) -> DataFrame:
-    """Current per-day unique estimates from the maintained sketch table."""
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(path).select(
-        "day", F.hll_sketch_estimate("sketch").alias("est_uniques")
+    """Current per-day unique estimates: the committed view of the sketch
+    table, its partials merged per day with hll_union_agg."""
+    return (
+        committed_view(
+            spark, path, ledger_path(path), "day date, sketch binary, epoch_id long"
+        )
+        .groupBy("day")
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("est_uniques"))
     )
 
 
@@ -826,54 +816,25 @@ def combine_cms_partial(
     value_col: str = "event_type",
     ts_col: str = "ts",
 ) -> None:
-    """Merge one micro-batch's per-day count-min partials into the sketch
-    table at ``path`` exactly once per epoch (epoch ledger beside the state,
-    as in combine_hourly_partial).
+    """Fold one micro-batch's per-day count-min partials into the sketch
+    table at ``path`` exactly once per epoch: the batch's per-day sketches
+    come from ONE distributed aggregate and are written as the epoch's
+    (day, blob) partition, with no driver collect.
 
     CMS is linear (operators.sketches.merge_count_min), so per-day token
-    frequencies are maintained as one KB blob per day: the fold computes the
-    batch's per-day sketches with ONE distributed aggregate, then merges
-    blob-with-blob driver-side — bounded work per epoch regardless of
-    history length. Readers answer "estimate frequency of X on day/range D"
-    by merging the touched blobs, never rescanning raw data.
-
-    Delivery caveat (same non-atomic state→ledger window as
-    combine_hourly_partial, but WORSE here): a crash between the state write
-    and the ledger append replays the epoch, and the CMS merge is ADDITIVE —
-    a replay double-counts, unlike the idempotent HLL register-max fold. Net
-    guarantee is at-least-once on that window; estimates remain upper bounds
-    (CMS never under-counts), which is the property downstream filters rely
-    on.
+    frequencies are maintained as one ~110 KB blob per day and epoch, and
+    :func:`read_frequency_estimates` answers "estimate frequency of X on
+    day/range D" by merging the committed blobs of the touched days, never
+    rescanning raw data.
     """
-    from demo_bigdata_spark.operators.sketches import merge_count_min
 
     def write() -> None:
-        part_rows = (
-            batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
-            .agg(
-                F.count_min_sketch(
-                    F.col(value_col), F.lit(0.001), F.lit(0.99), F.lit(42)
-                ).alias("blob")
-            )
-            .collect()
+        part = batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
+            F.count_min_sketch(
+                F.col(value_col), F.lit(0.001), F.lit(0.99), F.lit(42)
+            ).alias("blob")
         )
-        parts = {str(r["day"]): bytes(r["blob"]) for r in part_rows}
-        state = _read_parquet_if_exists(spark, path)
-        merged = (
-            {r["day"]: bytes(r["blob"]) for r in state.collect()}
-            if state is not None
-            else {}
-        )
-        for day, blob in parts.items():
-            merged[day] = (
-                merge_count_min([merged[day], blob]) if day in merged else blob
-            )
-        # direct overwrite is safe: prior state was already collect()ed into
-        # `merged`, so the write never reads the path it replaces (no staging
-        # round-trip, no leaked _tmp dir)
-        local_frame(
-            spark, sorted(merged.items()), "day string, blob binary"
-        ).write.mode("overwrite").parquet(path)
+        write_epoch_partition(part, path, epoch_id)
 
     fold_epoch(spark, path, epoch_id, write)
 
@@ -894,25 +855,26 @@ def incremental_token_frequencies(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         combine_cms_partial(spark, path, batch_df, epoch_id, value_col, ts_col)
 
-    return _start_fold(df, checkpoint, trigger_seconds, _fold, "update")
+    return _start_fold(df, checkpoint, trigger_seconds, _fold)
 
 
 def read_frequency_estimates(spark, path: str, probes: list[str], days: list[str] | None = None):
     """Estimate probe frequencies from the maintained per-day CMS table:
-    merge the (selected) day blobs driver-side, probe the merged sketch.
-    Returns [(probe, est_count)].
+    merge the committed blobs of the (selected) days driver-side, probe
+    the merged sketch. Returns [(probe, est_count)].
 
-    The ``days`` restriction is a predicate on the read itself (pushed to
-    the parquet scan / partition pruning when the table is day-partitioned),
-    so at long retention only the selected day blobs ever reach the driver
-    — the driver loop is bounded by len(days), not by history length."""
+    The ``days`` restriction is a predicate on the committed view, pushed
+    to the parquet scan, so only the selected days' blobs ever reach the
+    driver — at most one per committed epoch and day, not the raw
+    history."""
     from demo_bigdata_spark.operators.sketches import CountMinReader, merge_count_min
 
-    cms = spark.read.parquet(path)
+    cms = committed_view(
+        spark, path, ledger_path(path), "day date, blob binary, epoch_id long"
+    )
     if days is not None:
         cms = cms.filter(F.col("day").cast("string").isin(list(days)))
-    rows = cms.select("blob").collect()
-    blobs = [bytes(r["blob"]) for r in rows]
+    blobs = [bytes(r["blob"]) for r in cms.select("blob").collect()]
     if not blobs:
         return [(p, 0) for p in probes]
     reader = CountMinReader(merge_count_min(blobs))

@@ -589,19 +589,6 @@ def main() -> None:
             round(time.perf_counter() - t0, 2),
         )
     )
-    # r7 production path (VERDICT r6 #2): the same 100 merges with the
-    # merge rewrite as Arrow-batched mapInPandas instead of the
-    # interpreted Catalyst fold — identical rules (parity-pinned in
-    # tests), the row measures the constant-factor win per round
-    t0 = time.perf_counter()
-    arrow_rules, _ = B.bpe_train(bdocs, n_merges=100, engine="arrow")
-    assert arrow_rules == rules100, "arrow/catalyst BPE rule divergence"
-    rank_results.append(
-        (
-            f"bpe_train_100_merges_arrow ({B.LAST_TRAIN_ROUNDS} rounds)",
-            round(time.perf_counter() - t0, 2),
-        )
-    )
     bwords = B.word_frequencies(bdocs).localCheckpoint(eager=True)
     rank_results.append(
         timed("bpe_apply_100_catalyst", B.bpe_apply(bwords, rules100))
@@ -1431,10 +1418,9 @@ def main() -> None:
         "a broadcast dim slice — near-flat in the fact size.",
         "backfill_2_of_900_dates rewrites only the named date partitions —",
         "its cost tracks the 2-day slice while the table is 900 days wide.",
-        "The bpe_train_100_merges vs ..._arrow pair measures the r7",
-        "production rewrite path (mapInPandas) against the interpreted",
-        "Catalyst fold on identical rules, as do the bpe_apply_100 rows",
-        "over the word-type table. The x30 vocabulary is tiny (shared",
+        "The bpe_apply_100 rows measure bpe_apply's Arrow rewrite path",
+        "(mapInPandas) against the interpreted Catalyst fold on identical",
+        "rules over the word-type table. The x30 vocabulary is tiny (shared",
         "letters), so per-round job overhead dominates there and catalyst",
         "stays the right default; the bpe_apply_100_*_??k_types rows are",
         "the production-vocabulary stress (~1M synthetic word types) where",

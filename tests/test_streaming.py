@@ -480,6 +480,7 @@ def test_incremental_hourly_stats_matches_batch(spark, sf_dir, stream_src, tmp_p
     from demo_bigdata_spark.streaming.pipeline import (
         combine_hourly_partial,
         incremental_hourly_stats,
+        read_hourly_stats,
     )
 
     out, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
@@ -492,7 +493,7 @@ def test_incremental_hourly_stats_matches_batch(spark, sf_dir, stream_src, tmp_p
 
     got = {
         (str(r["bucket"]), r["n"], round(r["sum_value"], 2))
-        for r in spark.read.parquet(out).collect()
+        for r in read_hourly_stats(spark, out).collect()
     }
     ev = load_table(spark, sf_dir, "events")
     expected = {
@@ -508,7 +509,7 @@ def test_incremental_hourly_stats_matches_batch(spark, sf_dir, stream_src, tmp_p
     combine_hourly_partial(spark, out, ev.limit(50), epoch_id=0)
     after = sorted(
         (str(r["bucket"]), r["n"], round(r["sum_value"], 2))
-        for r in spark.read.parquet(out).collect()
+        for r in read_hourly_stats(spark, out).collect()
     )
     assert after == before
 
@@ -3352,14 +3353,33 @@ def test_committed_views_keep_their_schema_after_the_first_commit(
     monkeypatch.setattr(SPL, "committed_view", recording)
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 40)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     emb = emb.filter(F.col("vec_id") < 40)
     dim = len(emb.first()["embedding"])
     C = np.random.default_rng(0).normal(size=(4, dim))
-    p = {n: str(tmp_path / n) for n in ("pack", "idx", "dd", "ivf", "gr", "hist", "kl")}
+    p = {
+        n: str(tmp_path / n)
+        for n in ("hourly", "hll", "cms", "pack", "idx", "dd", "ivf", "gr", "hist", "kl")
+    }
 
     # (fold one epoch, readers with an empty form, readers without one)
     families = [
+        (
+            lambda: SPL.combine_hourly_partial(spark, p["hourly"], ev, 0),
+            [lambda: SPL.read_hourly_stats(spark, p["hourly"])],
+            [],
+        ),
+        (
+            lambda: SPL.combine_sketch_partial(spark, p["hll"], ev, 0),
+            [lambda: SPL.read_distinct_estimates(spark, p["hll"])],
+            [],
+        ),
+        (
+            lambda: SPL.combine_cms_partial(spark, p["cms"], ev, 0),
+            [],
+            [lambda: SPL.read_frequency_estimates(spark, p["cms"], ["click"])],
+        ),
         (
             lambda: SPL.combine_pack_partial(spark, p["pack"], docs, 0, seq_len=64),
             [lambda: SPL.read_pack_assignments(spark, p["pack"])],
@@ -3494,6 +3514,16 @@ def _migrated_fold_families(spark, sf_dir, tmp_path):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = (docs.filter(F.col("doc_id") < 20), docs.filter(F.col("doc_id").between(20, 39)))
+    events = load_table(spark, sf_dir, "events")
+    ev = (events.filter(F.col("event_id") % 2 == 0), events.filter(F.col("event_id") % 2 == 1))
+    first_day = str(events.select(F.min(F.to_date("ts"))).first()[0])
+    probes = ["click", "view", "purchase", "absent"]
+
+    def frequencies(p, days=None):
+        return spark.createDataFrame(
+            SPL.read_frequency_estimates(spark, p, probes, days), "probe string, est bigint"
+        )
+
     edges = tuple(
         b.select((F.col("doc_id") % 7).alias("src"), (F.col("doc_id") % 5).alias("dst"))
         for b in d
@@ -3507,6 +3537,21 @@ def _migrated_fold_families(spark, sf_dir, tmp_path):
     eval_idx = str(tmp_path / "families_eval_idx")
     D.build_decontamination_index(docs.filter(F.col("doc_id") < 10), eval_idx, n=8)
     return [
+        (
+            "hourly", "",
+            lambda p, e, b: SPL.combine_hourly_partial(spark, p, b, e),
+            lambda p: [SPL.read_hourly_stats(spark, p)], ev,
+        ),
+        (
+            "hll", "",
+            lambda p, e, b: SPL.combine_sketch_partial(spark, p, b, e),
+            lambda p: [SPL.read_distinct_estimates(spark, p)], ev,
+        ),
+        (
+            "cms", "",
+            lambda p, e, b: SPL.combine_cms_partial(spark, p, b, e),
+            lambda p: [frequencies(p), frequencies(p, [first_day])], ev,
+        ),
         (
             "pack", "",
             lambda p, e, b: SPL.combine_pack_partial(spark, p, b, e, seq_len=64),
@@ -3704,7 +3749,11 @@ def test_one_fold_driver_and_one_ledger_name():
     """The stream starter, the applied-epoch check and the ledger's name
     live in streaming/pipeline.py alone: a fold elsewhere goes through
     fold_epoch and _start_fold, and a reader names its ledger with
-    ledger_path."""
+    ledger_path. Every function that calls fold_epoch writes its fold
+    tables through write_epoch_partition only (no DataFrame writer, no
+    pyarrow write, no read of a state table to overwrite; none is
+    exempt), and the upsert sink is the one reader of
+    _read_parquet_if_exists."""
     import ast
     import re
 
@@ -3745,3 +3794,40 @@ def test_one_fold_driver_and_one_ledger_name():
         and getattr(node.func, "id", None) == "epoch_already_applied"
     ]
     assert callers == ["fold_epoch"]
+
+    def called(node):
+        return isinstance(node, ast.Call) and (
+            getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+        )
+
+    folds, readers = {}, []
+    for d, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(d, name)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for fn in ast.walk(tree):
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                inner = [n for n in ast.walk(fn) if n is not fn]
+                if any(called(n) == "fold_epoch" for n in inner):
+                    folds[(name, fn.name)] = sorted(
+                        {n.attr for n in inner if isinstance(n, ast.Attribute)
+                         and n.attr in ("write", "writeTo", "writeStream")}
+                        | {called(n) for n in inner if called(n) in (
+                            "write_parquet_atomic", "write_table",
+                            "_read_parquet_if_exists", "write_epoch_partition")}
+                    )
+                nested = {
+                    id(n) for sub in inner if isinstance(sub, ast.FunctionDef)
+                    for n in ast.walk(sub)
+                }
+                readers += [
+                    (name, fn.name) for n in inner
+                    if id(n) not in nested and called(n) == "_read_parquet_if_exists"
+                ]
+    assert len(folds) >= 19
+    assert {k: v for k, v in folds.items() if v != ["write_epoch_partition"]} == {}
+    assert readers == [("pipeline.py", "_merge")]
